@@ -54,20 +54,25 @@ object Bench {
     * when the contention window also inflated its warmup (the case the
     * warmup-relative trigger can't see — BENCH_r21: s7 at 14 s vs a 1 s
     * band survived with rm:2 because warmup was equally contaminated).
-    * Missing/unparseable file ⇒ empty map ⇒ exactly the old behavior;
-    * the band never LOWERS a reported time — it only grants a third
-    * measurement pass, still capped at 5 entries. */
-  def loadBands(path: String): Map[String, Double] =
-    try {
+    * Each band parses on its own — a malformed number drops only its
+    * entry; a missing/unparseable file ⇒ empty map (warned on stderr) ⇒
+    * exactly the old behavior; the band never LOWERS a reported time —
+    * it only grants a third measurement pass, still capped at 5 entries. */
+  def loadBands(path: String): Map[String, Double] = {
+    val bands = scala.util.Try {
       val txt = new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(path)), java.nio.charset.StandardCharsets.UTF_8)
-      val inQueries = txt.indexOf("\"queries\"") match {
-        case -1 => return Map.empty
-        case i => txt.substring(i)
+      txt.indexOf("\"queries\"") match {
+        case -1 => Map.empty[String, Double]
+        case i => "\"([A-Za-z0-9_]+)\":([0-9.]+)".r.findAllMatchIn(txt.substring(i))
+          .flatMap(m => m.group(2).toDoubleOption.map(m.group(1) -> _)).toMap
       }
-      "\"([A-Za-z0-9_]+)\":([0-9.]+)".r.findAllMatchIn(inQueries)
-        .map(m => m.group(1) -> m.group(2).toDouble).toMap
-    } catch { case scala.util.control.NonFatal(_) => Map.empty }
+    }.getOrElse(Map.empty[String, Double])
+    if (bands.isEmpty)
+      System.err.println(s"[bench] no quiet-band timings parsed from $path: " +
+        "only the warmup trigger selects re-measurements")
+    bands
+  }
 
   /** One compact JSON line; failed entries carry null and are excluded
     * from the total (BenchSpec pins this). Every entry starts at 2

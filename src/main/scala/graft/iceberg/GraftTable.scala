@@ -4,30 +4,31 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{MetadataBuilder, StructField, StructType}
 
-import graft.operators.Lakehouse
+import graft.sources.TableDataSource
 
-/** The one-call table read — the public API a user points at a committed
-  * `metadata.json` to get the TABLE as a DataFrame, with every layer this
-  * library implements composed in its spec order:
+/** The one-call table API — point it at a committed `metadata.json` and
+  * read the TABLE as a DataFrame, or commit to it (append, delete,
+  * upsert, merge, compaction and the other maintenance procedures).
+  *
+  * Reads compose in the spec's order:
   *
   *   1. snapshot resolution: current head, explicit snapshot id, or a
   *      named ref (tag/branch) — time travel is just resolution;
   *   2. two-level planning: manifest-list → manifests, content-routed
-  *      (data vs delete manifests, list field 517);
-  *   3. schema-evolution projection: every data file reads through the
-  *      document's CURRENT schema, pre-evolution files null-fill;
-  *   4. sequence-scoped merge-on-read: position deletes apply to data
-  *      files with sequence <= theirs, equality deletes to strictly
-  *      lower — commit order decides applicability, not reachability.
+  *      (data vs delete manifests, list field 517), opened concurrently,
+  *      into live (entry, sequence) sets;
+  *   3. the merge-on-read scan: that explicit plan runs through the
+  *      graft-table DSv2 scan ([[graft.sources.TableDataSource.scanPlan]]),
+  *      the engine's one reader — schema-evolution projection (every
+  *      file reads through the document's CURRENT schema, renamed and
+  *      pre-evolution columns resolved per file) and sequence-scoped
+  *      deletes (position deletes on data files with sequence <= theirs,
+  *      equality deletes on strictly lower) happen inside each task.
   *
-  * Planning state is KB-scale (the same driver boundary Iceberg's own
-  * planner keeps) and opens manifests CONCURRENTLY; the data read is ONE
-  * distributed parquet scan whatever the snapshot count — each row's
-  * `_seq` (the MOR coordinate) attaches via a broadcast join against the
-  * file→sequence lookup instead of one scan per sequence group. Delete
-  * sides stay optimizer-chosen joins: AQE broadcasts metadata-scale
-  * delete sets, mass deletes degrade to shuffle anti-joins instead of
-  * forced-broadcast OOMs.
+  * Rewrites (MERGE, compaction, the stats passes, the changelog legs)
+  * read the same way, over the entry subsets they need, with the scan's
+  * `_file`/`_pos`/`_row_id`/`_last_updated_sequence_number` metadata
+  * columns as row addresses.
   */
 object GraftTable {
 
@@ -108,7 +109,9 @@ object GraftTable {
     val traveled = snapshotId.isDefined || asOfTimestampMs.isDefined ||
       ref.exists(r => !meta0.isBranchRef(r))
     val meta = if (!traveled) meta0 else metaAtSnapshotSchema(meta0, snap)
-    readWithAddress(spark, meta, snap)
+    val listPath = snap.manifestList.getOrElse(
+      throw new IllegalArgumentException(s"snapshot ${snap.snapshotId} has no manifest-list"))
+    readInfos(spark, meta, ManifestListReader.read(listPath))
       .select(sparkSchema(meta).fieldNames.map(col).toIndexedSeq: _*)
   }
 
@@ -122,86 +125,40 @@ object GraftTable {
       .map(id => meta0.copy(topLevelSchema = None, currentSchemaId = Some(id)))
       .getOrElse(meta0)
 
-  /** The MOR-resolved live rows WITH their physical address columns
-    * (`_file`, `_pos`, `_seq`) — what COW rewrites (merge/compact) need
-    * to locate and regroup rows by source file. */
-  private def readWithAddress(spark: SparkSession, meta: TableMetadata,
-      snap: Snapshot): DataFrame = {
-    val listPath = snap.manifestList.getOrElse(
-      throw new IllegalArgumentException(s"snapshot ${snap.snapshotId} has no manifest-list"))
-    readFromInfos(spark, meta, ManifestListReader.read(listPath))
-  }
-
-  /** Strip the URI scheme+authority off a file-path column: manifest
-    * entries hold plain paths, `_metadata.file_path` is a URI — joins and
-    * comparisons happen on the normalized path component (the i26/i31
-    * rule). Stays inside whole-stage codegen. */
-  private def normPathCol(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    regexp_replace(c, "^[a-z0-9+.-]+:(//)?", "")
-
-  /** MOR read over an explicit manifest set (readWhere hands a PRUNED
-    * set; readWithAddress hands the whole list). Planning shape, built
-    * for 10⁴+ manifests:
-    *
-    *   - every manifest opens CONCURRENTLY (Par.inParallel) — planning
-    *     wall-clock tracks the slowest manifest, not the manifest count;
-    *   - an entry-level null sequence number INHERITS the manifest-list's
-    *     field-515 number (the v2 inheritance rule — foreign tables leave
-    *     ADDED entries null and let the list carry the commit's number);
-    *   - ONE distributed scan reads all live data files; each row's
-    *     `_seq` attaches via a broadcast join against the KB-scale
-    *     file→sequence lookup — plan width stays O(1) in snapshot count
-    *     (the old shape unioned one scan per sequence group);
-    *   - position deletes: ONE scan over all position-delete files, each
-    *     row's `_del_seq` from the same lookup trick, ONE anti-join;
-    *   - equality deletes: files group by their column set (a delete
-    *     file's schema IS its equality-column list), one anti-join per
-    *     distinct column set — tables with one equality-id list (the
-    *     overwhelmingly common case) get exactly one anti-join, however
-    *     many delete commits are pending. */
-  private def readFromInfos(spark: SparkSession, meta: TableMetadata,
-      infos: Seq[ManifestListReader.ManifestFileInfo],
-      restrictData: Seq[(ManifestWriter.EntryData, Long)] =>
-        Seq[(ManifestWriter.EntryData, Long)] = identity,
-      restrictEq: Seq[(ManifestWriter.EntryData, Long)] =>
-        Seq[(ManifestWriter.EntryData, Long)] = identity): DataFrame = {
-    // manifest-LEVEL delete pruning, before any open: a delete manifest's
-    // list-level sequence number (field 515) is the CEILING on every
-    // entry's sequence inside it, and the data manifests' field 516 is
-    // the floor under every surviving data sequence. A delete manifest
-    // whose ceiling sits below the floor cannot address any live row
-    // under the <= (position) / < (equality) application rules — typical
-    // after compaction re-sequences the data above carried-forward
-    // deletes. At 10⁵ delete manifests the planner never opens the dead
-    // ones. (A 515-less list defaults the ceiling to the commit snapshot
-    // id — never below its entries — so the skip stays conservative.)
+  /** Live (entry, sequence) sets of a manifest set: (data, position
+    * deletes, equality deletes) — the explicit plan every read hands the
+    * scan. Manifests open CONCURRENTLY; an entry-level null sequence
+    * INHERITS the list's field 515 (the v2 inheritance rule); DELETED
+    * entries (status 2) drop out. Manifest-level delete pruning runs
+    * before any open: a delete manifest's list sequence (515) is the
+    * ceiling on every entry inside it and the data manifests' field 516
+    * the floor under every data sequence, so a delete manifest whose
+    * ceiling sits below the floor cannot address a live row and is never
+    * opened. Entry identity is (path, blob offset), not path alone: one
+    * v3 Puffin file holds many files' deletion vectors, one entry each. */
+  private def livePlan(infos: Seq[ManifestListReader.ManifestFileInfo])
+      : (Seq[(ManifestWriter.EntryData, Long)], Seq[(ManifestWriter.EntryData, Long)],
+        Seq[(ManifestWriter.EntryData, Long)]) = {
     val minDataSeq = infos.filter(_.content == 0)
       .map(_.minSequenceNumber).minOption.getOrElse(Long.MaxValue)
     val opened = infos.filter(i => i.content == 0 || i.sequenceNumber >= minDataSeq)
     val byManifest = Par.inParallel(opened)(i => (i, ManifestWriter.read(i.path)))
-    // live (entry, sequence) per list-content route; DELETED entries
-    // (status 2) drop out; sequence inherits list field 515 when null.
-    // Entry identity is (path, blob offset), NOT path alone: one v3
-    // Puffin file holds many files' deletion vectors, one entry each —
-    // path-only dedup would silently drop all but the first DV
     def live(listContent: Int, entryContent: Int): Seq[(ManifestWriter.EntryData, Long)] =
       (for {
         (i, es) <- byManifest if i.content == listContent
         e <- es if e.status != 2 && e.content == entryContent
       } yield (e, e.sequenceNumber.getOrElse(i.sequenceNumber)))
         .distinctBy(x => (uriPath(x._1.filePath), x._1.contentOffset.getOrElse(-1L)))
-    // restrict hooks (readKeyRange): entry-level key-range exclusion on
-    // data and equality-delete entries; position deletes are never
-    // restricted here (they address (file_path, pos), not keys)
-    readFromEntries(spark, meta, restrictData(live(0, 0)), live(1, 1),
-      restrictEq(live(1, 2)))
+    (live(0, 0), live(1, 1), live(1, 2))
   }
 
-  /** MOR read over EXPLICIT (entry, sequence) sets — the granular form
-    * behind readFromInfos, and what per-file/per-bin COW rewrite jobs use
-    * to read ONLY their target files (plus the delete entries that can
-    * address them) instead of filtering a full-table frame: K rewrite
-    * jobs cost O(affected bytes) total I/O, not O(K · table). */
+  /** The merge-on-read rows of a manifest set (see [[livePlan]]). */
+  private def readInfos(spark: SparkSession, meta: TableMetadata,
+      infos: Seq[ManifestListReader.ManifestFileInfo]): DataFrame = {
+    val (data, pos, eq) = livePlan(infos)
+    TableDataSource.scanPlan(spark, meta, data, pos, eq)
+  }
+
   /** Historical name alternates after RENAME COLUMN: current field name →
     * the names the SAME field id carried in earlier schemas. Safe to
     * resolve by because the catalog refuses re-using any historical name
@@ -213,15 +170,6 @@ object GraftTable {
       if (hist.isEmpty) None else Some(f.name -> hist)
     }.toMap
 
-  /** Read data files under the CURRENT schema, resolving renamed columns:
-    * a file written before a RENAME COLUMN carries the old physical name,
-    * so it reads under its own name generation and aliases up to the
-    * current one. Files group by their resolved projection — KB-scale
-    * concurrent footer probes, and ONLY when the schema history holds a
-    * rename (the overwhelmingly common no-rename table skips straight to
-    * one multi-file read). `withAddress` appends the (_file, _pos)
-    * metadata coordinates inside each group (they must attach to the raw
-    * file relation, not the union). */
   /** The Iceberg v2 position-delete row shape — spec-fixed, so reads of
     * engine-written pos-delete parquet never need schema inference (each
     * schemaless `spark.read.parquet` launches a 1-task inference job:
@@ -234,20 +182,23 @@ object GraftTable {
     * metadata-only (KB-scale), replacing the schema-inference JOB a
     * schemaless read launches. Prefers the exact StructType Spark
     * serialized into the footer at write time (what inference itself
-    * prefers); falls back to the standard parquet converter under the
-    * session's conversion flags. `asNullable` matches what file-source
-    * inference returns. */
-  private[graft] def footerSparkSchema(path: String): StructType = {
+    * prefers); falls back to the standard parquet converter under
+    * `spark`'s conversion flags. The conf comes from the session passed
+    * in, never from the thread: callers run this on Par pool threads,
+    * whose active session (what `SQLConf.get` reads) need not be theirs.
+    * `asNullable` matches what file-source inference returns. */
+  private[graft] def footerSparkSchema(spark: SparkSession, path: String): StructType = {
+    val sessionState = spark.sessionState
     val r = org.apache.parquet.hadoop.ParquetFileReader.open(
       org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(path), HadoopConfs.active()))
+        new org.apache.hadoop.fs.Path(path), sessionState.newHadoopConf()))
     try {
       val md = r.getFooter.getFileMetaData
       val raw = Option(md.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
         .flatMap(j => scala.util.Try(org.apache.spark.sql.types.DataType.fromJson(j)
           .asInstanceOf[StructType]).toOption)
         .getOrElse(new org.apache.spark.sql.execution.datasources.parquet
-          .ParquetToSparkSchemaConverter(org.apache.spark.sql.internal.SQLConf.get)
+          .ParquetToSparkSchemaConverter(sessionState.conf)
           .convert(md.getSchema))
       def nullify(dt: org.apache.spark.sql.types.DataType)
           : org.apache.spark.sql.types.DataType = dt match {
@@ -262,177 +213,6 @@ object GraftTable {
       }
       nullify(raw).asInstanceOf[StructType]
     } finally r.close()
-  }
-
-  private[graft] def readDataFiles(spark: SparkSession, meta: TableMetadata,
-      paths: Seq[String], withAddress: Boolean = false,
-      extraCols: Seq[StructField] = Nil): DataFrame = {
-    val schema = sparkSchema(meta)
-    def address(df: DataFrame): DataFrame =
-      if (!withAddress) df
-      else df.select(col("*"), col("_metadata.file_path").as("_file"),
-        col("_metadata.row_index").as("_pos"))
-    val alts = nameAlternates(meta)
-    // v3 initial-defaults: a file that PREDATES the column reads the
-    // default, not null — which needs the same per-file presence probe
-    // renames do, so either condition takes the probed path.
-    // `extraCols` are OPTIONAL physical columns outside the table schema
-    // (materialized row-lineage in rewritten files): read where present,
-    // null elsewhere — they force the probed path too.
-    val defaults: Map[String, org.apache.spark.sql.Column] =
-      meta.currentSchema.fields.flatMap(f =>
-        f.initialDefault.flatMap(d => IcebergTypes.fromStringOpt(f.fieldType)
-          .map(t => f.name ->
-            lit(DefaultValues.fromJson(t, d)).cast(t.sparkType)))).toMap
-    if ((alts.isEmpty && defaults.isEmpty && extraCols.isEmpty) || paths.isEmpty)
-      return address(spark.read.schema(schema).parquet(paths.sorted: _*))
-    val conf = HadoopConfs.active()
-    // mapping entry: (present file-side name | None = absent, current name)
-    val byProj = Par.inParallel(paths.sorted) { p =>
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(p), conf))
-      val present = try {
-        import scala.jdk.CollectionConverters._
-        r.getFileMetaData.getSchema.getFields.asScala.map(_.getName).toSet
-      } finally r.close()
-      val mapping: Seq[(Option[String], String)] = schema.fieldNames.toSeq.map { cur =>
-        if (present(cur)) (Some(cur), cur)
-        else alts.getOrElse(cur, Nil).find(present) match {
-          case Some(old) => (Some(old), cur)
-          case None => (None, cur) // absent under every name
-        }
-      }
-      ((mapping, extraCols.map(f => present(f.name))), p)
-    }.groupBy(_._1).toSeq.sortBy(_._2.head._2).map { case (m, g) => (m, g.map(_._2)) }
-    byProj.map { case ((mapping, extrasPresent), files) =>
-      // absent columns with no default still ride in the requested
-      // schema (parquet null-fills them); defaulted absents are
-      // literal-projected instead
-      val fileSchema = StructType(mapping.collect {
-        case (Some(fn), cur) => schema(cur).copy(name = fn)
-        case (None, cur) if !defaults.contains(cur) => schema(cur)
-      } ++ extraCols.zip(extrasPresent).collect { case (f, true) => f })
-      address(spark.read.schema(fileSchema).parquet(files: _*))
-        .select(mapping.map {
-          case (Some(fn), cur) => col(fn).as(cur)
-          case (None, cur) => defaults.get(cur).map(_.as(cur)).getOrElse(col(cur))
-        } ++ extraCols.zip(extrasPresent).map {
-          case (f, true) => col(f.name)
-          case (f, false) => lit(null).cast(f.dataType).as(f.name)
-        } ++ (if (withAddress) Seq(col("_file"), col("_pos")) else Nil): _*)
-    }.reduce(_ unionByName _)
-  }
-
-  private def readFromEntries(spark: SparkSession, meta: TableMetadata,
-      dataEntries: Seq[(ManifestWriter.EntryData, Long)],
-      posEntries0: Seq[(ManifestWriter.EntryData, Long)],
-      eqEntries0: Seq[(ManifestWriter.EntryData, Long)],
-      withLineage: Boolean = false): DataFrame = {
-    // imported AVRO data files read through the DSv2 scan's per-format
-    // partition readers; this DataFrame-composition route is parquet-only
-    require(dataEntries.forall(_._1.fileFormat == "PARQUET"),
-      "table carries non-parquet data files — read it through " +
-        "spark.read.format(\"graft-table\") or the SQL catalog")
-    val schema = sparkSchema(meta)
-    val lineageFields =
-      if (withLineage) Seq(
-        StructField(RowIdCol, org.apache.spark.sql.types.LongType),
-        StructField(LastUpdatedCol, org.apache.spark.sql.types.LongType))
-      else Nil
-    if (dataEntries.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(schema.fields ++ lineageFields ++ Seq(
-          StructField("_file", org.apache.spark.sql.types.StringType),
-          StructField("_pos", org.apache.spark.sql.types.LongType),
-          StructField("_seq", org.apache.spark.sql.types.LongType))))
-    // delete-FILE pruning against the data set being read: a position
-    // delete with sequence below every data file's, or whose file_path
-    // bounds overlap none of them, can't apply (binary search over the
-    // sorted path set keeps this O(D log N) at 10⁵ × 10⁵ scale); an
-    // equality delete needs a strictly-lower data sequence to exist.
-    // The scoped applies below re-check per row — this only skips reads.
-    val sortedPaths = dataEntries.map(e => uriPath(e._1.filePath)).toArray.sorted
-    val minSeq = dataEntries.map(_._2).min
-    val posEntries = posEntries0.filter { case (e, s) =>
-      s >= minSeq && posDeleteOverlaps(e, sortedPaths) }
-    val eqEntries = eqEntries0.filter(_._2 > minSeq)
-    import spark.implicits._
-    // file→sequence lookup: one row per FILE (metadata-scale, broadcast)
-    def seqLookup(entries: Seq[(ManifestWriter.EntryData, Long)], seqName: String): DataFrame =
-      broadcast(entries.map { case (e, s) => (uriPath(e.filePath), s) }
-        .toDF("_lk_file", seqName))
-    val data0 = readDataFiles(spark, meta,
-        dataEntries.map(_._1.filePath), withAddress = true,
-        extraCols = lineageFields)
-      .join(seqLookup(dataEntries, "_seq"), normPathCol(col("_file")) === col("_lk_file"))
-      .drop("_lk_file")
-    // v3 row lineage: _row_id = the file's materialized column (rewrites
-    // carrying moved rows' ids) OR first_row_id + pos (append-written
-    // files); _last_updated_sequence_number analogously falls back to
-    // the row's data sequence. Both ride alongside _file/_pos/_seq.
-    val data =
-      if (!withLineage) data0
-      else {
-        import spark.implicits._
-        val fid = broadcast(dataEntries.map { case (e, _) =>
-          (uriPath(e.filePath), e.firstRowId.map(Long.box).orNull) }
-          .toDF("_lk_fid_file", "_fid"))
-        data0.join(fid, normPathCol(col("_file")) === col("_lk_fid_file"), "left")
-          .withColumn(RowIdCol, coalesce(col(RowIdCol), col("_fid") + col("_pos")))
-          .withColumn(LastUpdatedCol, coalesce(col(LastUpdatedCol), col("_seq")))
-          .drop("_lk_fid_file", "_fid")
-      }
-    // position deletes arrive in two physical forms: v2 (file_path, pos)
-    // parquet rows, and v3 DELETION VECTORS — Puffin bitmaps addressed by
-    // the entry's field-143/144/145 triplet, expanded to the same
-    // (file_path, pos, _del_seq) shape executor-side (one task per DV).
-    // Union semantics across both keep mid-upgrade tables correct.
-    val (dvEntries, pqPosEntries) =
-      posEntries.partition(_._1.fileFormat == "PUFFIN")
-    val pqDeletes =
-      if (pqPosEntries.isEmpty) None
-      else Some(spark.read.schema(PosDeleteReadSchema)
-        .parquet(pqPosEntries.map(_._1.filePath).sorted: _*)
-        .select(col("file_path"), col("pos"),
-          col("_metadata.file_path").as("_dfile"))
-        .join(seqLookup(pqPosEntries, "_del_seq"),
-          normPathCol(col("_dfile")) === col("_lk_file"))
-        .select(col("file_path"), col("pos"), col("_del_seq")))
-    val dvDeletes =
-      if (dvEntries.isEmpty) None
-      else {
-        val taskConf = new SerializableHadoopConf(HadoopConfs.active())
-        Some(spark.createDataset(dvEntries.map { case (e, s) =>
-            (e.referencedDataFile.getOrElse(""), e.filePath,
-              e.contentOffset.getOrElse(0L), e.contentSizeInBytes.getOrElse(0L), s) })
-          .flatMap { case (ref, puffin, off, len, s) =>
-            DeletionVectors.read(puffin, off, len, taskConf.value)
-              .toArray.map(p => (ref, p, s)) }
-          .toDF("file_path", "pos", "_del_seq"))
-      }
-    val posApplied = Seq(pqDeletes, dvDeletes).flatten
-      .reduceOption(_ unionByName _) match {
-        case None => data
-        case Some(deletes) => Lakehouse.applyPositionDeletesScoped(data, deletes)
-      }
-    // column set per delete file: KB-scale DRIVER footer reads (concurrent)
-    // — the schema rides along so the grouped read below skips the
-    // per-group schema-inference job
-    val eqGroups = Par.inParallel(eqEntries)(e =>
-        (footerSparkSchema(e._1.filePath), e))
-      .groupBy(_._1.fieldNames.toSeq).toSeq.sortBy(_._1.mkString(","))
-      .map { case (_, g) => (g.minBy(_._2._1.filePath)._1, g.map(_._2)) }
-    eqGroups.foldLeft(posApplied) { case (acc, (groupSchema, group)) =>
-      val dels = spark.read.schema(groupSchema)
-        .parquet(group.map(_._1.filePath).sorted: _*)
-        .select(col("*"), col("_metadata.file_path").as("_dfile"))
-        .join(seqLookup(group, "_del_seq"),
-          normPathCol(col("_dfile")) === col("_lk_file"))
-        .drop("_lk_file", "_dfile")
-      Lakehouse.applyEqualityDeletesScoped(acc, dels)
-    }
   }
 
   /** CDC changelog over a snapshot range — Iceberg's changelog-scan
@@ -497,15 +277,14 @@ object GraftTable {
     }
     val histToCur: Map[String, String] = nameAlternates(meta)
       .flatMap { case (cur2, hists) => hists.map(_ -> cur2) }
-    // r22 (verdict task 5): ALL commits' insert rows come from one
-    // multi-path scan instead of one scan per snapshot. A data file is
-    // ADDED by exactly one snapshot of the chain, so a broadcast
-    // file → (ordinal, snapshot) lookup joined on the scan's
-    // _metadata.file_path replays the per-snapshot tags exactly; the
-    // N-commit timeline that used to plan and run N insert jobs (i82: 4,
-    // i93: 3) now runs ONE. Collected across the chain walk below,
-    // assembled after it.
-    val insertTags = scala.collection.mutable.ArrayBuffer.empty[(String, String, Int, Long)]
+    // ALL commits' insert rows come from one scan instead of one scan per
+    // snapshot. A data file is ADDED by exactly one snapshot of the
+    // chain, so a broadcast file → (ordinal, snapshot) lookup joined on
+    // the scan's `_file` replays the per-snapshot tags exactly: an
+    // N-commit timeline runs ONE insert job, not N. Collected across the
+    // chain walk below, assembled after it.
+    val insertTags = scala.collection.mutable.ArrayBuffer
+      .empty[((ManifestWriter.EntryData, Long), Int, Long)]
     val tagged = chain.zipWithIndex.flatMap { case (s, ordinal) =>
       if (s.operation.contains("replace")) None
       else {
@@ -530,56 +309,53 @@ object GraftTable {
         val posAdded = entriesOf(1, 1, 1)
         val eqAdded = entriesOf(1, 1, 2)
         val removed = entriesOf(0, 2, 0).map(e => uriPath(e._1.filePath)).toSet
-        insertTags ++= dataAdded.map(e =>
-          (e._1.filePath, uriPath(e._1.filePath), ordinal, s.snapshotId))
-        // parent-visible rows over a RESTRICTED file set, MOR-resolved
-        // (parent's own deletes applied) so only live rows can emit
-        def parentVisible(restrict: Seq[(ManifestWriter.EntryData, Long)]
-            => Seq[(ManifestWriter.EntryData, Long)]): Option[DataFrame] =
+        insertTags ++= dataAdded.map(e => (e, ordinal, s.snapshotId))
+        // parent-visible rows of the data files `keep` selects,
+        // MOR-resolved (parent's own deletes applied) so only live rows
+        // can emit
+        def parentVisible(keep: ManifestWriter.EntryData => Boolean): Option[DataFrame] =
           s.parentSnapshotId.flatMap(meta.snapshot).flatMap(_.manifestList).map { pl =>
-            val infos = ManifestListReader.read(pl)
-            val byM = Par.inParallel(infos)(i => (i, ManifestWriter.read(i.path)))
-            def live(lc: Int, ec: Int) = (for {
-              (i, es) <- byM if i.content == lc
-              e <- es if e.status != 2 && e.content == ec
-            } yield (e, e.sequenceNumber.getOrElse(i.sequenceNumber)))
-              .distinctBy(x => (uriPath(x._1.filePath), x._1.contentOffset.getOrElse(-1L)))
-            readFromEntries(spark, meta, restrict(live(0, 0)), live(1, 1), live(1, 2))
+            val (data, pos, eq) = livePlan(ManifestListReader.read(pl))
+            TableDataSource.scanPlan(spark, meta, data.filter(e => keep(e._1)), pos, eq)
           }
         val removedDeletes =
           if (removed.isEmpty) None
-          else parentVisible(_.filter(e => removed.contains(uriPath(e._1.filePath))))
+          else parentVisible(e => removed.contains(uriPath(e.filePath)))
             .map(tag(_, "delete"))
         val posDeletes =
           if (posAdded.isEmpty) None
           else {
             val addrs = posDeleteAddresses(spark, posAdded.map(_._1))
-            parentVisible(_.filter(e => posAdded.exists(d =>
-                posDeleteMayAddress(d._1, Set(uriPath(e._1.filePath))))))
+            parentVisible(e => posAdded.exists(d =>
+                posDeleteMayAddress(d._1, Set(uriPath(e.filePath)))))
               .map { vis =>
                 tag(vis.join(addrs,
-                  normPathCol(vis("_file")) === normPathCol(addrs("file_path")) &&
+                  stripSchemeCol(vis("_file")) === stripSchemeCol(addrs("file_path")) &&
                     vis("_pos") === addrs("pos")), "delete")
               }
           }
         val eqDeletes =
           if (eqAdded.isEmpty) None
-          else parentVisible(identity).map { vis =>
-            val byCols = Par.inParallel(eqAdded)(e =>
-                (footerSparkSchema(e._1.filePath), e._1.filePath))
-              .groupBy(_._1.fieldNames.toSeq.map(n => histToCur.getOrElse(n, n)))
-              .toSeq.sortBy(_._1.mkString(","))
-            byCols.map { case (cols, g) =>
-              // the delete file's own (equality-column) schema, historical
-              // names aliased up to the current generation; driver footer
-              // schema passed through — no inference job per group
-              val raw = spark.read.schema(g.minBy(_._2)._1)
-                .parquet(g.map(_._2).sorted: _*)
-              val vals = raw.select(raw.schema.fieldNames.toIndexedSeq
+          else parentVisible(_ => true).map { vis =>
+            // delete files group by their PHYSICAL column names (one
+            // written before a RENAME COLUMN carries the old name) and
+            // each group reads under its own footer — driver footer
+            // schema passed through, no inference job; the values then
+            // alias up to the current names, and groups naming the same
+            // current columns share one semi-join
+            val vals = Par.inParallel(eqAdded)(e =>
+                (footerSparkSchema(spark, e._1.filePath), e._1.filePath))
+              .groupBy(_._1.fieldNames.toSeq).toSeq.sortBy(_._1.mkString(","))
+              .map { case (_, g) =>
+                val raw = spark.read.schema(g.head._1).parquet(g.map(_._2).sorted: _*)
+                raw.select(raw.columns.toIndexedSeq
                   .map(n => col(n).as(histToCur.getOrElse(n, n))): _*)
-                .dropDuplicates(cols)
-              vis.join(vals, cols.map(c => vis(c) <=> vals(c)).reduce(_ && _), "leftsemi")
-            }.reduce(_ unionByName _)
+              }
+            vals.groupBy(_.columns.toSeq).toSeq.sortBy(_._1.mkString(","))
+              .map { case (cols, vs) =>
+                val v = vs.reduce(_ unionByName _).dropDuplicates(cols)
+                vis.join(v, cols.map(c => vis(c) <=> v(c)).reduce(_ && _), "leftsemi")
+              }.reduce(_ unionByName _)
           }.map(tag(_, "delete"))
         // one commit's delete sources are disjoint by construction
         // (tombstoned files leave the table; a pos/eq pair in one commit
@@ -591,18 +367,18 @@ object GraftTable {
     }
     // the chain-wide insert leg: one scan over every commit's added data
     // files, tagged back per file by the broadcast lookup. If a path were
-    // ever added by TWO chain snapshots, the old per-snapshot plan read it
-    // once per snapshot — the distinct path list plus one lookup row per
-    // (file, snapshot) reproduces exactly that multiset.
+    // ever added by TWO chain snapshots, the per-snapshot semantics read
+    // it once per snapshot — the distinct file set plus one lookup row
+    // per (file, snapshot) reproduces exactly that multiset.
     val insertLeg =
       if (insertTags.isEmpty) None
       else {
         import spark.implicits._
-        val lk = broadcast(insertTags.toSeq.map { case (_, norm, ord, snap) =>
-          (norm, ord, snap) }.toDF("_lk_file", "_lk_ord", "_lk_snap"))
-        Some(readDataFiles(spark, meta,
-            insertTags.toSeq.map(_._1).distinct, withAddress = true)
-          .join(lk, normPathCol(col("_file")) === col("_lk_file"))
+        val lk = broadcast(insertTags.toSeq.map { case ((e, _), ord, snap) =>
+          (e.filePath, ord, snap) }.toDF("_lk_file", "_lk_ord", "_lk_snap"))
+        Some(TableDataSource.scanPlan(spark, meta,
+            insertTags.toSeq.map(_._1).distinctBy(_._1.filePath), Nil, Nil)
+          .join(lk, col("_file") === col("_lk_file"))
           .select(schema.fieldNames.map(col).toIndexedSeq :+
             lit("insert").as("_change_type") :+
             col("_lk_ord").as("_change_ordinal") :+
@@ -922,7 +698,7 @@ object GraftTable {
       Seq(min(col(f.name)), max(col(f.name)), count(col(f.name))) }
     // the file's own footer schema, read driver-side: skips the
     // schema-inference job every stats derivation used to launch
-    val row = spark.read.schema(footerSparkSchema(file)).parquet(file)
+    val row = spark.read.schema(footerSparkSchema(spark, file)).parquet(file)
       .agg(aggs.head, aggs.tail: _*).head()
     def enc(t: IcebergType, v: Any): Option[Array[Byte]] = v match {
       case null => None
@@ -1311,8 +1087,6 @@ object GraftTable {
       : (Seq[ManifestWriter.EntryData], DataFrame) = {
     import spark.implicits._
     def norm(p: String): String = uriPath(p)
-    def normCol(c: org.apache.spark.sql.Column) =
-      regexp_replace(c, "^[a-z0-9+.-]+:(//)?", "")
     val delE = entriesAt(refHead(meta0, branch), 1).filter(_.content == 1)
     val oldDvEntries = delE.filter(e => e.fileFormat == "PUFFIN" &&
       e.referencedDataFile.exists(r => covered(norm(r))))
@@ -1335,7 +1109,7 @@ object GraftTable {
       if (oldParquet.isEmpty) spark.emptyDataset[(String, Long)].toDF("file_path", "pos")
       else spark.read.schema(PosDeleteReadSchema)
         .parquet(oldParquet.map(_.filePath): _*)
-        .select(normCol(col("file_path")).as("file_path"), col("pos"))
+        .select(stripSchemeCol(col("file_path")).as("file_path"), col("pos"))
         .filter(col("file_path").isin(covered.toSeq: _*))
     (oldDvEntries, oldDvPositions.unionByName(oldParquetPositions))
   }
@@ -1541,7 +1315,7 @@ object GraftTable {
     val survivingData = surviving.filter(_.content == 0)
     val deletes = surviving.filter(_.content == 1)
     val fieldName = meta.currentSchema.fields.find(_.id == sourceFieldId).get.name
-    val df = readFromInfos(spark, meta, survivingData ++ deletes)
+    val df = readInfos(spark, meta, survivingData ++ deletes)
       .filter(col(fieldName) <=> lit(value)) // residual
       .select(sparkSchema(meta).fieldNames.map(col).toIndexedSeq: _*)
     (df, survivingData.size, all.count(_.content == 0))
@@ -1565,7 +1339,7 @@ object GraftTable {
     val fieldName = meta.currentSchema.fields.find(_.id == sourceFieldId).get.name
     val residual = (lower.map(col(fieldName) >= lit(_)) ++
       upper.map(col(fieldName) <= lit(_))).reduceOption(_ && _).getOrElse(lit(true))
-    val df = readFromInfos(spark, meta, survivingData ++ deletes)
+    val df = readInfos(spark, meta, survivingData ++ deletes)
       .filter(residual)
       .select(sparkSchema(meta).fieldNames.map(col).toIndexedSeq: _*)
     (df, survivingData.size, all.count(_.content == 0))
@@ -1581,8 +1355,8 @@ object GraftTable {
     * without bounds for the field — or whose bound blob fails to decode
     * (foreign metadata; same Try-guard convention as ScanPlanning's
     * decode sites) — is kept. Position deletes are NOT
-    * key-pruned (they address (file_path, pos), not keys) — they prune by
-    * the surviving data set's paths inside readFromEntries as always. A
+    * key-pruned (they address (file_path, pos), not keys) — the scan
+    * scopes them to each surviving file by their path bounds. A
     * pruned equality delete can only kill rows outside the range, and the
     * residual range filter drops any such row from kept files too, so the
     * result is exactly the full MOR scan filtered to the range.
@@ -1601,22 +1375,34 @@ object GraftTable {
       dec(e.lowerBounds).exists(v => ScanPlanning.cmpValues(v, upper).exists(_ > 0)) ||
         dec(e.upperBounds).exists(v => ScanPlanning.cmpValues(v, lower).exists(_ < 0))
     }
-    // ONE manifest-list read and one sweep per manifest (readFromInfos
-    // also applies its manifest-level dead-delete prune); the range
-    // exclusion rides in as restrict hooks over data + equality entries
-    val infos = refHead(meta, None).toSeq
-      .flatMap(s => ManifestListReader.read(s.manifestList.get))
-    val keep = (es: Seq[(ManifestWriter.EntryData, Long)]) =>
-      es.filterNot { case (e, _) => excludes(e) }
-    readFromInfos(spark, meta, infos, restrictData = keep, restrictEq = keep)
+    // ONE manifest-list read and one sweep per manifest (livePlan also
+    // applies its manifest-level dead-delete prune); the range exclusion
+    // then drops data and equality-delete entries
+    val (data, pos, eq) = livePlan(refHead(meta, None).toSeq
+      .flatMap(s => ManifestListReader.read(s.manifestList.get)))
+    TableDataSource.scanPlan(spark, meta, data.filterNot(e => excludes(e._1)), pos,
+        eq.filterNot(e => excludes(e._1)))
       .filter(col(field.name) >= lit(lower) && col(field.name) <= lit(upper))
       .select(sparkSchema(meta).fieldNames.map(col).toIndexedSeq: _*)
   }
 
   private def uriPath(p: String): String = new org.apache.hadoop.fs.Path(p).toUri.getPath
 
+  /** A path with its URI scheme (and any `//`) stripped: `file:/a/b` and
+    * `/a/b` compare equal, an authority stays (`s3://bk/k` → `bk/k`).
+    * Manifests record plain paths while Spark and delete files may carry
+    * URIs; every comparison between the two forms goes through this or
+    * its Column twin [[stripSchemeCol]], which keeps the same semantics
+    * inside whole-stage codegen. */
+  private[graft] def stripScheme(p: String): String = p.replaceFirst(SchemePrefix, "")
+
+  private[graft] def stripSchemeCol(c: org.apache.spark.sql.Column)
+      : org.apache.spark.sql.Column = regexp_replace(c, SchemePrefix, "")
+
+  private val SchemePrefix = "^[a-z0-9+.-]+:(//)?"
+
   /** Current non-deleted entries of the head snapshot, by list content —
-    * manifests open concurrently (same planning shape as readFromInfos).
+    * manifests open concurrently (same planning shape as livePlan).
     * An entry relying on list-level sequence inheritance (null sequence,
     * field 515 carries the number) gets the sequence MATERIALIZED here:
     * the spec restricts inheritance to ADDED entries, so an entry carried
@@ -1718,18 +1504,19 @@ object GraftTable {
     // the MOR frame over CANDIDATE files only — non-candidates can't
     // hold a source key, so match detection and the insert anti-join
     // are both complete over this subset
-    val candLive = readFromEntries(spark, meta0, candEntries, posEntries, eqEntries)
+    val candLive = TableDataSource.scanPlan(spark, meta0, candEntries, posEntries, eqEntries)
     val affected = candLive.join(src, keyCols, "left_semi")
       .select(col("_file")).distinct().collect().map(r => uriPath(r.getString(0))).toSet
     val mergeUuid = java.util.UUID.randomUUID()
     // per-file COW rewrites are independent Spark jobs — submitted
     // concurrently, and each reads ONLY its target file plus the delete
-    // files that can address it (readFromEntries scopes by sequence and
+    // files that can address it (the scan scopes them by sequence and
     // file_path bounds): K affected files cost O(affected bytes) total,
     // not K full-table scans
     val rewritten = Par.inParallel(affected.toSeq.sorted.zipWithIndex) { case (f, i) =>
       val out = s"$tableDir/data/merged-$mergeUuid-%05d.parquet".format(i)
-      val fileLive = readFromEntries(spark, meta0, Seq(candByPath(f)), posEntries, eqEntries)
+      val fileLive = TableDataSource.scanPlan(spark, meta0, Seq(candByPath(f)),
+        posEntries, eqEntries)
       ParquetFiles.writeOne(
         fileLive
           .join(src.select(keyCols.map(col) :+ struct(cols.map(col): _*).as("_src"): _*),
@@ -1981,8 +1768,10 @@ object GraftTable {
     * the table's MOR-resolved content is rewritten into target-size data
     * files, pending deletes are materialized away (position deletes
     * address the dead paths; equality deletes are out-sequenced), and a
-    * replace snapshot carrying ONLY the new manifest commits through the
-    * CAS loop — aborting if the file set changed concurrently.
+    * replace snapshot commits through the CAS loop. Data files (and
+    * their delete files) that other writers commit meanwhile carry
+    * forward untouched; the commit aborts only when a rewritten file
+    * was removed concurrently, or a new delete file may address one.
     *
     * Strategies:
     *   - **bin-pack** (default, `sortOrder`/`zorderCols` empty): files
@@ -2007,10 +1796,7 @@ object GraftTable {
     * rewritten (wholly — the predicate never drops rows); unaffected
     * manifests carry verbatim with their summaries, and delete manifests
     * carry because they still scope to the carried files. At 100 TB the
-    * nightly sweep compacts the hot key range, not the table. Either
-    * mode validates concurrently-committed delete files the way the COW
-    * row-level path does — a delete landing mid-compaction would
-    * otherwise be dropped (full) or escaped by path/sequence (partial). */
+    * nightly sweep compacts the hot key range, not the table. */
   def compact(spark: SparkSession, tableDir: String,
       targetBytes: Long = 512L * 1024 * 1024,
       sortOrder: Seq[(String, Boolean)] = Nil,
@@ -2034,10 +1820,10 @@ object GraftTable {
     // manifests) — a second serial metadata sweep at 10^4+ manifests
     // would cost more than the rewrite's planning itself
     type TupleTag = (String, Int, Seq[ManifestListWriter.FieldSummary])
+    val infos0 = carryForward(meta0)
+    val plannedDeleteManifests = infos0.filter(_.content == 1).map(_.path).toSet
     val perManifest0: Seq[(Option[TupleTag], Seq[ManifestWriter.EntryData])] =
-      Par.inParallel(meta0.currentSnapshot.toSeq
-          .flatMap(s => ManifestListReader.read(s.manifestList.get))
-          .filter(_.content == 0)) { i =>
+      Par.inParallel(infos0.filter(_.content == 0)) { i =>
         val tag = for {
           t <- MetadataTables.partitionTuple(meta0, i)
           ss <- i.summaries
@@ -2081,9 +1867,8 @@ object GraftTable {
     // along as MATERIALIZED columns in the output files (the entries
     // then claim no fresh id block — firstRowId stays None and readers
     // serve the columns)
-    val v3Lineage = meta0.formatVersion >= 3
     val lineageCols =
-      if (v3Lineage) Seq(RowIdCol, LastUpdatedCol) else Nil
+      if (meta0.formatVersion >= 3) Seq(RowIdCol, LastUpdatedCol) else Nil
     // Rewrites are PARTITION-SCOPED like upstream RewriteDataFiles'
     // per-partition file groups: neither a bin nor a sort/zorder range
     // exchange ever spans partition tuples — merging partitions into
@@ -2134,9 +1919,8 @@ object GraftTable {
         // concurrently — total I/O is still one pass over the selection
         Par.inParallel(tupleGroupsOf(selected).zipWithIndex) {
           case ((tag, es), gi) =>
-            val df = readFromEntries(spark, meta0,
-                es.map(e => (e, e.sequenceNumber.get)), posEntries, eqEntries,
-                withLineage = v3Lineage)
+            val df = TableDataSource.scanPlan(spark, meta0,
+                es.map(e => (e, e.sequenceNumber.get)), posEntries, eqEntries)
               .select((schema.fieldNames.toSeq ++ lineageCols).map(col): _*)
             val nFiles = math.max(1, math.ceil(
               es.map(_.fileSizeInBytes).sum.toDouble / targetBytes).toInt)
@@ -2192,21 +1976,19 @@ object GraftTable {
     val outFiles = Par.inParallel(bins.zipWithIndex) { case (es, i) =>
       val out = s"$tableDir/data/compacted-$compactUuid-%05d.parquet".format(i)
       ParquetFiles.writeOne(
-        readFromEntries(spark, meta0,
-          es.map(e => (e, e.sequenceNumber.get)), posEntries, eqEntries,
-          withLineage = v3Lineage)
+        TableDataSource.scanPlan(spark, meta0,
+          es.map(e => (e, e.sequenceNumber.get)), posEntries, eqEntries)
           .select((schema.fieldNames.toSeq ++ lineageCols).map(col): _*)
           .orderBy(col(schema.fieldNames.head)), out)
       out
     }
-    val allPreSet = preData.map(e => uriPath(e.filePath)).toSet
     val selectedSet = selected.map(e => uriPath(e.filePath)).toSet
     val scannedDeletes = (posEntries ++ eqEntries).map(_._1.filePath).toSet
     OptimisticCommit.commit(tableDir, (base, basePath) => {
       val snapId = (base.snapshots.map(_.snapshotId) :+ 0L).max + 1
       val attempt = java.util.UUID.randomUUID()
       // ONE read of the base's data manifests per attempt serves the
-      // conflict check AND (partial path) the carry partition —
+      // conflict check AND the carry partition —
       // sequence numbers materialized exactly as entriesAt does
       val infos = carryForward(base)
       val perManifest = Par.inParallel(infos.filter(_.content == 0))(i =>
@@ -2214,15 +1996,17 @@ object GraftTable {
           .filter(e => e.status != 2 && e.content == 0)
           .map(e => e.copy(
             sequenceNumber = Some(e.sequenceNumber.getOrElse(i.sequenceNumber))))))
-      val nowEntries = perManifest.flatMap(_._2)
-      val nowSet = nowEntries.map(e => uriPath(e.filePath)).toSet
-      if (nowSet != allPreSet) throw OptimisticCommit.CommitConflictException(
-        "table file set changed while compacting — rerun compaction")
-      // a delete file committed while compacting addresses the ORIGINALS:
-      // the full rewrite would drop its manifest outright, and a partial
-      // rewrite's outputs escape it by path (position) or sequence
-      // (equality) — either way rows resurrect. Same conflict rule as
-      // the COW row-level path.
+      // a concurrent commit may ADD data files (they carry forward below)
+      // but must not have removed one this compaction rewrote
+      val gone = selectedSet --
+        perManifest.flatMap(_._2).map(e => uriPath(e.filePath))
+      if (gone.nonEmpty) throw OptimisticCommit.CommitConflictException(
+        "data files rewritten by this compaction were removed concurrently " +
+          s"— rerun compaction: ${gone.toSeq.sorted.mkString(", ")}")
+      // a delete file committed while compacting that addresses a
+      // rewritten file would be escaped by the outputs' paths (position)
+      // or sequence (equality) — rows would resurrect. Same conflict rule
+      // as the COW row-level path.
       validateNoNewDeletes(base, scannedDeletes, selectedSet)
       val entries =
         if (sortedMsgs.nonEmpty)
@@ -2259,55 +2043,40 @@ object GraftTable {
             (m, specId, fs, es.size)
         }
       val plainOutputs = taggedOutputs.collect { case (e, None) => e }
-      if (where.isEmpty) {
-        // FULL rewrite: every live row was materialized post-MOR into
-        // the outputs, so the whole previous manifest set (data AND
-        // delete) drops; replaced files tombstone as DELETED entries
-        // (Iceberg's replace shape) — invisible to scans, visible to
-        // the `entries` table. Partition-binned outputs each get their
-        // OWN manifest carrying the source partition's field-507
-        // summary (the bins never spanned tuples), so list-level
-        // pruning and the sketch bank survive a full compaction;
-        // untupled outputs and the tombstones share the plain manifest.
-        val tombstones = nowEntries.map(_.copy(status = 2, snapshotId = snapId))
-        ManifestWriter.write(manifest, plainOutputs ++ tombstones)
-        writeList(list, Seq.empty, manifest, plainOutputs.size, 0, snapId,
-          tupleManifests = perTuple)
-      } else {
-        // PARTIAL rewrite: manifests owning NO selected file carry
-        // VERBATIM (their field-507 summaries keep list-level pruning);
-        // an affected manifest's unselected entries re-emit as EXISTING
-        // at their original sequences under the UNION of the affected
-        // manifests' summaries (conservative — moved files must not
-        // lose their list-level pruning); delete manifests all carry —
-        // they still scope to carried files, while the rewritten
-        // outputs escape them by path (position) and sequence
-        // (equality), their rows having been materialized post-MOR
-        val (affected, untouched) = perManifest.partition { case (_, es) =>
-          es.exists(e => selectedSet.contains(uriPath(e.filePath))) }
-        val liveAffected = affected.flatMap(_._2)
-        val moved = liveAffected
-          .filterNot(e => selectedSet.contains(uriPath(e.filePath)))
-          .map(_.copy(status = 0, snapshotId = snapId))
-        val tombstones = liveAffected
-          .filter(e => selectedSet.contains(uriPath(e.filePath)))
-          .map(_.copy(status = 2, snapshotId = snapId))
-        // the OUTPUTS land per-tuple exactly like the full branch — a
-        // partial rewrite spanning 2+ partitions must not lump them
-        // into one untupled shared manifest (which would park the
-        // sketch bank and blunt pruning until the next full rewrite);
-        // moved EXISTING entries and tombstones keep the union-summary
-        // manifest. Field 516 must be the true minimum over the carried
-        // EXISTING entries, or delete-side sequence pruning would
-        // wrongly skip deletes that still apply to them.
-        ManifestWriter.write(manifest, plainOutputs ++ moved ++ tombstones)
-        val minSeq = (plainOutputs ++ moved).flatMap(_.sequenceNumber)
-          .foldLeft(snapId)(math.min)
-        writeList(list, untouched.map(_._1) ++ infos.filter(_.content == 1),
-          manifest, plainOutputs.size, 0, snapId,
-          ScanPlanning.unionSummaries(base, affected.map(_._1)),
-          Some(minSeq), perTuple)
-      }
+      // Manifests owning NO selected file carry VERBATIM (their
+      // field-507 summaries keep list-level pruning) — in a full rewrite
+      // these are the manifests of appends that committed while
+      // compacting. An affected manifest's unselected entries re-emit as
+      // EXISTING at their original sequences under the UNION of the
+      // affected manifests' summaries (conservative — moved files must
+      // not lose their list-level pruning), and the selected files
+      // tombstone as DELETED entries (Iceberg's replace shape) —
+      // invisible to scans, visible to the `entries` table. Untupled
+      // outputs share that plain manifest; tupled ones got their own
+      // above. Field 516 must be the true minimum over the carried
+      // EXISTING entries, or delete-side sequence pruning would wrongly
+      // skip deletes that still apply to them.
+      val (affected, untouched) = perManifest.partition { case (_, es) =>
+        es.exists(e => selectedSet.contains(uriPath(e.filePath))) }
+      val (tombstoned, moved) = affected.flatMap(_._2)
+        .partition(e => selectedSet.contains(uriPath(e.filePath)))
+      ManifestWriter.write(manifest, plainOutputs ++
+        moved.map(_.copy(status = 0, snapshotId = snapId)) ++
+        tombstoned.map(_.copy(status = 2, snapshotId = snapId)))
+      val minSeq = (plainOutputs ++ moved).flatMap(_.sequenceNumber)
+        .foldLeft(snapId)(math.min)
+      // Delete manifests: a partial rewrite carries them all — they still
+      // scope to the carried files, while the outputs escape them by path
+      // (position) and sequence (equality), their rows having been
+      // materialized post-MOR. A full rewrite materialized every PLANNED
+      // delete, so only delete manifests committed since planning carry;
+      // validateNoNewDeletes proved they address no rewritten file.
+      val carriedDeletes = infos.filter(i => i.content == 1 &&
+        (where.isDefined || !plannedDeleteManifests(i.path)))
+      writeList(list, untouched.map(_._1) ++ carriedDeletes,
+        manifest, plainOutputs.size, 0, snapId,
+        ScanPlanning.unionSummaries(base, affected.map(_._1)),
+        Some(minSeq), perTuple)
       MetadataWriter.commitSnapshot(base,
         Snapshot(snapId, base.currentSnapshotId, base.lastUpdatedMs + 1000,
           Some("replace"),
@@ -2337,49 +2106,32 @@ object GraftTable {
     * the scheme-less form every reader compares in. */
   def rewritePositionDeleteFiles(spark: SparkSession, tableDir: String)
       : OptimisticCommit.CommitResult = {
-    import org.apache.spark.sql.functions.{broadcast, col, count, lit, max, min, regexp_replace}
+    import org.apache.spark.sql.functions.{broadcast, col, count, lit, max, min}
     val meta0 = TableMetadata.parseFile(latestMetadataPath(tableDir))
-    def norm(p: String): String = p.replaceFirst("^[a-z0-9+.-]+:(//)?", "")
-    def normCol(c: org.apache.spark.sql.Column) =
-      regexp_replace(c, "^[a-z0-9+.-]+:(//)?", "")
     val dataE = currentEntries(meta0, 0).filter(_.content == 0)
       .map(e => (e, e.sequenceNumber.get))
     val delE = currentEntries(meta0, 1)
     require(delE.nonEmpty, "no pending delete files to rewrite")
     val posE = delE.filter(_.content == 1).map(e => (e, e.sequenceNumber.get))
     val eqE = delE.filter(_.content == 2).map(e => (e, e.sequenceNumber.get))
+    // the delete files' columns use the names current at DELETE time —
+    // canonicalize to the current generation before comparing
+    val altToCur = nameAlternates(meta0).flatMap { case (cur, as) => as.map(_ -> cur) }
+    val tableSchema = sparkSchema(meta0)
     val resolvedEq = eqE.flatMap { case (e, eqSeq) =>
-      val addressedEntries = dataE.filter(_._2 < eqSeq).map(_._1)
-      // equality resolution reads the addressed rows through the parquet
-      // DataFrame route; a mixed table's imported Avro/ORC files can't
-      // resolve here — their scans APPLY equality deletes directly, so
-      // refuse loudly rather than silently dropping the delete (which
-      // would resurrect rows once the eq manifest is compacted away)
-      require(addressedEntries.forall(_.fileFormat == "PARQUET"),
-        "rewrite_position_delete_files cannot resolve equality deletes " +
-          "addressing non-parquet (imported Avro/ORC) data files — their " +
-          "scans apply equality deletes directly; INSERT OVERWRITE from " +
-          "a scan of the table to materialize them instead")
-      val addressed = addressedEntries.map(_.filePath)
+      val addressed = dataE.filter(_._2 < eqSeq)
       if (addressed.isEmpty) None
       else {
-        // the delete file's columns use the names current at DELETE time
-        // — canonicalize to the current generation before comparing
-        val altToCur = nameAlternates(meta0)
-          .flatMap { case (cur, as) => as.map(_ -> cur) }
-        val eqVals0 = spark.read.schema(footerSparkSchema(e.filePath))
+        val eqVals0 = spark.read.schema(footerSparkSchema(spark, e.filePath))
           .parquet(e.filePath)
         val eqVals = eqVals0.select(eqVals0.columns.toSeq.map(c =>
           col(c).as(altToCur.getOrElse(c, c))): _*)
-        // read the addressed files under the TABLE's declared schema,
-        // not a single sampled footer: after int->bigint/float->double
-        // widening the set can mix INT32 and INT64 physicals, and an
-        // inferred schema would fail the read (or compare mismatched
-        // types in the null-safe join). Spark's parquet reader promotes
-        // the narrower physicals under the declared wider schema — the
-        // same rule the row/columnar table readers apply.
-        val tableSchema = sparkSchema(meta0)
-        val data = readDataFiles(spark, meta0, addressed, withAddress = true)
+        // the addressed files' rows with their (_file, _pos) addresses,
+        // read through the scan under the TABLE's declared schema: it
+        // resolves renamed columns, widened physicals (INT32 under a
+        // bigint column) and imported Avro/ORC files per file. Their own
+        // position deletes need no apply — those addresses merge below.
+        val data = TableDataSource.scanPlan(spark, meta0, addressed, Nil, Nil)
           .select((eqVals.columns.toSeq.map(col) :+
             col("_file").as("__file") :+ col("_pos").as("__pos")): _*)
         // the delete file itself may predate a widening — cast its
@@ -2387,15 +2139,15 @@ object GraftTable {
         val cond = eqVals.columns.map(c =>
           data(c) <=> eqVals(c).cast(tableSchema(c).dataType)).reduce(_ && _)
         Some(data.join(eqVals, cond, "left_semi")
-          .select(normCol(col("__file")).as("file_path"), col("__pos").as("pos")))
+          .select(stripSchemeCol(col("__file")).as("file_path"), col("__pos").as("pos")))
       }
     }
     val oldPos = posE.map { case (e, posSeq) =>
       import spark.implicits._
-      val lives = dataE.filter(_._2 <= posSeq).map(x => norm(x._1.filePath))
+      val lives = dataE.filter(_._2 <= posSeq).map(x => stripScheme(x._1.filePath))
       // both physical forms: v2 parquet rows, v3 DV blobs
       posDeleteAddresses(spark, Seq(e))
-        .select(normCol(col("file_path")).as("file_path"), col("pos"))
+        .select(stripSchemeCol(col("file_path")).as("file_path"), col("pos"))
         .join(broadcast(lives.toDF("file_path")), Seq("file_path"), "left_semi")
     }
     val parts = resolvedEq ++ oldPos
@@ -2424,7 +2176,7 @@ object GraftTable {
     val dvRefRows: Seq[(String, String, Long, Long, Long, Long)] =
       if (!v3) Nil
       else writeDvsDistributed(spark, tableDir, attempt, merged,
-        dataE.map(x => norm(x._1.filePath) -> x._1.filePath).toMap,
+        dataE.map(x => stripScheme(x._1.filePath) -> x._1.filePath).toMap,
         (meta0.snapshots.map(_.snapshotId) :+ 0L).max + 1)
     val (nRows, delLower, delUpper) =
       if (v3) (dvRefRows.map(_._5).sum,
@@ -2447,14 +2199,14 @@ object GraftTable {
               ManifestWriter.PosDeletePosId ->
                 SingleValueCodec.encode(IcebergTypes.TLong, statRow.getLong(4))))
       }
-    val preDel = delE.map(e => norm(e.filePath)).toSet
-    val preData = dataE.map(x => norm(x._1.filePath)).toSet
+    val preDel = delE.map(e => stripScheme(e.filePath)).toSet
+    val preData = dataE.map(x => stripScheme(x._1.filePath)).toSet
     OptimisticCommit.commit(tableDir, (base, basePath) => {
       // the resolution above ran against meta0 — a concurrent commit that
       // changed either side of the MOR equation invalidates it
-      val nowDel = currentEntries(base, 1).map(e => norm(e.filePath)).toSet
+      val nowDel = currentEntries(base, 1).map(e => stripScheme(e.filePath)).toSet
       val nowData = currentEntries(base, 0).filter(_.content == 0)
-        .map(e => norm(e.filePath)).toSet
+        .map(e => stripScheme(e.filePath)).toSet
       if (nowDel != preDel || nowData != preData)
         throw OptimisticCommit.CommitConflictException(
           "table delete/data file set changed while rewriting — rerun")
@@ -2826,7 +2578,7 @@ object GraftTable {
             s"analyzed schema (${sketchableCols.map(_._1.name).mkString(", ")})")))
     }
     // PARTITION SKETCH BANK route: the default full ANALYZE of a
-    // partitioned, all-parquet, all-theta table computes its stats PER
+    // partitioned, all-theta table computes its stats PER
     // PARTITION — one MOR-resolved job per tuple, submitted concurrently,
     // so the table's bytes are still read exactly once — and BANKS each
     // partition's sketches in the document. A later DELETE then
@@ -2843,8 +2595,7 @@ object GraftTable {
       if (snapshotId.nonEmpty || columns.nonEmpty ||
           typed.exists { case (_, t) => !TableStats.thetaSupported(t) }) None
       else meta.currentSnapshot.flatMap(s => entriesByTuple(meta, s))
-        .filter(gs => gs.nonEmpty &&
-          gs.values.forall(_.forall(_.fileFormat == "PARQUET")))
+        .filter(_.nonEmpty)
     bankGroups match {
       case Some(groups) =>
         val dels = currentEntries(meta, 1)
@@ -3133,7 +2884,7 @@ object GraftTable {
       eqE: Seq[(ManifestWriter.EntryData, Long)],
       typed: Seq[(IcebergField, IcebergType)]): TableStats.PartStats = {
     val (rc, nulls, saw, sks) = statsPass(spark,
-      readFromEntries(spark, meta,
+      TableDataSource.scanPlan(spark, meta,
         entries.map(e => (e, e.sequenceNumber.get)), posE, eqE), typed)
     toPartStats(typed, rc, nulls, saw, sks)
   }
@@ -3153,8 +2904,8 @@ object GraftTable {
     * index — never a shuffle). The result is byte-identical to the
     * per-tuple path's: counts are exact sums either way, and a theta
     * compact/union is insertion-order-free in exact mode and associative
-    * above it. Delete application stays per-row-scoped inside
-    * readFromEntries, so widening the read set from one tuple to B
+    * above it. Delete application stays per-file-scoped inside the
+    * scan, so widening the read set from one tuple to B
     * changes which delete files are CONSIDERED, not which rows they
     * remove. */
   private def partStatsBatch(spark: SparkSession, meta: TableMetadata,
@@ -3169,12 +2920,12 @@ object GraftTable {
     import spark.implicits._
     val allEntries = batch.flatMap(_._2)
     val idxOfFile: Seq[(String, Int)] = batch.zipWithIndex.flatMap {
-      case ((_, es), i) => es.map(e => uriPath(e.filePath) -> i) }
-    val df0 = readFromEntries(spark, meta,
+      case ((_, es), i) => es.map(e => e.filePath -> i) }
+    val df0 = TableDataSource.scanPlan(spark, meta,
       allEntries.map(e => (e, e.sequenceNumber.get)), posE, eqE)
     val (fileCol, idxCol) = bkCols(df0.columns)
     val df = df0.join(broadcast(idxOfFile.toDF(fileCol, idxCol)),
-      normPathCol(col("_file")) === col(fileCol))
+      col("_file") === col(fileCol))
     val per = statsPassKeyed(spark, df, idxCol, batch.size, typed)
     batch.zipWithIndex.map { case ((t, _), i) =>
       val (rc, nulls, saw, sks) = per(i)
@@ -3310,8 +3061,8 @@ object GraftTable {
     * from before the bank, foreign writers' untupled manifests), a
     * sketchable-column-set change (schema evolution redefines what old
     * files contribute), a column without a standard sketch body (geo), a
-    * foreign document without null counts, non-parquet files,
-    * or a reclaimed appended original after a replace. */
+    * foreign document without null counts, or a reclaimed appended
+    * original after a replace. */
   def computeTableStatsIncremental(spark: SparkSession, tableDir: String)
       : (OptimisticCommit.CommitResult, TableStats.Doc, Boolean) = {
     def full() = {
@@ -3383,11 +3134,6 @@ object GraftTable {
       val headSnap = chain.head
       val headGroups = entriesByTuple(meta, headSnap).getOrElse(return None)
       val anchorGroups = entriesByTuple(meta, anchor).getOrElse(return None)
-      // the per-partition rescan reads through readFromEntries
-      // (parquet-only); mixed-format tables stay on full(), whose read()
-      // route speaks every format
-      if (headGroups.values.exists(_.exists(_.fileFormat != "PARQUET")))
-        return None
       val headDels = entriesAt(Some(headSnap), 1)
       val anchorDels = entriesAt(Some(anchor), 1)
       // bounds decoded once, reused across every partition's clean test
@@ -3450,11 +3196,11 @@ object GraftTable {
       Par.inParallel(infos)(i =>
         ManifestWriter.read(i.path)
           .filter(e => e.status == 1 && e.content == 0)
-          .map(e => (MetadataTables.partitionTuple(meta, i), e))).flatten
-    }.distinctBy(te => uriPath(te._2.filePath))
+          .map(e => (MetadataTables.partitionTuple(meta, i),
+            (e, e.sequenceNumber.getOrElse(i.sequenceNumber))))).flatten
+    }.distinctBy(te => uriPath(te._2._1.filePath))
     val newEntries = newTagged.map(_._2)
-    if (!newEntries.forall(_.fileFormat == "PARQUET")) return full()
-    val newPaths = newEntries.map(_.filePath)
+    val newPaths = newEntries.map(_._1.filePath)
     // a later replace makes the appended ORIGINALS dead at the head; the
     // engine's own expiry keeps them while their append snapshot is
     // retained (reachability), but a foreign writer may have reclaimed
@@ -3484,30 +3230,33 @@ object GraftTable {
     // instead: their files are live, so full() would hit the same
     // bytes. (Option, not a nested `return`: these run on pool threads,
     // where a non-local return cannot unwind the caller.)
-    def passOf(paths: Seq[String])
-        : Option[(Long, Array[Long], Array[Boolean], Array[Array[Byte]])] =
+    def passOf(es: Seq[(ManifestWriter.EntryData, Long)])
+        : Option[(Long, Array[Long], Array[Boolean], Array[Array[Byte]])] = {
+      def run() = statsPass(spark, TableDataSource.scanPlan(spark, meta, es, Nil, Nil), typed)
       if (chainHasReplace)
-        try Some(statsPass(spark, readDataFiles(spark, meta, paths), typed))
+        try Some(run())
         catch { case scala.util.control.NonFatal(_) => None }
-      else Some(statsPass(spark, readDataFiles(spark, meta, paths), typed))
+      else Some(run())
+    }
     // per-tuple passes when the bank needs refreshing (same files, same
     // bytes) — BATCHED B tuples per job like the other two bank writers
     // ([[partStatsBatch]]): a streaming ingest appending into 10^3
     // partitions refreshes in ⌈tuples/B⌉ jobs, not 10^3, with the keyed
     // pass's per-tuple results byte-identical to the per-tuple jobs'
-    def batchPassOf(batch: Seq[(String, Seq[(Option[String], ManifestWriter.EntryData)])])
+    def batchPassOf(batch: Seq[(String,
+        Seq[(Option[String], (ManifestWriter.EntryData, Long))])])
         : Seq[(String, Option[(Long, Array[Long], Array[Boolean], Array[Array[Byte]])])] = {
       if (batch.size == 1)
-        return batch.map { case (t, tes) => t -> passOf(tes.map(_._2.filePath)) }
+        return batch.map { case (t, tes) => t -> passOf(tes.map(_._2)) }
       import spark.implicits._
       val idx = batch.zipWithIndex.flatMap { case ((_, tes), i) =>
-        tes.map(te => uriPath(te._2.filePath) -> i) }
+        tes.map(te => te._2._1.filePath -> i) }
       def run() = {
-        val df0 = readDataFiles(spark, meta,
-          batch.flatMap(_._2.map(_._2.filePath)), withAddress = true)
+        val df0 = TableDataSource.scanPlan(spark, meta,
+          batch.flatMap(_._2.map(_._2)), Nil, Nil)
         val (fileCol, idxCol) = bkCols(df0.columns)
         val df = df0.join(broadcast(idx.toDF(fileCol, idxCol)),
-          normPathCol(col("_file")) === col(fileCol))
+          col("_file") === col(fileCol))
         val per = statsPassKeyed(spark, df, idxCol, batch.size, typed)
         batch.zipWithIndex.map { case ((t, _), i) => t -> Some(per(i)) }
       }
@@ -3536,7 +3285,7 @@ object GraftTable {
           Array.tabulate(typed.size)(j => ps.map(_._2(j)).sum),
           Array.tabulate(typed.size)(j => ps.exists(_._3(j))),
           Array.tabulate(typed.size)(j => unionSketches(ps.map(_._4(j)))))
-      } else passOf(newPaths).getOrElse(return full())
+      } else passOf(newEntries).getOrElse(return full())
     val newBank: Map[String, TableStats.PartStats] =
       if (!bankable) Map.empty
       else {
@@ -4113,7 +3862,7 @@ object GraftTable {
         // its entry carries verbatim and the bank keeps treating it
         // conservatively — the rewrite must not fail over a diagnostic.
         scala.util.Try {
-          val names = footerSparkSchema(e.filePath).fieldNames.toSet
+          val names = footerSparkSchema(spark, e.filePath).fieldNames.toSet
           val fields = meta0.currentSchema.fields.filter(f => names.contains(f.name))
           uriPath(e.filePath) -> deriveStatsFor(spark, e.filePath, fields)._4
         }.toOption
@@ -4548,11 +4297,9 @@ object GraftTable {
       if (!v3Dv) (Nil, Set.empty[(String, Long)], Set.empty[(String, Long)])
       else {
         def norm(p: String): String = uriPath(p)
-        def normCol(c: org.apache.spark.sql.Column) =
-          regexp_replace(c, "^[a-z0-9+.-]+:(//)?", "")
         val newDels = spark.read.schema(PosDeleteReadSchema)
           .parquet(deleteFiles.map(_.path): _*)
-          .select(normCol(col("file_path")).as("file_path"), col("pos"))
+          .select(stripSchemeCol(col("file_path")).as("file_path"), col("pos"))
         val covered = newDels.select("file_path").distinct()
           .collect().map(_.getString(0)).toSet
         val (oldDvEntries, oldPositions) = pendingPosState(spark, meta0, covered, branch)
@@ -4849,8 +4596,6 @@ object GraftTable {
       "v3 DELETE currently scans parquet data files only — imported " +
         "Avro/ORC files must be compacted to parquet (rewrite_data_files) first")
     def norm(p: String): String = uriPath(p)
-    def normCol(c: org.apache.spark.sql.Column) =
-      regexp_replace(c, "^[a-z0-9+.-]+:(//)?", "")
     // normalized path -> the path form the manifests carry (what
     // referenced_data_file must record for exact planning-time matches)
     val manifestForm = dataE.map(e => norm(e.filePath) -> e.filePath).toMap
@@ -4859,7 +4604,7 @@ object GraftTable {
       .select(col("*"),
         col("_metadata.file_path").as("_gf"), col("_metadata.row_index").as("_gp"))
       .filter(predicate)
-      .select(normCol(col("_gf")).as("file_path"), col("_gp").as("pos"))
+      .select(stripSchemeCol(col("_gf")).as("file_path"), col("_gp").as("pos"))
     // the covered file set decides which pending delete state merges in
     // and which DV entries the commit supersedes — KB-scale (file paths,
     // with per-file match counts so the commit summary needs no 2nd scan)

@@ -34,6 +34,6 @@ object ParquetFiles {
   def read(spark: org.apache.spark.sql.SparkSession, paths: Seq[String])
       : DataFrame = {
     require(paths.nonEmpty, "ParquetFiles.read needs at least one path")
-    spark.read.schema(GraftTable.footerSparkSchema(paths.head)).parquet(paths: _*)
+    spark.read.schema(GraftTable.footerSparkSchema(spark, paths.head)).parquet(paths: _*)
   }
 }

@@ -132,42 +132,6 @@ object Lakehouse {
     data.join(deletes, cond, "left_anti")
   }
 
-  /** Sequence-scoped position-delete apply (the v2 applicability rule):
-    * data rows carry `_seq` — their file's DATA sequence number from the
-    * manifest entry — and delete rows carry `_del_seq`. A position delete
-    * applies only to data files with sequence number <= its own, so a
-    * file appended after the delete commit is never touched even if its
-    * (path, pos) were ever reused. Paths compare on their NORMALIZED form
-    * (scheme/authority stripped): writers legitimately record either the
-    * URI (`_metadata.file_path`) or the manifest's plain path (the DSv2
-    * scan's `_file`), and a scheme difference must never defeat a delete.
-    * Same optimizer-chosen join shape as the unscoped apply: the extra
-    * predicates are per-row comparisons of already-present columns
-    * (regexp stays inside codegen), no new shuffle dimension. */
-  def applyPositionDeletesScoped(data: DataFrame, deletes: DataFrame): DataFrame = {
-    def norm(c: org.apache.spark.sql.Column) =
-      regexp_replace(c, "^[a-z0-9+.-]+:(//)?", "")
-    data.join(deletes,
-      norm(data("_file")) === norm(deletes("file_path")) &&
-        data("_pos") === deletes("pos") &&
-        data("_seq") <= deletes("_del_seq"),
-      "left_anti")
-  }
-
-  /** Sequence-scoped equality-delete apply: an equality delete applies
-    * only to data files with STRICTLY lower data sequence number — a row
-    * appended in or after the delete's own commit survives even when its
-    * equality tuple matches (the spec's strict inequality is what lets a
-    * writer delete-then-reinsert a key in one transaction). `_del_seq` is
-    * carried on the delete rows; every other delete column is an equality
-    * column. */
-  def applyEqualityDeletesScoped(data: DataFrame, deletes: DataFrame): DataFrame = {
-    val eqCols = deletes.columns.filterNot(_ == "_del_seq")
-    val cond = eqCols.map(c => data(c) <=> deletes(c)).reduce(_ && _) &&
-      data("_seq") < deletes("_del_seq")
-    data.join(deletes, cond, "left_anti")
-  }
-
   // ---------------------------------------------------------------- i14
   /** Full v2 merge-on-read scan: position deletes AND equality deletes
     * layered, BOTH round-tripped through storage like real delete files

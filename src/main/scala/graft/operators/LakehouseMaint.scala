@@ -285,7 +285,7 @@ object LakehouseMaint {
     * 20; the spec scopes an equality delete to data files with STRICTLY
     * LOWER data sequence number, so the late row survives. Sequence
     * numbers ride the manifest entries (field 3) from the write path and
-    * drive the scoped anti-join in the read path — the oracle's
+    * drive the scan's per-file delete scoping — the oracle's
     * `n_late_key_present = 1` is the proof the scoping executed. */
   val seqScopedScan: Q = (spark, sfDir) => {
     val dir = entryDir("i36", sfDir)
@@ -337,32 +337,16 @@ object LakehouseMaint {
       MetadataWriter.write(s"$dir/v3.metadata.json",
         MetadataWriter.commitSnapshot(TableMetadata.parseFile(v2), snap3, Some(v2)))
     }
-    val meta = TableMetadata.parseFile(s"$dir/v3.metadata.json")
-    val cur = meta.currentSnapshot.get
-    // planning: (path, data-sequence-number) pairs per content kind —
-    // KB-scale metadata, same driver boundary as Iceberg's planner
-    def entriesOf(content: Int): Seq[(String, Long)] =
-      fileEntries(spark, cur, content)
-        .select(col("file_path"), col("sequence_number")).collect()
-        .map(r => (r.getString(0), r.getLong(1))).toSeq
-    // one scan per sequence number (= per commit): the file group shares
-    // its seq constant, exactly how a scan task carries it at scale
-    val data = entriesOf(0).groupBy(_._2).toSeq.sortBy(_._1).map { case (seq, es) =>
-      ParquetFiles.read(spark, es.map(_._1))
-        .select(col("*"),
-          col("_metadata.file_path").as("_file"),
-          col("_metadata.row_index").as("_pos"),
-          lit(seq).as("_seq"))
-    }.reduce(_ unionByName _)
-    val eqDeletes = entriesOf(1).groupBy(_._2).toSeq.sortBy(_._1).map { case (seq, es) =>
-      ParquetFiles.read(spark, es.map(_._1)).withColumn("_del_seq", lit(seq))
-    }.reduce(_ unionByName _)
-    Lakehouse.applyEqualityDeletesScoped(data, eqDeletes)
+    // the hand-built table reads like any other: GraftTable.read plans
+    // (path, data-sequence) pairs from the manifests and the scan scopes
+    // the equality delete to the STRICTLY lower-sequence data file
+    val metaPath = s"$dir/v3.metadata.json"
+    GraftTable.read(spark, metaPath)
       .agg(count(lit(1)).as("n_live"),
         sum(col("n_nationkey")).cast("long").as("sum_key"),
         count(when(col("n_nationkey") === 2, 1)).as("n_deleted_key_present"),
         count(when(col("n_nationkey") === 20, 1)).as("n_late_key_present"))
-      .select(lit(meta.snapshots.size).as("n_snapshots"),
+      .select(lit(TableMetadata.parseFile(metaPath).snapshots.size).as("n_snapshots"),
         col("n_live"), col("sum_key"),
         col("n_deleted_key_present"), col("n_late_key_present"))
   }

@@ -16,7 +16,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources
+import org.apache.spark.sql.{DataFrame, SparkSession, sources}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -27,37 +27,38 @@ import graft.iceberg.{GraftTable, IcebergType, ManifestListReader, ManifestWrite
 /** DataSource V2 connector for whole-TABLE reads:
   * `spark.read.format("graft-table").option("metadata", <metadata.json>)`.
   *
-  * The Catalyst-integrated route to GraftTable's planning — the caller
-  * writes `df.filter($"k" === v)` and the FILTER drives the metadata
-  * pruning instead of a hand-called readWhere:
+  * This is the engine's ONE merge-on-read reader. SQL, the catalog,
+  * streaming reads and every `GraftTable` read and rewrite (read,
+  * readWhere, readKeyRange, MERGE, compaction, the stats passes, the
+  * changelog legs) scan through it — the latter by handing
+  * [[TableDataSource.scanPlan]] an explicit entry set instead of a
+  * metadata path:
   *
   *   - level 1 (manifest-list): pushed equality predicates convert into
   *     each spec's partition-transform space and prune DATA manifests
-  *     against their field-507 summaries WITHOUT OPENING THEM (i33/i37's
-  *     rule, now behind `spark.read.format`);
+  *     against their field-507 summaries WITHOUT OPENING THEM;
   *   - level 2 (manifest entry): surviving files prune against their
-  *     decoded column bounds (fields 125/128) — both levels conservative,
-  *     and every pushed filter stays residual for Spark to re-check;
-  *   - surviving manifests open CONCURRENTLY (Par), entry-level null
-  *     sequence numbers inherit the list's field 515;
-  *   - BOTH delete kinds apply INSIDE each file's reader — the partition
-  *     carries its sequence-scoped delete files (position: data seq <=
-  *     delete seq, narrowed by the delete file's file_path bound stats;
-  *     equality: strictly lower data seq only), and the reader loads
-  *     positions into an index set and equality tuples into value sets,
-  *     skipping matching rows while streaming: Iceberg's production MOR
-  *     shape, where delete application is task-local and NO join appears
-  *     in the plan;
+  *     decoded column bounds (fields 125/128);
+  *   - level 3 (row group / stripe): files above the split size fan out
+  *     one partition per row group, and groups whose footer statistics
+  *     exclude the filters are never emitted — all three levels are
+  *     conservative, and every pushed filter stays residual;
+  *   - BOTH delete kinds apply INSIDE each task — the partition carries
+  *     its sequence-scoped delete files (position: data seq <= delete
+  *     seq, narrowed by the delete file's file_path bound stats;
+  *     equality: strictly lower data seq only; v3 deletion vectors by
+  *     referenced file), so NO join appears in the plan;
+  *   - `_file`, `_pos`, `_row_id` and `_last_updated_sequence_number`
+  *     are metadata columns the reader serves per row;
   *   - `snapshot-id` / `ref` / `as-of-timestamp-ms` options time-travel
   *     with GraftTable.read's resolution rules.
   *
-  * Scale notes: planning I/O is list + surviving manifests (concurrent,
-  * KB-scale each); statistics report the EXACT byte size from manifest
-  * entries so Catalyst can broadcast small tables. One InputPartition per
-  * data file (the manifest's granularity); a production reader would
-  * additionally split by row group and use a vectorized decoder — this
-  * reader streams record-at-a-time via parquet's Group API, trading
-  * per-row speed for zero dependence on Spark internals. */
+  * Decoding: parquet scans without metadata columns take Spark's
+  * vectorized reader (position and equality deletes as a per-batch row
+  * selection); metadata-column scans and Avro/ORC data files take the
+  * record readers, which resolve renamed columns, widened types and v3
+  * initial defaults per file. Statistics report the exact byte size
+  * from manifest entries so Catalyst can broadcast small tables. */
 object TableDataSource {
   /** v3 initial-defaults (external row domain) by column name — what a
     * reader fills for a column the file predates, instead of null. */
@@ -65,6 +66,54 @@ object TableDataSource {
     meta.currentSchema.fields.flatMap(f =>
       f.initialDefault.flatMap(d => IcebergTypes.fromStringOpt(f.fieldType)
         .map(t => f.name -> graft.iceberg.DefaultValues.fromJson(t, d)))).toMap
+
+  /** Merge-on-read read of an EXPLICIT plan: `data` entries with their
+    * data sequence numbers, and the position- and equality-delete
+    * entries (with theirs) that may apply to them. The plan is pinned
+    * into the scan in place of its own manifest planning; everything
+    * after planning — per-file delete scoping, row-group splits and
+    * pruning of pushed filters, the columnar/record reader choice — is
+    * the ordinary graft-table scan. The frame's columns are the table
+    * schema of `meta` plus the scan's metadata columns (`_file` — the
+    * path exactly as the entry records it —, `_pos`, `_row_id`,
+    * `_last_updated_sequence_number`) as ordinary columns — their
+    * metadata-column marking is dropped, so a rewrite can write them out
+    * as physical lineage columns; unselected ones prune away. */
+  private[graft] def scanPlan(spark: SparkSession, meta: TableMetadata,
+      data: Seq[(ManifestWriter.EntryData, Long)],
+      posDeletes: Seq[(ManifestWriter.EntryData, Long)],
+      eqDeletes: Seq[(ManifestWriter.EntryData, Long)]): DataFrame = {
+    import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+    import org.apache.spark.sql.functions.col
+    val relation = DataSourceV2Relation.create(
+      new GraftPinnedTable(PinnedPlan(meta, data, posDeletes, eqDeletes)),
+      None, None, CaseInsensitiveStringMap.empty())
+    val df = org.apache.spark.sql.GraftSqlShim.ofRows(spark, relation.withMetadataColumns())
+    val metaCols = GraftSparkTable.MetadataColumns.map(_.name).toSet
+    df.select(df.columns.toIndexedSeq.map(c =>
+      if (metaCols(c)) col(c).as(c, Metadata.empty) else col(c)): _*)
+  }
+}
+
+/** An explicit scan plan (see [[TableDataSource.scanPlan]]). */
+private[graft] case class PinnedPlan(meta: TableMetadata,
+    data: Seq[(ManifestWriter.EntryData, Long)],
+    posDeletes: Seq[(ManifestWriter.EntryData, Long)],
+    eqDeletes: Seq[(ManifestWriter.EntryData, Long)])
+
+/** The read-only table behind [[TableDataSource.scanPlan]]. */
+private[graft] class GraftPinnedTable(plan: PinnedPlan) extends Table with SupportsRead
+    with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns {
+  override def name(): String = s"graft-table(${plan.meta.location}, pinned plan)"
+  override def schema(): StructType = GraftTable.sparkSchema(plan.meta)
+  override def metadataColumns()
+      : Array[org.apache.spark.sql.connector.catalog.MetadataColumn] =
+    GraftSparkTable.MetadataColumns
+  override def capabilities(): util.Set[TableCapability] =
+    util.EnumSet.of(TableCapability.BATCH_READ)
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+    new GraftTableScanBuilder(schema(), plan.meta.location, None, None, None,
+      128L * 1024 * 1024, pinned = Some(plan))
 }
 
 class TableDataSource extends TableProvider with DataSourceRegister {
@@ -163,35 +212,9 @@ class GraftSparkTable(tableSchema: StructType, metadataPath: String,
   override def partitioning(): Array[Transform] =
     SpecTransforms.of(TableMetadata.parseFile(metadataPath))
 
-  /** Iceberg's inspection columns: `_file` (the data file serving the
-    * row) and `_pos` (its file-absolute row index — the coordinate
-    * position deletes address). Selectable like any column; never in
-    * `SELECT *`. */
   override def metadataColumns()
-      : Array[org.apache.spark.sql.connector.catalog.MetadataColumn] = Array(
-    new org.apache.spark.sql.connector.catalog.MetadataColumn {
-      override def name(): String = "_file"
-      override def dataType(): DataType = StringType
-      override def isNullable: Boolean = false
-    },
-    new org.apache.spark.sql.connector.catalog.MetadataColumn {
-      override def name(): String = "_pos"
-      override def dataType(): DataType = LongType
-      override def isNullable: Boolean = false
-    },
-    // v3 row lineage (null on pre-v3 tables): _row_id = the file's
-    // first_row_id + pos, or the materialized column a rewrite carried;
-    // _last_updated_sequence_number = the row's data sequence likewise
-    new org.apache.spark.sql.connector.catalog.MetadataColumn {
-      override def name(): String = "_row_id"
-      override def dataType(): DataType = LongType
-      override def isNullable: Boolean = true
-    },
-    new org.apache.spark.sql.connector.catalog.MetadataColumn {
-      override def name(): String = "_last_updated_sequence_number"
-      override def dataType(): DataType = LongType
-      override def isNullable: Boolean = true
-    })
+      : Array[org.apache.spark.sql.connector.catalog.MetadataColumn] =
+    GraftSparkTable.MetadataColumns
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
       TableCapability.MICRO_BATCH_READ,
@@ -256,6 +279,38 @@ class GraftSparkTable(tableSchema: StructType, metadataPath: String,
   }
 }
 
+object GraftSparkTable {
+  /** Iceberg's inspection columns: `_file` (the data file serving the
+    * row) and `_pos` (its file-absolute row index — the coordinate
+    * position deletes address). Selectable like any column; never in
+    * `SELECT *`. */
+  private[graft] val MetadataColumns
+      : Array[org.apache.spark.sql.connector.catalog.MetadataColumn] = Array(
+    new org.apache.spark.sql.connector.catalog.MetadataColumn {
+      override def name(): String = "_file"
+      override def dataType(): DataType = StringType
+      override def isNullable: Boolean = false
+    },
+    new org.apache.spark.sql.connector.catalog.MetadataColumn {
+      override def name(): String = "_pos"
+      override def dataType(): DataType = LongType
+      override def isNullable: Boolean = false
+    },
+    // v3 row lineage (null on pre-v3 tables): _row_id = the file's
+    // first_row_id + pos, or the materialized column a rewrite carried;
+    // _last_updated_sequence_number = the row's data sequence likewise
+    new org.apache.spark.sql.connector.catalog.MetadataColumn {
+      override def name(): String = "_row_id"
+      override def dataType(): DataType = LongType
+      override def isNullable: Boolean = true
+    },
+    new org.apache.spark.sql.connector.catalog.MetadataColumn {
+      override def name(): String = "_last_updated_sequence_number"
+      override def dataType(): DataType = LongType
+      override def isNullable: Boolean = true
+    })
+}
+
 /** The default partition spec as Spark connector transforms — shared by
   * `Table.partitioning()` (DESCRIBE / catalog introspection) and the
   * scan's `KeyGroupedPartitioning` report, so the two can never drift.
@@ -290,7 +345,8 @@ class GraftTableScanBuilder(tableSchema: StructType, metadataPath: String,
     snapshotId: Option[Long], ref: Option[String], asOfTimestampMs: Option[Long],
     splitSize: Long, onPlanned: Option[(Seq[String], Seq[String]) => Unit] = None,
     allowColumnar: Boolean = true,
-    streamOpts: StreamReadOptions = StreamReadOptions())
+    streamOpts: StreamReadOptions = StreamReadOptions(),
+    pinned: Option[PinnedPlan] = None)
     extends ScanBuilder with SupportsPushDownRequiredColumns with SupportsPushDownFilters
     with org.apache.spark.sql.connector.read.SupportsPushDownAggregates {
   private var required: StructType = tableSchema
@@ -364,7 +420,8 @@ class GraftTableScanBuilder(tableSchema: StructType, metadataPath: String,
       : Option[(StructType, Seq[Any])] = {
     import org.apache.spark.sql.connector.expressions.NamedReference
     import org.apache.spark.sql.connector.expressions.aggregate.{CountStar, Max, Min}
-    if (pushed.nonEmpty || onPlanned.isDefined || agg.groupByExpressions().nonEmpty)
+    if (pushed.nonEmpty || onPlanned.isDefined || pinned.isDefined ||
+        agg.groupByExpressions().nonEmpty)
       return None
     val meta = scala.util.Try(TableMetadata.parseFile(metadataPath)).getOrElse(return None)
     val empty = meta.currentSnapshotId.isEmpty && snapshotId.isEmpty &&
@@ -453,7 +510,7 @@ class GraftTableScanBuilder(tableSchema: StructType, metadataPath: String,
       }
     case None =>
       new GraftTableScan(required, pushed, metadataPath, snapshotId, ref,
-        asOfTimestampMs, splitSize, onPlanned, allowColumnar, streamOpts)
+        asOfTimestampMs, splitSize, onPlanned, allowColumnar, streamOpts, pinned)
   }
 }
 
@@ -462,7 +519,10 @@ class GraftTableScan(required: StructType, filters: Array[sources.Filter],
     asOfTimestampMs: Option[Long], splitSize: Long = 128L * 1024 * 1024,
     onPlanned: Option[(Seq[String], Seq[String]) => Unit] = None,
     allowColumnar: Boolean = true,
-    streamOpts: StreamReadOptions = StreamReadOptions())
+    streamOpts: StreamReadOptions = StreamReadOptions(),
+    // an explicit plan (TableDataSource.scanPlan) replacing manifest
+    // planning; its metadata replaces the document at `metadataPath`
+    pinned: Option[PinnedPlan] = None)
     extends Scan with Batch with SupportsReportStatistics
     with SupportsReportPartitioning
     with org.apache.spark.sql.connector.read.SupportsRuntimeFiltering {
@@ -486,22 +546,25 @@ class GraftTableScan(required: StructType, filters: Array[sources.Filter],
     * table in one join disagreeing, a row-level operation recording
     * files from a snapshot newer than its intent). Iceberg pins at scan
     * creation; so do we. */
-  private lazy val pinnedMeta: TableMetadata = TableMetadata.parseFile(metadataPath)
+  private lazy val pinnedMeta: TableMetadata =
+    pinned.map(_.meta).getOrElse(TableMetadata.parseFile(metadataPath))
 
   /** (surviving data entries — each with sequence and OWNING manifest
     * info (the list row: spec id + field-507 summaries, which is what
-    * derives storage-partitioned-join keys) —, position-delete entries,
+    * derives storage-partitioned-join keys; None under a pinned plan,
+    * which therefore reports no key grouping) —, position-delete entries,
     * equality-delete entries) — the driver-side planning pass, shared by
     * partitions and statistics. Runs once per scan. */
-  private lazy val planned: (Seq[(ManifestWriter.EntryData, Long, ManifestListReader.ManifestFileInfo)],
+  private lazy val planned: (Seq[(ManifestWriter.EntryData, Long,
+        Option[ManifestListReader.ManifestFileInfo])],
       Seq[(ManifestWriter.EntryData, Long)], Seq[(ManifestWriter.EntryData, Long)]) = {
     // a freshly created (never-appended) table has no snapshot: it reads
     // as zero rows, not an error — explicit time travel still throws
     if (emptyTable) (Nil, Nil, Nil)
-    else plannedFor(pinnedMeta)
+    else plannedWith(pinnedMeta, filters)
   }
 
-  private def emptyTable: Boolean =
+  private def emptyTable: Boolean = pinned.isEmpty &&
     pinnedMeta.currentSnapshotId.isEmpty && snapshotId.isEmpty && ref.isEmpty &&
       asOfTimestampMs.isEmpty
 
@@ -560,13 +623,24 @@ class GraftTableScan(required: StructType, filters: Array[sources.Filter],
   override def filter(fs: Array[sources.Filter]): Unit =
     runtimeFilters = fs.filter(FileBoundsEval.supported(_, required))
 
-  private def plannedFor(meta: TableMetadata)
-      : (Seq[(ManifestWriter.EntryData, Long, ManifestListReader.ManifestFileInfo)],
-      Seq[(ManifestWriter.EntryData, Long)], Seq[(ManifestWriter.EntryData, Long)]) =
-    plannedWith(meta, filters)
-
   private def plannedWith(meta: TableMetadata, filters: Array[sources.Filter])
-      : (Seq[(ManifestWriter.EntryData, Long, ManifestListReader.ManifestFileInfo)],
+      : (Seq[(ManifestWriter.EntryData, Long, Option[ManifestListReader.ManifestFileInfo])],
+      Seq[(ManifestWriter.EntryData, Long)], Seq[(ManifestWriter.EntryData, Long)]) =
+    pinned match {
+      case Some(p) =>
+        // a pinned plan skips manifest planning; level 2 still prunes its
+        // data entries, and delete entries wholly below the kept data's
+        // minimum sequence cannot apply to any of them (<= / < rules)
+        val kept = p.data.filterNot { case (e, _) =>
+          filters.exists(f => FileBoundsEval.skippable(f, e, meta)) }
+        val minSeq = kept.map(_._2).minOption.getOrElse(Long.MaxValue)
+        (kept.map { case (e, s) => (e, s, None) },
+          p.posDeletes.filter(_._2 >= minSeq), p.eqDeletes.filter(_._2 > minSeq))
+      case None => plannedFromManifests(meta, filters)
+    }
+
+  private def plannedFromManifests(meta: TableMetadata, filters: Array[sources.Filter])
+      : (Seq[(ManifestWriter.EntryData, Long, Option[ManifestListReader.ManifestFileInfo])],
       Seq[(ManifestWriter.EntryData, Long)], Seq[(ManifestWriter.EntryData, Long)]) = {
     val snap = GraftTable.resolveForScan(meta, snapshotId, ref, asOfTimestampMs)
     val listPath = snap.manifestList.getOrElse(throw new IllegalArgumentException(
@@ -612,7 +686,7 @@ class GraftTableScan(required: StructType, filters: Array[sources.Filter],
     val dataEntries = Par.inParallel(dataInfos0.filter(i => surviving(i.path)))(
         i => (i, ManifestWriter.read(i.path))).flatMap { case (i, es) =>
       es.filter(e => e.status != 2 && e.content == 0)
-        .map(e => (e, e.sequenceNumber.getOrElse(i.sequenceNumber), i))
+        .map(e => (e, e.sequenceNumber.getOrElse(i.sequenceNumber), Some(i)))
     }
     // level 2: entry bound stats prune files the filters cannot match
     val kept = dataEntries.filterNot { case (e, _, _) =>
@@ -639,14 +713,14 @@ class GraftTableScan(required: StructType, filters: Array[sources.Filter],
     * answer without opening the delete file — missing bounds keep it.
     * This is what bounds per-task delete loads at 10⁵ delete files. */
   private def mayAddress(del: ManifestWriter.EntryData, dataFile: String): Boolean = {
-    def norm(p: String) = p.replaceFirst("^[a-z0-9+.-]+:(//)?", "")
+    import GraftTable.stripScheme
     def decode(m: Map[Int, Array[Byte]]): Option[String] =
       m.get(ManifestWriter.PosDeleteFilePathId).filter(_.nonEmpty)
         .flatMap(b => scala.util.Try(
           SingleValueCodec.decode(IcebergTypes.TString, b).asInstanceOf[String]).toOption)
-    val me = norm(dataFile)
-    decode(del.lowerBounds).forall(lo => norm(lo) <= me) &&
-      decode(del.upperBounds).forall(hi => norm(hi) >= me)
+    val me = stripScheme(dataFile)
+    decode(del.lowerBounds).forall(lo => stripScheme(lo) <= me) &&
+      decode(del.upperBounds).forall(hi => stripScheme(hi) >= me)
   }
 
   override def planInputPartitions(): Array[InputPartition] = {
@@ -666,7 +740,6 @@ class GraftTableScan(required: StructType, filters: Array[sources.Filter],
     val alternates = GraftTable.nameAlternates(pinnedMeta)
     val keysByFile = spj.map(_._2).getOrElse(Map.empty)
     val scanDefaults = TableDataSource.initialDefaultsOf(pinnedMeta)
-    def normP(p: String) = p.replaceFirst("^[a-z0-9+.-]+:(//)?", "")
     // v3 deletion vectors index by their referenced file UP FRONT: a v3
     // table carries one DV per data file, so a per-partition linear scan
     // over the delete entries would be O(files²) planning at 10⁵ files —
@@ -676,7 +749,7 @@ class GraftTableScan(required: StructType, filters: Array[sources.Filter],
     val pqPosDeletes = posDeletes.filter(_._1.fileFormat != "PUFFIN")
     val dvByFile: Map[String, Seq[(ManifestWriter.EntryData, Long)]] =
       posDeletes.filter(_._1.fileFormat == "PUFFIN")
-        .groupBy(d => normP(d._1.referencedDataFile.getOrElse("")))
+        .groupBy(d => GraftTable.stripScheme(d._1.referencedDataFile.getOrElse("")))
     def partition(e: ManifestWriter.EntryData, seq: Long,
         rowGroup: Int, rowStart: Long): GraftTableInputPartition = {
       // v2 applicability: a position delete addresses data files with
@@ -690,7 +763,7 @@ class GraftTableScan(required: StructType, filters: Array[sources.Filter],
           dseq >= seq && mayAddress(d, e.filePath) }.map(_._1.filePath),
         eqDeletes.filter(_._2 > seq).map(_._1.filePath),
         tableSchema,
-        dvRefs = dvByFile.getOrElse(normP(e.filePath), Nil)
+        dvRefs = dvByFile.getOrElse(GraftTable.stripScheme(e.filePath), Nil)
           .filter(_._2 >= seq)
           .map(d => (d._1.filePath, d._1.contentOffset.getOrElse(0L),
             d._1.contentSizeInBytes.getOrElse(0L))),
@@ -839,8 +912,8 @@ class GraftTableScan(required: StructType, filters: Array[sources.Filter],
       if resultTypes.forall(_.isDefined)
       keyed = planned._1.map { case (e, _, info) =>
         val tuple: Option[Seq[Any]] =
-          if (info.specId != spec.specId) None
-          else info.summaries.filter(_.size == spec.fields.size).flatMap { sums =>
+          info.filter(_.specId == spec.specId).flatMap(_.summaries)
+            .filter(_.size == spec.fields.size).flatMap { sums =>
             val vals = sums.zip(resultTypes.map(_.get)).map { case (s, t) =>
               for {
                 lo <- s.lower.filter(_.nonEmpty)
@@ -926,7 +999,9 @@ class GraftTableScan(required: StructType, filters: Array[sources.Filter],
         planned._1.nonEmpty && !emptyTable) {
       val meta = pinnedMeta
       val exactMetrics = meta.properties.get("graft.metrics").contains("full")
-      val statsDoc = {
+      // a pinned plan may be any file subset: the snapshot's document
+      // does not describe it
+      val statsDoc = if (pinned.isDefined) None else {
         val snap = GraftTable.resolveForScan(meta, snapshotId, ref, asOfTimestampMs)
         // nearest-ANCESTOR document reached through only `replace`
         // snapshots: a replace rewrites files, not the rowset (spec
@@ -1748,12 +1823,10 @@ private[sources] object PosDeleteIndex {
     }
     new PosDeletes(set, dv)
   }
-  private def normPath(p: String): String = p.replaceFirst("^[a-z0-9+.-]+:(//)?", "")
-
   def load(posDeleteFiles: Seq[String], dataFilePath: String,
       conf: Configuration): java.util.HashSet[java.lang.Long] = {
     val set = new java.util.HashSet[java.lang.Long]()
-    val me = normPath(dataFilePath)
+    val me = GraftTable.stripScheme(dataFilePath)
     posDeleteFiles.foreach { del =>
       val r = ParquetFileReader.open(HadoopInputFile.fromPath(
         new org.apache.hadoop.fs.Path(del), conf))
@@ -1770,7 +1843,7 @@ private[sources] object PosDeleteIndex {
           var i = 0L
           while (i < pages.getRowCount) {
             val g = rr.read()
-            if (normPath(g.getBinary("file_path", 0).toStringUsingUTF8) == me)
+            if (GraftTable.stripScheme(g.getBinary("file_path", 0).toStringUsingUTF8) == me)
               set.add(g.getLong("pos", 0))
             i += 1
           }
@@ -2125,8 +2198,7 @@ class GraftTablePartitionReader(part: GraftTableInputPartition,
           sub.getBinary("value", 0).getBytes,
           sub.getBinary("metadata", 0).getBytes)
       case other => throw new UnsupportedOperationException(
-        s"graft-table reader does not decode $other (column $name) — " +
-          "read via GraftTable.read for full-type support")
+        s"graft-table reader does not decode $other (column $name)")
     }
   }
 

@@ -93,6 +93,14 @@ class BenchSpec extends AnyFunSuite {
     assert(Bench.loadBands(p.toString).isEmpty)
   }
 
+  test("loadBands keeps every well-formed band when one number is malformed") {
+    val p = java.nio.file.Files.createTempFile("graft-band", ".json")
+    java.nio.file.Files.writeString(p,
+      """{"metric":"total","queries":{"q01_agg":0.2122,"q02_filter_revenue":1.2.3,""" +
+        """"q03_join_topk":0.5},"sf":"sf0.1"}""")
+    assert(Bench.loadBands(p.toString) == Map("q01_agg" -> 0.2122, "q03_join_topk" -> 0.5))
+  }
+
   test("keys drop leading zeros but stay unique across all entries") {
     assert(Bench.shortKey("q01_agg") === "q1")
     assert(Bench.shortKey("st09_foreach_batch_sink") === "st9")

@@ -146,4 +146,24 @@ class ChangelogSpec extends SparkSpec {
     assert(delsByOrdinal(ords.head) == (0L until 5L).toSet, delsByOrdinal.toString)
     assert(delsByOrdinal(ords.last) == (5L until 9L).toSet, delsByOrdinal.toString)
   }
+
+  test("equality deletes written before and after RENAME COLUMN both emit") {
+    import spark.implicits._
+    val wh = java.nio.file.Files.createTempDirectory("graft-changelog-rn").toString
+    spark.conf.set("spark.sql.catalog.gclrn", classOf[graft.sources.GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.gclrn.warehouse", wh)
+    spark.sql("CREATE TABLE gclrn.db.t (k BIGINT, v STRING) " +
+      "TBLPROPERTIES ('commit-timestamp-ms'='1700000000000')")
+    spark.sql("INSERT INTO gclrn.db.t SELECT id, concat('v', id) FROM range(0, 10)")
+    val dir = s"$wh/db/t"
+    // an equality delete on the key under its OLD name, then one under
+    // the new name: the two delete files carry different physical names
+    GraftTable.upsert(spark, dir, Seq((3L, "A")).toDF("k", "v"), Seq("k"))
+    spark.sql("ALTER TABLE gclrn.db.t RENAME COLUMN k TO id")
+    GraftTable.upsert(spark, dir, Seq((5L, "B")).toDF("id", "v"), Seq("id"))
+    val dels = GraftTable.changelog(spark, dir)
+      .filter(col("_change_type") === "delete").orderBy("id")
+      .select("id", "v").collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+    assert(dels == Seq((3L, "v3"), (5L, "v5")), dels.toString)
+  }
 }

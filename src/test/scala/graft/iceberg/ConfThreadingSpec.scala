@@ -71,4 +71,29 @@ class ConfThreadingSpec extends SparkSpec {
       assert(n == 1L)
     }
   }
+
+  test("footer schemas convert under the caller's session conf on any thread") {
+    // a parquet file WITHOUT Spark's row-metadata key: its BINARY column
+    // converts by the session's parquet flags
+    val path = java.nio.file.Files.createTempDirectory("graft-conf3").toString + "/raw.parquet"
+    val schema = org.apache.parquet.schema.MessageTypeParser
+      .parseMessageType("message m { required binary b; }")
+    val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(path)).withType(schema).build()
+    try w.write(new org.apache.parquet.example.data.simple.SimpleGroupFactory(schema)
+      .newGroup().append("b", "x"))
+    finally w.close()
+    spark.conf.set("spark.sql.parquet.binaryAsString", "true")
+    try {
+      // a worker thread with no active session — what a pool thread that
+      // did not inherit the caller's session sees through SQLConf.get
+      @volatile var got: scala.util.Try[org.apache.spark.sql.types.StructType] = null
+      val t = new Thread(() => {
+        org.apache.spark.sql.SparkSession.clearActiveSession()
+        got = scala.util.Try(GraftTable.footerSparkSchema(spark, path))
+      })
+      t.start(); t.join()
+      assert(got.get("b").dataType == org.apache.spark.sql.types.StringType)
+    } finally spark.conf.unset("spark.sql.parquet.binaryAsString")
+  }
 }

@@ -127,10 +127,12 @@ class GraftTableSpec extends SparkSpec {
     }
   }
 
-  test("MOR plan stays O(1) scans and one anti-join however many snapshots") {
-    import org.apache.spark.sql.catalyst.plans.LeftAnti
-    import org.apache.spark.sql.catalyst.plans.logical.Join
-    import org.apache.spark.sql.execution.datasources.LogicalRelation
+  test("MOR read is one graft-table BatchScan and no join however many snapshots") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import spark.implicits._
     val fresh = java.nio.file.Files.createTempDirectory("graft-planshape").toString
     GraftTable.create(fresh, graft.iceberg.IcebergSchema(0, Seq(
       graft.iceberg.IcebergField(1, "n_nationkey", required = false, "int"),
@@ -138,19 +140,30 @@ class GraftTableSpec extends SparkSpec {
       graft.iceberg.IcebergField(3, "n_regionkey", required = false, "int"))),
       tableUuid = "b6b9a6a1-0000-4000-8000-0000000000t2", timestampMs = 1700000000000L)
     val nation = graft.Tables.load(spark, sfDir, "nation")
-    // five append snapshots (five distinct data sequence numbers), then a delete
+    // five append snapshots (five distinct data sequence numbers), then a
+    // position delete and an equality-delete upsert
     (0 until 5).foreach(r =>
       GraftTable.append(spark, fresh, nation.filter(col("n_regionkey") === r)))
     GraftTable.deleteWhere(spark, fresh, col("n_nationkey") === 3)
+    GraftTable.upsert(spark, fresh,
+      Seq((5, "UPSERTED", 0)).toDF("n_nationkey", "n_name", "n_regionkey"), Seq("n_nationkey"))
     val df = GraftTable.read(spark, GraftTable.latestMetadataPath(fresh))
-    val plan = df.queryExecution.optimizedPlan
-    // ONE relation for all five appends' files + ONE for the delete file —
-    // the old shape grew one scan per sequence group
-    val rels = plan.collect { case l: LogicalRelation => l }
-    assert(rels.size == 2, s"expected 2 scans, got ${rels.size}:\n$plan")
-    val antis = plan.collect { case j: Join if j.joinType == LeftAnti => j }
-    assert(antis.size == 1, s"expected 1 anti-join, got ${antis.size}")
     assert(df.count() == 24L)
+    assert(df.filter(col("n_name") === "UPSERTED").count() == 1L)
+    // both delete kinds apply inside the scan's tasks: one scan for every
+    // snapshot's files, and no join in the executed plan
+    df.collect()
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case o => o +: o.children.flatMap(nodes)
+    }
+    val plan = nodes(df.queryExecution.executedPlan)
+    val scans = plan.collect { case b: BatchScanExec => b }
+    assert(scans.size == 1 && scans.head.scan.isInstanceOf[graft.sources.GraftTableScan],
+      df.queryExecution.executedPlan.toString)
+    assert(plan.collect { case j: BaseJoinExec => j }.isEmpty,
+      df.queryExecution.executedPlan.toString)
   }
 
   test("i50: schema evolution through the API — old rows null-fill, new rows carry values") {

@@ -81,7 +81,7 @@ class RenameColumnSpec extends SparkSpec {
     spark.sql("INSERT INTO g_rn4.db.n SELECT n_nationkey, n_name FROM rn4_src")
     spark.sql("ALTER TABLE g_rn4.db.n RENAME COLUMN n_name TO label")
     val dir = spark.conf.get("spark.sql.catalog.g_rn4.warehouse") + "/db/n"
-    // GraftTable.read goes through readDataFiles' name-generation groups
+    // GraftTable.read resolves each file's own name generation
     val viaApi = GraftTable.read(spark, GraftTable.latestMetadataPath(dir))
     assert(viaApi.columns.toSeq == Seq("n_nationkey", "label"))
     assert(viaApi.where(col("label").isNull).count() == 0)

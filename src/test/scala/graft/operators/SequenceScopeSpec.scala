@@ -1,14 +1,16 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.iceberg.{GraftTable, ManifestListWriter, ManifestWriter,
-  MetadataWriter, ParquetFiles, Snapshot}
+import graft.iceberg.{GraftTable, IcebergField, IcebergSchema, ManifestListWriter,
+  ManifestWriter, MetadataWriter, ParquetFiles, Snapshot}
 
 /** Sequence-number-scoped delete applicability (Iceberg v2 rule):
   * position deletes apply to data files with seq <= delete seq, equality
-  * deletes only to STRICTLY lower seq. Covers the manifest_entry field-3
+  * deletes only to STRICTLY lower seq, each checked on a hand-built
+  * table read through GraftTable.read. Covers the manifest_entry field-3
   * round-trip and the i36 end-to-end entry. */
 class SequenceScopeSpec extends SparkSpec {
 
@@ -25,31 +27,71 @@ class SequenceScopeSpec extends SparkSpec {
     assert(back.map(_.sequenceNumber) == Seq(Some(42L), None))
   }
 
+  /** A hand-built v2 table (k string, s long) with one manifest per file:
+    * `data` files at their sequence numbers, then the delete files
+    * `deletes` builds from the data file paths — (sequence, content 1 =
+    * position / 2 = equality, rows). Returns the metadata path. */
+  private def seqTable(data: Seq[(Long, Seq[(String, Long)])],
+      deletes: Seq[String] => Seq[(Long, Int, DataFrame)]): String = {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-seqtab").toString
+    def entry(f: String, seq: Long, content: Int) = ManifestWriter.EntryData(
+      1, seq, f, ParquetFiles.read(spark, Seq(f)).count(), ParquetFiles.length(f),
+      Map.empty, Map.empty, content = content, sequenceNumber = Some(seq))
+    val dataEntries = data.zipWithIndex.map { case ((seq, rows), i) =>
+      val f = s"$dir/data/d$i.parquet"
+      ParquetFiles.writeOne(rows.toDF("k", "s"), f)
+      entry(f, seq, 0)
+    }
+    val delEntries = deletes(dataEntries.map(_.filePath)).zipWithIndex.map {
+      case ((seq, content, df), i) =>
+        val f = s"$dir/data/del$i.parquet"
+        ParquetFiles.writeOne(df, f)
+        entry(f, seq, content)
+    }
+    val manifests = (dataEntries ++ delEntries).zipWithIndex.map { case (e, i) =>
+      val m = s"$dir/m-$i.avro"
+      ManifestWriter.write(m, Seq(e))
+      (m, e)
+    }
+    val snapId = manifests.map(_._2.snapshotId).max
+    val list = s"$dir/snap-$snapId-list.avro"
+    ManifestListWriter.write(list, manifests.map(_._1), snapId,
+      contents = manifests.map { case (m, e) => m -> (if (e.content == 0) 0 else 1) }.toMap,
+      seqNums = manifests.map { case (m, e) => m -> e.snapshotId }.toMap,
+      addedSnapshotIds = manifests.map { case (m, e) => m -> e.snapshotId }.toMap)
+    val v1 = s"$dir/v1.metadata.json"
+    MetadataWriter.write(v1, MetadataWriter.commitSnapshot(
+      LakehouseExec.baseMetadata(dir).copy(schemas = Seq(IcebergSchema(0, Seq(
+        IcebergField(1, "k", required = false, "string"),
+        IcebergField(2, "s", required = false, "long"))))),
+      Snapshot(snapId, None, 1700000001000L, Some("append"), Map.empty, Some(list), Some(0)),
+      None))
+    v1
+  }
+
   test("equality deletes scope to strictly lower data sequence numbers") {
     import spark.implicits._
-    val data = Seq(("a", 1L), ("b", 1L), ("a", 2L), ("a", 3L))
-      .toDF("k", "_seq")
-      .select($"k", lit("f").as("_file"), monotonically_increasing_id().as("_pos"), $"_seq")
     // delete of k='a' committed at seq 2: kills seq-1 'a' only — the
     // same-commit (seq 2) and later (seq 3) rows survive
-    val deletes = Seq(("a", 2L)).toDF("k", "_del_seq")
-    val live = Lakehouse.applyEqualityDeletesScoped(data, deletes)
-      .select($"k", $"_seq").orderBy($"_seq").collect().map(r => (r.getString(0), r.getLong(1)))
+    val table = seqTable(
+      Seq(1L -> Seq(("a", 1L), ("b", 1L)), 2L -> Seq(("a", 2L)), 3L -> Seq(("a", 3L))),
+      _ => Seq((2L, 2, Seq("a").toDF("k"))))
+    val live = GraftTable.read(spark, table)
+      .orderBy($"s", $"k").collect().map(r => (r.getString(0), r.getLong(1)))
     assert(live.toSeq == Seq(("b", 1L), ("a", 2L), ("a", 3L)))
   }
 
   test("position deletes scope to lower-or-equal data sequence numbers") {
     import spark.implicits._
-    val data = Seq(("f1", 0L, 1L), ("f1", 1L, 1L), ("f2", 0L, 3L))
-      .toDF("_file", "_pos", "_seq").withColumn("payload", lit("x"))
     // delete at seq 2 names (f1,0) and (f2,0): (f1,0) dies (1 <= 2),
     // (f2,0) survives (3 > 2) even though the address matches
-    val deletes = Seq(("f1", 0L, 2L), ("f2", 0L, 2L))
-      .toDF("file_path", "pos", "_del_seq")
-    val live = Lakehouse.applyPositionDeletesScoped(data, deletes)
-      .select($"_file", $"_pos").orderBy($"_file", $"_pos").collect()
-      .map(r => (r.getString(0), r.getLong(1)))
-    assert(live.toSeq == Seq(("f1", 1L), ("f2", 0L)))
+    val table = seqTable(
+      Seq(1L -> Seq(("f1-0", 1L), ("f1-1", 1L)), 3L -> Seq(("f2-0", 3L))),
+      paths => Seq((2L, 1, Seq((paths(0), 0L), (paths(1), 0L)).toDF("file_path", "pos"))))
+    val live = GraftTable.read(spark, table).select($"k").orderBy($"k")
+      .collect().map(_.getString(0))
+    assert(live.toSeq == Seq("f1-1", "f2-0"))
   }
 
   test("entry-level null sequence number inherits the list's field 515") {

@@ -72,14 +72,23 @@ class EqDeleteDomainSpec extends SparkSpec {
     assert(got.getLong(0) == 25L && got.getString(1) == "AVRO_NEW", got.toString)
   }
 
-  test("rewrite_position_delete_files refuses eq deletes addressing imported files") {
+  test("rewrite_position_delete_files resolves eq deletes addressing imported files") {
     import spark.implicits._
-    val (_, dir) = importedTable("avrorw", "avro")
+    val (cat, dir) = importedTable("avrorw", "avro")
     GraftTable.upsert(spark, dir,
       Seq((3, "X")).toDF("n_nationkey", "n_name"), Seq("n_nationkey"))
-    val refused = intercept[IllegalArgumentException](
-      GraftTable.rewritePositionDeleteFiles(spark, dir))
-    assert(refused.getMessage.contains("non-parquet"), refused.getMessage)
+    GraftTable.rewritePositionDeleteFiles(spark, dir)
+    // the equality delete became a position delete against the Avro
+    // file: the old key-3 row stays deleted, the upserted one stays live
+    val meta = TableMetadata.parseFile(GraftTable.latestMetadataPath(dir))
+    val deletes = ManifestListReader.read(meta.currentSnapshot.get.manifestList.get)
+      .filter(_.content == 1).flatMap(i => ManifestWriter.read(i.path))
+      .filter(_.status != 2)
+    assert(deletes.nonEmpty && deletes.forall(_.content == 1), deletes.map(_.content))
+    val got = spark.sql(s"""SELECT COUNT(*) AS n,
+      COLLECT_LIST(CASE WHEN n_nationkey = 3 THEN n_name END) AS names3
+      FROM $cat.db.n""").head()
+    assert(got.getLong(0) == 25L && got.getSeq[String](1) == Seq("X"), got.toString)
   }
 
   test("streaming-shape upsert applies equality deletes inside the ORC reader") {

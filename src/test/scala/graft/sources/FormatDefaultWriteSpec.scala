@@ -100,6 +100,28 @@ class FormatDefaultWriteSpec extends SparkSpec {
     assert(e.getMessage.contains("rewrite_data_files"), e.getMessage)
   }
 
+  test("avro table: GraftTable.read and rewrite_data_files merge-on-read, then DELETE runs") {
+    import spark.implicits._
+    import graft.iceberg.GraftTable
+    val wh = mkCatalog("fwr")
+    spark.sql("CREATE TABLE fwr.db.t (k BIGINT, v STRING) " +
+      "TBLPROPERTIES ('write.format.default'='avro', " +
+      "'commit-timestamp-ms'='1700000000000')")
+    spark.sql("INSERT INTO fwr.db.t SELECT id, concat('v', id) FROM range(0, 10)")
+    val dir = s"$wh/db/t"
+    // an equality delete over the avro file: the read applies it
+    GraftTable.upsert(spark, dir, Seq((2L, "w2")).toDF("k", "v"), Seq("k"))
+    def rows() = GraftTable.read(spark, GraftTable.latestMetadataPath(dir))
+      .orderBy("k").collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+    val expected = (0L until 10L).map(k => (k, if (k == 2L) "w2" else s"v$k"))
+    assert(rows() == expected)
+    spark.sql("CALL fwr.system.rewrite_data_files(table => 'db.t')")
+    assert(rows() == expected)
+    // the compacted files are parquet, which the DELETE scan reads
+    spark.sql("DELETE FROM fwr.db.t WHERE k = 1")
+    assert(rows() == expected.filterNot(_._1 == 1L))
+  }
+
   test("a bad write.format.default fails the write plan, not a task") {
     mkCatalog("fwb")
     spark.sql("CREATE TABLE fwb.db.t (k BIGINT) " +
