@@ -33,23 +33,33 @@ object Tables {
       s"unsupported physical type for events.ts: $other")
   }
 
-  /** Inferred schema per (dir, table), cached for the JVM. The testdata
-    * tables are immutable inputs — a production deployment serves this
-    * from the catalog — yet every schemaless `spark.read.parquet` launches
-    * a 1-task schema-inference job (~40-60 ms of fixed driver/scheduler
-    * cost; r22 action audit: q05 paid SIX per run, once per load, ×3
-    * bench passes). Only the StructType is cached, never data or results:
-    * each load still plans and scans the parquet files from scratch. */
+  /** Inferred schema per (dir, table, file length, file mtime), cached
+    * for the JVM. Every schemaless `spark.read.parquet` launches a 1-task
+    * schema-inference job (~40-60 ms of fixed planning and scheduling cost; r22
+    * action audit: q05 paid SIX per run, once per load, ×3 bench passes).
+    * The key carries the file's identity, so a `$name.parquet` rewritten
+    * in the same JVM (a new length or mtime) infers afresh rather than
+    * reading under a stale schema. Only the StructType is cached, never
+    * data or results: each load still plans and scans the parquet files
+    * from scratch. */
   private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String),
+    new java.util.concurrent.ConcurrentHashMap[(String, String, Long, Long),
       org.apache.spark.sql.types.StructType]
 
   /** The table's schema exactly as Spark infers it from the file
-    * (pre-`normalizeTs` — the physical form the streaming source needs). */
+    * (pre-`normalizeTs` — the physical form the streaming source needs).
+    * A missing file keys as (-1, -1) and fails in Spark's own read. */
   def physicalSchema(spark: SparkSession, dir: String, name: String)
-      : org.apache.spark.sql.types.StructType =
-    schemaCache.computeIfAbsent((dir, name),
-      _ => spark.read.parquet(s"$dir/$name.parquet").schema)
+      : org.apache.spark.sql.types.StructType = {
+    val file = s"$dir/$name.parquet"
+    val path = new org.apache.hadoop.fs.Path(file)
+    val (len, mtime) = scala.util.Try {
+      val st = path.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(path)
+      (st.getLen, st.getModificationTime)
+    }.getOrElse((-1L, -1L))
+    schemaCache.computeIfAbsent((dir, name, len, mtime),
+      _ => spark.read.parquet(file).schema)
+  }
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val df = spark.read.schema(physicalSchema(spark, dir, name))

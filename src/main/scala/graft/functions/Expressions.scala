@@ -194,11 +194,16 @@ object VectorKernels {
     * order — bit-identical to the interpreted formulation it replaces (and
     * to DuckDB's list_sum comprehension), so every hash-pinned oracle
     * survives the swap. The `off` parameter subsumes the slice: no
-    * per-row subarray or cast allocation. */
+    * per-row subarray or cast allocation. `a` must cover [off, off+|b|):
+    * a shorter `a` is a dimension mismatch and throws, naming both
+    * dimensions, instead of reading past its end. */
   def sqd(a: org.apache.spark.sql.catalyst.util.ArrayData, aFloat: Boolean,
       b: org.apache.spark.sql.catalyst.util.ArrayData, bFloat: Boolean,
       off: Int): Double = {
     val n = b.numElements()
+    if (off + n > a.numElements()) throw new IllegalArgumentException(
+      s"graft_sqd dimension mismatch: a has ${a.numElements()} elements, " +
+        s"b has $n, offset $off needs ${off + n}")
     var s = 0.0
     var i = 0
     while (i < n) {

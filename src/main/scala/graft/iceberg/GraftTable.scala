@@ -1310,8 +1310,7 @@ object GraftTable {
     val meta = TableMetadata.parseFile(metadataPath)
     val snap = resolveSnapshot(meta, None, None)
     val all = ManifestListReader.read(snap.manifestList.get)
-    val surviving = ScanPlanning.pruneManifestsByTransform(
-      snap.manifestList.get, meta, sourceFieldId, value)
+    val surviving = ScanPlanning.pruneManifestsByTransform(all, meta, sourceFieldId, Seq(value))
     val survivingData = surviving.filter(_.content == 0)
     val deletes = surviving.filter(_.content == 1)
     val fieldName = meta.currentSchema.fields.find(_.id == sourceFieldId).get.name
@@ -1332,8 +1331,7 @@ object GraftTable {
     val meta = TableMetadata.parseFile(metadataPath)
     val snap = resolveSnapshot(meta, None, None)
     val all = ManifestListReader.read(snap.manifestList.get)
-    val surviving = ScanPlanning.pruneManifestsByRange(
-      snap.manifestList.get, meta, sourceFieldId, lower, upper)
+    val surviving = ScanPlanning.pruneManifestsByRange(all, meta, sourceFieldId, lower, upper)
     val survivingData = surviving.filter(_.content == 0)
     val deletes = surviving.filter(_.content == 1)
     val fieldName = meta.currentSchema.fields.find(_.id == sourceFieldId).get.name

@@ -61,36 +61,50 @@ object ScanPlanning {
     * serve an equality predicate (e.g. `void`, or a type the transform
     * does not apply to) — unprunable, never wrong. */
   def transformValue(transform: String, sourceType: IcebergType, value: Any): Option[(IcebergType, Any)] =
-    (transform, sourceType, value) match {
-      case ("identity", t, v) => Some((t, v))
-      case (BucketRe(n), TInt, v: Int) =>
-        Some((TInt, PartitionTransforms.bucketLong(v.toLong, n.toInt)))
-      case (BucketRe(n), TLong, v: Long) =>
-        Some((TInt, PartitionTransforms.bucketLong(v, n.toInt)))
-      case (BucketRe(n), TString, v: String) =>
-        Some((TInt, PartitionTransforms.bucketString(v, n.toInt)))
-      case (TruncateRe(w), TInt, v: Int) =>
-        Some((TInt, PartitionTransforms.truncateLong(v.toLong, w.toLong).toInt))
-      case (TruncateRe(w), TLong, v: Long) =>
-        Some((TLong, PartitionTransforms.truncateLong(v, w.toLong)))
-      case (TruncateRe(w), TString, v: String) =>
-        Some((TString, PartitionTransforms.truncateString(v, w.toInt)))
-      case ("year", TDate, v) => epochDays(v).map(d =>
-        (TInt, PartitionTransforms.yearOrdinal(d)))
-      case ("month", TDate, v) => epochDays(v).map(d =>
-        (TInt, PartitionTransforms.monthOrdinal(d)))
-      case ("day", TDate, v) => epochDays(v).map(d =>
-        (TInt, PartitionTransforms.dayOrdinal(d)))
-      case ("year", TTimestamp | TTimestamptz, v) => epochMicros(v).map(us =>
-        (TInt, PartitionTransforms.yearOrdinal(PartitionTransforms.epochDaysOfMicros(us))))
-      case ("month", TTimestamp | TTimestamptz, v) => epochMicros(v).map(us =>
-        (TInt, PartitionTransforms.monthOrdinal(PartitionTransforms.epochDaysOfMicros(us))))
-      case ("day", TTimestamp | TTimestamptz, v) => epochMicros(v).map(us =>
-        (TInt, PartitionTransforms.dayOrdinal(PartitionTransforms.epochDaysOfMicros(us))))
-      case ("hour", TTimestamp | TTimestamptz, v) => epochMicros(v).map(us =>
-        (TInt, PartitionTransforms.hourOrdinal(us)))
+    transformer(transform, sourceType).flatMap { case (t, f) => f(value).map((t, _)) }
+
+  /** [[transformValue]] resolved once per (transform, source type): the
+    * result type plus the per-value conversion, so a value SET converts
+    * without re-matching the transform name for every value. None when no
+    * value of `sourceType` can convert; the conversion yields None for a
+    * value of the wrong runtime class. */
+  private def transformer(transform: String, sourceType: IcebergType)
+      : Option[(IcebergType, Any => Option[Any])] = {
+    def ordinal(t: IcebergType, f: Int => Int): Option[(IcebergType, Any => Option[Any])] =
+      t match {
+        case TDate => Some((TInt, v => epochDays(v).map(f)))
+        case TTimestamp | TTimestamptz => Some((TInt, v => epochMicros(v).map(us =>
+          f(PartitionTransforms.epochDaysOfMicros(us)))))
+        case _ => None
+      }
+    (transform, sourceType) match {
+      case ("identity", t) => Some((t, v => Some(v)))
+      case (BucketRe(n), TInt) => Some((TInt, {
+        case v: Int => Some(PartitionTransforms.bucketLong(v.toLong, n.toInt))
+        case _ => None }))
+      case (BucketRe(n), TLong) => Some((TInt, {
+        case v: Long => Some(PartitionTransforms.bucketLong(v, n.toInt))
+        case _ => None }))
+      case (BucketRe(n), TString) => Some((TInt, {
+        case v: String => Some(PartitionTransforms.bucketString(v, n.toInt))
+        case _ => None }))
+      case (TruncateRe(w), TInt) => Some((TInt, {
+        case v: Int => Some(PartitionTransforms.truncateLong(v.toLong, w.toLong).toInt)
+        case _ => None }))
+      case (TruncateRe(w), TLong) => Some((TLong, {
+        case v: Long => Some(PartitionTransforms.truncateLong(v, w.toLong))
+        case _ => None }))
+      case (TruncateRe(w), TString) => Some((TString, {
+        case v: String => Some(PartitionTransforms.truncateString(v, w.toInt))
+        case _ => None }))
+      case ("year", t) => ordinal(t, PartitionTransforms.yearOrdinal)
+      case ("month", t) => ordinal(t, PartitionTransforms.monthOrdinal)
+      case ("day", t) => ordinal(t, PartitionTransforms.dayOrdinal)
+      case ("hour", TTimestamp | TTimestamptz) => Some((TInt, v => epochMicros(v).map(
+        PartitionTransforms.hourOrdinal)))
       case _ => None
     }
+  }
 
   /** Pushed filter values for DATE columns arrive in whatever form the
     * session's datetime API produced (java.sql.Date, LocalDate, or an
@@ -201,34 +215,52 @@ object ScanPlanning {
     } yield (specId, fields)
   }
 
-  /** Manifest-level hidden-partition pruning: convert `sourceFieldId = value`
-    * into each manifest's partition-transform space and test it against the
-    * manifest-list's field-507 summaries — manifests whose summary interval
-    * cannot contain the transformed value are skipped WITHOUT BEING OPENED.
-    * Spec-id aware (each manifest prunes under ITS spec, the i32 mixed-spec
-    * rule); a manifest with no summary, an unknown transform, or an
-    * undecodable bound survives — pruning is conservative. Driver cost is
-    * one KB-scale list read, the same boundary as Iceberg's planner. */
-  def pruneManifestsByTransform(listPath: String, meta: TableMetadata,
-      sourceFieldId: Int, value: Any): Seq[ManifestListReader.ManifestFileInfo] = {
+  /** A field-507 summary bound decoded as `t`; empty or undecodable bytes
+    * (a null-valued partition's summary writes zero bytes) mean "no
+    * bound" — keep, never throw. */
+  private def summaryBound(b: Option[Array[Byte]], t: IcebergType): Option[Any] =
+    b.filter(_.nonEmpty).flatMap(bytes =>
+      scala.util.Try(SingleValueCodec.decode(t, bytes)).toOption)
+
+  /** Manifest-level hidden-partition pruning for `sourceFieldId IN values`
+    * (equality is the one-value set): each value converts into each
+    * manifest's partition-transform space and is tested against the
+    * manifest-list's field-507 summaries — a manifest no value can land in
+    * is skipped WITHOUT BEING OPENED. A manifest survives when ANY value
+    * survives it, the union of the single-value prunes. Spec-id aware
+    * (each manifest prunes under ITS spec, the i32 mixed-spec rule); a
+    * manifest with no summary, an unknown transform, or an undecodable
+    * bound survives — pruning is conservative.
+    *
+    * Cost: the caller's already-read list, no I/O. The source type and
+    * each spec field's transform resolve once and the values convert once
+    * per spec field; each manifest's summary bounds decode once, and a
+    * manifest whose spec has no field sourced from `sourceFieldId` is kept
+    * without touching the values. `values` must be non-empty. */
+  def pruneManifestsByTransform(infos: Seq[ManifestListReader.ManifestFileInfo],
+      meta: TableMetadata, sourceFieldId: Int, values: Seq[Any])
+      : Seq[ManifestListReader.ManifestFileInfo] = {
+    require(values.nonEmpty, "pruneManifestsByTransform needs at least one value")
     val sourceType = IcebergTypes.fromString(meta.fieldTypes(sourceFieldId))
-    ManifestListReader.read(listPath).filter { info =>
+    // per spec id: (summary index, result type, converted values) of each
+    // field sourced from the column whose transform can convert a value
+    val specFields = infos.map(_.specId).distinct.map { id =>
+      id -> meta.partitionSpecs.find(_.specId == id).map(_.fields.zipWithIndex.collect {
+        case (pf, i) if pf.sourceId == sourceFieldId => transformer(pf.transform, sourceType)
+          .map { case (tt, f) => (i, tt, values.map(f).toIndexedSeq) }
+      }.flatten)
+    }.toMap
+    infos.filter { info =>
       val keep = for {
-        spec <- meta.partitionSpecs.find(_.specId == info.specId)
+        fields <- specFields(info.specId)
         sums <- info.summaries
-      } yield spec.fields.zip(sums).forall { case (pf, s) =>
-        if (pf.sourceId != sourceFieldId) true
-        else transformValue(pf.transform, sourceType, value) match {
-          case Some((tType, tv)) =>
-            // empty/undecodable bounds (a null-valued partition's summary
-            // writes zero bytes) mean "no bound" — keep, never throw
-            def cmp(bound: Option[Array[Byte]]): Option[Int] =
-              bound.filter(_.nonEmpty)
-                .flatMap(b => scala.util.Try(SingleValueCodec.decode(tType, b)).toOption)
-                .flatMap(cmpValues(_, tv))
-            cmp(s.lower).forall(_ <= 0) && cmp(s.upper).forall(_ >= 0)
-          case None => true
-        }
+      } yield {
+        val bounds = fields.filter(_._1 < sums.size).map { case (i, tt, tvs) =>
+          (summaryBound(sums(i).lower, tt), summaryBound(sums(i).upper, tt), tvs) }
+        bounds.isEmpty || values.indices.exists(j => bounds.forall { case (lo, hi, tvs) =>
+          tvs(j).forall(tv => lo.flatMap(cmpValues(_, tv)).forall(_ <= 0) &&
+            hi.flatMap(cmpValues(_, tv)).forall(_ >= 0))
+        })
       }
       keep.getOrElse(true)
     }
@@ -249,21 +281,19 @@ object ScanPlanning {
     * cannot overlap it are skipped WITHOUT BEING OPENED. Equality is the
     * degenerate range; bucket specs stay unpruned here (see
     * pruneManifestsByTransform for the equality-in-bucket-space rule).
-    * Conservative on every missing/undecodable piece. */
-  def pruneManifestsByRange(listPath: String, meta: TableMetadata,
-      sourceFieldId: Int, lower: Option[Any], upper: Option[Any])
+    * Conservative on every missing/undecodable piece. Filters the caller's
+    * already-read list: no I/O. */
+  def pruneManifestsByRange(infos: Seq[ManifestListReader.ManifestFileInfo],
+      meta: TableMetadata, sourceFieldId: Int, lower: Option[Any], upper: Option[Any])
       : Seq[ManifestListReader.ManifestFileInfo] = {
     val sourceType = IcebergTypes.fromString(meta.fieldTypes(sourceFieldId))
-    ManifestListReader.read(listPath).filter { info =>
+    infos.filter { info =>
       val keep = for {
         spec <- meta.partitionSpecs.find(_.specId == info.specId)
         sums <- info.summaries
       } yield spec.fields.zip(sums).forall { case (pf, s) =>
         if (pf.sourceId != sourceFieldId || !isMonotonic(pf.transform)) true
         else {
-          def summaryBound(b: Option[Array[Byte]], tt: IcebergType): Option[Any] =
-            b.filter(_.nonEmpty).flatMap(bytes =>
-              scala.util.Try(SingleValueCodec.decode(tt, bytes)).toOption)
           // overlap test: summary.max >= t(lower) AND summary.min <= t(upper)
           val loOk = lower.flatMap(v => transformValue(pf.transform, sourceType, v))
             .forall { case (tt, tv) =>

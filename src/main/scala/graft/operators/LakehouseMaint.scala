@@ -406,7 +406,7 @@ object LakehouseMaint {
     // hidden-partition planning: source predicate → transform space →
     // summary test; only the matching bucket's manifest is ever opened
     val surviving = ScanPlanning.pruneManifestsByTransform(
-      cur.manifestList.get, meta, sourceFieldId = 1, value = 17)
+      ManifestListReader.read(cur.manifestList.get), meta, sourceFieldId = 1, values = Seq(17))
     val files = surviving.flatMap(i => ManifestWriter.read(i.path).map(_.filePath))
     ParquetFiles.read(spark, files)
       .filter(col("n_nationkey") === 17) // residual within the bucket
@@ -1016,9 +1016,10 @@ object LakehouseMaint {
         Tables.load(spark, sfDir, "nation").orderBy(col("n_nationkey")))
       val meta = TableMetadata.parseFile(GraftTable.latestMetadataPath(dir))
       val listPath = meta.currentSnapshot.get.manifestList.get
-      val keep = ScanPlanning.pruneManifestsByTransform(listPath, meta, 1, 18)
+      val infos = ManifestListReader.read(listPath)
+      val keep = ScanPlanning.pruneManifestsByTransform(infos, meta, 1, Seq(18))
         .map(_.path).toSet
-      ManifestListReader.read(listPath).filterNot(i => keep(i.path)).foreach(i =>
+      infos.filterNot(i => keep(i.path)).foreach(i =>
         java.nio.file.Files.write(java.nio.file.Paths.get(i.path),
           "corrupted: planning must never open this manifest".getBytes))
     }
@@ -1171,9 +1172,10 @@ object LakehouseMaint {
         .mode("append").save()
       val meta = TableMetadata.parseFile(GraftTable.latestMetadataPath(dir))
       val listPath = meta.currentSnapshot.get.manifestList.get
-      val keep = ScanPlanning.pruneManifestsByTransform(listPath, meta, 1, 18)
+      val infos = ManifestListReader.read(listPath)
+      val keep = ScanPlanning.pruneManifestsByTransform(infos, meta, 1, Seq(18))
         .map(_.path).toSet
-      ManifestListReader.read(listPath).filterNot(i => keep(i.path)).foreach(i =>
+      infos.filterNot(i => keep(i.path)).foreach(i =>
         java.nio.file.Files.write(java.nio.file.Paths.get(i.path),
           "corrupted: planning must never open this manifest".getBytes))
     }
@@ -1245,9 +1247,10 @@ object LakehouseMaint {
         Tables.load(spark, sfDir, "nation").orderBy(col("n_nationkey")))
       val meta = TableMetadata.parseFile(GraftTable.latestMetadataPath(dir))
       val listPath = meta.currentSnapshot.get.manifestList.get
-      val keep = ScanPlanning.pruneManifestsByRange(listPath, meta, 3, Some(3), None)
+      val infos = ManifestListReader.read(listPath)
+      val keep = ScanPlanning.pruneManifestsByRange(infos, meta, 3, Some(3), None)
         .map(_.path).toSet
-      ManifestListReader.read(listPath).filterNot(i => keep(i.path)).foreach(i =>
+      infos.filterNot(i => keep(i.path)).foreach(i =>
         java.nio.file.Files.write(java.nio.file.Paths.get(i.path),
           "corrupted: range pruning must never open this manifest".getBytes))
     }

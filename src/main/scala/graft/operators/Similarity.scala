@@ -329,6 +329,16 @@ object Similarity {
        |ORDER BY query_id, rank""".stripMargin
   }
 
+  /** Exact squared-L2 between two whole vectors — the refine metric.
+    * Dimensions must match: a pair of different lengths raises an error
+    * naming both, where the offset kernel alone would score a longer
+    * `a`'s prefix. NULL in, NULL out. */
+  private[graft] def sqdFull(a: Column, b: Column): Column =
+    when(a.isNull || b.isNull || size(a) === size(b),
+      call_function("graft_sqd", a, b, lit(0)))
+      .otherwise(raise_error(concat(lit("sqdFull dimension mismatch: a has "),
+        size(a).cast(StringType), lit(" elements, b has "), size(b).cast(StringType))))
+
   /** Shared IVF-PQ machinery (the s05 index scan and s06's refine): the
     * coarse quantizer and the PQ codebook both come from the anchor
     * vectors (vec_id < K), codes and cells derive in ONE corpus scan,
@@ -359,8 +369,6 @@ object Similarity {
     // inside whole-stage codegen with no per-row subarray allocation
     private def sqd(a: Column, b: Column, off: Int = 0): Column =
       call_function("graft_sqd", a, b, lit(off))
-    /** Exact squared-L2 between two float vectors — the refine metric. */
-    def sqdFull(a: Column, b: Column): Column = sqd(a, b)
     private def firstMin(d: Column): Column =
       (array_position(d, array_min(d)) - 1).cast(IntegerType)
     private def code(v: Column, m: Int): Column =
@@ -460,7 +468,7 @@ object Similarity {
     // refine: full vectors fetched ONLY for shortlisted candidates
     val wExact = Window.partitionBy(col("query_id")).orderBy(col("d2"), col("vec_id"))
     ix.emb.join(broadcast(shortlist), Seq("vec_id"))
-      .withColumn("d2", ix.sqdFull(col("embedding"), col("q_emb")))
+      .withColumn("d2", sqdFull(col("embedding"), col("q_emb")))
       .withColumn("rank", row_number().over(wExact))
       .filter(col("rank") <= 5)
       .select(col("query_id"), col("rank"), col("vec_id").as("neighbor_id"), col("d2"))

@@ -590,9 +590,16 @@ class GraftTableScan(required: StructType, filters: Array[sources.Filter],
     * broadcast join's build side materializes, Spark converts its keys
     * into In/EqualTo filters on the probe side's join columns, and THIS
     * scan re-plans with them — manifests prune in transform space, files
-    * prune on bound stats, before a single fact byte is read. At 100 TB
-    * this is the difference between scanning the whole fact table and
-    * scanning the partitions the dimension filter actually selects. */
+    * and row groups prune on bound stats, before a single fact byte is
+    * read. At 100 TB this is the difference between scanning the whole
+    * fact table and scanning the partitions the dimension filter actually
+    * selects.
+    *
+    * Cost, whatever the key count: the re-plan is one planning pass, so
+    * one manifest-list read (the static plan paid one more). An In set is
+    * evaluated once per manifest against its decoded summaries and once
+    * per data file or row group against its decoded bounds — never one
+    * list read or one bound decode per key. */
   @volatile private var runtimeFilters: Array[sources.Filter] = Array.empty
 
   /** Only columns this scan OUTPUTS: Spark resolves these against the
@@ -648,18 +655,18 @@ class GraftTableScan(required: StructType, filters: Array[sources.Filter],
     val infos = ManifestListReader.read(listPath)
     val dataInfos0 = infos.filter(_.content == 0)
     // level 1: pushed predicates prune manifests in the spec's transform
-    // space (summaries consulted, manifests unopened). Equality prunes
-    // through EVERY transform incl. bucket; comparisons fold into a value
-    // range per column and prune through the monotonic transforms.
+    // space (summaries consulted, manifests unopened), each filter a pass
+    // over the list read above. Equality and In-sets (the shape runtime
+    // join filters arrive in) prune through EVERY transform incl. bucket —
+    // a manifest survives a set when ANY of its values survives it;
+    // comparisons fold into a value range per column and prune through
+    // the monotonic transforms.
     def fieldId(c: String): Option[Int] =
       meta.currentSchema.fields.find(_.name == c).map(_.id)
-    val eqPairs = filters.collect {
-      case sources.EqualTo(c, v) => fieldId(c).map((_, v)) }.flatten
-    // In-sets (the shape runtime join filters arrive in): a manifest
-    // survives when ANY of the set's values survives it — the per-value
-    // transform prunes union
-    val inSets = filters.collect {
-      case sources.In(c, vs) if vs.nonEmpty => fieldId(c).map((_, vs.toSeq)) }.flatten
+    val valueSets = filters.collect {
+      case sources.EqualTo(c, v) => fieldId(c).map((_, Seq(v)))
+      case sources.In(c, vs) if vs.nonEmpty => fieldId(c).map((_, vs.toSeq))
+    }.flatten
     val ranges = filters.collect {
         case sources.GreaterThan(c, v) => (c, Some(v), None)
         case sources.GreaterThanOrEqual(c, v) => (c, Some(v), None)
@@ -669,20 +676,10 @@ class GraftTableScan(required: StructType, filters: Array[sources.Filter],
         fieldId(c).map(fid =>
           (fid, bs.flatMap(_._2).lastOption, bs.flatMap(_._3).lastOption))
       }
-    val afterEq = eqPairs.foldLeft(infos.map(_.path).toSet) {
-      case (acc, (fid, v)) =>
-        acc.intersect(ScanPlanning.pruneManifestsByTransform(listPath, meta, fid, v)
-          .map(_.path).toSet)
-    }
-    val afterIn = inSets.foldLeft(afterEq) { case (acc, (fid, vs)) =>
-      acc.intersect(vs.map(v =>
-        ScanPlanning.pruneManifestsByTransform(listPath, meta, fid, v)
-          .map(_.path).toSet).reduce(_ union _))
-    }
-    val surviving = ranges.foldLeft(afterIn) { case (acc, (fid, lo, hi)) =>
-      acc.intersect(ScanPlanning.pruneManifestsByRange(listPath, meta, fid, lo, hi)
-        .map(_.path).toSet)
-    }
+    val afterValues = valueSets.foldLeft(infos) { case (acc, (fid, vs)) =>
+      ScanPlanning.pruneManifestsByTransform(acc, meta, fid, vs) }
+    val surviving = ranges.foldLeft(afterValues) { case (acc, (fid, lo, hi)) =>
+      ScanPlanning.pruneManifestsByRange(acc, meta, fid, lo, hi) }.map(_.path).toSet
     val dataEntries = Par.inParallel(dataInfos0.filter(i => surviving(i.path)))(
         i => (i, ManifestWriter.read(i.path))).flatMap { case (i, es) =>
       es.filter(e => e.status != 2 && e.content == 0)
@@ -1995,7 +1992,10 @@ object FileBoundsEval {
     ops.contains(f.getClass.getSimpleName) &&
       f.references.forall(r => schema.fieldNames.contains(r))
 
-  /** True only when the entry PROVABLY holds no matching row. */
+  /** True only when the entry PROVABLY holds no matching row. An `In`
+    * decodes the entry's two bounds once and tests every value against
+    * them: skippable when each value falls outside, the same rule as
+    * `EqualTo` per value. */
   def skippable(f: sources.Filter, e: ManifestWriter.EntryData, meta: TableMetadata): Boolean = {
     def bound(col: String, lower: Boolean): Option[Any] = for {
       field <- meta.currentSchema.fields.find(_.name == col)
@@ -2004,19 +2004,23 @@ object FileBoundsEval {
       if bytes.nonEmpty
       v <- scala.util.Try(SingleValueCodec.decode(t, bytes)).toOption
     } yield v
+    def outside(lo: Option[Any], hi: Option[Any], v: Any): Boolean =
+      EntryFilterEval.cmp(lo, v).exists(_ > 0) || EntryFilterEval.cmp(hi, v).exists(_ < 0)
     def cmpLo(col: String, v: Any): Option[Int] =
-      bound(col, lower = true).flatMap(lo => EntryFilterEval.cmp(Some(lo), v))
+      EntryFilterEval.cmp(bound(col, lower = true), v)
     def cmpHi(col: String, v: Any): Option[Int] =
-      bound(col, lower = false).flatMap(hi => EntryFilterEval.cmp(Some(hi), v))
+      EntryFilterEval.cmp(bound(col, lower = false), v)
     f match {
       case sources.EqualTo(c, v) =>
-        cmpLo(c, v).exists(_ > 0) || cmpHi(c, v).exists(_ < 0)
+        outside(bound(c, lower = true), bound(c, lower = false), v)
       case sources.GreaterThan(c, v) => cmpHi(c, v).exists(_ <= 0)
       case sources.GreaterThanOrEqual(c, v) => cmpHi(c, v).exists(_ < 0)
       case sources.LessThan(c, v) => cmpLo(c, v).exists(_ >= 0)
       case sources.LessThanOrEqual(c, v) => cmpLo(c, v).exists(_ > 0)
-      case sources.In(c, vs) =>
-        vs.nonEmpty && vs.forall(v => skippable(sources.EqualTo(c, v), e, meta))
+      case sources.In(c, vs) => vs.nonEmpty && {
+        val (lo, hi) = (bound(c, lower = true), bound(c, lower = false))
+        vs.forall(outside(lo, hi, _))
+      }
       case sources.And(l, r) => skippable(l, e, meta) || skippable(r, e, meta)
       case sources.Or(l, r) => skippable(l, e, meta) && skippable(r, e, meta)
       case _ => false

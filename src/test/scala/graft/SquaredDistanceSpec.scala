@@ -64,6 +64,35 @@ class SquaredDistanceSpec extends AnyFunSuite {
     assert(o.isNullAt(0))
   }
 
+  test("mismatched dimensions throw, naming both, instead of scoring a prefix") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    // the kernel: a must cover [off, off+|b|)
+    val a3 = new GenericArrayData(Array[Any](1.0, 2.0, 3.0))
+    val b2 = new GenericArrayData(Array[Any](1.0, 1.0))
+    assert(graft.functions.VectorKernels.sqd(a3, false, b2, false, 1) == 1.0 + 4.0)
+    val short = intercept[IllegalArgumentException](
+      graft.functions.VectorKernels.sqd(a3, false, b2, false, 2))
+    assert(short.getMessage.contains("a has 3 elements") &&
+      short.getMessage.contains("b has 2"), short.getMessage)
+    // the refine metric: whole vectors of equal length, else an error
+    graft.functions.GraftFunctions.register(spark)
+    val df = Seq((Seq(1.0f, 2.0f, 3.0f, 4.0f), Seq(1.0f, 2.0f, 3.0f)),
+      (Seq(1.0f, 2.0f, 3.0f), Seq(0.0f, 2.0f, 5.0f))).toDF("a", "b")
+    val ok = df.filter(size($"a") === 3)
+      .select(graft.operators.Similarity.sqdFull($"a", $"b")).collect().head
+    assert(ok.getDouble(0) == 1.0 + 0.0 + 4.0)
+    val err = intercept[Exception](
+      df.select(graft.operators.Similarity.sqdFull($"a", $"b")).collect())
+    val msgs = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .map(e => String.valueOf(e.getMessage)).mkString(" | ")
+    assert(msgs.contains("a has 4 elements, b has 3"), msgs)
+    // NULL in, NULL out
+    val nul = Seq((Option.empty[Seq[Float]], Seq(1.0f))).toDF("a", "b")
+      .select(graft.operators.Similarity.sqdFull($"a", $"b")).collect().head
+    assert(nul.isNullAt(0))
+  }
+
   test("null input yields NULL") {
     import spark.implicits._
     val df = Seq((1L, Option.empty[Seq[Float]])).toDF("id", "v")

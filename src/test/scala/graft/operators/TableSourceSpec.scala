@@ -364,12 +364,12 @@ class TableSourceSpec extends SparkSpec {
     import graft.iceberg.ScanPlanning
     val dir = LakehouseExec.entryDir("i54", sfDir)
     val meta = TableMetadata.parseFile(GraftTable.latestMetadataPath(dir))
-    val listPath = meta.currentSnapshot.get.manifestList.get
-    assert(ScanPlanning.pruneManifestsByRange(listPath, meta, 3, Some(3), None).size == 2)
-    assert(ScanPlanning.pruneManifestsByRange(listPath, meta, 3, None, Some(1)).size == 2)
-    assert(ScanPlanning.pruneManifestsByRange(listPath, meta, 3, Some(1), Some(3)).size == 3)
+    val infos = ManifestListReader.read(meta.currentSnapshot.get.manifestList.get)
+    assert(ScanPlanning.pruneManifestsByRange(infos, meta, 3, Some(3), None).size == 2)
+    assert(ScanPlanning.pruneManifestsByRange(infos, meta, 3, None, Some(1)).size == 2)
+    assert(ScanPlanning.pruneManifestsByRange(infos, meta, 3, Some(1), Some(3)).size == 3)
     // a range on a non-partition column keeps everything (conservative)
-    assert(ScanPlanning.pruneManifestsByRange(listPath, meta, 1, Some(3), None).size == 5)
+    assert(ScanPlanning.pruneManifestsByRange(infos, meta, 1, Some(3), None).size == 5)
     // the programmatic range read over a FRESH table (the entry's table
     // has corrupted pruned manifests) — pruning + MOR + residual composed
     val fresh = java.nio.file.Files.createTempDirectory("graft-rrange").toString
