@@ -1,14 +1,14 @@
 package graft.cli
 
 import java.io.{InputStream, PrintStream}
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 import com.fasterxml.jackson.databind.ObjectMapper
 
 import org.apache.spark.sql.SparkSession
 
 import graft.functions.BoundDecode
-import graft.iceberg.{ManifestReader, TableMetadata}
+import graft.iceberg.{HadoopConfs, ManifestReader, TableMetadata}
 
 /** `manifest2json`: decode an Iceberg manifest Avro file to JSON with typed
   * bound statistics — the reference's one registered tool
@@ -67,7 +67,7 @@ class ManifestToJsonTool extends Tool {
         case "--reader-schema-file" =>
           i += 1
           readerSchema = args.lift(i).map(p =>
-            new String(Files.readAllBytes(Paths.get(p)), java.nio.charset.StandardCharsets.UTF_8))
+            new String(HadoopConfs.readFully(p), java.nio.charset.StandardCharsets.UTF_8))
         case other => positional += other
       }
       i += 1

@@ -82,8 +82,7 @@ object AvroDataFiles {
     * block declares its object count, so the sweep never decodes a
     * record (the metadata-only cost model `add_files` promises). */
   def countRecords(path: String): Long = {
-    val in = new java.io.BufferedInputStream(
-      HadoopConfs.fileSystemFor(path).open(new org.apache.hadoop.fs.Path(path)))
+    val in = new java.io.BufferedInputStream(HadoopConfs.open(path))
     val stream = new DataFileStream[GenericRecord](in,
       new GenericDatumReader[GenericRecord]())
     try {

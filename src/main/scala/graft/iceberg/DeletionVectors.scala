@@ -80,7 +80,7 @@ object DeletionVectors {
     * write task. */
   def writeDvFile(path: String, snapshotId: Long,
       dvs: Seq[(String, Array[Long])],
-      conf: org.apache.hadoop.conf.Configuration = null): (Seq[DvRef], Long) = {
+      conf: org.apache.hadoop.conf.Configuration = HadoopConfs.active()): (Seq[DvRef], Long) = {
     val encoded = dvs.map { case (dataFile, positions) =>
       val (body, card) = encodeBlob(positions)
       (dataFile, body, card)
@@ -100,7 +100,7 @@ object DeletionVectors {
   /** Read the DV addressing one data file by its manifest coordinates.
     * Runs on executors: pass the task's Hadoop conf. */
   def read(path: String, offset: Long, length: Long,
-      conf: org.apache.hadoop.conf.Configuration = null): Roaring64 =
+      conf: org.apache.hadoop.conf.Configuration = HadoopConfs.active()): Roaring64 =
     decodeBlob(Puffin.readRange(path, offset, length, conf))
 
   /** The manifest entry a DV lands as: content=1 (position deletes),

@@ -148,7 +148,7 @@ object GraftTable {
         (i, es) <- byManifest if i.content == listContent
         e <- es if e.status != 2 && e.content == entryContent
       } yield (e, e.sequenceNumber.getOrElse(i.sequenceNumber)))
-        .distinctBy(x => (uriPath(x._1.filePath), x._1.contentOffset.getOrElse(-1L)))
+        .distinctBy(x => (PathId(x._1.filePath), x._1.contentOffset.getOrElse(-1L)))
     (live(0, 0), live(1, 1), live(1, 2))
   }
 
@@ -304,11 +304,11 @@ object GraftTable {
             e <- es if e.status == status && e.content == entryContent &&
               e.snapshotId == s.snapshotId
           } yield (e, e.sequenceNumber.getOrElse(i.sequenceNumber)))
-            .distinctBy(x => (uriPath(x._1.filePath), x._1.contentOffset.getOrElse(-1L)))
+            .distinctBy(x => (PathId(x._1.filePath), x._1.contentOffset.getOrElse(-1L)))
         val dataAdded = entriesOf(0, 1, 0)
         val posAdded = entriesOf(1, 1, 1)
         val eqAdded = entriesOf(1, 1, 2)
-        val removed = entriesOf(0, 2, 0).map(e => uriPath(e._1.filePath)).toSet
+        val removed = entriesOf(0, 2, 0).map(e => PathId(e._1.filePath)).toSet
         insertTags ++= dataAdded.map(e => (e, ordinal, s.snapshotId))
         // parent-visible rows of the data files `keep` selects,
         // MOR-resolved (parent's own deletes applied) so only live rows
@@ -320,17 +320,17 @@ object GraftTable {
           }
         val removedDeletes =
           if (removed.isEmpty) None
-          else parentVisible(e => removed.contains(uriPath(e.filePath)))
+          else parentVisible(e => removed.contains(PathId(e.filePath)))
             .map(tag(_, "delete"))
         val posDeletes =
           if (posAdded.isEmpty) None
           else {
             val addrs = posDeleteAddresses(spark, posAdded.map(_._1))
             parentVisible(e => posAdded.exists(d =>
-                posDeleteMayAddress(d._1, Set(uriPath(e.filePath)))))
+                posDeleteMayAddress(d._1, Set(PathId(e.filePath)))))
               .map { vis =>
                 tag(vis.join(addrs,
-                  stripSchemeCol(vis("_file")) === stripSchemeCol(addrs("file_path")) &&
+                  PathId.col(vis("_file")) === PathId.col(addrs("file_path")) &&
                     vis("_pos") === addrs("pos")), "delete")
               }
           }
@@ -565,8 +565,7 @@ object GraftTable {
       .map(_.getPath.toString).sorted.toSeq
     require(files.nonEmpty, s"no $format files under $sourceDir")
     val pending = Par.inParallel(files) { f =>
-      val len = HadoopConfs.fileSystemFor(f)
-        .getFileStatus(new org.apache.hadoop.fs.Path(f)).getLen
+      val len = HadoopConfs.length(f)
       if (fmt == "PARQUET") {
         val (rows, lower, upper) = footerStats(f, meta0.currentSchema.fields)
         PendingFile(f, rows, len, lower, upper, None, 0, fmt)
@@ -911,7 +910,7 @@ object GraftTable {
           Seq((m, None: Option[Seq[ManifestListWriter.FieldSummary]], 0))
         }
       val perFile = summarized.zip(sumAssigned).zipWithIndex.map { case ((f, e), i) =>
-        val m = s"$tableDir/m-append-$snapId-$attempt-%05d.avro".format(i)
+        val m = f"$tableDir/m-append-$snapId-$attempt-${i}%05d.avro"
         ManifestWriter.write(m, Seq(e))
         (m, f.partitionSummary, f.specId)
       }
@@ -1036,14 +1035,14 @@ object GraftTable {
       (out, base.copy(nextRowId = Some(rid)))
     }
 
-  /** Distributed v3 DV write: group the (normalized file_path, pos)
+  /** Distributed v3 DV write: group the ([[PathId]] file_path, pos)
     * frame per data file IN THE CLUSTER and let each write task emit ONE
     * Puffin file holding its files' bitmaps — a delete touching 10⁵
     * files across 1000 tasks writes 1000 blobs concurrently, never a
     * driver funnel. Only the KB-scale blob addresses
     * (referenced file, puffin path, offset, length, cardinality, file
     * size) come back for the manifest commit. `manifestForm` maps the
-    * normalized paths back to the exact path form the manifests carry,
+    * path ids back to the exact path form the manifests carry,
     * so referenced_data_file matches at planning time. */
   private def writeDvsDistributed(spark: SparkSession, tableDir: String,
       attempt: java.util.UUID, dels: DataFrame,
@@ -1079,17 +1078,16 @@ object GraftTable {
   /** The pending position-delete state for a COVERED file set (v3
     * merge-on-write input): the live DV entries whose referenced file is
     * covered (these get superseded by the commit), plus ONE DataFrame of
-    * (normalized file_path, pos) carrying every pending position — DV
+    * ([[PathId]] file_path, pos) carrying every pending position — DV
     * blobs expanded executor-side, v2 parquet positions restricted to
     * the covered files. */
   private def pendingPosState(spark: SparkSession, meta0: TableMetadata,
       covered: Set[String], branch: Option[String] = None)
       : (Seq[ManifestWriter.EntryData], DataFrame) = {
     import spark.implicits._
-    def norm(p: String): String = uriPath(p)
     val delE = entriesAt(refHead(meta0, branch), 1).filter(_.content == 1)
     val oldDvEntries = delE.filter(e => e.fileFormat == "PUFFIN" &&
-      e.referencedDataFile.exists(r => covered(norm(r))))
+      e.referencedDataFile.exists(r => covered(PathId(r))))
     // sorted-array overlap keeps this O(D log N) — a per-covered-path
     // probe would be O(D·N) at 10⁵ files × 10⁵ deletes
     val sortedCovered = covered.toArray.sorted
@@ -1099,7 +1097,7 @@ object GraftTable {
     val oldDvPositions: DataFrame =
       if (oldDvEntries.isEmpty) spark.emptyDataset[(String, Long)].toDF("file_path", "pos")
       else spark.createDataset(oldDvEntries.map(e =>
-          (norm(e.referencedDataFile.get), e.filePath,
+          (PathId(e.referencedDataFile.get), e.filePath,
             e.contentOffset.getOrElse(0L), e.contentSizeInBytes.getOrElse(0L))))
         .flatMap { case (ref, puffin, off, len) =>
           DeletionVectors.read(puffin, off, len, taskConf.value)
@@ -1109,7 +1107,7 @@ object GraftTable {
       if (oldParquet.isEmpty) spark.emptyDataset[(String, Long)].toDF("file_path", "pos")
       else spark.read.schema(PosDeleteReadSchema)
         .parquet(oldParquet.map(_.filePath): _*)
-        .select(stripSchemeCol(col("file_path")).as("file_path"), col("pos"))
+        .select(PathId.col(col("file_path")).as("file_path"), col("pos"))
         .filter(col("file_path").isin(covered.toSeq: _*))
     (oldDvEntries, oldDvPositions.unionByName(oldParquetPositions))
   }
@@ -1145,42 +1143,28 @@ object GraftTable {
   }
 
   /** Could `del` (a position-delete entry) address any of `paths`
-    * (normalized)? Its file_path bound stats — written under the RESERVED
+    * (path ids)? Its file_path bound stats — written under the RESERVED
     * position-delete field ids — answer without opening the file; missing
     * or undecodable bounds keep it (conservative). */
   private def posDeleteMayAddress(del: ManifestWriter.EntryData,
-      paths: Set[String]): Boolean = {
-    def decode(m: Map[Int, Array[Byte]]): Option[String] =
-      m.get(ManifestWriter.PosDeleteFilePathId).filter(_.nonEmpty)
-        .flatMap(b => scala.util.Try(
-          SingleValueCodec.decode(IcebergTypes.TString, b).asInstanceOf[String]).toOption)
-    (decode(del.lowerBounds), decode(del.upperBounds)) match {
-      case (Some(lo), Some(hi)) =>
-        paths.exists(p => uriPath(lo) <= p && p <= uriPath(hi))
+      paths: Set[String]): Boolean =
+    ManifestWriter.posDeletePathBounds(del) match {
+      case (Some(lo), Some(hi)) => paths.exists(p => lo <= p && p <= hi)
       case _ => true
     }
-  }
 
-  /** [[posDeleteMayAddress]] against a SORTED normalized-path array —
+  /** [[posDeleteMayAddress]] against a SORTED path-id array —
     * binary search for the first path >= the lower bound, then one
     * compare against the upper: O(log N) per delete entry. */
   private def posDeleteOverlaps(del: ManifestWriter.EntryData,
-      sortedPaths: Array[String]): Boolean = {
-    def decode(m: Map[Int, Array[Byte]]): Option[String] =
-      m.get(ManifestWriter.PosDeleteFilePathId).filter(_.nonEmpty)
-        .flatMap(b => scala.util.Try(
-          SingleValueCodec.decode(IcebergTypes.TString, b).asInstanceOf[String]).toOption)
-    (decode(del.lowerBounds), decode(del.upperBounds)) match {
+      sortedPaths: Array[String]): Boolean =
+    ManifestWriter.posDeletePathBounds(del) match {
       case (Some(lo), Some(hi)) =>
-        val at = {
-          val i = java.util.Arrays.binarySearch(
-            sortedPaths.asInstanceOf[Array[AnyRef]], uriPath(lo))
-          if (i >= 0) i else -i - 1
-        }
-        at < sortedPaths.length && sortedPaths(at) <= uriPath(hi)
+        val i = java.util.Arrays.binarySearch(sortedPaths.asInstanceOf[Array[AnyRef]], lo)
+        val at = if (i >= 0) i else -i - 1
+        at < sortedPaths.length && sortedPaths(at) <= hi
       case _ => true
     }
-  }
 
   /** Serializable-isolation check for copy-on-write row-level commits: a
     * delete file committed between the operation's scan and its replace
@@ -1192,9 +1176,9 @@ object GraftTable {
   private def validateNoNewDeletes(base: TableMetadata,
       scannedDeletePaths: Set[String], replacedNorm: Set[String],
       branch: Option[String] = None): Unit = {
-    val seen = scannedDeletePaths.map(uriPath) // idempotent on plain paths
+    val seen = scannedDeletePaths.map(PathId(_)) // idempotent on plain paths
     val fresh = entriesAt(refHead(base, branch), 1)
-      .filterNot(e => seen.contains(uriPath(e.filePath)))
+      .filterNot(e => seen.contains(PathId(e.filePath)))
     val conflicting = fresh.filter(e =>
       e.content == 2 || posDeleteMayAddress(e, replacedNorm))
     if (conflicting.nonEmpty) throw OptimisticCommit.CommitConflictException(
@@ -1231,12 +1215,12 @@ object GraftTable {
       // REFERENCES, never bytes), so main's scans are untouched.
       val head = refHead(base, branch)
       val curData = entriesAt(head, 0).filter(_.content == 0)
-      val replacedNorm = replacedPaths.map(uriPath)
-      val missing = replacedNorm -- curData.map(e => uriPath(e.filePath)).toSet
+      val replacedNorm = replacedPaths.map(PathId(_))
+      val missing = replacedNorm -- curData.map(e => PathId(e.filePath)).toSet
       if (missing.nonEmpty) throw OptimisticCommit.CommitConflictException(
         s"row-level operation sources removed by a concurrent commit: ${missing.mkString(", ")}")
       validateNoNewDeletes(base, scannedDeletePaths, replacedNorm, branch)
-      val untouched = curData.filterNot(e => replacedNorm.contains(uriPath(e.filePath)))
+      val untouched = curData.filterNot(e => replacedNorm.contains(PathId(e.filePath)))
         .map(_.copy(status = 0, snapshotId = snapId))
       // v3 lineage: COW-rewritten files assign FRESH ids (Spark's
       // group-based replace plan carries no metadata attributes for a
@@ -1253,7 +1237,7 @@ object GraftTable {
       // them (every reader filters status != 2), but the `entries`
       // inspection table and changelog-style consumers can see exactly
       // what this commit removed without diffing snapshots
-      val tombstones = curData.filter(e => replacedNorm.contains(uriPath(e.filePath)))
+      val tombstones = curData.filter(e => replacedNorm.contains(PathId(e.filePath)))
         .map(_.copy(status = 2, snapshotId = snapId))
       val manifest = s"$tableDir/m-rowlevel-$snapId-$attempt.avro"
       ManifestWriter.write(manifest, untouched ++ newEntries ++ tombstones)
@@ -1384,21 +1368,6 @@ object GraftTable {
       .select(sparkSchema(meta).fieldNames.map(col).toIndexedSeq: _*)
   }
 
-  private def uriPath(p: String): String = new org.apache.hadoop.fs.Path(p).toUri.getPath
-
-  /** A path with its URI scheme (and any `//`) stripped: `file:/a/b` and
-    * `/a/b` compare equal, an authority stays (`s3://bk/k` → `bk/k`).
-    * Manifests record plain paths while Spark and delete files may carry
-    * URIs; every comparison between the two forms goes through this or
-    * its Column twin [[stripSchemeCol]], which keeps the same semantics
-    * inside whole-stage codegen. */
-  private[graft] def stripScheme(p: String): String = p.replaceFirst(SchemePrefix, "")
-
-  private[graft] def stripSchemeCol(c: org.apache.spark.sql.Column)
-      : org.apache.spark.sql.Column = regexp_replace(c, SchemePrefix, "")
-
-  private val SchemePrefix = "^[a-z0-9+.-]+:(//)?"
-
   /** Current non-deleted entries of the head snapshot, by list content —
     * manifests open concurrently (same planning shape as livePlan).
     * An entry relying on list-level sequence inheritance (null sequence,
@@ -1498,13 +1467,13 @@ object GraftTable {
     val candEntries =
       (if (srcEmpty) Nil else dataEntries.filter(entryMayMatch))
         .map(e => (e, e.sequenceNumber.get))
-    val candByPath = candEntries.map { case (e, s) => uriPath(e.filePath) -> (e, s) }.toMap
+    val candByPath = candEntries.map { case (e, s) => PathId(e.filePath) -> (e, s) }.toMap
     // the MOR frame over CANDIDATE files only — non-candidates can't
     // hold a source key, so match detection and the insert anti-join
     // are both complete over this subset
     val candLive = TableDataSource.scanPlan(spark, meta0, candEntries, posEntries, eqEntries)
     val affected = candLive.join(src, keyCols, "left_semi")
-      .select(col("_file")).distinct().collect().map(r => uriPath(r.getString(0))).toSet
+      .select(col("_file")).distinct().collect().map(r => PathId(r.getString(0))).toSet
     val mergeUuid = java.util.UUID.randomUUID()
     // per-file COW rewrites are independent Spark jobs — submitted
     // concurrently, and each reads ONLY its target file plus the delete
@@ -1512,7 +1481,7 @@ object GraftTable {
     // file_path bounds): K affected files cost O(affected bytes) total,
     // not K full-table scans
     val rewritten = Par.inParallel(affected.toSeq.sorted.zipWithIndex) { case (f, i) =>
-      val out = s"$tableDir/data/merged-$mergeUuid-%05d.parquet".format(i)
+      val out = f"$tableDir/data/merged-$mergeUuid-${i}%05d.parquet"
       val fileLive = TableDataSource.scanPlan(spark, meta0, Seq(candByPath(f)),
         posEntries, eqEntries)
       ParquetFiles.writeOne(
@@ -1541,7 +1510,7 @@ object GraftTable {
           // write fresh files; losers stay uncommitted orphans
           val att = org.apache.spark.TaskContext.get().taskAttemptId()
           val fw = new graft.sources.GraftFileWriter(
-            s"$insertPrefix-p%05d-t$att.parquet".format(pid),
+            f"$insertPrefix-p${pid}%05d-t$att.parquet",
             schema, writerFields, None, 0, wconf.value)
           try {
             it.foreach(fw.write)
@@ -1552,24 +1521,24 @@ object GraftTable {
     val newFiles = rewritten
     // the delete files the scan applied — a delete committed AFTER this
     // set was read conflicts with the rewrite (validateNoNewDeletes)
-    val scannedDeletes = currentEntries(meta0, 1).map(e => uriPath(e.filePath)).toSet
+    val scannedDeletes = currentEntries(meta0, 1).map(e => PathId(e.filePath)).toSet
     OptimisticCommit.commit(tableDir, (base, basePath) => {
       val snapId = (base.snapshots.map(_.snapshotId) :+ 0L).max + 1
       val attempt = java.util.UUID.randomUUID()
       val curData = currentEntries(base, 0).filter(_.content == 0)
-      val missing = affected.filterNot(curData.map(e => uriPath(e.filePath)).toSet)
+      val missing = affected.filterNot(curData.map(e => PathId(e.filePath)).toSet)
       if (missing.nonEmpty) throw OptimisticCommit.CommitConflictException(
         s"merge sources removed by a concurrent commit: ${missing.mkString(", ")}")
       validateNoNewDeletes(base, scannedDeletes, affected)
       // untouched files: EXISTING entries, ORIGINAL sequence preserved
-      val untouched = curData.filterNot(e => affected.contains(uriPath(e.filePath)))
+      val untouched = curData.filterNot(e => affected.contains(PathId(e.filePath)))
         .map(_.copy(status = 0, snapshotId = snapId))
       // v3 lineage: COW-merged files assign fresh ids (same documented
       // identity rule as commitReplaceFiles — MOR preserves, COW renews)
       val (newEntries, base2) = assignRowIds(base,
         Par.inParallel(newFiles) { f =>
           val (n, lower, upper) = deriveStats(spark, f, base)
-          ManifestWriter.EntryData(1, snapId, f, n, ParquetFiles.length(f),
+          ManifestWriter.EntryData(1, snapId, f, n, HadoopConfs.length(f),
             lower, upper, content = 0, sequenceNumber = Some(snapId))
         } ++ insertMsgs.map(m => // task-derived inline stats, no re-read
           ManifestWriter.EntryData(1, snapId, m.path, m.rows, m.bytes,
@@ -1890,7 +1859,7 @@ object GraftTable {
     // tuples can then share a truncated lower while their uppers still
     // differ, so both sides participate in the key.
     val tupleTagOf: Map[String, TupleTag] = perManifest0.collect {
-      case (Some(tag), es) => es.map(e => uriPath(e.filePath) -> tag)
+      case (Some(tag), es) => es.map(e => PathId(e.filePath) -> tag)
     }.flatten.toMap
     def keyOf(tag: TupleTag): (Int, Seq[(Seq[Byte], Seq[Byte])]) =
       (tag._2, tag._3.map(s => (s.lower.toSeq, s.upper.toSeq)))
@@ -1898,7 +1867,7 @@ object GraftTable {
       tupleTagOf.values.map(v => keyOf(v) -> v).toMap
     def tupleGroupsOf(es: Seq[ManifestWriter.EntryData])
         : Seq[(Option[TupleTag], Seq[ManifestWriter.EntryData])] =
-      es.groupBy(e => tupleTagOf.get(uriPath(e.filePath)).map(keyOf))
+      es.groupBy(e => tupleTagOf.get(PathId(e.filePath)).map(keyOf))
         .toSeq.sortBy(_._1.map(_.toString))
         .map { case (kOpt, g) => (kOpt.map(tagByKey), g) }
     val sortedTagged: Seq[(graft.sources.GraftFileMessage, Option[TupleTag])] =
@@ -1937,8 +1906,7 @@ object GraftTable {
                 // taskAttemptId is globally unique per attempt.
                 val att = org.apache.spark.TaskContext.get().taskAttemptId()
                 val w = new graft.sources.GraftFileWriter(
-                  s"$tableDir/data/sorted-$compactUuid-g%03d-p%05d-t$att.parquet"
-                    .format(gi, pid),
+                  f"$tableDir/data/sorted-$compactUuid-g${gi}%03d-p${pid}%05d-t$att.parquet",
                   writeSchema, fields, None, 0, taskConf.value)
                 try {
                   rows.foreach(w.write)
@@ -1972,7 +1940,7 @@ object GraftTable {
     // entry-granular MOR read — total rewrite I/O is one pass over the
     // table, not bins × table
     val outFiles = Par.inParallel(bins.zipWithIndex) { case (es, i) =>
-      val out = s"$tableDir/data/compacted-$compactUuid-%05d.parquet".format(i)
+      val out = f"$tableDir/data/compacted-$compactUuid-${i}%05d.parquet"
       ParquetFiles.writeOne(
         TableDataSource.scanPlan(spark, meta0,
           es.map(e => (e, e.sequenceNumber.get)), posEntries, eqEntries)
@@ -1980,7 +1948,7 @@ object GraftTable {
           .orderBy(col(schema.fieldNames.head)), out)
       out
     }
-    val selectedSet = selected.map(e => uriPath(e.filePath)).toSet
+    val selectedSet = selected.map(e => PathId(e.filePath)).toSet
     val scannedDeletes = (posEntries ++ eqEntries).map(_._1.filePath).toSet
     OptimisticCommit.commit(tableDir, (base, basePath) => {
       val snapId = (base.snapshots.map(_.snapshotId) :+ 0L).max + 1
@@ -1997,7 +1965,7 @@ object GraftTable {
       // a concurrent commit may ADD data files (they carry forward below)
       // but must not have removed one this compaction rewrote
       val gone = selectedSet --
-        perManifest.flatMap(_._2).map(e => uriPath(e.filePath))
+        perManifest.flatMap(_._2).map(e => PathId(e.filePath))
       if (gone.nonEmpty) throw OptimisticCommit.CommitConflictException(
         "data files rewritten by this compaction were removed concurrently " +
           s"— rerun compaction: ${gone.toSeq.sorted.mkString(", ")}")
@@ -2015,7 +1983,7 @@ object GraftTable {
             content = 0, sequenceNumber = Some(snapId)))
         else Par.inParallel(outFiles) { f =>
           val (n, lower, upper) = deriveStats(spark, f, base)
-          ManifestWriter.EntryData(1, snapId, f, n, ParquetFiles.length(f),
+          ManifestWriter.EntryData(1, snapId, f, n, HadoopConfs.length(f),
             lower, upper, content = 0, sequenceNumber = Some(snapId))
         }
       val manifest = s"$tableDir/m-compact-$snapId-$attempt.avro"
@@ -2036,7 +2004,7 @@ object GraftTable {
           case ((_, xs), i) =>
             val es = xs.map(_._2._1)
             val (_, specId, fs) = xs.head._2._2
-            val m = s"$tableDir/m-compact-$snapId-$attempt-%05d.avro".format(i)
+            val m = f"$tableDir/m-compact-$snapId-$attempt-${i}%05d.avro"
             ManifestWriter.write(m, es)
             (m, specId, fs, es.size)
         }
@@ -2055,9 +2023,9 @@ object GraftTable {
       // EXISTING entries, or delete-side sequence pruning would wrongly
       // skip deletes that still apply to them.
       val (affected, untouched) = perManifest.partition { case (_, es) =>
-        es.exists(e => selectedSet.contains(uriPath(e.filePath))) }
+        es.exists(e => selectedSet.contains(PathId(e.filePath))) }
       val (tombstoned, moved) = affected.flatMap(_._2)
-        .partition(e => selectedSet.contains(uriPath(e.filePath)))
+        .partition(e => selectedSet.contains(PathId(e.filePath)))
       ManifestWriter.write(manifest, plainOutputs ++
         moved.map(_.copy(status = 0, snapshotId = snapId)) ++
         tombstoned.map(_.copy(status = 2, snapshotId = snapId)))
@@ -2100,8 +2068,8 @@ object GraftTable {
     * <= its own — so the rewritten file (at the new commit's sequence,
     * above every data file) deletes precisely the rows the old delete
     * set did. Null equality values match null data values (the spec
-    * rule) via null-safe join conditions. All file paths normalize to
-    * the scheme-less form every reader compares in. */
+    * rule) via null-safe join conditions. All file paths compare as
+    * [[PathId]]s, as every reader compares them. */
   def rewritePositionDeleteFiles(spark: SparkSession, tableDir: String)
       : OptimisticCommit.CommitResult = {
     import org.apache.spark.sql.functions.{broadcast, col, count, lit, max, min}
@@ -2137,15 +2105,15 @@ object GraftTable {
         val cond = eqVals.columns.map(c =>
           data(c) <=> eqVals(c).cast(tableSchema(c).dataType)).reduce(_ && _)
         Some(data.join(eqVals, cond, "left_semi")
-          .select(stripSchemeCol(col("__file")).as("file_path"), col("__pos").as("pos")))
+          .select(PathId.col(col("__file")).as("file_path"), col("__pos").as("pos")))
       }
     }
     val oldPos = posE.map { case (e, posSeq) =>
       import spark.implicits._
-      val lives = dataE.filter(_._2 <= posSeq).map(x => stripScheme(x._1.filePath))
+      val lives = dataE.filter(_._2 <= posSeq).map(x => PathId(x._1.filePath))
       // both physical forms: v2 parquet rows, v3 DV blobs
       posDeleteAddresses(spark, Seq(e))
-        .select(stripSchemeCol(col("file_path")).as("file_path"), col("pos"))
+        .select(PathId.col(col("file_path")).as("file_path"), col("pos"))
         .join(broadcast(lives.toDF("file_path")), Seq("file_path"), "left_semi")
     }
     val parts = resolvedEq ++ oldPos
@@ -2174,7 +2142,7 @@ object GraftTable {
     val dvRefRows: Seq[(String, String, Long, Long, Long, Long)] =
       if (!v3) Nil
       else writeDvsDistributed(spark, tableDir, attempt, merged,
-        dataE.map(x => stripScheme(x._1.filePath) -> x._1.filePath).toMap,
+        dataE.map(x => PathId(x._1.filePath) -> x._1.filePath).toMap,
         (meta0.snapshots.map(_.snapshotId) :+ 0L).max + 1)
     val (nRows, delLower, delUpper) =
       if (v3) (dvRefRows.map(_._5).sum,
@@ -2197,14 +2165,14 @@ object GraftTable {
               ManifestWriter.PosDeletePosId ->
                 SingleValueCodec.encode(IcebergTypes.TLong, statRow.getLong(4))))
       }
-    val preDel = delE.map(e => stripScheme(e.filePath)).toSet
-    val preData = dataE.map(x => stripScheme(x._1.filePath)).toSet
+    val preDel = delE.map(e => PathId(e.filePath)).toSet
+    val preData = dataE.map(x => PathId(x._1.filePath)).toSet
     OptimisticCommit.commit(tableDir, (base, basePath) => {
       // the resolution above ran against meta0 — a concurrent commit that
       // changed either side of the MOR equation invalidates it
-      val nowDel = currentEntries(base, 1).map(e => stripScheme(e.filePath)).toSet
+      val nowDel = currentEntries(base, 1).map(e => PathId(e.filePath)).toSet
       val nowData = currentEntries(base, 0).filter(_.content == 0)
-        .map(e => stripScheme(e.filePath)).toSet
+        .map(e => PathId(e.filePath)).toSet
       if (nowDel != preDel || nowData != preData)
         throw OptimisticCommit.CommitConflictException(
           "table delete/data file set changed while rewriting — rerun")
@@ -2216,7 +2184,7 @@ object GraftTable {
             DeletionVectors.DvRef(ref, path, off, len, card), snapId, snapId, size)
         }
         else Seq(ManifestWriter.EntryData(
-          1, snapId, delFile, nRows, ParquetFiles.length(delFile),
+          1, snapId, delFile, nRows, HadoopConfs.length(delFile),
           delLower, delUpper, content = 1, sequenceNumber = Some(snapId))))
       val carried = carryForward(base).filter(_.content == 0)
       val list = s"$tableDir/snap-$snapId-$attempt-list.avro"
@@ -2476,11 +2444,11 @@ object GraftTable {
     val manifestBytes = (expManifests ++ retManifests).distinct.map(_._2).sum
     val threshold = spark.conf.get(
       "graft.expiry.distributedSweepBytes", (64L << 20).toString).toLong
-    // Both legs diff on the uriPath-NORMALIZED path component (the same
+    // Both legs diff on the PathId.component of each spelling (the same
     // function the orphan sweep routes both sides through) while deleting
     // the raw expired spelling: a live file spelled differently in a
-    // retained manifest (file:/p vs /p — foreign writers, add_files
-    // imports) must never alias past the difference and be deleted.
+    // retained manifest (file:/p vs /p, s3 vs s3a — foreign writers,
+    // add_files imports) must never alias past the difference and be deleted.
     // ExpirySpellingSpec pins this with a hand-built mixed-spelling
     // manifest, mirroring r20's OrphanSweepSpec.
     val doomedDriverFiles: Set[String] =
@@ -2488,8 +2456,8 @@ object GraftTable {
       else {
         def live(ms: Seq[String]): Seq[String] = Par.inParallel(ms)(m =>
           ManifestWriter.read(m).filter(_.status != 2).map(_.filePath)).flatten
-        val retained = live(retManifests.map(_._1)).map(uriPath).toSet
-        live(expManifests.map(_._1)).filterNot(p => retained(uriPath(p))).toSet
+        val retained = live(retManifests.map(_._1)).map(PathId.component).toSet
+        live(expManifests.map(_._1)).filterNot(p => retained(PathId.component(p))).toSet
       }
     if (manifestBytes > threshold && expManifests.nonEmpty) {
       import spark.implicits._
@@ -2498,11 +2466,11 @@ object GraftTable {
           .filter(col("status") =!= 2)
           .select(col("data_file.file_path").as("path"))
       val expired = live(expManifests.map(_._1)).distinct()
-        .as[String].map(p => (p, uriPath(p))).toDF("path", "ref")
+        .as[String].map(p => (p, PathId.component(p))).toDF("path", "ref")
       val doomedDf =
         if (retManifests.isEmpty) expired.select(col("path"))
         else expired.join(
-          live(retManifests.map(_._1)).as[String].map(uriPath).toDF("ref"),
+          live(retManifests.map(_._1)).as[String].map(PathId.component).toDF("ref"),
           Seq("ref"), "left_anti").select(col("path"))
       val conf = new SerializableHadoopConf(HadoopConfs.active())
       doomedDf.as[String].rdd.foreachPartition { it =>
@@ -2768,11 +2736,7 @@ object GraftTable {
   private def decodedDeleteSigs(meta: TableMetadata,
       deletes: Seq[ManifestWriter.EntryData]): Seq[DeleteSig] =
     deletes.map { d =>
-      def dec(m: Map[Int, Array[Byte]]): Option[String] =
-        m.get(ManifestWriter.PosDeleteFilePathId).filter(_.nonEmpty)
-          .flatMap(b => scala.util.Try(SingleValueCodec
-            .decode(IcebergTypes.TString, b).asInstanceOf[String]).toOption)
-          .map(uriPath)
+      val (pathLo, pathHi) = ManifestWriter.posDeletePathBounds(d)
       val eqScope: Map[Int, (Any, Any)] =
         if (d.content != 2) Map.empty
         else (d.lowerBounds.keySet & d.upperBounds.keySet).toSeq.flatMap { fid =>
@@ -2788,8 +2752,8 @@ object GraftTable {
               .flatMap(comparableValue)
           } yield fid -> ((lo, hi))
         }.toMap
-      DeleteSig(uriPath(d.filePath), d.sequenceNumber.get, d.content,
-        dec(d.lowerBounds), dec(d.upperBounds), eqScope)
+      DeleteSig(PathId(d.filePath), d.sequenceNumber.get, d.content,
+        pathLo, pathHi, eqScope)
     }
 
   /** Per-field value envelope of a partition's live data files: an
@@ -2828,7 +2792,7 @@ object GraftTable {
   }
 
   /** The signatures among `sigs` that COULD affect rows living in data
-    * files `paths` (normalized, with per-field envelope `env`):
+    * files `paths` (path ids, with per-field envelope `env`):
     * position deletes and v3 DVs address by their decoded file_path
     * bounds — conservative on missing bounds; an equality delete
     * addresses the partition UNLESS some provably null-free bounded key
@@ -3139,12 +3103,12 @@ object GraftTable {
       val anchorSigs = decodedDeleteSigs(meta, anchorDels)
       val scopeFids = (headSigs ++ anchorSigs).flatMap(_.eqScope.keys).toSet
       def sig(es: Seq[ManifestWriter.EntryData]): Set[(String, Long)] =
-        es.map(e => (uriPath(e.filePath), e.sequenceNumber.get)).toSet
+        es.map(e => (PathId(e.filePath), e.sequenceNumber.get)).toSet
       val clean = headGroups.keySet.filter { t =>
         sk.bank.contains(t) &&
           anchorGroups.get(t).exists(a => sig(a) == sig(headGroups(t))) && {
             val es = headGroups(t)
-            val paths = es.map(e => uriPath(e.filePath)).toSet
+            val paths = es.map(e => PathId(e.filePath)).toSet
             // the envelope is computed from the head's entries; the
             // clean test only reaches here when the anchor holds the
             // SAME (path, seq) set, so it describes both sides
@@ -3196,7 +3160,7 @@ object GraftTable {
           .filter(e => e.status == 1 && e.content == 0)
           .map(e => (MetadataTables.partitionTuple(meta, i),
             (e, e.sequenceNumber.getOrElse(i.sequenceNumber))))).flatten
-    }.distinctBy(te => uriPath(te._2._1.filePath))
+    }.distinctBy(te => PathId(te._2._1.filePath))
     val newEntries = newTagged.map(_._2)
     val newPaths = newEntries.map(_._1.filePath)
     // a later replace makes the appended ORIGINALS dead at the head; the
@@ -3362,7 +3326,7 @@ object GraftTable {
       "position_delete_record_count", "position_delete_file_count",
       "equality_delete_record_count", "equality_delete_file_count")
       .orderBy(col("partition")), path)
-    val size = ParquetFiles.length(path)
+    val size = HadoopConfs.length(path)
     var replaced: Seq[String] = Nil
     val result = OptimisticCommit.commit(tableDir, (base, basePath) => {
       replaced = base.partitionStatistics.filter(_.snapshotId == snapId).map(_.path)
@@ -3774,7 +3738,7 @@ object GraftTable {
         val entries = ManifestWriter.read(i.path).filter(_.status != 2)
           .map(e => e.copy(status = 1, snapshotId = snapId,
             sequenceNumber = Some(snapId)))
-        val m = s"$tableDir/m-cherry-$snapId-$attempt-%05d.avro".format(ix)
+        val m = f"$tableDir/m-cherry-$snapId-$attempt-${ix}%05d.avro"
         ManifestWriter.write(m, entries)
         (m, i)
       }
@@ -3851,7 +3815,7 @@ object GraftTable {
       .filter(_.content == 1)
       .flatMap(i => ManifestWriter.read(i.path))
       .filter(e => e.status != 2 && e.content == 2 && e.nullValueCounts.isEmpty)
-      .distinctBy(e => uriPath(e.filePath))
+      .distinctBy(e => PathId(e.filePath))
     val backfill: Map[String, Map[Int, Long]] =
       Par.inParallel(legacyEq) { e =>
         // an eq-delete file's schema IS its equality-id list — count the
@@ -3862,7 +3826,7 @@ object GraftTable {
         scala.util.Try {
           val names = footerSparkSchema(spark, e.filePath).fieldNames.toSet
           val fields = meta0.currentSchema.fields.filter(f => names.contains(f.name))
-          uriPath(e.filePath) -> deriveStatsFor(spark, e.filePath, fields)._4
+          PathId(e.filePath) -> deriveStatsFor(spark, e.filePath, fields)._4
         }.toOption
       }.flatten.toMap
     OptimisticCommit.commit(tableDir, (base, basePath) => {
@@ -3900,7 +3864,7 @@ object GraftTable {
       val rewrittenTuple = Par.inParallel(tupleGroups.zipWithIndex) {
         case ((_, g), j) =>
           val entries = g.flatMap(_._3)
-          val m = s"$tableDir/m-rewrite-$snapId-$attempt-t%05d.avro".format(j)
+          val m = f"$tableDir/m-rewrite-$snapId-$attempt-t${j}%05d.avro"
           ManifestWriter.write(m, entries)
           val minSeq = (entries.flatMap(_.sequenceNumber) :+ snapId).min
           val i0 = g.head._1
@@ -3927,20 +3891,20 @@ object GraftTable {
         (i, ManifestWriter.read(i.path)))
       val (delFix, delCarry) = perDelManifest.partition { case (_, es) =>
         es.exists(e => e.status != 2 && e.content == 2 &&
-          e.nullValueCounts.isEmpty && backfill.contains(uriPath(e.filePath)))
+          e.nullValueCounts.isEmpty && backfill.contains(PathId(e.filePath)))
       }
       val delRewritten = delFix.zipWithIndex.map { case ((i, es), j) =>
         val entries = es.filter(_.status != 2).map { e =>
           val filled =
             if (e.content == 2 && e.nullValueCounts.isEmpty)
-              backfill.getOrElse(uriPath(e.filePath), e.nullValueCounts)
+              backfill.getOrElse(PathId(e.filePath), e.nullValueCounts)
             else e.nullValueCounts
           e.copy(status = 0,
             snapshotId = if (e.snapshotId == 0L) i.addedSnapshotId else e.snapshotId,
             sequenceNumber = Some(e.sequenceNumber.getOrElse(i.sequenceNumber)),
             nullValueCounts = filled)
         }
-        val m = s"$tableDir/m-rewrite-del-$snapId-$attempt-%03d.avro".format(j)
+        val m = f"$tableDir/m-rewrite-del-$snapId-$attempt-${j}%03d.avro"
         ManifestWriter.write(m, entries)
         (m, i)
       }
@@ -4001,11 +3965,12 @@ object GraftTable {
     *     calls on an object store; a flat layout degrades to one serial
     *     listing task but still O(1) memory everywhere);
     *   - the difference is a LEFT ANTI join Spark shuffles on the
-    *     normalized path component — the same shape Iceberg's own
-    *     DeleteOrphanFilesSparkAction plans.
+    *     [[PathId.component]] of each path — the same shape Iceberg's own
+    *     DeleteOrphanFilesSparkAction plans; a file another authority's
+    *     reference spells (`s3` vs `s3a`) is kept, never deleted.
     *
-    * Both sides normalize through the SAME function ([[uriPath]], as a
-    * typed map) — a normalization mismatch here would delete live data,
+    * Both sides go through the SAME function ([[PathId.component]], as a
+    * typed map) — an identity mismatch here would delete live data,
     * so the two sides must be bit-identical by construction, not by a
     * pair of independently-maintained expressions. Driver-side state
     * stays METADATA-proportional: the manifest path list and the
@@ -4039,7 +4004,7 @@ object GraftTable {
       if (manifests.isEmpty) spark.emptyDataset[String].toDF("ref")
       else spark.read.format("graft-manifest").load(manifests: _*)
         .select(col("data_file.file_path").as("p"))
-        .as[String].map(uriPath).toDF("ref")
+        .as[String].map(PathId.component).toDF("ref")
     // parquet data/delete files, v3 deletion-vector Puffin files — a
     // crashed DV write (or a CAS retry's abandoned attempt) leaves
     // dv-*.puffin in data/ that only this sweep can reclaim — AND
@@ -4078,7 +4043,7 @@ object GraftTable {
                   return (st.getPath.toString, "", 0L, true)
                 if (st.isFile && exts.exists(st.getPath.getName.endsWith)) {
                   val full = st.getPath.toString
-                  return (full, uriPath(full), st.getModificationTime, false)
+                  return (full, PathId.component(full), st.getModificationTime, false)
                 }
               }
               null
@@ -4176,7 +4141,7 @@ object GraftTable {
     * reaches the driver. Data files are never read. */
   def deleteReachableFiles(spark: SparkSession, metadataFile: String,
       dryRun: Boolean = false): ReachableFiles = {
-    val meta = TableMetadata.parseHadoop(metadataFile) // root may be cross-scheme too
+    val meta = TableMetadata.parseFile(metadataFile)
     require(!meta.properties.get("gc.enabled").contains("false"),
       s"gc.enabled=false on $metadataFile (zero-copy snapshot table) — " +
         "its files are owned by the source table")
@@ -4204,7 +4169,7 @@ object GraftTable {
       Some(s"$tableDir/version-hint.text").filter(exists)
     val metas = meta +: metaFiles
       .filterNot(p => p == metadataFile || p.endsWith("version-hint.text"))
-      .map(TableMetadata.parseHadoop) // log entries may be cross-scheme
+      .map(TableMetadata.parseFile)
     val lists = existing(metas.flatMap(_.snapshots.flatMap(_.manifestList)).distinct)
     val manifests = existing(Par.inParallel(lists)(l =>
       ManifestListReader.read(l).map(_.path)).flatten.distinct)
@@ -4294,22 +4259,21 @@ object GraftTable {
     val (dvRefRows, dvSuperseded, dvPreDel) =
       if (!v3Dv) (Nil, Set.empty[(String, Long)], Set.empty[(String, Long)])
       else {
-        def norm(p: String): String = uriPath(p)
         val newDels = spark.read.schema(PosDeleteReadSchema)
           .parquet(deleteFiles.map(_.path): _*)
-          .select(stripSchemeCol(col("file_path")).as("file_path"), col("pos"))
+          .select(PathId.col(col("file_path")).as("file_path"), col("pos"))
         val covered = newDels.select("file_path").distinct()
           .collect().map(_.getString(0)).toSet
         val (oldDvEntries, oldPositions) = pendingPosState(spark, meta0, covered, branch)
         val manifestForm = entriesAt(refHead(meta0, branch), 0).filter(_.content == 0)
-          .map(e => norm(e.filePath) -> e.filePath).toMap
+          .map(e => PathId(e.filePath) -> e.filePath).toMap
         val refs = writeDvsDistributed(spark, tableDir, dvAttempt,
           newDels.unionByName(oldPositions), manifestForm,
           (meta0.snapshots.map(_.snapshotId) :+ 0L).max + 1)
         val delE = entriesAt(refHead(meta0, branch), 1).filter(_.content == 1)
         (refs,
-          oldDvEntries.map(e => (norm(e.filePath), e.contentOffset.getOrElse(0L))).toSet,
-          delE.map(e => (norm(e.filePath), e.contentOffset.getOrElse(0L))).toSet)
+          oldDvEntries.map(e => (PathId(e.filePath), e.contentOffset.getOrElse(0L))).toSet,
+          delE.map(e => (PathId(e.filePath), e.contentOffset.getOrElse(0L))).toSet)
       }
     val result = OptimisticCommit.commit(tableDir, (base, basePath) => {
       val snapId = (base.snapshots.map(_.snapshotId) :+ 0L).max + 1
@@ -4320,8 +4284,8 @@ object GraftTable {
       val wap = wapEditDecision(branch, base.properties)
       val head = refHead(base, branch)
       val live = entriesAt(head, 0).filter(_.content == 0)
-        .map(e => uriPath(e.filePath)).toSet
-      val missing = targetPaths.map(uriPath) -- live
+        .map(e => PathId(e.filePath)).toSet
+      val missing = targetPaths.map(PathId(_)) -- live
       if (missing.nonEmpty) throw OptimisticCommit.CommitConflictException(
         s"row-level delete targets removed by a concurrent commit: ${missing.mkString(", ")}")
       val attempt = java.util.UUID.randomUUID()
@@ -4344,7 +4308,7 @@ object GraftTable {
           Seq((m, None: Option[Seq[ManifestListWriter.FieldSummary]], 0, 0))
         }
       val perFile = summarized.zip(sumAssigned).zipWithIndex.map { case ((f, e), i) =>
-        val m = s"$tableDir/m-delta-data-$snapId-$attempt-%05d.avro".format(i)
+        val m = f"$tableDir/m-delta-data-$snapId-$attempt-${i}%05d.avro"
         ManifestWriter.write(m, Seq(e))
         (m, f.partitionSummary, f.specId, 0)
       }
@@ -4367,7 +4331,7 @@ object GraftTable {
         // the DVs absorbed the delete state AS OF meta0 and this commit
         // drops the absorbed entries
         val nowDel = entriesAt(head, 1).filter(_.content == 1)
-          .map(e => (uriPath(e.filePath), e.contentOffset.getOrElse(0L))).toSet
+          .map(e => (PathId(e.filePath), e.contentOffset.getOrElse(0L))).toSet
         if (nowDel != dvPreDel) throw OptimisticCommit.CommitConflictException(
           "table delete state changed while writing deletion vectors — rerun")
       }
@@ -4386,7 +4350,7 @@ object GraftTable {
           else {
             val es = ManifestWriter.read(info.path)
             val keep = es.filterNot(e => e.fileFormat == "PUFFIN" &&
-              dvSuperseded((uriPath(e.filePath), e.contentOffset.getOrElse(0L))))
+              dvSuperseded((PathId(e.filePath), e.contentOffset.getOrElse(0L))))
             if (keep.size == es.size) Some(info)
             else if (keep.isEmpty) None
             else {
@@ -4436,6 +4400,28 @@ object GraftTable {
     result
   }
 
+  /** Spark's `_metadata.file_path` of a data file → the path as the
+    * manifests spell it. Spark reports a file as its URL (`file:/a%20b/x`)
+    * while a position delete must record the manifest's spelling
+    * (`/a b/x`). The URL is decoded once per file (a task's rows arrive
+    * file by file); a file outside `paths` fails the DELETE. */
+  private final class ManifestPathOf(paths: Seq[String])
+      extends (String => String) with Serializable {
+    private val byId = paths.map(p => PathId(p) -> p).toMap
+    @volatile @transient private var last: (String, String) = _
+    def apply(url: String): String = {
+      val hit = last
+      if (hit != null && hit._1 == url) hit._2
+      else {
+        val id = PathId(new org.apache.hadoop.fs.Path(new java.net.URI(url)).toString)
+        val path = byId.getOrElse(id, throw new IllegalStateException(
+          s"DELETE scanned $url, which is no data file of the table"))
+        last = (url, path)
+        path
+      }
+    }
+  }
+
   /** Row-level DELETE: capture (file_path, pos) of matching rows across
     * the current data files, land them as ONE position-delete file, and
     * CAS-commit a delete snapshot. The predicate is an ordinary Column
@@ -4477,13 +4463,14 @@ object GraftTable {
       "DELETE currently scans parquet data files only — non-parquet " +
         "files must be compacted to parquet (rewrite_data_files) first")
     val delFile = s"$tableDir/data/delete-${java.util.UUID.randomUUID()}.parquet"
+    val manifestPath = udf(new ManifestPathOf(dataFiles))
     // Iceberg requires position deletes sorted by (file_path, pos)
     ParquetFiles.writeOne(
       spark.read.schema(sparkSchema(meta0)).parquet(dataFiles: _*)
         .select(col("*"),
           col("_metadata.file_path").as("_gf"), col("_metadata.row_index").as("_gp"))
         .filter(predicate)
-        .select(col("_gf").as("file_path"), col("_gp").as("pos"))
+        .select(manifestPath(col("_gf")).as("file_path"), col("_gp").as("pos"))
         .orderBy(col("file_path"), col("pos")), delFile)
     // (count, file_path/pos bounds): the bounds land under Iceberg's
     // RESERVED position-delete field ids, so planners can skip this
@@ -4509,12 +4496,12 @@ object GraftTable {
     // (a predicate that pruned to few partitions) becomes prunable on the
     // delete side by the same symmetric rule readers apply. Conservative:
     // any owner without a summary (unpartitioned tables) yields None.
-    val ownerByFile = scanned.map { case (p, i) => uriPath(p) -> i }.toMap
+    val ownerByFile = scanned.map { case (p, i) => PathId(p) -> i }.toMap
     val addressedOwners =
       if (nDeletes == 0) Nil
       else spark.read.schema(PosDeleteReadSchema)
         .parquet(delFile).select("file_path").distinct()
-        .collect().toSeq.flatMap(r => ownerByFile.get(uriPath(r.getString(0))))
+        .collect().toSeq.flatMap(r => ownerByFile.get(PathId(r.getString(0))))
         .distinctBy(_.path)
     val delSummary = ScanPlanning.unionSummaries(meta0, addressedOwners)
     OptimisticCommit.commit(tableDir, (base, basePath) => {
@@ -4522,7 +4509,7 @@ object GraftTable {
       val attempt = java.util.UUID.randomUUID() // see append: racing-safe names
       val manifest = s"$tableDir/m-delete-$snapId-$attempt.avro"
       ManifestWriter.write(manifest, Seq(ManifestWriter.EntryData(
-        1, snapId, delFile, nDeletes, ParquetFiles.length(delFile),
+        1, snapId, delFile, nDeletes, HadoopConfs.length(delFile),
         delLower, delUpper, content = 1, sequenceNumber = Some(snapId))))
       val list = s"$tableDir/snap-$snapId-$attempt-list.avro"
       val head = refHead(base, branch)
@@ -4593,16 +4580,17 @@ object GraftTable {
     require(dataE.forall(_.fileFormat == "PARQUET"),
       "v3 DELETE currently scans parquet data files only — imported " +
         "Avro/ORC files must be compacted to parquet (rewrite_data_files) first")
-    def norm(p: String): String = uriPath(p)
-    // normalized path -> the path form the manifests carry (what
+    // path id -> the path form the manifests carry (what
     // referenced_data_file must record for exact planning-time matches)
-    val manifestForm = dataE.map(e => norm(e.filePath) -> e.filePath).toMap
+    val manifestForm = dataE.map(e => PathId(e.filePath) -> e.filePath).toMap
+    // over the ids (PathId is idempotent), the lookup yields each file's id
+    val pathIdOf = udf(new ManifestPathOf(dataE.map(e => PathId(e.filePath))))
     val newDels = spark.read.schema(sparkSchema(meta0))
       .parquet(dataE.map(_.filePath): _*)
       .select(col("*"),
         col("_metadata.file_path").as("_gf"), col("_metadata.row_index").as("_gp"))
       .filter(predicate)
-      .select(stripSchemeCol(col("_gf")).as("file_path"), col("_gp").as("pos"))
+      .select(pathIdOf(col("_gf")).as("file_path"), col("_gp").as("pos"))
     // the covered file set decides which pending delete state merges in
     // and which DV entries the commit supersedes — KB-scale (file paths,
     // with per-file match counts so the commit summary needs no 2nd scan)
@@ -4621,19 +4609,19 @@ object GraftTable {
     // a DV entry's identity is (puffin path, blob offset) — one Puffin
     // file holds many files' DVs and only the re-covered blobs supersede
     val superseded: Set[(String, Long)] =
-      oldDvEntries.map(e => (norm(e.filePath), e.contentOffset.getOrElse(0L))).toSet
+      oldDvEntries.map(e => (PathId(e.filePath), e.contentOffset.getOrElse(0L))).toSet
     // the delete manifest's field-507 summary: union of the summaries of
     // the manifests owning the addressed files (same rule as the v2 path)
     val snap0 = refHead(meta0, branch).get // dataE nonEmpty ⇒ a head exists
     val owners = ManifestListReader.read(snap0.manifestList.get)
       .filter(_.content == 0)
     val addressedOwners = Par.inParallel(owners)(i => (i, ManifestWriter.read(i.path)))
-      .filter { case (_, es) => es.exists(e => e.status != 2 && covered(norm(e.filePath))) }
+      .filter { case (_, es) => es.exists(e => e.status != 2 && covered(PathId(e.filePath))) }
       .map(_._1).distinctBy(_.path)
     val delSummary = ScanPlanning.unionSummaries(meta0, addressedOwners)
     val preDel = entriesAt(refHead(meta0, branch), 1).filter(_.content == 1)
-      .map(e => (norm(e.filePath), e.contentOffset.getOrElse(0L))).toSet
-    val preData = dataE.map(e => norm(e.filePath)).toSet
+      .map(e => (PathId(e.filePath), e.contentOffset.getOrElse(0L))).toSet
+    val preData = dataE.map(e => PathId(e.filePath)).toSet
     OptimisticCommit.commit(tableDir, (base, basePath) => {
       // merge-on-write makes staleness dangerous: the new DVs absorbed
       // the delete state AS OF meta0 (on the targeted ref) and the
@@ -4641,9 +4629,9 @@ object GraftTable {
       // compaction on that ref invalidates the merge
       val nowHead = refHead(base, branch)
       val nowDel = entriesAt(nowHead, 1).filter(_.content == 1)
-        .map(e => (norm(e.filePath), e.contentOffset.getOrElse(0L))).toSet
+        .map(e => (PathId(e.filePath), e.contentOffset.getOrElse(0L))).toSet
       val nowData = entriesAt(nowHead, 0).filter(_.content == 0)
-        .map(e => norm(e.filePath)).toSet
+        .map(e => PathId(e.filePath)).toSet
       if (nowDel != preDel || nowData != preData)
         throw OptimisticCommit.CommitConflictException(
           "table delete/data file set changed while writing deletion vectors — rerun")
@@ -4665,7 +4653,7 @@ object GraftTable {
         else {
           val es = ManifestWriter.read(info.path)
           val keep = es.filterNot(e => e.fileFormat == "PUFFIN" &&
-            superseded((norm(e.filePath), e.contentOffset.getOrElse(0L))))
+            superseded((PathId(e.filePath), e.contentOffset.getOrElse(0L))))
           if (keep.size == es.size) Some(info)
           else if (keep.isEmpty) None
           else {
@@ -4769,7 +4757,7 @@ object GraftTable {
           ParquetFiles.writeOne(projected.orderBy(keyCols.map(col): _*), dataFile)
           val (nRows, dLower, dUpper) = deriveStats(spark, dataFile, meta0)
           Seq(graft.sources.GraftFileMessage(dataFile, nRows,
-            ParquetFiles.length(dataFile), dLower, dUpper, None, 0))
+            HadoopConfs.length(dataFile), dLower, dUpper, None, 0))
         case Some((specId, sf)) =>
           // cluster by the partition SOURCE columns (same tuple → same
           // task → one file per tuple), key-sorted within each task for
@@ -4789,8 +4777,7 @@ object GraftTable {
                 // never collide with the winner's file (rewrite rule)
                 val att = org.apache.spark.TaskContext.get().taskAttemptId()
                 val w = new graft.sources.GraftTablePartitionedWriter(
-                  ord => s"$tableDir/data/upsert-$upsertUuid-p%05d-t$att-f%03d.parquet"
-                    .format(pid, ord),
+                  ord => f"$tableDir/data/upsert-$upsertUuid-p${pid}%05d-t$att-f${ord}%03d.parquet",
                   schema, fields, specId, sf, taskConf.value)
                 try {
                   rows.foreach(w.write)
@@ -4827,14 +4814,14 @@ object GraftTable {
         }
       val perTuple = tagged.zipWithIndex.collect {
         case ((m, e), i) if m.summary.nonEmpty =>
-          val mp = s"$tableDir/m-upsert-data-$snapId-$attempt-%05d.avro".format(i)
+          val mp = f"$tableDir/m-upsert-data-$snapId-$attempt-${i}%05d.avro"
           ManifestWriter.write(mp, Seq(e))
           (mp, m.summary, m.specId, 1)
       }
       val dataManifests = plainManifest ++ perTuple
       val mEq = s"$tableDir/m-upsert-del-$snapId-$attempt.avro"
       ManifestWriter.write(mEq, Seq(ManifestWriter.EntryData(
-        1, snapId, eqFile, nKeys, ParquetFiles.length(eqFile),
+        1, snapId, eqFile, nKeys, HadoopConfs.length(eqFile),
         eqLower, eqUpper, content = 2, sequenceNumber = Some(snapId),
         nullValueCounts = eqNulls)))
       val carried = carryForward(base)

@@ -42,8 +42,7 @@ object ManifestListReader {
   }
 
   def read(listPath: String): Seq[ManifestFileInfo] = {
-    val in = new java.io.BufferedInputStream(
-      HadoopConfs.fileSystemFor(listPath).open(new org.apache.hadoop.fs.Path(listPath)))
+    val in = new java.io.BufferedInputStream(HadoopConfs.open(listPath))
     val stream =
       try new DataFileStream[GenericRecord](in,
         new GenericDatumReader[GenericRecord](

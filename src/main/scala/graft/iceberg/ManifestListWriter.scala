@@ -75,14 +75,6 @@ object ManifestListWriter {
         Schema.createArray(fieldSummarySchema))).withDefault(null)
       .endRecord()
 
-  /** Manifest size for the manifest_length field, resolved through the
-    * session's Hadoop FileSystem conf (HadoopConfs) — so hdfs:// / s3a://
-    * manifests see the session's credentials/settings and record their
-    * true length instead of the silent 0 a java.io.File fallback would
-    * produce. */
-  private def manifestLength(p: String): Long =
-    HadoopConfs.fileSystemFor(p).getFileStatus(new org.apache.hadoop.fs.Path(p)).getLen
-
   /** `contents` marks delete manifests (path → 1); `specIds` records each
     * manifest's partition-spec id (spec evolution leaves manifests written
     * under older specs in place — readers must know which spec shaped each
@@ -117,7 +109,7 @@ object ManifestListWriter {
     try manifestPaths.foreach { p =>
       val r = new GenericData.Record(manifestFileSchema)
       r.put("manifest_path", p)
-      r.put("manifest_length", manifestLength(p))
+      r.put("manifest_length", HadoopConfs.length(p))
       r.put("partition_spec_id", specIds.getOrElse(p, 0))
       r.put("added_snapshot_id", addedSnapshotIds.getOrElse(p, snapshotId))
       r.put("added_data_files_count", addedCounts.getOrElse(p, addedDataFilesCount))

@@ -1,13 +1,11 @@
 package graft.iceberg
 
 import java.io.BufferedInputStream
-import java.net.URI
 
 import org.apache.avro.Schema
 import org.apache.avro.file.DataFileStream
 import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 /** Distributed scan of Iceberg manifest files (Avro object-container files
@@ -28,20 +26,11 @@ object ManifestReader {
 
   /** Writer schema from the container header (driver-side, first file). */
   def avroSchema(path: String, conf: Configuration = HadoopConfs.active()): Schema = {
-    val in = open(path, conf)
+    val in = new BufferedInputStream(HadoopConfs.open(path, conf))
     try {
       val stream = new DataFileStream[GenericRecord](in, new GenericDatumReader[GenericRecord]())
       try stream.getSchema finally stream.close()
     } finally in.close()
-  }
-
-  private def open(path: String, conf: Configuration): BufferedInputStream = {
-    val p = new Path(path)
-    val fs = FileSystem.get(p.toUri match {
-      case u if u.getScheme == null => new URI("file:///")
-      case u => u
-    }, conf)
-    new BufferedInputStream(fs.open(p))
   }
 
   /** All `manifest_entry` records of the given manifest files as a DataFrame.
@@ -77,7 +66,7 @@ object ManifestReader {
         // it onto the common reader schema (per-file evolution).
         val reader = new GenericDatumReader[GenericRecord](
           null: Schema, new Schema.Parser().parse(effectiveJson))
-        val in = open(p, sconf.value)
+        val in = new BufferedInputStream(HadoopConfs.open(p, sconf.value))
         val stream = new DataFileStream[GenericRecord](in, reader)
         // Convert with the reader (expected) schema: DataFileStream.getSchema
         // reports the writer schema, but records resolve to the reader's.

@@ -30,6 +30,17 @@ object ManifestWriter {
   val PosDeleteFilePathId: Int = 2147483546
   val PosDeletePosId: Int = 2147483545
 
+  /** The file_path bounds of a position-delete entry as [[PathId]]s —
+    * each None when missing or undecodable (it may address any file). */
+  def posDeletePathBounds(del: EntryData): (Option[String], Option[String]) = {
+    def decode(m: Map[Int, Array[Byte]]): Option[String] =
+      m.get(PosDeleteFilePathId).filter(_.nonEmpty)
+        .flatMap(b => scala.util.Try(
+          SingleValueCodec.decode(IcebergTypes.TString, b).asInstanceOf[String]).toOption)
+        .map(PathId(_))
+    (decode(del.lowerBounds), decode(del.upperBounds))
+  }
+
   /** `content` is the spec's data_file routing field (id 134): 0 = data,
     * 1 = position deletes, 2 = equality deletes — how a v2 MOR reader
     * tells delete-file kinds apart. Defaults to 0, and manifests written
@@ -154,8 +165,7 @@ object ManifestWriter {
   def read(path: String): Seq[EntryData] = {
     import org.apache.avro.file.DataFileStream
     import org.apache.avro.generic.GenericDatumReader
-    val in = new java.io.BufferedInputStream(
-      HadoopConfs.fileSystemFor(path).open(new org.apache.hadoop.fs.Path(path)))
+    val in = new java.io.BufferedInputStream(HadoopConfs.open(path))
     val stream =
       try new DataFileStream[GenericRecord](in,
         new GenericDatumReader[GenericRecord](null: Schema, entrySchema))

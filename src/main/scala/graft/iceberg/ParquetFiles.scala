@@ -2,6 +2,7 @@ package graft.iceberg
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.types.StructType
 
 /** Single-parquet-file sink: a data/delete FILE is the unit Iceberg
   * manifests track, so maintenance/DML/ingest writes land as exactly one
@@ -22,18 +23,31 @@ object ParquetFiles {
     fs.delete(new Path(tmp), true)
   }
 
-  def length(p: String): Long =
-    HadoopConfs.fileSystemFor(p).getFileStatus(new Path(p)).getLen
-
-  /** Read parquet FILES under the footer schema of the first path, probed
-    * on the driver (KB-scale metadata) — skips the 1-task schema-inference
-    * job every schemaless read launches (r22 action audit: 1-6 such jobs
-    * per lakehouse entry). For files written by one route in one entry the
-    * schemas are homogeneous, so the head footer is exact; directory/glob
+  /** Read parquet FILES under their footer schema, probed on the driver
+    * (KB-scale metadata, the footers read in parallel) — skips the 1-task
+    * schema-inference job every schemaless read launches (r22 action
+    * audit: 1-6 such jobs per lakehouse entry). Files whose schemas
+    * differ are refused, naming both paths and the first differing
+    * field, rather than read under another file's schema. Directory/glob
     * reads that rely on partition discovery keep the plain reader. */
   def read(spark: org.apache.spark.sql.SparkSession, paths: Seq[String])
       : DataFrame = {
     require(paths.nonEmpty, "ParquetFiles.read needs at least one path")
-    spark.read.schema(GraftTable.footerSparkSchema(spark, paths.head)).parquet(paths: _*)
+    val schemas = Par.inParallel(paths)(GraftTable.footerSparkSchema(spark, _))
+    paths.zip(schemas).tail.foreach { case (p, s) =>
+      firstDifference(schemas.head, s).foreach(d => throw new IllegalArgumentException(
+        s"parquet files ${paths.head} and $p have different schemas: $d"))
+    }
+    spark.read.schema(schemas.head).parquet(paths: _*)
+  }
+
+  /** The first field, by name, on which `a` and `b` disagree (field
+    * order and field metadata aside). */
+  private def firstDifference(a: StructType, b: StructType): Option[String] = {
+    def types(s: StructType) = s.fields.map(f => f.name -> f.dataType.catalogString).toMap
+    val (ta, tb) = (types(a), types(b))
+    (a.fieldNames ++ b.fieldNames.filterNot(ta.contains))
+      .find(n => ta.get(n) != tb.get(n))
+      .map(n => s"field $n is ${ta.getOrElse(n, "absent")} vs ${tb.getOrElse(n, "absent")}")
   }
 }

@@ -81,11 +81,11 @@ object Puffin {
 
   /** Write a Puffin file; returns (refs in input order, file size).
     * `conf` carries the session's fs.* settings when the caller runs on
-    * an EXECUTOR (the distributed DV write path) — null falls back to
-    * the driver-side active-session conf. */
+    * an EXECUTOR (the distributed DV write path); the default is the
+    * driver-side active-session conf. */
   def write(path: String, blobs: Seq[Blob],
       fileProperties: Map[String, String],
-      conf: org.apache.hadoop.conf.Configuration = null): (Seq[BlobRef], Long) = {
+      conf: org.apache.hadoop.conf.Configuration = HadoopConfs.active()): (Seq[BlobRef], Long) = {
     val utf8 = java.nio.charset.StandardCharsets.UTF_8
     val encoded = blobs.map(b => compress(b.codec, b.body))
     var offset = Magic.length.toLong
@@ -116,7 +116,8 @@ object Puffin {
     val payload = footer.toString.getBytes(utf8)
     val tail = ByteBuffer.allocate(8).order(ByteOrder.LITTLE_ENDIAN)
       .putInt(payload.length).putInt(0).array()
-    val out = fs(path, conf).create(new org.apache.hadoop.fs.Path(path), true)
+    val out = HadoopConfs.fileSystemFor(new org.apache.hadoop.fs.Path(path), conf)
+      .create(new org.apache.hadoop.fs.Path(path), true)
     var size = 0L
     def emit(b: Array[Byte]): Unit = { out.write(b); size += b.length }
     try {
@@ -127,19 +128,10 @@ object Puffin {
     (refs, size)
   }
 
-  private def fs(path: String, conf: org.apache.hadoop.conf.Configuration)
-      : org.apache.hadoop.fs.FileSystem =
-    if (conf == null) HadoopConfs.fileSystemFor(path)
-    else {
-      val u = new org.apache.hadoop.fs.Path(path).toUri
-      org.apache.hadoop.fs.FileSystem.get(
-        if (u.getScheme == null) new java.net.URI("file:///") else u, conf)
-    }
-
   /** Whole-file read returning the raw bytes plus the decoded footer
     * blob directory and file properties. */
   def read(path: String): (Array[Byte], Seq[BlobRef], Map[String, String]) = {
-    val bytes = readFully(path)
+    val bytes = HadoopConfs.readFully(path)
     require(bytes.length >= 16 &&
       bytes.take(4).sameElements(Magic) && bytes.takeRight(4).sameElements(Magic),
       s"$path is not a Puffin file")
@@ -174,24 +166,12 @@ object Puffin {
     * (content_offset/content_size_in_bytes land here; no footer read).
     * Runs on executors: `conf` must carry the session's fs settings. */
   def readRange(path: String, offset: Long, length: Long,
-      conf: org.apache.hadoop.conf.Configuration = null): Array[Byte] = {
-    val in = fs(path, conf).open(new org.apache.hadoop.fs.Path(path))
+      conf: org.apache.hadoop.conf.Configuration = HadoopConfs.active()): Array[Byte] = {
+    val in = HadoopConfs.open(path, conf)
     try {
       require(length <= Int.MaxValue, s"blob too large: $length")
       val buf = new Array[Byte](length.toInt)
       in.readFully(offset, buf)
-      buf
-    } finally in.close()
-  }
-
-  private def readFully(path: String): Array[Byte] = {
-    val fs = HadoopConfs.fileSystemFor(path)
-    val p = new org.apache.hadoop.fs.Path(path)
-    val len = fs.getFileStatus(p).getLen
-    val in = fs.open(p)
-    try {
-      val buf = new Array[Byte]((len min Int.MaxValue.toLong).toInt)
-      in.readFully(0, buf)
       buf
     } finally in.close()
   }

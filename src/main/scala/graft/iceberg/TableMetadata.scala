@@ -130,21 +130,9 @@ object TableMetadata {
 
   def parse(json: String): TableMetadata = fromNode(mapper.readTree(json))
 
+  /** Parse the document at `path` on its own filesystem (any scheme). */
   def parseFile(path: String): TableMetadata =
-    parse(new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)),
-      java.nio.charset.StandardCharsets.UTF_8))
-
-  /** Parse through the path's own Hadoop filesystem — for documents that
-    * may live on another scheme/authority than the caller's table dir
-    * (cross-filesystem metadata-log entries in deleteReachableFiles). */
-  def parseHadoop(path: String): TableMetadata = {
-    val fs = HadoopConfs.fileSystemFor(path)
-    val in = fs.open(new org.apache.hadoop.fs.Path(path))
-    try parse(new String(
-      org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-      java.nio.charset.StandardCharsets.UTF_8))
-    finally in.close()
-  }
+    parse(new String(HadoopConfs.readFully(path), java.nio.charset.StandardCharsets.UTF_8))
 
   private def optNode(n: JsonNode, field: String): Option[JsonNode] =
     Option(n.get(field)).filterNot(_.isNull)

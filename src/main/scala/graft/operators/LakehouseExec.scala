@@ -73,8 +73,6 @@ object LakehouseExec {
       s"graft-$tag-${graft.Scratch.procToken}",
       sfDir.replaceAll("[^A-Za-z0-9.]", "_")).toString
 
-  private[operators] def fileLen(p: String): Long = ParquetFiles.length(p)
-
   /** Runs independent rewrite tasks concurrently: each bin/file rewrite
     * is its own Spark job, submitted from a small driver pool (Spark's
     * scheduler interleaves their stages across executors), so wall-clock
@@ -107,7 +105,7 @@ object LakehouseExec {
       2 -> SingleValueCodec.encode(TString, row.getString(4)),
       3 -> SingleValueCodec.encode(TInt, row.getInt(6)))
     ManifestWriter.EntryData(1, snapshotId, file,
-      row.getLong(0), fileLen(file), lower, upper)
+      row.getLong(0), HadoopConfs.length(file), lower, upper)
   }
 
   private[operators] def baseMetadata(dir: String): TableMetadata = TableMetadata(
@@ -291,7 +289,7 @@ object LakehouseExec {
       // content=1 (spec field 134): the file IS a position-delete file —
       // entry-level routing must agree with the list-level content=1
       ManifestWriter.write(delManifest, Seq(ManifestWriter.EntryData(
-        1, 2L, delFile, ParquetFiles.read(spark, Seq(delFile)).count(), fileLen(delFile),
+        1, 2L, delFile, ParquetFiles.read(spark, Seq(delFile)).count(), HadoopConfs.length(delFile),
         Map.empty, Map.empty, content = 1)))
       val list2 = s"$dir/snap-2-list.avro"
       ManifestListWriter.write(list2, Seq(s"$dir/m-0.avro", delManifest), 2L,
@@ -507,9 +505,8 @@ object LakehouseExec {
       val affected = withFile.join(updates, Seq("n_nationkey"), "left_semi")
         .select(col("_file")).distinct().collect().map(_.getString(0)).toSet
       // `_metadata.file_path` is a URI (file:///...), manifest entries hold
-      // plain paths — compare on the normalized path component
-      def uriPath(p: String): String = new Path(p).toUri.getPath
-      val affectedPaths = affected.map(uriPath)
+      // plain paths — compare their path ids
+      val affectedPaths = affected.map(PathId(_))
       // rewrite each affected file in place of its old entry: unmatched
       // rows pass through, matched rows take the update
       val rewrittenEntries = inParallel(affected.toSeq.sorted.zipWithIndex) { case (f, i) =>
@@ -529,7 +526,7 @@ object LakehouseExec {
       // from the previous manifest (never recomputed, never fabricated)
       val oldEntries = ManifestWriter.read(s"$dir/m-0.avro")
       val untouched = oldEntries
-        .filterNot(e => affectedPaths.contains(uriPath(e.filePath)))
+        .filterNot(e => affectedPaths.contains(PathId(e.filePath)))
         .map(e => e.copy(status = 0, snapshotId = 2L))
       require(oldEntries.size - untouched.size == affectedPaths.size,
         "every COW-affected file must match exactly one manifest entry — " +
@@ -674,10 +671,10 @@ object LakehouseExec {
       val delManifest = s"$dir/m-del.avro"
       ManifestWriter.write(delManifest, Seq(
         ManifestWriter.EntryData(1, 2L, posFile,
-          ParquetFiles.read(spark, Seq(posFile)).count(), fileLen(posFile),
+          ParquetFiles.read(spark, Seq(posFile)).count(), HadoopConfs.length(posFile),
           Map.empty, Map.empty, content = 1),
         ManifestWriter.EntryData(1, 2L, eqFile,
-          ParquetFiles.read(spark, Seq(eqFile)).count(), fileLen(eqFile),
+          ParquetFiles.read(spark, Seq(eqFile)).count(), HadoopConfs.length(eqFile),
           Map.empty, Map.empty, content = 2)))
       val list2 = s"$dir/snap-2-list.avro"
       ManifestListWriter.write(list2, Seq(s"$dir/m-0.avro", delManifest), 2L,

@@ -129,7 +129,7 @@ object LakehouseMaint {
         .select(col("n_name")).orderBy(col("n_name")), eqFile)
       val mEq = s"$dir/m-del-eq.avro"
       ManifestWriter.write(mEq, Seq(ManifestWriter.EntryData(
-        1, 2L, eqFile, ParquetFiles.read(spark, Seq(eqFile)).count(), fileLen(eqFile),
+        1, 2L, eqFile, ParquetFiles.read(spark, Seq(eqFile)).count(), HadoopConfs.length(eqFile),
         Map.empty, Map.empty, content = 2)))
       val list2 = s"$dir/snap-2-list.avro"
       ManifestListWriter.write(list2, Seq(s"$dir/m-0.avro", mEq), 2L,
@@ -154,7 +154,7 @@ object LakehouseMaint {
         .orderBy(col("file_path"), col("pos")), posFile)
       val mPos = s"$dir/m-del-pos.avro"
       ManifestWriter.write(mPos, Seq(ManifestWriter.EntryData(
-        1, 3L, posFile, ParquetFiles.read(spark, Seq(posFile)).count(), fileLen(posFile),
+        1, 3L, posFile, ParquetFiles.read(spark, Seq(posFile)).count(), HadoopConfs.length(posFile),
         Map.empty, Map.empty, content = 1)))
       val list3 = s"$dir/snap-3-list.avro"
       ManifestListWriter.write(list3, Seq(s"$dir/m-0.avro", mPos), 3L,
@@ -310,7 +310,7 @@ object LakehouseMaint {
         .select(col("n_name")).orderBy(col("n_name")), eqFile)
       val mDel = s"$dir/m-del.avro"
       ManifestWriter.write(mDel, Seq(ManifestWriter.EntryData(
-        1, 2L, eqFile, ParquetFiles.read(spark, Seq(eqFile)).count(), fileLen(eqFile),
+        1, 2L, eqFile, ParquetFiles.read(spark, Seq(eqFile)).count(), HadoopConfs.length(eqFile),
         Map.empty, Map.empty, content = 2, sequenceNumber = Some(2L))))
       val list2 = s"$dir/snap-2-list.avro"
       ManifestListWriter.write(list2, Seq(mA, mDel), 2L,
@@ -454,7 +454,7 @@ object LakehouseMaint {
           .orderBy(col("file_path"), col("pos")), delFile)
       val delManifest = s"$dir/m-del.avro"
       ManifestWriter.write(delManifest, Seq(ManifestWriter.EntryData(
-        1, 2L, delFile, ParquetFiles.read(spark, Seq(delFile)).count(), fileLen(delFile),
+        1, 2L, delFile, ParquetFiles.read(spark, Seq(delFile)).count(), HadoopConfs.length(delFile),
         Map.empty, Map.empty, content = 1, sequenceNumber = Some(2L))))
       val list2 = s"$dir/snap-2-list.avro"
       ManifestListWriter.write(list2, Seq(s"$dir/m-0.avro", delManifest), 2L,
@@ -580,7 +580,7 @@ object LakehouseMaint {
         .select(col("n_name")).orderBy(col("n_name")), eqFile)
       val mEq = s"$dir/m-del-eq.avro"
       ManifestWriter.write(mEq, Seq(ManifestWriter.EntryData(
-        1, 2L, eqFile, ParquetFiles.read(spark, Seq(eqFile)).count(), fileLen(eqFile),
+        1, 2L, eqFile, ParquetFiles.read(spark, Seq(eqFile)).count(), HadoopConfs.length(eqFile),
         Map.empty, Map.empty, content = 2, sequenceNumber = Some(2L))))
       val list2 = s"$dir/snap-2-list.avro"
       ManifestListWriter.write(list2, Seq(mA, mEq), 2L,
@@ -617,7 +617,7 @@ object LakehouseMaint {
         .select(col("file_path"), col("pos")), posFile)
       val mPos = s"$dir/m-del-pos.avro"
       ManifestWriter.write(mPos, Seq(ManifestWriter.EntryData(
-        1, 4L, posFile, ParquetFiles.read(spark, Seq(posFile)).count(), fileLen(posFile),
+        1, 4L, posFile, ParquetFiles.read(spark, Seq(posFile)).count(), HadoopConfs.length(posFile),
         Map.empty, Map.empty, content = 1, sequenceNumber = Some(4L))))
       val list4 = s"$dir/snap-4-list.avro"
       ManifestListWriter.write(list4, Seq(mA, mEq, mB, mPos), 4L,
@@ -1619,8 +1619,7 @@ object LakehouseMaint {
         "CALL graft_mnt.system.remove_orphan_files(table => 'db.n')").head()
       require(orph.getInt(0) == 2, s"remove_orphan_files reported $orph")
       // destructive: the consolidated manifest is the ONLY readable one
-      preInfos.foreach(i => java.nio.file.Files.write(java.nio.file.Paths.get(
-        new org.apache.hadoop.fs.Path(i.path).toUri.getPath),
+      preInfos.foreach(i => java.nio.file.Files.write(java.nio.file.Paths.get(PathId(i.path)),
         "corrupted: the consolidated manifest serves all reads now".getBytes))
     }
     spark.sql("""SELECT n_regionkey, COUNT(*) AS n_live,

@@ -114,8 +114,7 @@ object LakehouseNested {
       }))
       require(doomed.size >= 2 && doomed.size < infos.size,
         s"expected a prunable year layout, got ${doomed.size}/${infos.size}")
-      doomed.foreach(i => java.nio.file.Files.write(java.nio.file.Paths.get(
-        new org.apache.hadoop.fs.Path(i.path).toUri.getPath),
+      doomed.foreach(i => java.nio.file.Files.write(java.nio.file.Paths.get(PathId(i.path)),
         "corrupted: year-pruning must skip this manifest unopened".getBytes))
     }
     spark.sql("""SELECT COUNT(*) AS n_rows,
@@ -439,8 +438,7 @@ object LakehouseNested {
       val meta = TableMetadata.parseFile(GraftTable.latestMetadataPath(s"$wh/db/n"))
       ManifestListReader.read(meta.currentSnapshot.get.manifestList.get)
         .flatMap(i => ManifestWriter.read(i.path)).filter(_.content == 0)
-        .foreach(e => java.nio.file.Files.write(java.nio.file.Paths.get(
-          new org.apache.hadoop.fs.Path(e.filePath).toUri.getPath),
+        .foreach(e => java.nio.file.Files.write(java.nio.file.Paths.get(PathId(e.filePath)),
           "corrupted: aggregates must come from manifest stats".getBytes))
     }
     val df = spark.sql("""SELECT COUNT(*) AS n_rows,

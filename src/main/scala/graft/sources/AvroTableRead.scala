@@ -42,9 +42,8 @@ class GraftTableAvroPartitionReader(part: GraftTableInputPartition,
     RowEqDeletes.load(part.eqDeleteFiles, tableType,
       part.nameAlternates.flatMap { case (cur, as) => as.map(_ -> cur) }, conf)
 
-  private val in = new java.io.BufferedInputStream(
-    graft.iceberg.HadoopConfs.fileSystemFor(part.filePath)
-      .open(new org.apache.hadoop.fs.Path(part.filePath)))
+  private val in =
+    new java.io.BufferedInputStream(graft.iceberg.HadoopConfs.open(part.filePath, conf))
   private val stream = new org.apache.avro.file.DataFileStream[GenericRecord](
     in, new GenericDatumReader[GenericRecord]())
 

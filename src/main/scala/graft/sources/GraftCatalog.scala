@@ -791,8 +791,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     * entry's file_path bound stats) — those rewrite too; equality-delete
     * files carry only column values and move untouched. */
   private def rewritePathPrefix(dir: String, oldPrefix: String, newPrefix: String): Unit = {
-    // delete-file rows hold `_metadata.file_path` URIs ("file:/x/...")
-    // while manifests hold plain paths — substring replacement covers both
+    // substring replacement: older tables' delete-file rows may still
+    // spell data files as `file:` URIs
     def map(p: String): String = p.replace(oldPrefix, newPrefix)
     import graft.iceberg.{ManifestListReader, ManifestListWriter, ManifestWriter,
       MetadataWriter, ParquetFiles, SingleValueCodec, IcebergTypes}
@@ -1263,11 +1263,8 @@ object GraftCatalog {
     val fs = graft.iceberg.HadoopConfs.fileSystemFor(layoutDir)
     val p = new Path(s"$layoutDir/$PointerFile")
     if (!fs.exists(p)) layoutDir
-    else {
-      val in = fs.open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-      finally in.close()
-    }
+    else new String(graft.iceberg.HadoopConfs.readFully(p.toString, fs.getConf),
+      java.nio.charset.StandardCharsets.UTF_8).trim
   }
 
   /** Write the pointer (the registration commit — one small file; the

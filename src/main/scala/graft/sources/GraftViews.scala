@@ -109,7 +109,7 @@ object GraftViews {
   def parse(dir: String): ViewDoc = {
     val v = currentVersion(dir)
     require(v > 0, s"no view document under $dir")
-    val in = HadoopConfs.fileSystemFor(dir).open(new Path(docPath(dir, v)))
+    val in = HadoopConfs.open(docPath(dir, v))
     val root = try mapper.readTree(in) finally in.close()
     val schemaNode = root.get("schemas").elements().asScala.next()
     val fields = schemaNode.get("fields").elements().asScala.toSeq

@@ -218,8 +218,7 @@ class ManifestScan(required: StructType, paths: Seq[String], writerSchemaJson: S
   // broadcasting a relation whose size it cannot actually see.
   private lazy val totalBytes: Option[Long] = {
     val lens = paths.map { p =>
-      try Some(graft.iceberg.HadoopConfs.fileSystemFor(p)
-        .getFileStatus(new org.apache.hadoop.fs.Path(p)).getLen)
+      try Some(graft.iceberg.HadoopConfs.length(p))
       catch { case _: Exception => None }
     }
     if (lens.forall(_.isDefined)) Some(lens.flatten.sum) else None
@@ -516,14 +515,8 @@ class ManifestPartitionReader(path: String, required: StructType, writerSchemaJs
   private val readerSchema: Schema =
     AvroConversions.pruneAvroSchema(writerSchema, avroRequired)
 
-  private val in = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = org.apache.hadoop.fs.FileSystem.get(p.toUri match {
-      case u if u.getScheme == null => new java.net.URI("file:///")
-      case u => u
-    }, hadoopConf)
-    new java.io.BufferedInputStream(fs.open(p))
-  }
+  private val in =
+    new java.io.BufferedInputStream(graft.iceberg.HadoopConfs.open(path, hadoopConf))
   // writer schema comes from THIS container's header (per-file schema
   // evolution); records resolve onto the derived reader schema. A corrupt
   // container fails the constructor — close the stream we opened first.

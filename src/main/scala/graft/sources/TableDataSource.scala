@@ -22,7 +22,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.iceberg.{GraftTable, IcebergType, ManifestListReader, ManifestWriter, Par,
-  ScanPlanning, SingleValueCodec, IcebergTypes, TableMetadata}
+  PathId, ScanPlanning, SingleValueCodec, IcebergTypes, TableMetadata}
 
 /** DataSource V2 connector for whole-TABLE reads:
   * `spark.read.format("graft-table").option("metadata", <metadata.json>)`.
@@ -710,14 +710,9 @@ class GraftTableScan(required: StructType, filters: Array[sources.Filter],
     * answer without opening the delete file — missing bounds keep it.
     * This is what bounds per-task delete loads at 10⁵ delete files. */
   private def mayAddress(del: ManifestWriter.EntryData, dataFile: String): Boolean = {
-    import GraftTable.stripScheme
-    def decode(m: Map[Int, Array[Byte]]): Option[String] =
-      m.get(ManifestWriter.PosDeleteFilePathId).filter(_.nonEmpty)
-        .flatMap(b => scala.util.Try(
-          SingleValueCodec.decode(IcebergTypes.TString, b).asInstanceOf[String]).toOption)
-    val me = stripScheme(dataFile)
-    decode(del.lowerBounds).forall(lo => stripScheme(lo) <= me) &&
-      decode(del.upperBounds).forall(hi => stripScheme(hi) >= me)
+    val (lo, hi) = ManifestWriter.posDeletePathBounds(del)
+    val me = PathId(dataFile)
+    lo.forall(_ <= me) && hi.forall(_ >= me)
   }
 
   override def planInputPartitions(): Array[InputPartition] = {
@@ -746,7 +741,7 @@ class GraftTableScan(required: StructType, filters: Array[sources.Filter],
     val pqPosDeletes = posDeletes.filter(_._1.fileFormat != "PUFFIN")
     val dvByFile: Map[String, Seq[(ManifestWriter.EntryData, Long)]] =
       posDeletes.filter(_._1.fileFormat == "PUFFIN")
-        .groupBy(d => GraftTable.stripScheme(d._1.referencedDataFile.getOrElse("")))
+        .groupBy(d => PathId(d._1.referencedDataFile.getOrElse("")))
     def partition(e: ManifestWriter.EntryData, seq: Long,
         rowGroup: Int, rowStart: Long): GraftTableInputPartition = {
       // v2 applicability: a position delete addresses data files with
@@ -760,7 +755,7 @@ class GraftTableScan(required: StructType, filters: Array[sources.Filter],
           dseq >= seq && mayAddress(d, e.filePath) }.map(_._1.filePath),
         eqDeletes.filter(_._2 > seq).map(_._1.filePath),
         tableSchema,
-        dvRefs = dvByFile.getOrElse(GraftTable.stripScheme(e.filePath), Nil)
+        dvRefs = dvByFile.getOrElse(PathId(e.filePath), Nil)
           .filter(_._2 >= seq)
           .map(d => (d._1.filePath, d._1.contentOffset.getOrElse(0L),
             d._1.contentSizeInBytes.getOrElse(0L))),
@@ -1291,9 +1286,8 @@ class GraftTableDeltaWriterFactory(tableDir: String, writeUuid: String,
   override def createWriter(partitionId: Int, taskId: Long)
       : org.apache.spark.sql.connector.write.DeltaWriter[InternalRow] =
     new GraftTableDeltaWriter(
-      ord => s"$tableDir/data/w-$writeUuid-p%05d-t$taskId-f%03d.parquet"
-        .format(partitionId, ord),
-      s"$tableDir/data/del-$writeUuid-p%05d-t$taskId.parquet".format(partitionId),
+      ord => f"$tableDir/data/w-$writeUuid-p${partitionId}%05d-t$taskId-f${ord}%03d.parquet",
+      f"$tableDir/data/del-$writeUuid-p${partitionId}%05d-t$taskId.parquet",
       schema, fields, part, hadoopConf.value, carryLineage)
 }
 
@@ -1823,7 +1817,7 @@ private[sources] object PosDeleteIndex {
   def load(posDeleteFiles: Seq[String], dataFilePath: String,
       conf: Configuration): java.util.HashSet[java.lang.Long] = {
     val set = new java.util.HashSet[java.lang.Long]()
-    val me = GraftTable.stripScheme(dataFilePath)
+    val me = PathId(dataFilePath)
     posDeleteFiles.foreach { del =>
       val r = ParquetFileReader.open(HadoopInputFile.fromPath(
         new org.apache.hadoop.fs.Path(del), conf))
@@ -1840,7 +1834,7 @@ private[sources] object PosDeleteIndex {
           var i = 0L
           while (i < pages.getRowCount) {
             val g = rr.read()
-            if (GraftTable.stripScheme(g.getBinary("file_path", 0).toStringUsingUTF8) == me)
+            if (PathId(g.getBinary("file_path", 0).toStringUsingUTF8) == me)
               set.add(g.getLong("pos", 0))
             i += 1
           }

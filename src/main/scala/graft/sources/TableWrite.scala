@@ -345,8 +345,7 @@ class GraftTableWriterFactory(tableDir: String, writeUuid: String,
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] = {
     val ext = fileFormat.toLowerCase
     GraftTableDataWriter.create(
-      ord => s"$tableDir/data/w-$writeUuid-p%05d-t$taskId-f%03d.$ext"
-        .format(partitionId, ord),
+      ord => f"$tableDir/data/w-$writeUuid-p${partitionId}%05d-t$taskId-f${ord}%03d.$ext",
       schema, fields, part, hadoopConf.value, fileFormat)
   }
 }
@@ -361,8 +360,7 @@ class GraftTableStreamingWriterFactory(tableDir: String, queryId: String,
       : DataWriter[InternalRow] = {
     val ext = fileFormat.toLowerCase
     GraftTableDataWriter.create(
-      ord => s"$tableDir/data/w-$queryId-e$epochId-p%05d-t$taskId-f%03d.$ext"
-        .format(partitionId, ord),
+      ord => f"$tableDir/data/w-$queryId-e$epochId-p${partitionId}%05d-t$taskId-f${ord}%03d.$ext",
       schema, fields, part, hadoopConf.value, fileFormat)
   }
 }
@@ -860,8 +858,7 @@ class GraftFileWriter(path: String, schema: StructType,
     writer.close()
     val (lower, upper) = tracker.lowerUpper()
     GraftFileMessage(path, rows,
-      graft.iceberg.HadoopConfs.fileSystemFor(path)
-        .getFileStatus(new org.apache.hadoop.fs.Path(path)).getLen,
+      graft.iceberg.HadoopConfs.length(path, conf),
       lower, upper, summary, specId)
   }
 
@@ -916,8 +913,7 @@ private[sources] final class AvroTaskFileWriter(path: String,
     writer.close()
     val (lower, upper) = tracker.lowerUpper()
     GraftFileMessage(path, rows,
-      graft.iceberg.HadoopConfs.fileSystemFor(path)
-        .getFileStatus(new org.apache.hadoop.fs.Path(path)).getLen,
+      graft.iceberg.HadoopConfs.length(path, conf),
       lower, upper, summary, specId, fileFormat = "AVRO")
   }
 
@@ -991,8 +987,7 @@ private[sources] final class OrcTaskFileWriter(path: String,
     writer.close()
     val (lower, upper) = tracker.lowerUpper()
     GraftFileMessage(path, rows,
-      graft.iceberg.HadoopConfs.fileSystemFor(path)
-        .getFileStatus(new org.apache.hadoop.fs.Path(path)).getLen,
+      graft.iceberg.HadoopConfs.length(path, conf),
       lower, upper, summary, specId, fileFormat = "ORC")
   }
 

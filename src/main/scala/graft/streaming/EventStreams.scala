@@ -567,7 +567,7 @@ object EventStreams {
       .agg(count(lit(1)), min($"event_id"), max($"event_id")).head()
     val manifest = s"$out/m-%05d.avro".format(id)
     ManifestWriter.write(manifest, Seq(ManifestWriter.EntryData(
-      1, snapId, f, stats.getLong(0), ParquetFiles.length(f),
+      1, snapId, f, stats.getLong(0), HadoopConfs.length(f),
       Map(1 -> SingleValueCodec.encode(IcebergTypes.TLong, stats.getLong(1))),
       Map(1 -> SingleValueCodec.encode(IcebergTypes.TLong, stats.getLong(2))))))
     // carried-forward manifests keep their ORIGINAL provenance (spec field
@@ -726,7 +726,7 @@ object EventStreams {
           .map(_.copy(status = 0, snapshotId = snapId)) // EXISTING
         val manifest = s"$out/m-compacted-$snapId.avro"
         ManifestWriter.write(manifest, ManifestWriter.EntryData(
-          1, snapId, compacted, stats.getLong(0), ParquetFiles.length(compacted),
+          1, snapId, compacted, stats.getLong(0), HadoopConfs.length(compacted),
           Map(1 -> SingleValueCodec.encode(IcebergTypes.TLong, stats.getLong(1))),
           Map(1 -> SingleValueCodec.encode(IcebergTypes.TLong, stats.getLong(2))))
           +: carried)

@@ -1295,7 +1295,7 @@ class TableStatsSpec extends SparkSpec {
       spark.range(10, 13).selectExpr("id AS k"), eqF)
     val mEq = s"$dir/m-eq-legacy.avro"
     ManifestWriter.write(mEq, Seq(ManifestWriter.EntryData(
-      1, snapId, eqF, 3L, graft.iceberg.ParquetFiles.length(eqF),
+      1, snapId, eqF, 3L, graft.iceberg.HadoopConfs.length(eqF),
       Map(kId -> SingleValueCodec.encode(IcebergTypes.TLong, 10L)),
       Map(kId -> SingleValueCodec.encode(IcebergTypes.TLong, 12L)),
       content = 2, sequenceNumber = Some(snapId))))
@@ -1368,7 +1368,7 @@ class TableStatsSpec extends SparkSpec {
       spark.range(10, 13).selectExpr("id AS k"), eqF)
     val mEq = s"$dir/m-eq-cdc.avro"
     ManifestWriter.write(mEq, Seq(ManifestWriter.EntryData(
-      1, snapId, eqF, 3L, graft.iceberg.ParquetFiles.length(eqF),
+      1, snapId, eqF, 3L, graft.iceberg.HadoopConfs.length(eqF),
       Map(kId -> SingleValueCodec.encode(IcebergTypes.TLong, 10L)),
       Map(kId -> SingleValueCodec.encode(IcebergTypes.TLong, 12L)),
       content = 2, sequenceNumber = Some(snapId),

@@ -115,7 +115,7 @@ class ColumnarScanSpec extends SparkSpec {
     fs.rename(partFile, new org.apache.hadoop.fs.Path(f))
     val m = s"$dir/m-data.avro"
     ManifestWriter.write(m, Seq(ManifestWriter.EntryData(
-      1, 1L, f, 20000L, ParquetFiles.length(f),
+      1, 1L, f, 20000L, HadoopConfs.length(f),
       Map.empty, Map.empty, content = 0, sequenceNumber = Some(1L))))
     val list = s"$dir/snap-1-list.avro"
     ManifestListWriter.write(list, Seq(m), 1L, addedDataFilesCount = 1)
@@ -157,7 +157,7 @@ class ColumnarScanSpec extends SparkSpec {
     fs.rename(partFile, new org.apache.hadoop.fs.Path(f))
     val m = s"$dir/m-data.avro"
     ManifestWriter.write(m, Seq(ManifestWriter.EntryData(
-      1, 1L, f, 20000L, ParquetFiles.length(f),
+      1, 1L, f, 20000L, HadoopConfs.length(f),
       Map.empty, Map.empty, content = 0, sequenceNumber = Some(1L))))
     val list = s"$dir/snap-1-list.avro"
     ManifestListWriter.write(list, Seq(m), 1L, addedDataFilesCount = 1)

@@ -78,7 +78,7 @@ class DeleteManifestPruneSpec extends SparkSpec {
         .orderBy(col("pos")).limit(1), posFile)
       val mDel = s"$dir/m-del-$r.avro"
       ManifestWriter.write(mDel, Seq(ManifestWriter.EntryData(
-        1, 2L, posFile, 1L, LakehouseExec.fileLen(posFile),
+        1, 2L, posFile, 1L, HadoopConfs.length(posFile),
         Map.empty, Map.empty, content = 1, sequenceNumber = Some(2L))))
       val summary = ManifestListWriter.FieldSummary(containsNull = false,
         dataEntry.lowerBounds(3), dataEntry.upperBounds(3))

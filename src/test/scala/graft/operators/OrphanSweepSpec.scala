@@ -125,37 +125,41 @@ class OrphanSweepSpec extends SparkSpec {
     // the catastrophic direction: the listing yields file:/-scheme'd (or
     // plain) forms, a FOREIGN writer's manifest may spell the same file
     // 'file:' + path — if the two sides normalized differently the anti-
-    // join would classify a LIVE file as orphan and delete data
-    val dir = java.nio.file.Files.createTempDirectory("graft-osw-scheme").toString + "/t"
-    GraftTable.create(dir, IcebergSchema(0, Seq(
-      IcebergField(1, "k", required = false, "int"))),
-      tableUuid = "b6b9a6a1-0000-4000-8000-0000000000ab",
-      timestampMs = 1700000000000L)
-    val fs = HadoopConfs.fileSystemFor(dir)
-    val live = s"$dir/data/foreign-00000.parquet"
-    val out = fs.create(new org.apache.hadoop.fs.Path(live))
-    out.write("bytes the sweep must never open".getBytes); out.close()
-    dropDebris(dir, "zz-debris.parquet")
-    // snapshot 1 references the live file ONLY as "file:" + absolute path
-    val manifest = s"$dir/m-foreign-1.avro"
-    ManifestWriter.write(manifest, Seq(ManifestWriter.EntryData(
-      status = 1, snapshotId = 1L, filePath = s"file:$live",
-      recordCount = 1L, fileSizeInBytes = 31L,
-      lowerBounds = Map.empty, upperBounds = Map.empty,
-      sequenceNumber = Some(1L))))
-    val list = s"$dir/snap-1-list.avro"
-    ManifestListWriter.write(list, Seq(manifest), 1L, addedDataFilesCount = 1)
-    val base = TableMetadata.parseFile(s"$dir/v1.metadata.json")
-    MetadataWriter.write(s"$dir/v2.metadata.json", MetadataWriter.commitSnapshot(
-      base, Snapshot(1L, None, 1700000001000L, Some("append"),
-        Map("added-data-files" -> "1"), Some(list), Some(0))))
-    val cands = GraftTable.orphanFileCandidates(spark, dir)
-      .select("path").collect().map(r =>
-        new org.apache.hadoop.fs.Path(r.getString(0)).getName).toSeq
-    assert(cands == Seq("zz-debris.parquet"), s"candidates were $cands")
-    assert(GraftTable.removeOrphanFiles(spark, dir) == 1L)
-    assert(fs.exists(new org.apache.hadoop.fs.Path(live)),
-      "the scheme'd-referenced live file must survive the sweep")
+    // join would classify a LIVE file as orphan and delete data. A
+    // spelling under another authority (file://localhost, as s3 vs s3a or
+    // a dropped port) may name the same file too, so it is kept as well.
+    for (spell <- Seq("file:", "file://localhost")) {
+      val dir = java.nio.file.Files.createTempDirectory("graft-osw-scheme").toString + "/t"
+      GraftTable.create(dir, IcebergSchema(0, Seq(
+        IcebergField(1, "k", required = false, "int"))),
+        tableUuid = "b6b9a6a1-0000-4000-8000-0000000000ab",
+        timestampMs = 1700000000000L)
+      val fs = HadoopConfs.fileSystemFor(dir)
+      val live = s"$dir/data/foreign-00000.parquet"
+      val out = fs.create(new org.apache.hadoop.fs.Path(live))
+      out.write("bytes the sweep must never open".getBytes); out.close()
+      dropDebris(dir, "zz-debris.parquet")
+      // snapshot 1 references the live file ONLY as the spelling + absolute path
+      val manifest = s"$dir/m-foreign-1.avro"
+      ManifestWriter.write(manifest, Seq(ManifestWriter.EntryData(
+        status = 1, snapshotId = 1L, filePath = s"$spell$live",
+        recordCount = 1L, fileSizeInBytes = 31L,
+        lowerBounds = Map.empty, upperBounds = Map.empty,
+        sequenceNumber = Some(1L))))
+      val list = s"$dir/snap-1-list.avro"
+      ManifestListWriter.write(list, Seq(manifest), 1L, addedDataFilesCount = 1)
+      val base = TableMetadata.parseFile(s"$dir/v1.metadata.json")
+      MetadataWriter.write(s"$dir/v2.metadata.json", MetadataWriter.commitSnapshot(
+        base, Snapshot(1L, None, 1700000001000L, Some("append"),
+          Map("added-data-files" -> "1"), Some(list), Some(0))))
+      val cands = GraftTable.orphanFileCandidates(spark, dir)
+        .select("path").collect().map(r =>
+          new org.apache.hadoop.fs.Path(r.getString(0)).getName).toSeq
+      assert(cands == Seq("zz-debris.parquet"), s"$spell: candidates were $cands")
+      assert(GraftTable.removeOrphanFiles(spark, dir) == 1L)
+      assert(fs.exists(new org.apache.hadoop.fs.Path(live)),
+        s"the $spell-referenced live file must survive the sweep")
+    }
   }
 
   test("delete_reachable_files' content tier is a distributed job and its " +

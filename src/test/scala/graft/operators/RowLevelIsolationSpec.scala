@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.iceberg.{GraftTable, IcebergField, IcebergSchema, ManifestListWriter,
+import graft.iceberg.{GraftTable, HadoopConfs, IcebergField, IcebergSchema, ManifestListWriter,
   ManifestWriter, MetadataWriter, OptimisticCommit, ParquetFiles, Snapshot}
 
 /** Round-9 isolation and edge-case fixes (ADVICE r8):
@@ -43,7 +43,7 @@ class RowLevelIsolationSpec extends SparkSpec {
     // the rewrite of the scanned group must now conflict
     val out = s"$dir/data/rewrite.parquet"
     ParquetFiles.writeOne(nationRow(3), out)
-    val pending = GraftTable.PendingFile(out, 1L, ParquetFiles.length(out),
+    val pending = GraftTable.PendingFile(out, 1L, HadoopConfs.length(out),
       Map.empty, Map.empty)
     intercept[OptimisticCommit.CommitConflictException] {
       GraftTable.commitReplaceFiles(dir, Seq(pending),
@@ -76,17 +76,17 @@ class RowLevelIsolationSpec extends SparkSpec {
     ParquetFiles.writeOne(nationRow(5), fB)
     val mA = s"$dir/m-a.avro"
     ManifestWriter.write(mA, Seq(ManifestWriter.EntryData(
-      1, 2L, fA, 1L, ParquetFiles.length(fA), Map.empty, Map.empty,
+      1, 2L, fA, 1L, HadoopConfs.length(fA), Map.empty, Map.empty,
       content = 0, sequenceNumber = None))) // null → inherits list seq 2
     val mB = s"$dir/m-b.avro"
     ManifestWriter.write(mB, Seq(ManifestWriter.EntryData(
-      1, 2L, fB, 1L, ParquetFiles.length(fB), Map.empty, Map.empty,
+      1, 2L, fB, 1L, HadoopConfs.length(fB), Map.empty, Map.empty,
       content = 0, sequenceNumber = Some(2L))))
     val eqF = s"$dir/data/eq.parquet"
     ParquetFiles.writeOne(nationRow(3).select(col("n_name")), eqF)
     val mEq = s"$dir/m-eq.avro"
     ManifestWriter.write(mEq, Seq(ManifestWriter.EntryData(
-      1, 3L, eqF, 1L, ParquetFiles.length(eqF), Map.empty, Map.empty,
+      1, 3L, eqF, 1L, HadoopConfs.length(eqF), Map.empty, Map.empty,
       content = 2, sequenceNumber = Some(3L))))
     val list = s"$dir/snap-3-list.avro"
     ManifestListWriter.write(list, Seq(mA, mB, mEq), 3L,
@@ -104,7 +104,7 @@ class RowLevelIsolationSpec extends SparkSpec {
     val out = s"$dir/data/b2.parquet"
     ParquetFiles.writeOne(nationRow(5), out)
     GraftTable.commitReplaceFiles(dir,
-      Seq(GraftTable.PendingFile(out, 1L, ParquetFiles.length(out), Map.empty, Map.empty)),
+      Seq(GraftTable.PendingFile(out, 1L, HadoopConfs.length(out), Map.empty, Map.empty)),
       Set(fB), Set(eqF))
     val after = GraftTable.read(spark, GraftTable.latestMetadataPath(dir))
       .select(col("n_nationkey")).collect().map(_.getInt(0)).toSet

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.iceberg.{GraftTable, IcebergField, IcebergSchema, ManifestListWriter,
+import graft.iceberg.{GraftTable, HadoopConfs, IcebergField, IcebergSchema, ManifestListWriter,
   ManifestWriter, MetadataWriter, ParquetFiles, Snapshot}
 
 /** Sequence-number-scoped delete applicability (Iceberg v2 rule):
@@ -36,7 +36,7 @@ class SequenceScopeSpec extends SparkSpec {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-seqtab").toString
     def entry(f: String, seq: Long, content: Int) = ManifestWriter.EntryData(
-      1, seq, f, ParquetFiles.read(spark, Seq(f)).count(), ParquetFiles.length(f),
+      1, seq, f, ParquetFiles.read(spark, Seq(f)).count(), HadoopConfs.length(f),
       Map.empty, Map.empty, content = content, sequenceNumber = Some(seq))
     val dataEntries = data.zipWithIndex.map { case ((seq, rows), i) =>
       val f = s"$dir/data/d$i.parquet"
@@ -107,13 +107,13 @@ class SequenceScopeSpec extends SparkSpec {
     ParquetFiles.writeOne(one, f)
     val mData = s"$dir/m-data.avro"
     ManifestWriter.write(mData, Seq(ManifestWriter.EntryData(
-      1, 2L, f, 1L, ParquetFiles.length(f), Map.empty, Map.empty,
+      1, 2L, f, 1L, HadoopConfs.length(f), Map.empty, Map.empty,
       content = 0, sequenceNumber = None))) // null → must inherit 2
     val eqF = s"$dir/data/eq.parquet"
     ParquetFiles.writeOne(one.select(col("n_name")), eqF)
     val mEq = s"$dir/m-eq.avro"
     ManifestWriter.write(mEq, Seq(ManifestWriter.EntryData(
-      1, 2L, eqF, 1L, ParquetFiles.length(eqF), Map.empty, Map.empty,
+      1, 2L, eqF, 1L, HadoopConfs.length(eqF), Map.empty, Map.empty,
       content = 2, sequenceNumber = Some(2L))))
     val list = s"$dir/snap-2-list.avro"
     ManifestListWriter.write(list, Seq(mData, mEq), 2L,

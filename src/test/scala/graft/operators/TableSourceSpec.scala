@@ -66,7 +66,7 @@ class TableSourceSpec extends SparkSpec {
       .select(col("n_nationkey"), col("n_name")), f)
     val m = s"$dir/m.avro"
     ManifestWriter.write(m, Seq(ManifestWriter.EntryData(
-      1, 1L, f, 1L, ParquetFiles.length(f), Map.empty, Map.empty,
+      1, 1L, f, 1L, HadoopConfs.length(f), Map.empty, Map.empty,
       content = 0, sequenceNumber = Some(1L))))
     val list = s"$dir/snap-1-list.avro"
     ManifestListWriter.write(list, Seq(m), 1L)
@@ -133,11 +133,11 @@ class TableSourceSpec extends SparkSpec {
     // routing is per manifest)
     val mData = s"$dir/m-data.avro"
     ManifestWriter.write(mData, Seq(ManifestWriter.EntryData(
-      1, 1L, f, 20000L, ParquetFiles.length(f),
+      1, 1L, f, 20000L, HadoopConfs.length(f),
       Map.empty, Map.empty, content = 0, sequenceNumber = Some(1L))))
     val mDel = s"$dir/m-del.avro"
     ManifestWriter.write(mDel, Seq(ManifestWriter.EntryData(
-      1, 2L, delF, 2L, ParquetFiles.length(delF),
+      1, 2L, delF, 2L, HadoopConfs.length(delF),
       Map.empty, Map.empty, content = 1, sequenceNumber = Some(2L))))
     val list2 = s"$dir/snap-1b-list.avro"
     ManifestListWriter.write(list2, Seq(mData, mDel), 1L, contents = Map(mDel -> 1))
@@ -528,7 +528,7 @@ class TableSourceSpec extends SparkSpec {
       f
     }
     def msg(f: String) = GraftWriteMessage(Seq(
-      GraftFileMessage(f, 5L, ParquetFiles.length(f), Map.empty, Map.empty, None, 0)))
+      GraftFileMessage(f, 5L, HadoopConfs.length(f), Map.empty, Map.empty, None, 0)))
     w.commit(0L, Array(msg(landFile("e0-a"))))
     assert(TableMetadata.parseFile(GraftTable.latestMetadataPath(dir)).snapshots.size == 1)
     // the replayed epoch re-writes its file under a new attempt name —
@@ -681,7 +681,7 @@ class TableSourceSpec extends SparkSpec {
       .select(col("n_name")).orderBy(col("n_name")), eqF)
     val mEq = s"$dir/m-eq.avro"
     ManifestWriter.write(mEq, Seq(ManifestWriter.EntryData(
-      1, 2L, eqF, 2L, ParquetFiles.length(eqF), Map.empty, Map.empty,
+      1, 2L, eqF, 2L, HadoopConfs.length(eqF), Map.empty, Map.empty,
       content = 2, sequenceNumber = Some(2L))))
     val carried = ManifestListReader.read(meta.currentSnapshot.get.manifestList.get)
     val list2 = s"$dir/snap-2-list.avro"

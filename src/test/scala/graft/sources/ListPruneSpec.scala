@@ -77,7 +77,7 @@ class ListPruneSpec extends SparkSpec {
       ParquetFiles.writeOne((r * 10 until r * 10 + 5).toDF("k"), f)
       val m = s"$dir/m-$r.avro"
       ManifestWriter.write(m, Seq(ManifestWriter.EntryData(1, 1L, f, 5,
-        ParquetFiles.length(f),
+        HadoopConfs.length(f),
         Map(1 -> SingleValueCodec.encode(TInt, r)),
         Map(1 -> SingleValueCodec.encode(TInt, r)))))
       m -> ManifestListWriter.FieldSummary(containsNull = false,

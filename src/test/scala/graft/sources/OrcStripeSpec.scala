@@ -39,7 +39,7 @@ class OrcStripeSpec extends SparkSpec {
       fileFormat = "ORC")))
     val mDel = s"$dir/m-del.avro"
     ManifestWriter.write(mDel, Seq(ManifestWriter.EntryData(
-      1, 2L, delF, 1L, ParquetFiles.length(delF),
+      1, 2L, delF, 1L, HadoopConfs.length(delF),
       Map.empty, Map.empty, content = 1, sequenceNumber = Some(2L))))
     val list = s"$dir/snap-1-list.avro"
     ManifestListWriter.write(list, Seq(mData, mDel), 1L, contents = Map(mDel -> 1))

@@ -32,11 +32,11 @@ class RowGroupPruneSpec extends SparkSpec {
     ParquetFiles.writeOne(Seq((f, 15000L)).toDF("file_path", "pos"), delF)
     val mData = s"$dir/m-data.avro"
     ManifestWriter.write(mData, Seq(ManifestWriter.EntryData(
-      1, 1L, f, 20000L, ParquetFiles.length(f),
+      1, 1L, f, 20000L, HadoopConfs.length(f),
       Map.empty, Map.empty, content = 0, sequenceNumber = Some(1L))))
     val mDel = s"$dir/m-del.avro"
     ManifestWriter.write(mDel, Seq(ManifestWriter.EntryData(
-      1, 2L, delF, 1L, ParquetFiles.length(delF),
+      1, 2L, delF, 1L, HadoopConfs.length(delF),
       Map.empty, Map.empty, content = 1, sequenceNumber = Some(2L))))
     val list = s"$dir/snap-1-list.avro"
     ManifestListWriter.write(list, Seq(mData, mDel), 1L, contents = Map(mDel -> 1))
