@@ -4232,26 +4232,35 @@ object GraftTable {
       MetadataWriter.evolvePartitionSpec(base, spec, base.lastUpdatedMs + 1000).copy(
         metadataLog = base.metadataLog :+ MetadataLogEntry(base.lastUpdatedMs, basePath)))
 
-  /** MERGE-ON-READ row-level commit — the SQL delta-write route (UPDATE/
-    * DELETE/MERGE under `write.<op>.mode = merge-on-read`): ONE snapshot
-    * lands the new data files (inserts + updated rows) and the position-
-    * delete files, every entry at the commit's sequence. I/O is
+  /** MERGE-ON-READ row-level commit — every position delete a DELETE
+    * writes lands here: the SQL delta-write route (UPDATE/DELETE/MERGE
+    * under `write.<op>.mode = merge-on-read`) and [[deleteWhere]]. ONE
+    * snapshot lands the new data files (inserts + updated rows) and the
+    * position-delete files, every entry at the commit's sequence. I/O is
     * O(changed rows) — untouched data is never rewritten, which is the
-    * whole point of MOR vs the copy-on-write route. The CAS closure
-    * re-validates that every path the deletes address is still live: a
-    * concurrent rewrite dropping one would strand those deletes on a
-    * dead path (a lost update), so the commit conflicts instead. */
+    * whole point of MOR vs the copy-on-write route. `targetPaths` is
+    * exactly the set of data files the delete files address; the CAS
+    * closure re-validates that every one is still live: a concurrent
+    * rewrite dropping one would strand those deletes on a dead path (a
+    * lost update), so the commit conflicts instead. The delete
+    * manifest's field-507 summary is the typed union of the summaries of
+    * the manifests OWNING the addressed files — the deletes can only
+    * target partitions inside it, so a partition-scoped delete stays
+    * prunable on the delete side by the rule readers apply
+    * (conservative: any owner without a summary yields none). */
   private[graft] def commitDeltaFiles(tableDir: String, dataFiles: Seq[PendingFile],
       deleteFiles: Seq[PendingFile], targetPaths: Set[String],
       branch: Option[String] = None)
       : OptimisticCommit.CommitResult = {
     require(dataFiles.nonEmpty || deleteFiles.nonEmpty, "empty delta commit")
-    // v3: the task-written position-delete parquet converts to DELETION
-    // VECTORS before the commit — merged with each covered file's whole
-    // pending state, superseding its old DV, exactly like deleteWhere's
-    // DV route. The task parquet files become intermediates (reclaimed
+    // v3: the written position-delete parquet converts to DELETION
+    // VECTORS before the commit — one Roaring bitmap per covered data
+    // file, merged with the file's whole pending delete state (old DV +
+    // v2 positions) so at most one DV per file stays live, superseding
+    // its old DV. The parquet files become intermediates (reclaimed
     // after the commit wins; a crash leaves orphans for the sweep, never
     // a corrupt table).
+    val targets = targetPaths.map(PathId(_))
     val meta0 = TableMetadata.parseFile(latestMetadataPath(tableDir))
     val v3Dv = meta0.formatVersion >= 3 && deleteFiles.nonEmpty
     val spark = if (v3Dv) SparkSession.active else null
@@ -4262,9 +4271,7 @@ object GraftTable {
         val newDels = spark.read.schema(PosDeleteReadSchema)
           .parquet(deleteFiles.map(_.path): _*)
           .select(PathId.col(col("file_path")).as("file_path"), col("pos"))
-        val covered = newDels.select("file_path").distinct()
-          .collect().map(_.getString(0)).toSet
-        val (oldDvEntries, oldPositions) = pendingPosState(spark, meta0, covered, branch)
+        val (oldDvEntries, oldPositions) = pendingPosState(spark, meta0, targets, branch)
         val manifestForm = entriesAt(refHead(meta0, branch), 0).filter(_.content == 0)
           .map(e => PathId(e.filePath) -> e.filePath).toMap
         val refs = writeDvsDistributed(spark, tableDir, dvAttempt,
@@ -4283,11 +4290,15 @@ object GraftTable {
       // STAGES instead (wapEditDecision — fast-forward-only publication)
       val wap = wapEditDecision(branch, base.properties)
       val head = refHead(base, branch)
-      val live = entriesAt(head, 0).filter(_.content == 0)
-        .map(e => PathId(e.filePath)).toSet
-      val missing = targetPaths.map(PathId(_)) -- live
+      val owned = Par.inParallel(head.toSeq
+          .flatMap(s => ManifestListReader.read(s.manifestList.get))
+          .filter(_.content == 0))(i => i -> ManifestWriter.read(i.path)
+          .filter(e => e.status != 2 && e.content == 0).map(e => PathId(e.filePath)))
+      val missing = targets -- owned.flatMap(_._2)
       if (missing.nonEmpty) throw OptimisticCommit.CommitConflictException(
         s"row-level delete targets removed by a concurrent commit: ${missing.mkString(", ")}")
+      val delSummary = ScanPlanning.unionSummaries(base,
+        owned.collect { case (i, ids) if ids.exists(targets) => i })
       val attempt = java.util.UUID.randomUUID()
       def entry(f: PendingFile, content: Int) = ManifestWriter.EntryData(
         1, snapId, f.path, f.rows, f.bytes, f.lower, f.upper,
@@ -4324,12 +4335,13 @@ object GraftTable {
                 DeletionVectors.DvRef(ref, path, off, len, card), snapId, snapId, size)
             }
             else deleteFiles.map(entry(_, 1)))
-          Seq((m, None: Option[Seq[ManifestListWriter.FieldSummary]], 0, 1))
+          Seq((m, delSummary.map(_._2), delSummary.fold(0)(_._1), 1))
         }
       if (v3Dv) {
-        // merge-on-write staleness guard (same rule as deleteWhereDv):
-        // the DVs absorbed the delete state AS OF meta0 and this commit
-        // drops the absorbed entries
+        // merge-on-write staleness guard: the DVs absorbed the delete
+        // state AS OF meta0 and this commit drops the absorbed entries —
+        // a concurrent change to the ref's delete files conflicts; an
+        // append does not
         val nowDel = entriesAt(head, 1).filter(_.content == 1)
           .map(e => (PathId(e.filePath), e.contentOffset.getOrElse(0L))).toSet
         if (nowDel != dvPreDel) throw OptimisticCommit.CommitConflictException(
@@ -4380,7 +4392,8 @@ object GraftTable {
           "added-delete-files" ->
             (if (v3Dv) dvRefRows.size else deleteFiles.size).toString,
           "added-position-deletes" -> deleteFiles.map(_.rows).sum.toString) ++
-          (if (v3Dv) Map("added-dvs" -> dvRefRows.size.toString) else Map.empty) ++
+          (if (v3Dv) Map("added-dvs" -> dvRefRows.size.toString,
+            "removed-dvs" -> dvSuperseded.size.toString) else Map.empty) ++
           wap.summary,
         Some(list), base.currentSchemaId)
       branch match {
@@ -4400,286 +4413,57 @@ object GraftTable {
     result
   }
 
-  /** Spark's `_metadata.file_path` of a data file → the path as the
-    * manifests spell it. Spark reports a file as its URL (`file:/a%20b/x`)
-    * while a position delete must record the manifest's spelling
-    * (`/a b/x`). The URL is decoded once per file (a task's rows arrive
-    * file by file); a file outside `paths` fails the DELETE. */
-  private final class ManifestPathOf(paths: Seq[String])
-      extends (String => String) with Serializable {
-    private val byId = paths.map(p => PathId(p) -> p).toMap
-    @volatile @transient private var last: (String, String) = _
-    def apply(url: String): String = {
-      val hit = last
-      if (hit != null && hit._1 == url) hit._2
-      else {
-        val id = PathId(new org.apache.hadoop.fs.Path(new java.net.URI(url)).toString)
-        val path = byId.getOrElse(id, throw new IllegalStateException(
-          s"DELETE scanned $url, which is no data file of the table"))
-        last = (url, path)
-        path
-      }
-    }
-  }
-
-  /** Row-level DELETE: capture (file_path, pos) of matching rows across
-    * the current data files, land them as ONE position-delete file, and
-    * CAS-commit a delete snapshot. The predicate is an ordinary Column
-    * over the table's schema — evaluated in one distributed scan. */
-  /** With `branch`, the DELETE is BRANCH-SCOPED end-to-end: the predicate
+  /** Row-level DELETE: the ref head's live rows matching `predicate` —
+    * read through the one merge-on-read reader ([[readInfos]]), so
+    * renamed columns resolve by field id, rows an earlier delete removed
+    * are not addressed again and any data file format scans — land as
+    * ONE (file_path, pos)-sorted position-delete file, committed by
+    * [[commitDeltaFiles]] like every SQL merge-on-read DELETE (v3 tables
+    * get deletion vectors there). The predicate is an ordinary Column
+    * over the table's schema, pushed into the scan to prune files and
+    * row groups. A predicate matching no live row commits nothing.
+    *
+    * With `branch`, the DELETE is BRANCH-SCOPED end-to-end: the predicate
     * scans the branch head's live rows (not main's), the delete snapshot
     * chains from the branch head carrying ITS manifests, and the commit
     * moves only the branch ref — main never sees the staged delete until
     * fast_forward publishes it (the WAP contract extended beyond
-    * appends). A delete is append-shaped (one new delete manifest over
-    * carried state), so the branch-writes-are-append-only invariant
-    * holds unchanged. */
+    * appends). */
   def deleteWhere(spark: SparkSession, tableDir: String,
       predicate: org.apache.spark.sql.Column,
       branch: Option[String] = None): OptimisticCommit.CommitResult = {
+    import spark.implicits._
     val metaPath0 = latestMetadataPath(tableDir)
     val meta0 = TableMetadata.parseFile(metaPath0)
-    if (meta0.formatVersion >= 3)
-      return deleteWhereDv(spark, tableDir, metaPath0, meta0, predicate, branch)
-    val scannedE = refHead(meta0, branch).toSeq.flatMap { snap =>
-      Par.inParallel(
-          ManifestListReader.read(snap.manifestList.get).filter(_.content == 0))(
-          i => (i, ManifestWriter.read(i.path)))
-        .flatMap { case (i, es) =>
-          es.filter(e => e.status != 2 && e.content == 0).map(e => (e, i)) }
-    }
-    val scanned = scannedE.map { case (e, i) => (e.filePath, i) }
-    val dataFiles = scanned.map(_._1)
-    // nothing to delete FROM (fresh or truncated table): a no-op, not an
-    // error — SQL TRUNCATE/DELETE on an empty table must succeed
-    if (dataFiles.isEmpty)
-      return OptimisticCommit.CommitResult(
-        OptimisticCommit.currentVersion(tableDir), metaPath0, meta0, 0)
-    // the position-addressing scan reads parquet (_metadata.row_index is
-    // its coordinate source) — the same curated refusal the v3 path
-    // gives, instead of a raw task-side footer error over an avro/orc
-    // data file (write.format.default tables or imports)
-    require(scannedE.forall(_._1.fileFormat == "PARQUET"),
-      "DELETE currently scans parquet data files only — non-parquet " +
-        "files must be compacted to parquet (rewrite_data_files) first")
-    val delFile = s"$tableDir/data/delete-${java.util.UUID.randomUUID()}.parquet"
-    val manifestPath = udf(new ManifestPathOf(dataFiles))
-    // Iceberg requires position deletes sorted by (file_path, pos)
-    ParquetFiles.writeOne(
-      spark.read.schema(sparkSchema(meta0)).parquet(dataFiles: _*)
-        .select(col("*"),
-          col("_metadata.file_path").as("_gf"), col("_metadata.row_index").as("_gp"))
+    val delPrefix = s"$tableDir/data/delete-${java.util.UUID.randomUUID()}"
+    val taskConf = new SerializableHadoopConf(HadoopConfs.active())
+    // one task writes the file and reports the data files it addresses
+    // (the commit's conflict targets) — `_file` is the manifest spelling
+    val written = refHead(meta0, branch).toSeq.flatMap { head =>
+      readInfos(spark, meta0, ManifestListReader.read(head.manifestList.get))
         .filter(predicate)
-        .select(manifestPath(col("_gf")).as("file_path"), col("_gp").as("pos"))
-        .orderBy(col("file_path"), col("pos")), delFile)
-    // (count, file_path/pos bounds): the bounds land under Iceberg's
-    // RESERVED position-delete field ids, so planners can skip this
-    // delete file for data files outside its [min,max] file_path range
-    val statRow = spark.read.schema(PosDeleteReadSchema).parquet(delFile).agg(
-      count(lit(1)), min(col("file_path")), max(col("file_path")),
-      min(col("pos")), max(col("pos"))).head()
-    val nDeletes = statRow.getLong(0)
-    val (delLower, delUpper) =
-      if (nDeletes == 0) (Map.empty[Int, Array[Byte]], Map.empty[Int, Array[Byte]])
-      else (
-        Map(ManifestWriter.PosDeleteFilePathId ->
-              SingleValueCodec.encode(IcebergTypes.TString, statRow.getString(1)),
-            ManifestWriter.PosDeletePosId ->
-              SingleValueCodec.encode(IcebergTypes.TLong, statRow.getLong(3))),
-        Map(ManifestWriter.PosDeleteFilePathId ->
-              SingleValueCodec.encode(IcebergTypes.TString, statRow.getString(2)),
-            ManifestWriter.PosDeletePosId ->
-              SingleValueCodec.encode(IcebergTypes.TLong, statRow.getLong(4))))
-    // the delete manifest's field-507 summary: the typed UNION of the
-    // summaries of the manifests OWNING the addressed files — the deletes
-    // can only target partitions inside it, so a partition-scoped delete
-    // (a predicate that pruned to few partitions) becomes prunable on the
-    // delete side by the same symmetric rule readers apply. Conservative:
-    // any owner without a summary (unpartitioned tables) yields None.
-    val ownerByFile = scanned.map { case (p, i) => PathId(p) -> i }.toMap
-    val addressedOwners =
-      if (nDeletes == 0) Nil
-      else spark.read.schema(PosDeleteReadSchema)
-        .parquet(delFile).select("file_path").distinct()
-        .collect().toSeq.flatMap(r => ownerByFile.get(PathId(r.getString(0))))
-        .distinctBy(_.path)
-    val delSummary = ScanPlanning.unionSummaries(meta0, addressedOwners)
-    OptimisticCommit.commit(tableDir, (base, basePath) => {
-      val snapId = (base.snapshots.map(_.snapshotId) :+ 0L).max + 1
-      val attempt = java.util.UUID.randomUUID() // see append: racing-safe names
-      val manifest = s"$tableDir/m-delete-$snapId-$attempt.avro"
-      ManifestWriter.write(manifest, Seq(ManifestWriter.EntryData(
-        1, snapId, delFile, nDeletes, HadoopConfs.length(delFile),
-        delLower, delUpper, content = 1, sequenceNumber = Some(snapId))))
-      val list = s"$tableDir/snap-$snapId-$attempt-list.avro"
-      val head = refHead(base, branch)
-      val carried = branch match {
-        case None => carryForward(base)
-        case Some(_) =>
-          head.toSeq.flatMap(s => ManifestListReader.read(s.manifestList.get))
-      }
-      writeList(list, carried, manifest, 0, 1, snapId, delSummary)
-      val wap = wapEditDecision(branch, base.properties)
-      val snap = Snapshot(snapId, head.map(_.snapshotId), base.lastUpdatedMs + 1000,
-        Some("delete"),
-        Map("added-delete-files" -> "1",
-          "added-position-deletes" -> nDeletes.toString) ++
-          wap.summary,
-        Some(list), base.currentSchemaId)
-      branch match {
-        case None if wap.staged =>
-          MetadataWriter.stageSnapshot(base, snap, Some(basePath))
-        case None => MetadataWriter.commitSnapshot(base, snap, Some(basePath))
-        case Some(b) => MetadataWriter.commitToBranch(base, snap, b, Some(basePath))
-      }
-    })
-  }
-
-  /** The v3 DELETE route: positions land as DELETION VECTORS — one
-    * Roaring bitmap per addressed data file in Puffin files
-    * ([[DeletionVectors]]) — instead of (file_path, pos) parquet rows.
-    * The spec's invariants implemented here:
-    *
-    *   - **at most one live DV per data file**: a new DV MERGES the
-    *     file's entire pending delete state (previous DV + any v2
-    *     parquet positions addressing it) and the superseded DV entry
-    *     is dropped from its carried manifest in the same commit;
-    *   - **readers never stack DV history**: a task reads exactly one
-    *     blob per file (manifest fields 143/144/145 seek straight to
-    *     it), so delete-side read amplification is O(1) however many
-    *     DELETEs have run — the structural win over v2, where a CDC
-    *     table accretes one delete file per commit ALL of which every
-    *     task must open;
-    *   - v2 parquet position deletes left by pre-upgrade commits stay
-    *     live and readers apply the union (their covered positions are
-    *     re-asserted in any new DV, so this is safe both ways).
-    *
-    * Scale shape: the matched positions are grouped per data file IN
-    * THE CLUSTER (repartition on file_path, sorted within partitions)
-    * and each write task emits ONE Puffin file holding its files' DVs —
-    * a delete touching 10⁵ files across 1000 tasks writes 1000 blobs
-    * concurrently, never a driver funnel. Only the KB-scale blob
-    * addresses come back to the driver for the manifest commit.
-    *
-    * A predicate matching NOTHING is a metadata no-op (no new snapshot)
-    * — real Iceberg's DELETE behaves the same way in v3. */
-  private def deleteWhereDv(spark: SparkSession, tableDir: String,
-      metaPath0: String, meta0: TableMetadata,
-      predicate: org.apache.spark.sql.Column,
-      branch: Option[String] = None): OptimisticCommit.CommitResult = {
-    import spark.implicits._
-    val dataE = refHead(meta0, branch).toSeq.flatMap { snap =>
-      Par.inParallel(
-          ManifestListReader.read(snap.manifestList.get).filter(_.content == 0))(
-          i => ManifestWriter.read(i.path))
-        .flatten.filter(e => e.status != 2 && e.content == 0)
-    }
-    if (dataE.isEmpty)
-      return OptimisticCommit.CommitResult(
-        OptimisticCommit.currentVersion(tableDir), metaPath0, meta0, 0)
-    require(dataE.forall(_.fileFormat == "PARQUET"),
-      "v3 DELETE currently scans parquet data files only — imported " +
-        "Avro/ORC files must be compacted to parquet (rewrite_data_files) first")
-    // path id -> the path form the manifests carry (what
-    // referenced_data_file must record for exact planning-time matches)
-    val manifestForm = dataE.map(e => PathId(e.filePath) -> e.filePath).toMap
-    // over the ids (PathId is idempotent), the lookup yields each file's id
-    val pathIdOf = udf(new ManifestPathOf(dataE.map(e => PathId(e.filePath))))
-    val newDels = spark.read.schema(sparkSchema(meta0))
-      .parquet(dataE.map(_.filePath): _*)
-      .select(col("*"),
-        col("_metadata.file_path").as("_gf"), col("_metadata.row_index").as("_gp"))
-      .filter(predicate)
-      .select(pathIdOf(col("_gf")).as("file_path"), col("_gp").as("pos"))
-    // the covered file set decides which pending delete state merges in
-    // and which DV entries the commit supersedes — KB-scale (file paths,
-    // with per-file match counts so the commit summary needs no 2nd scan)
-    val coveredCounts = newDels.groupBy("file_path").count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val covered = coveredCounts.keySet
-    if (covered.isEmpty)
-      return OptimisticCommit.CommitResult(
-        OptimisticCommit.currentVersion(tableDir), metaPath0, meta0, 0)
-    val (oldDvEntries, oldPositions) = pendingPosState(spark, meta0, covered, branch)
-    val attempt = java.util.UUID.randomUUID()
-    val provisionalSnap = (meta0.snapshots.map(_.snapshotId) :+ 0L).max + 1
-    val refRows = writeDvsDistributed(spark, tableDir, attempt,
-      newDels.unionByName(oldPositions), manifestForm, provisionalSnap)
-    val nNew = coveredCounts.values.sum
-    // a DV entry's identity is (puffin path, blob offset) — one Puffin
-    // file holds many files' DVs and only the re-covered blobs supersede
-    val superseded: Set[(String, Long)] =
-      oldDvEntries.map(e => (PathId(e.filePath), e.contentOffset.getOrElse(0L))).toSet
-    // the delete manifest's field-507 summary: union of the summaries of
-    // the manifests owning the addressed files (same rule as the v2 path)
-    val snap0 = refHead(meta0, branch).get // dataE nonEmpty ⇒ a head exists
-    val owners = ManifestListReader.read(snap0.manifestList.get)
-      .filter(_.content == 0)
-    val addressedOwners = Par.inParallel(owners)(i => (i, ManifestWriter.read(i.path)))
-      .filter { case (_, es) => es.exists(e => e.status != 2 && covered(PathId(e.filePath))) }
-      .map(_._1).distinctBy(_.path)
-    val delSummary = ScanPlanning.unionSummaries(meta0, addressedOwners)
-    val preDel = entriesAt(refHead(meta0, branch), 1).filter(_.content == 1)
-      .map(e => (PathId(e.filePath), e.contentOffset.getOrElse(0L))).toSet
-    val preData = dataE.map(e => PathId(e.filePath)).toSet
-    OptimisticCommit.commit(tableDir, (base, basePath) => {
-      // merge-on-write makes staleness dangerous: the new DVs absorbed
-      // the delete state AS OF meta0 (on the targeted ref) and the
-      // commit DROPS the absorbed entries — a concurrent delete/
-      // compaction on that ref invalidates the merge
-      val nowHead = refHead(base, branch)
-      val nowDel = entriesAt(nowHead, 1).filter(_.content == 1)
-        .map(e => (PathId(e.filePath), e.contentOffset.getOrElse(0L))).toSet
-      val nowData = entriesAt(nowHead, 0).filter(_.content == 0)
-        .map(e => PathId(e.filePath)).toSet
-      if (nowDel != preDel || nowData != preData)
-        throw OptimisticCommit.CommitConflictException(
-          "table delete/data file set changed while writing deletion vectors — rerun")
-      val snapId = (base.snapshots.map(_.snapshotId) :+ 0L).max + 1
-      val manifest = s"$tableDir/m-delete-$snapId-$attempt.avro"
-      ManifestWriter.write(manifest, refRows.map { case (ref, path, off, len, card, size) =>
-        DeletionVectors.entryFor(
-          DeletionVectors.DvRef(ref, path, off, len, card), snapId, snapId, size)
-      })
-      // supersede: carried delete manifests drop the old DV entries for
-      // re-covered files (the new DVs contain their every position)
-      val carried0 = branch match {
-        case None => carryForward(base)
-        case Some(_) =>
-          nowHead.toSeq.flatMap(s => ManifestListReader.read(s.manifestList.get))
-      }
-      val carried = carried0.flatMap { info =>
-        if (info.content != 1 || superseded.isEmpty) Some(info)
-        else {
-          val es = ManifestWriter.read(info.path)
-          val keep = es.filterNot(e => e.fileFormat == "PUFFIN" &&
-            superseded((PathId(e.filePath), e.contentOffset.getOrElse(0L))))
-          if (keep.size == es.size) Some(info)
-          else if (keep.isEmpty) None
-          else {
-            val p = s"$tableDir/m-dvrw-$snapId-$attempt-${info.path.hashCode.abs}.avro"
-            ManifestWriter.write(p, keep)
-            Some(info.copy(path = p))
+        .select(col("_file"), col("_pos")).as[(String, Long)]
+        .repartition(1).sortWithinPartitions(col("_file"), col("_pos"))
+        .mapPartitions { rows =>
+          val targets = scala.collection.mutable.ArrayBuffer.empty[String]
+          val tracked = rows.map { r =>
+            if (targets.isEmpty || targets.last != r._1) targets += r._1
+            r
           }
-        }
-      }
-      val list = s"$tableDir/snap-$snapId-$attempt-list.avro"
-      writeList(list, carried, manifest, 0, 1, snapId, delSummary)
-      val wap = wapEditDecision(branch, base.properties)
-      val snap = Snapshot(snapId, nowHead.map(_.snapshotId),
-        base.lastUpdatedMs + 1000, Some("delete"),
-        Map("added-dvs" -> refRows.size.toString,
-          "removed-dvs" -> oldDvEntries.size.toString,
-          "added-position-deletes" -> nNew.toString) ++
-          wap.summary,
-        Some(list), base.currentSchemaId)
-      branch match {
-        case None if wap.staged =>
-          MetadataWriter.stageSnapshot(base, snap, Some(basePath))
-        case None => MetadataWriter.commitSnapshot(base, snap, Some(basePath))
-        case Some(b) => MetadataWriter.commitToBranch(base, snap, b, Some(basePath))
-      }
-    })
+          // attempt-unique, so a retried task never collides with debris
+          val delPath =
+            s"$delPrefix-${org.apache.spark.TaskContext.get().taskAttemptId()}.parquet"
+          graft.sources.GraftTableWrites.writePositionDeletes(delPath, tracked, taskConf.value)
+            .map(m => (m.path, m.rows, m.bytes, m.lower, m.upper, targets.toSeq)).iterator
+        }.collect().toSeq
+    }
+    written match {
+      case Seq((path, rows, bytes, lower, upper, targets)) =>
+        commitDeltaFiles(tableDir, Nil, Seq(PendingFile(path, rows, bytes, lower, upper)),
+          targets.toSet, branch)
+      case Seq() => OptimisticCommit.CommitResult(
+        OptimisticCommit.currentVersion(tableDir), metaPath0, meta0, 0)
+    }
   }
 
   /** Streaming-upsert commit (the shape that makes EQUALITY deletes in

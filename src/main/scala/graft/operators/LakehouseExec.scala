@@ -188,7 +188,7 @@ object LakehouseExec {
       .collect() // metadata-scale: one row per data file
     val bins = planned.groupBy(_.getLong(0)).toSeq.sortBy(_._1)
     val newEntries = inParallel(bins) { case (bin, rows) =>
-      val out = s"$dir/data/compacted-%05d.parquet".format(bin)
+      val out = f"$dir/data/compacted-${bin}%05d.parquet"
       // the rewrite itself: a distributed read of the bin's files merged
       // into one sorted output file (the bin IS the parallelism unit)
       writeOneParquet(
@@ -510,7 +510,7 @@ object LakehouseExec {
       // rewrite each affected file in place of its old entry: unmatched
       // rows pass through, matched rows take the update
       val rewrittenEntries = inParallel(affected.toSeq.sorted.zipWithIndex) { case (f, i) =>
-        val out = s"$dir/data/merged-%05d.parquet".format(i)
+        val out = f"$dir/data/merged-${i}%05d.parquet"
         writeOneParquet(
           withFile.filter(col("_file") === f)
             .join(updates, Seq("n_nationkey"), "left_outer")

@@ -36,8 +36,9 @@ import graft.iceberg.{GraftTable, HadoopConfs, IcebergField, IcebergSchema,
   * INSERT → the DSv2 write path (task-written files, inline bound stats,
   * CAS append snapshot; hidden-partitioned layouts included); DELETE →
   * `SupportsDelete` translating the pushed predicate into
-  * GraftTable.deleteWhere's position-delete commit (merge-on-read, no
-  * rewrite); SELECT → the DSv2 scan with its two-level pruning and
+  * GraftTable.deleteWhere (the table's live rows scanned through the
+  * DSv2 reader, a position-delete commit — merge-on-read, no rewrite);
+  * SELECT → the DSv2 scan with its two-level pruning and
   * task-local MOR; ADD COLUMN → a CAS schema-evolution commit. Catalog
   * state is NOTHING but the table directories — concurrent engines
   * coordinate through the versioned metadata documents alone, exactly

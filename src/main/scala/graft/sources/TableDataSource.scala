@@ -239,9 +239,10 @@ class GraftSparkTable(tableSchema: StructType, metadataPath: String,
   }
 
   /** SQL `DELETE FROM ... WHERE ...`: the pushed predicate translates to
-    * a Column and lands as GraftTable.deleteWhere's position-delete
-    * commit — merge-on-read row-level delete, no rewrite, CAS-serialized
-    * with every other writer. */
+    * a Column for GraftTable.deleteWhere, which scans the live rows
+    * through this table's reader and commits their (_file, _pos) as
+    * position deletes through the same commit as the merge-on-read delta
+    * route — no rewrite, CAS-serialized with every other writer. */
   private def toColumn(f: sources.Filter): Option[org.apache.spark.sql.Column] = {
     import org.apache.spark.sql.functions.{col, lit, not}
     f match {
@@ -706,7 +707,8 @@ class GraftTableScan(required: StructType, filters: Array[sources.Filter],
   }
 
   /** Does this position-delete file possibly address `dataFile`? Bound
-    * stats under the RESERVED file_path field id (written by deleteWhere)
+    * stats under the RESERVED file_path field id (written by every
+    * engine position-delete writer)
     * answer without opening the delete file — missing bounds keep it.
     * This is what bounds per-task delete loads at 10⁵ delete files. */
   private def mayAddress(del: ManifestWriter.EntryData, dataFile: String): Boolean = {

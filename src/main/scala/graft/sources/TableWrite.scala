@@ -257,6 +257,27 @@ object GraftTableWrites {
       m.path, m.rows, m.bytes, m.lower, m.upper, m.summary, m.specId,
       fileFormat = m.fileFormat)
 
+  /** The one position-delete file writer: (file_path, pos) rows, already
+    * in the (file_path, pos) order the spec requires, land as ONE parquet
+    * with bound stats under Iceberg's reserved position-delete field ids
+    * (what lets readers scope the delete load per data file). None when
+    * there is no row — no file is created. */
+  private[graft] def writePositionDeletes(path: String, sorted: Iterator[(String, Long)],
+      conf: Configuration): Option[GraftFileMessage] =
+    if (!sorted.hasNext) None
+    else {
+      val fw = new GraftFileWriter(path,
+        StructType(Seq(StructField("file_path", StringType), StructField("pos", LongType))),
+        Seq((graft.iceberg.ManifestWriter.PosDeleteFilePathId, "file_path", IcebergTypes.TString),
+          (graft.iceberg.ManifestWriter.PosDeletePosId, "pos", IcebergTypes.TLong)),
+        None, 0, conf)
+      sorted.foreach { case (f, p) =>
+        fw.write(new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+          Array[Any](org.apache.spark.unsafe.types.UTF8String.fromString(f), p)))
+      }
+      Some(fw.finish().copy(content = 1))
+    }
+
   private[sources] def commit(tableDir: String, files: Seq[GraftFileMessage],
       extraSummary: Map[String, String] = Map.empty,
       replace: Boolean = false, branch: Option[String] = None,
@@ -1002,11 +1023,9 @@ private[sources] final class OrcTaskFileWriter(path: String,
   * route): inserted and updated rows stream into the ordinary task data
   * writers (per-tuple files on partitioned tables), while deleted row
   * ids — the scan's (_file, _pos) coordinates — buffer per task and land
-  * as ONE (file_path, pos)-sorted position-delete parquet with bound
-  * stats under Iceberg's reserved delete field ids (what lets readers
-  * scope the delete load per data file). A task's delete volume is its
-  * share of the CHANGED rows, so the buffer is O(task delta), never
-  * O(table). */
+  * as ONE position-delete parquet ([[GraftTableWrites.writePositionDeletes]]).
+  * A task's delete volume is its share of the CHANGED rows, so the buffer
+  * is O(task delta), never O(table). */
 class GraftTableDeltaWriter(pathFor: Int => String, delPath: String,
     schema: StructType, fields: Seq[(Int, String, IcebergType)],
     part: GraftTableWrites.PartInfo, conf: Configuration,
@@ -1049,25 +1068,9 @@ class GraftTableDeltaWriter(pathFor: Int => String, delPath: String,
       else GraftWriteMessage(dataMsg0.files ++
         carry.commit().asInstanceOf[GraftWriteMessage].files
           .map(_.copy(carriesLineage = true)))
-    val delFiles =
-      if (deletes.isEmpty) Nil
-      else {
-        val delSchema = StructType(Seq(
-          StructField("file_path", StringType), StructField("pos", LongType)))
-        val delFields: Seq[(Int, String, IcebergType)] = Seq(
-          (graft.iceberg.ManifestWriter.PosDeleteFilePathId, "file_path",
-            IcebergTypes.TString),
-          (graft.iceberg.ManifestWriter.PosDeletePosId, "pos", IcebergTypes.TLong))
-        val fw = new GraftFileWriter(delPath, delSchema, delFields, None, 0, conf)
-        // the spec requires position deletes sorted by (file_path, pos)
-        deletes.sortInPlace()
-        deletes.foreach { case (f, p) =>
-          fw.write(new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-            Array[Any](org.apache.spark.unsafe.types.UTF8String.fromString(f), p)))
-        }
-        Seq(fw.finish().copy(content = 1))
-      }
-    GraftWriteMessage(dataMsg.files ++ delFiles)
+    deletes.sortInPlace()
+    GraftWriteMessage(dataMsg.files ++
+      GraftTableWrites.writePositionDeletes(delPath, deletes.iterator, conf))
   }
   override def abort(): Unit = { data.abort(); if (carryUsed) carry.abort() }
   override def close(): Unit = ()

@@ -560,12 +560,12 @@ object EventStreams {
     val prevPath = s"$out/v$version.metadata.json"
     val cur = TableMetadata.parseFile(prevPath)
     val snapId = id + 1
-    val f = s"$out/data/batch-%05d.parquet".format(id)
+    val f = f"$out/data/batch-${id}%05d.parquet"
     ParquetFiles.writeOne(df.orderBy($"event_id"), f)
     if (cur.snapshots.exists(_.snapshotId == snapId)) return version // replayed
     val stats = graft.iceberg.ParquetFiles.read(spark, Seq(f))
       .agg(count(lit(1)), min($"event_id"), max($"event_id")).head()
-    val manifest = s"$out/m-%05d.avro".format(id)
+    val manifest = f"$out/m-${id}%05d.avro"
     ManifestWriter.write(manifest, Seq(ManifestWriter.EntryData(
       1, snapId, f, stats.getLong(0), HadoopConfs.length(f),
       Map(1 -> SingleValueCodec.encode(IcebergTypes.TLong, stats.getLong(1))),

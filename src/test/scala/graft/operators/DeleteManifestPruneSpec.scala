@@ -157,5 +157,24 @@ class DeleteManifestPruneSpec extends SparkSpec {
     val dsv2 = spark.read.format("graft-table").option("metadata", metaPath)
       .load().filter(col("n_regionkey") === 3)
     assert(dsv2.count() == expected3)
+    // a SQL merge-on-read DELETE whose predicate does not push (the
+    // row-level delta route) writes the same summary
+    val wh = java.nio.file.Files.createTempDirectory("graft-delsumsql").toString
+    spark.conf.set("spark.sql.catalog.g_dsum", classOf[graft.sources.GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.g_dsum.warehouse", wh)
+    nation.createOrReplaceTempView("dsum_src")
+    spark.sql("""CREATE TABLE g_dsum.db.n (n_nationkey INT, n_name STRING, n_regionkey INT)
+      PARTITIONED BY (n_regionkey)
+      TBLPROPERTIES ('write.delete.mode'='merge-on-read')""")
+    spark.sql("INSERT INTO g_dsum.db.n SELECT n_nationkey, n_name, n_regionkey FROM dsum_src")
+    spark.sql("DELETE FROM g_dsum.db.n WHERE n_regionkey = 4 AND length(n_name) > 5")
+    val sqlDel = ManifestListReader.read(TableMetadata.parseFile(
+        GraftTable.latestMetadataPath(s"$wh/db/n")).currentSnapshot.get.manifestList.get)
+      .filter(_.content == 1)
+    assert(sqlDel.size == 1 && sqlDel.forall(_.summaries.isDefined),
+      "the delta route must write union summaries on partitioned tables")
+    assert(regionOf(sqlDel.head) == 4)
+    assert(spark.sql("SELECT count(*) FROM g_dsum.db.n").head().getLong(0) ==
+      nation.filter(!(col("n_regionkey") === 4 && length(col("n_name")) > 5)).count())
   }
 }

@@ -246,4 +246,26 @@ class GraftTableSpec extends SparkSpec {
       GraftTable.read(spark, v5, ref = Some("no-such-ref")).collect()
     }
   }
+
+  test("a deleteWhere matching no live row commits nothing") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-delnoop").toString
+    GraftTable.create(dir, graft.iceberg.IcebergSchema(0, Seq(
+      graft.iceberg.IcebergField(1, "n_nationkey", required = false, "int"),
+      graft.iceberg.IcebergField(2, "n_name", required = false, "string"))),
+      tableUuid = java.util.UUID.randomUUID().toString, timestampMs = 1700000000000L)
+    GraftTable.append(spark, dir,
+      graft.Tables.load(spark, sfDir, "nation").select("n_nationkey", "n_name"))
+    GraftTable.deleteWhere(spark, dir, col("n_nationkey") === 5)
+    def head() = {
+      val path = GraftTable.latestMetadataPath(dir)
+      (path, TableMetadata.parseFile(path).currentSnapshotId)
+    }
+    val before = head()
+    // no such key, and a key whose only row is already deleted
+    GraftTable.deleteWhere(spark, dir, col("n_nationkey") === 99)
+    GraftTable.deleteWhere(spark, dir, col("n_nationkey") === 5)
+    assert(head() == before)
+    assert(GraftTable.read(spark, before._1).count() == 24L)
+  }
 }
+

@@ -87,4 +87,23 @@ class RenameColumnSpec extends SparkSpec {
     assert(viaApi.where(col("label").isNull).count() == 0)
     assert(viaApi.count() == 25)
   }
+
+  test("pushable DELETE on a renamed column deletes pre-rename rows") {
+    val wh = freshCatalog("rn5")
+    Tables.load(spark, sfDir, "nation").createOrReplaceTempView("rn5_src")
+    spark.sql("CREATE TABLE g_rn5.db.n (n_nationkey INT, n_name STRING)")
+    spark.sql("INSERT INTO g_rn5.db.n SELECT n_nationkey, n_name FROM rn5_src")
+    spark.sql("ALTER TABLE g_rn5.db.n RENAME COLUMN n_name TO label")
+    def names(): Seq[String] = spark.sql("SELECT label FROM g_rn5.db.n")
+      .collect().map(_.getString(0)).toSeq
+    def nameOf(key: Int): String = Tables.load(spark, sfDir, "nation")
+      .filter(col("n_nationkey") === key).head().getAs[String]("n_name")
+    val (first, second) = (nameOf(18), nameOf(12))
+    // SQL: the predicate pushes whole into GraftTable.deleteWhere
+    spark.sql(s"DELETE FROM g_rn5.db.n WHERE label = '$first'")
+    assert(!names().contains(first) && names().size == 24, names())
+    // the programmatic route resolves the renamed column the same way
+    GraftTable.deleteWhere(spark, s"$wh/db/n", col("label") === second)
+    assert(!names().contains(second) && names().size == 23, names())
+  }
 }

@@ -74,7 +74,7 @@ class FormatDefaultWriteSpec extends SparkSpec {
     assert(one.rdd.getNumPartitions < all.rdd.getNumPartitions)
   }
 
-  test("orphan sweep reclaims crashed avro/orc task debris; DELETE refuses curated") {
+  test("orphan sweep reclaims crashed avro/orc task debris") {
     val wh = mkCatalog("fws")
     spark.sql("CREATE TABLE fws.db.t (k BIGINT) " +
       "TBLPROPERTIES ('write.format.default'='avro', " +
@@ -93,11 +93,29 @@ class FormatDefaultWriteSpec extends SparkSpec {
     // committed avro data files survived the sweep
     assert(spark.sql("SELECT count(*), sum(k) FROM fws.db.t").head() ==
       Row(10L, 45L))
-    // v2 DELETE over non-parquet data files refuses with the curated
-    // message (the position scan is parquet-only), not a footer error
-    val e = intercept[Exception](
-      spark.sql("DELETE FROM fws.db.t WHERE k = 1"))
-    assert(e.getMessage.contains("rewrite_data_files"), e.getMessage)
+  }
+
+  test("v2 and v3 DELETE over avro and orc data files removes exactly the matched rows") {
+    for (format <- Seq("avro", "orc"); version <- Seq(2, 3)) {
+      val cat = s"fwd_${format}_v$version"
+      val wh = mkCatalog(cat)
+      spark.sql(s"CREATE TABLE $cat.db.t (k BIGINT, v STRING) " +
+        s"TBLPROPERTIES ('write.format.default'='$format', " +
+        s"'format-version'='$version', 'commit-timestamp-ms'='1700000000000')")
+      spark.sql(s"INSERT INTO $cat.db.t SELECT id, concat('v', id) FROM range(0, 10)")
+      // the pushable DELETE scans the non-parquet files through the
+      // table reader; the programmatic one takes the same route
+      spark.sql(s"DELETE FROM $cat.db.t WHERE k = 1")
+      graft.iceberg.GraftTable.deleteWhere(spark, s"$wh/db/t",
+        org.apache.spark.sql.functions.col("v") === "v7")
+      val files = spark.sql(s"SELECT file_path FROM $cat.db.t.data_files")
+        .collect().map(_.getString(0))
+      assert(files.nonEmpty && files.forall(_.endsWith(s".$format")), files.mkString(", "))
+      assert(spark.sql(s"SELECT count(*), sum(k) FROM $cat.db.t").head() ==
+        Row(8L, 37L), cat)
+      assert(spark.sql(s"SELECT k, v FROM $cat.db.t ORDER BY k").collect().toSeq ==
+        Seq(0L, 2L, 3L, 4L, 5L, 6L, 8L, 9L).map(k => Row(k, s"v$k")), cat)
+    }
   }
 
   test("avro table: GraftTable.read and rewrite_data_files merge-on-read, then DELETE runs") {

@@ -11,8 +11,9 @@ class TableIngestSpec extends SparkSpec {
 
   private val T0 = 1700000000000L
 
-  private def freshTable(): String = {
-    val out = java.nio.file.Files.createTempDirectory("graft-ingest-spec").toString
+  private def freshTable(subdir: String = ""): String = {
+    val out = java.nio.file.Files.createDirectories(java.nio.file.Paths.get(
+      java.nio.file.Files.createTempDirectory("graft-ingest-spec").toString, subdir)).toString
     MetadataWriter.write(s"$out/v1.metadata.json", TableMetadata(
       2, "spec-uuid", out, T0, None, Some(0),
       Seq(IcebergSchema(0, Seq(
@@ -65,5 +66,14 @@ class TableIngestSpec extends SparkSpec {
       .select(col("data_file.file_path")).collect().map(_.getString(0))
     assert(files.length === 1)
     assert(spark.read.parquet(files.head).count() === 1)
+  }
+
+  test("a table directory whose name holds '%' and a space ingests") {
+    import spark.implicits._
+    val out = freshTable("a b%c")
+    val b0 = Seq((1L, "view", 1.5), (2L, "purchase", 2.5)).toDF("event_id", "event_type", "value")
+    assert(EventStreams.ingestBatch(spark, out, b0, 0L, 1) === 2)
+    val read = GraftTable.read(spark, s"$out/v2.metadata.json")
+    assert(read.select("event_id").as[Long].collect().sorted.toSeq === Seq(1L, 2L))
   }
 }
