@@ -10,7 +10,7 @@ import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
 /** Manifest-list sink: writes a snapshot's manifest-list Avro container
   * (the `manifest_file` record set Iceberg stores per snapshot — the core
   * v1 fields; see the fixture metadata's `manifest-list` pointer,
-  * /root/reference/src/test/resources/v1.metadata.json). The reference
+  * src/main/resources/graft/fixtures/v1.metadata.json). The reference
   * only READS containers; the writer completes the two-level planning
   * chain (snapshot → manifest-list → manifests → files) for tables whose
   * list file is absent, and doubles as the library's Avro container sink.

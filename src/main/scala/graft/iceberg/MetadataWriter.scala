@@ -10,7 +10,7 @@ import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
   * ref moved, the snapshot-log extended, and the superseded metadata file
   * recorded in the metadata-log. [[toJson]] renders the document in the
   * layout of the reference fixture
-  * (/root/reference/src/test/resources/v1.metadata.json:38-95): same keys,
+  * (src/main/resources/graft/fixtures/v1.metadata.json:38-95): same keys,
   * summary with `operation` first, v1 flat `partition-spec` alongside
   * `partition-specs`.
   *

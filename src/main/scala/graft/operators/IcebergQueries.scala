@@ -1,21 +1,48 @@
 package graft.operators
 
+import java.nio.file.{Files, Paths, StandardCopyOption}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.iceberg.{ManifestListWriter, ManifestReader, ManifestWriter, MetadataTables, ScanPlanning, TableMetadata}
 
-/** Iceberg-metadata analytics queries over the reference's own golden
-  * fixtures (read-only at /root/reference/src/test/resources — the same
-  * inputs its tests use, FIXTURES.md §1-2). These are rows-only correctness
-  * entries: DuckDB cannot read Avro manifests, so the driver records the
-  * weaker rows>0 check while the ScalaTest suite asserts the decoded ground
-  * truth (status, snapshot_id, bound values) from FIXTURES.md.
+/** Iceberg-metadata analytics queries over the repo-owned golden fixture
+  * pair (src/main/resources/graft/fixtures, FIXTURES.md §1-2): a v1
+  * metadata document and the manifest it lists. DuckDB cannot read Avro
+  * manifests, so GoldenOracles pins each entry's full expected rows, and
+  * the ScalaTest suite asserts the decoded ground truth (status,
+  * snapshot_id, bound values) from FIXTURES.md.
   */
 object IcebergQueries {
 
-  val FixtureManifest = "/root/reference/src/test/resources/1702989a-f66f-423a-aaf1-a01b9a699685-m0.avro"
-  val FixtureMetadata = "/root/reference/src/test/resources/v1.metadata.json"
+  /** The golden fixture `name` as a plain absolute local file path (callers
+    * stat and open it as a file). A resource packed in a jar — sbt's
+    * `run`/`runMain` put the main classes and resources on the classpath as
+    * one — is copied, under its own name, into a per-process scratch
+    * directory. Fails, naming the resource, when it is not on the classpath
+    * or is neither a file nor a jar entry. */
+  private[graft] def fixturePath(name: String,
+      loader: ClassLoader = getClass.getClassLoader): String = {
+    val resource = s"graft/fixtures/$name"
+    val url = Option(loader.getResource(resource)).getOrElse(
+      throw new IllegalStateException(s"golden fixture $resource is not on the classpath"))
+    url.getProtocol match {
+      case "file" => new java.io.File(url.toURI).getAbsolutePath
+      case "jar" =>
+        val out = Files.createDirectories(Paths.get(sys.props("java.io.tmpdir"),
+          s"graft-fixtures-${graft.Scratch.procToken}")).resolve(name)
+        val in = url.openStream()
+        try Files.copy(in, out, StandardCopyOption.REPLACE_EXISTING)
+        finally in.close()
+        out.toAbsolutePath.toString
+      case _ =>
+        throw new IllegalStateException(s"golden fixture $resource is not a local file: $url")
+    }
+  }
+
+  lazy val FixtureManifest: String = fixturePath("1702989a-f66f-423a-aaf1-a01b9a699685-m0.avro")
+  lazy val FixtureMetadata: String = fixturePath("v1.metadata.json")
 
   private def meta: TableMetadata = TableMetadata.parseFile(FixtureMetadata)
 

@@ -260,7 +260,7 @@ object Lakehouse {
     * `metadata.json` via MetadataWriter.commitSnapshot (snapshot appended,
     * current-snapshot-id advanced, main ref moved, snapshot-log extended,
     * superseded document recorded in the metadata-log — the structure of
-    * /root/reference/src/test/resources/v1.metadata.json:38-95). The gate:
+    * src/main/resources/graft/fixtures/v1.metadata.json:38-95). The gate:
     * everything after the commit re-reads ONLY the committed document and
     * the containers it references — per-snapshot lineage and file rollups
     * come from storage, not from in-memory state. The fixture's recorded

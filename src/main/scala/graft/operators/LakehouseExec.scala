@@ -19,7 +19,7 @@ import graft.iceberg.IcebergTypes.{TInt, TString}
   * file_size_in_bytes, lower/upper bounds) is DERIVED from the files on
   * disk — never pinned literals — and commits go through
   * MetadataWriter.commitSnapshot, the structure of the reference fixture
-  * (/root/reference/src/test/resources/v1.metadata.json:38-95). After the
+  * (src/main/resources/graft/fixtures/v1.metadata.json:38-95). After the
   * commit, every read resolves ONLY the committed document and the
   * containers it references (the same storage gate as i18).
   *

@@ -2,12 +2,14 @@ package graft.iceberg
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.operators.IcebergQueries
+
 /** The metadata sink must be the exact inverse of the parser, and a commit
   * must advance every pointer a reader resolves (current snapshot, main
   * ref, snapshot-log, metadata-log). */
 class MetadataWriterSpec extends AnyFunSuite {
 
-  private val fixture = "/root/reference/src/test/resources/v1.metadata.json"
+  private val fixture = IcebergQueries.FixtureMetadata
 
   test("toJson round-trips the fixture through the parser unchanged") {
     val parsed = TableMetadata.parseFile(fixture)
@@ -147,8 +149,7 @@ class MetadataWriterSpec extends AnyFunSuite {
     assert(back.head.upperBounds(1).toSeq === Seq[Byte](9, 0, 0, 0))
     // and the REFERENCE manifest (a much wider writer schema) projects
     // onto the core subset by Avro schema resolution
-    val fixtureEntries = ManifestWriter.read(
-      "/root/reference/src/test/resources/1702989a-f66f-423a-aaf1-a01b9a699685-m0.avro")
+    val fixtureEntries = ManifestWriter.read(IcebergQueries.FixtureManifest)
     assert(fixtureEntries.size === 2)
     assert(fixtureEntries.forall(_.recordCount === 1L))
     assert(fixtureEntries.forall(_.lowerBounds.contains(1)))
