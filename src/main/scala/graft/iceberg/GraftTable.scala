@@ -729,54 +729,6 @@ object GraftTable {
       nulls)
   }
 
-  /** Previous manifests with their original provenance, read from the
-    * refreshed base's list — what a commit carries forward. */
-  private def carryForward(base: TableMetadata)
-      : Seq[ManifestListReader.ManifestFileInfo] =
-    base.currentSnapshot.toSeq.flatMap(s => ManifestListReader.read(s.manifestList.get))
-
-  /** Carried manifests keep their field-507 partition summaries — a
-    * commit that re-lists them must not erase the pruning metadata (a
-    * delete commit would otherwise turn every pruned read unprunable). */
-  private def carriedSummaries(carried: Seq[ManifestListReader.ManifestFileInfo])
-      : Map[String, Seq[ManifestListWriter.FieldSummary]] =
-    carried.flatMap(i => i.summaries.map(ss => i.path -> ss.map(s =>
-      ManifestListWriter.FieldSummary(s.containsNull,
-        s.lower.getOrElse(Array.empty), s.upper.getOrElse(Array.empty))))).toMap
-
-  private def writeList(path: String, carried: Seq[ManifestListReader.ManifestFileInfo],
-      newManifest: String, newCount: Int, newContent: Int, snapId: Long,
-      newSummary: Option[(Int, Seq[ManifestListWriter.FieldSummary])] = None,
-      // the new manifest's field-516 minimum: a commit whose manifest
-      // re-emits carried EXISTING entries must record their true
-      // minimum sequence, or delete-side pruning wrongly skips deletes
-      // that still apply to them
-      newMinSeq: Option[Long] = None,
-      // per-tuple OUTPUT manifests (partition-scoped rewrites): each a
-      // content-0 manifest added at snapId carrying its partition's
-      // field-507 summary under its spec id — (path, specId, summary,
-      // added count). ONE plumbing site for the carried maps either way.
-      tupleManifests: Seq[(String, Int, Seq[ManifestListWriter.FieldSummary], Int)] = Nil)
-      : Unit =
-    ManifestListWriter.write(path,
-      (carried.map(_.path) ++ tupleManifests.map(_._1)) :+ newManifest, snapId,
-      addedDataFilesCount = newCount,
-      contents = (carried.map(i => i.path -> i.content) :+ (newManifest -> newContent)).toMap,
-      specIds = carried.map(i => i.path -> i.specId).toMap ++
-        tupleManifests.map(m => m._1 -> m._2) ++
-        newSummary.map { case (specId, _) => newManifest -> specId },
-      addedSnapshotIds = carried.map(i => i.path -> i.addedSnapshotId).toMap,
-      addedCounts = carried.map(i => i.path -> i.addedDataFilesCount).toMap ++
-        tupleManifests.map(m => m._1 -> m._4),
-      summaries = carriedSummaries(carried) ++
-        tupleManifests.map(m => m._1 -> m._3) ++
-        newSummary.map { case (_, fs) => newManifest -> fs },
-      // carried manifests keep their ORIGINAL sequence numbers (515/516);
-      // the new manifests default to snapId — this library's sequence
-      seqNums = carried.map(i => i.path -> i.sequenceNumber).toMap,
-      minSeqNums = carried.map(i => i.path -> i.minSequenceNumber).toMap ++
-        newMinSeq.map(newManifest -> _))
-
   /** Append `df` as one CAS-committed append snapshot, routed through
     * the DSv2 task-writer machinery (the round-8 `TableWrite` path): the
     * input is read ONCE and written at the INPUT'S parallelism — every
@@ -811,12 +763,6 @@ object GraftTable {
     }
   }
 
-  /** Commit PRE-WRITTEN data files as one append snapshot — the driver
-    * half of the DSv2 write route, where tasks already wrote the parquet
-    * and derived the bound stats inline. One manifest carries every
-    * entry; carried manifests keep their provenance; the CAS loop makes
-    * concurrent writers (either route) land on one linear history.
-    * `files` = (path, recordCount, sizeBytes, lowerBounds, upperBounds). */
   /** One pre-written file with task-derived stats; `partitionSummary`
     * (set for partitioned writes) is the file's transform-space tuple —
     * it earns the file its OWN manifest with a field-507 summary under
@@ -824,7 +770,7 @@ object GraftTable {
     * exactly like append's. */
   private[graft] final case class PendingFile(path: String, rows: Long, bytes: Long,
       lower: Map[Int, Array[Byte]], upper: Map[Int, Array[Byte]],
-      partitionSummary: Option[Seq[ManifestListWriter.FieldSummary]] = None,
+      partitionSummary: Option[Seq[ManifestListReader.FieldSummary]] = None,
       specId: Int = 0, fileFormat: String = "PARQUET",
       // v3 row lineage: true when the file MATERIALIZES _row_id /
       // _last_updated_sequence_number as physical columns (a rewrite
@@ -833,9 +779,36 @@ object GraftTable {
       carriesLineage: Boolean = false,
       // a pre-assigned first_row_id (zero-copy forks preserving the
       // source's lineage) — also exempt from fresh assignment
-      firstRowId: Option[Long] = None)
+      firstRowId: Option[Long] = None) {
+    /** The file's ADDED entry in snapshot `snapId`. */
+    def entry(snapId: Long, content: Int = 0): ManifestWriter.EntryData =
+      ManifestWriter.EntryData(1, snapId, path, rows, bytes, lower, upper,
+        content = content, sequenceNumber = Some(snapId), fileFormat = fileFormat,
+        firstRowId = firstRowId)
+  }
 
-  /** `replace = true` commits TRUNCATE-overwrite semantics: the new
+  /** The manifests of added data files: un-summarized files share one
+    * manifest; each summarized file gets its own with its field-507
+    * summary under its spec id (a list summary describes the WHOLE
+    * manifest). */
+  private def dataManifests(prefix: String, files: Seq[PendingFile], snapId: Long)
+      : Seq[SnapshotProducer.NewManifest] = {
+    val (plain, summarized) = files.partition(_.partitionSummary.isEmpty)
+    (if (plain.isEmpty) Nil
+     else Seq(SnapshotProducer.NewManifest(prefix, plain.map(_.entry(snapId))))) ++
+      summarized.zipWithIndex.map { case (f, i) =>
+        SnapshotProducer.NewManifest(prefix, Seq(f.entry(snapId)), 0, f.specId,
+          f.partitionSummary, f"-${i}%05d")
+      }
+  }
+
+  /** Commit PRE-WRITTEN data files as one append snapshot — the driver
+    * half of the DSv2 write route, where tasks already wrote the files
+    * and derived the bound stats inline. Carried manifests keep their
+    * provenance; the CAS loop makes concurrent writers (either route)
+    * land on one linear history.
+    *
+    * `replace = true` commits TRUNCATE-overwrite semantics: the new
     * snapshot lists ONLY the written files — previous data AND delete
     * manifests drop out (their files stay on disk for time travel until
     * expiry). */
@@ -860,80 +833,30 @@ object GraftTable {
     require(!stage || branch.isEmpty,
       "a wap.id staged commit targets main's lineage — " +
         "it does not combine with a branch target")
-    OptimisticCommit.commit(tableDir, (base0, basePath) => {
+    SnapshotProducer.commit(tableDir, branch) { a =>
       // every NON-staging commit onto main refuses under a staging
       // session on a wap-opted table — this catches the paths that never
       // see the DSv2 builder's wap capture (add_files imports LAND NEW
       // ROWS; onboarding forks; REPLACE TABLE): a session that asked to
       // stage must never silently publish. The DSv2 batch route passes
       // stage=true in exactly this situation, so it never trips this.
-      // The check covers BOTH sides of a property evolution: base0 (the
-      // table AS IT STANDS — REPLACE's property replacement must not
-      // sneak an overwrite past a wap-opted table just by omitting the
-      // property) AND the evolved result (a REPLACE that INTRODUCES
+      // The check covers BOTH sides of a property evolution: the table
+      // AS IT STANDS (REPLACE's property replacement must not sneak an
+      // overwrite past a wap-opted table just by omitting the property)
+      // AND the evolved result (a REPLACE that INTRODUCES
       // write.wap.enabled under a staging session must not publish the
       // very rows the new contract says to stage).
       if (!stage && branch.isEmpty)
-        refuseWapStage(base0, "this commit path (it does not stage)")
-      val base = evolve(base0)
-      if (!stage && branch.isEmpty && (base.properties ne base0.properties))
-        refuseWapStage(base.properties,
+        refuseWapStage(a.base, "this commit path (it does not stage)")
+      val evolved = evolve(a.base)
+      if (!stage && branch.isEmpty && (evolved.properties ne a.base.properties))
+        refuseWapStage(evolved.properties,
           "this commit path (the table definition it installs opts into WAP " +
             "but the rows would publish, not stage)")
-      val snapId = (base.snapshots.map(_.snapshotId) :+ 0L).max + 1
-      val attempt = java.util.UUID.randomUUID()
-      // a branch append chains from the BRANCH head (falling back to
-      // main's for a branch created implicitly by its first write):
-      // the parent pointer and the carried manifests both come from it —
-      // main's history is invisible to the staged lineage past the fork
-      val headId = branch.flatMap(b => base.refs.find(_.name == b))
-        .map(_.snapshotId).map(Some(_)).getOrElse(base.currentSnapshotId)
-      // un-summarized files share one manifest; each summarized file gets
-      // its own (a manifest-list summary describes the WHOLE manifest)
-      val (plain, summarized) = files.partition(_.partitionSummary.isEmpty)
-      def entry(f: PendingFile) = ManifestWriter.EntryData(1, snapId, f.path,
-        f.rows, f.bytes, f.lower, f.upper, content = 0,
-        sequenceNumber = Some(snapId), fileFormat = f.fileFormat,
-        firstRowId = f.firstRowId)
       // v3 row lineage: every appended file claims its id block, EXCEPT
-      // files with a pre-assigned id (zero-copy forks — entry carries it
-      // already, assignRowIds leaves non-empty firstRowId alone) and
-      // files materializing lineage as columns
-      val (assigned, base2) = assignRowIds(base, (plain ++ summarized).map(entry),
-        skip = e => files.exists(f => f.path == e.filePath && f.carriesLineage))
-      val (plainAssigned, sumAssigned) = assigned.splitAt(plain.length)
-      val plainManifest =
-        if (plain.isEmpty) Nil
-        else {
-          val m = s"$tableDir/m-append-$snapId-$attempt.avro"
-          ManifestWriter.write(m, plainAssigned)
-          Seq((m, None: Option[Seq[ManifestListWriter.FieldSummary]], 0))
-        }
-      val perFile = summarized.zip(sumAssigned).zipWithIndex.map { case ((f, e), i) =>
-        val m = f"$tableDir/m-append-$snapId-$attempt-${i}%05d.avro"
-        ManifestWriter.write(m, Seq(e))
-        (m, f.partitionSummary, f.specId)
-      }
-      val manifests = plainManifest ++ perFile
-      val carried =
-        if (replace) Nil
-        else if (branch.isEmpty) carryForward(base)
-        else headId.flatMap(base.snapshot).toSeq
-          .flatMap(s => ManifestListReader.read(s.manifestList.get))
-      val list = s"$tableDir/snap-$snapId-$attempt-list.avro"
-      ManifestListWriter.write(list, carried.map(_.path) ++ manifests.map(_._1), snapId,
-        addedDataFilesCount = files.size,
-        contents = carried.map(i => i.path -> i.content).toMap,
-        specIds = carried.map(i => i.path -> i.specId).toMap ++
-          manifests.map(m => m._1 -> m._3),
-        summaries = carriedSummaries(carried) ++
-          manifests.collect { case (m, Some(s), _) => m -> s },
-        addedSnapshotIds = carried.map(i => i.path -> i.addedSnapshotId).toMap,
-        addedCounts = carried.map(i => i.path -> i.addedDataFilesCount).toMap,
-        seqNums = carried.map(i => i.path -> i.sequenceNumber).toMap,
-        minSeqNums = carried.map(i => i.path -> i.minSequenceNumber).toMap)
-      val snap = Snapshot(snapId, headId, base.lastUpdatedMs + 1000,
-        Some(if (replace) "overwrite" else "append"),
+      // files with a pre-assigned id (zero-copy forks) and files
+      // materializing lineage as columns
+      SnapshotProducer.Commit(if (replace) "overwrite" else "append",
         Map("added-data-files" -> files.size.toString,
           "added-records" -> files.map(_.rows).sum.toString) ++ extraSummary ++
           // the stage MARKER distinguishes a genuinely staged snapshot
@@ -941,13 +864,14 @@ object GraftTable {
           // RECORDS a wap.id (branch writes, rolled-back heads) —
           // publish_changes publishes only marked stages
           (if (stage) Map("wap.staged" -> "true") else Map.empty),
-        Some(list), base.currentSchemaId)
-      branch match {
-        case None if stage => MetadataWriter.stageSnapshot(base2, snap, Some(basePath))
-        case None => MetadataWriter.commitSnapshot(base2, snap, Some(basePath))
-        case Some(b) => MetadataWriter.commitToBranch(base2, snap, b, Some(basePath))
-      }
-    })
+        // a branch append carries the BRANCH head's manifests: main's
+        // history is invisible to the staged lineage past the fork
+        carried = if (replace) Nil else a.headRows,
+        manifests = dataManifests("m-append", files, a.snapshotId),
+        stage = stage,
+        lineageFiles = files.filter(_.carriesLineage).map(_.path).toSet,
+        evolve = _ => evolved)
+    }
   }
 
   /** REPLACE TABLE committed as ONE metadata write (the atomic half of
@@ -1012,28 +936,6 @@ object GraftTable {
           defaultSortOrderId = 0,
           properties = Map("graft.metrics" -> "full") ++ newProps ++ ownership)
       })
-
-  /** v3 row lineage assignment: ADDED data entries claim contiguous
-    * first_row_id blocks from the document's `next-row-id` counter, in
-    * entry order, INSIDE the CAS closure (a retry re-assigns against the
-    * fresh base — ids are unique for the table's lifetime, never
-    * reused). Entries whose files MATERIALIZE lineage as columns
-    * (rewrites carrying moved rows' original ids — `skip`) and non-v3
-    * tables pass through untouched. */
-  private def assignRowIds(base: TableMetadata,
-      entries: Seq[ManifestWriter.EntryData],
-      skip: ManifestWriter.EntryData => Boolean = _ => false)
-      : (Seq[ManifestWriter.EntryData], TableMetadata) =
-    if (base.formatVersion < 3) (entries, base)
-    else {
-      var rid = base.nextRowId.getOrElse(0L)
-      val out = entries.map { e =>
-        if (e.content == 0 && e.status == 1 && e.firstRowId.isEmpty && !skip(e)) {
-          val a = e.copy(firstRowId = Some(rid)); rid += e.recordCount; a
-        } else e
-      }
-      (out, base.copy(nextRowId = Some(rid)))
-    }
 
   /** Distributed v3 DV write: group the ([[PathId]] file_path, pos)
     * frame per data file IN THE CLUSTER and let each write task emit ONE
@@ -1201,12 +1103,12 @@ object GraftTable {
       replacedPaths: Set[String], scannedDeletePaths: Set[String],
       branch: Option[String] = None)
       : OptimisticCommit.CommitResult =
-    OptimisticCommit.commit(tableDir, (base, basePath) => {
+    SnapshotProducer.commit(tableDir, branch) { a =>
+      val base = a.base
+      val snapId = a.snapshotId
       // branch-scoped edits bypass no audit gate (the other WAP path);
       // a main-targeting rewrite under a staging session STAGES
       val wap = wapEditDecision(branch, base.properties)
-      val snapId = (base.snapshots.map(_.snapshotId) :+ 0L).max + 1
-      val attempt = java.util.UUID.randomUUID()
       // with `branch`, the whole replace is BRANCH-SCOPED (the WAP story
       // for edits): live state, conflict validation, carried deletes and
       // the parent all come from the branch head, and only the branch
@@ -1222,16 +1124,6 @@ object GraftTable {
       validateNoNewDeletes(base, scannedDeletePaths, replacedNorm, branch)
       val untouched = curData.filterNot(e => replacedNorm.contains(PathId(e.filePath)))
         .map(_.copy(status = 0, snapshotId = snapId))
-      // v3 lineage: COW-rewritten files assign FRESH ids (Spark's
-      // group-based replace plan carries no metadata attributes for a
-      // connector to thread original ids through — the MOR delta route
-      // preserves identity; COW documents the identity change). Files
-      // that DO materialize lineage (engine-side rewrites) skip.
-      val (newEntries, base2) = assignRowIds(base,
-        files.map(f => ManifestWriter.EntryData(1, snapId, f.path,
-          f.rows, f.bytes, f.lower, f.upper, content = 0,
-          sequenceNumber = Some(snapId))),
-        skip = e => files.exists(f => f.path == e.filePath && f.carriesLineage))
       // the replaced files are recorded as DELETED tombstones (status 2,
       // original sequence/stats) — Iceberg's overwrite shape: scans drop
       // them (every reader filters status != 2), but the `entries`
@@ -1239,44 +1131,22 @@ object GraftTable {
       // what this commit removed without diffing snapshots
       val tombstones = curData.filter(e => replacedNorm.contains(PathId(e.filePath)))
         .map(_.copy(status = 2, snapshotId = snapId))
-      val manifest = s"$tableDir/m-rowlevel-$snapId-$attempt.avro"
-      ManifestWriter.write(manifest, untouched ++ newEntries ++ tombstones)
-      // the manifest holds carried EXISTING entries at their ORIGINAL
-      // sequences — field 516 must be the true minimum, or delete-side
-      // sequence pruning would wrongly skip deletes that still apply
-      val minSeq = (untouched ++ newEntries).flatMap(_.sequenceNumber)
-        .foldLeft(snapId)(math.min)
-      // delete manifests carry forward: they still scope to untouched
-      // files; rewritten groups were materialized post-MOR at a new seq
-      val carriedDeletes = (branch match {
-        case None => carryForward(base)
-        case Some(_) =>
-          head.toSeq.flatMap(s => ManifestListReader.read(s.manifestList.get))
-      }).filter(_.content == 1)
-      val list = s"$tableDir/snap-$snapId-$attempt-list.avro"
-      ManifestListWriter.write(list, carriedDeletes.map(_.path) :+ manifest, snapId,
-        addedDataFilesCount = files.size,
-        contents = carriedDeletes.map(i => i.path -> 1).toMap,
-        specIds = carriedDeletes.map(i => i.path -> i.specId).toMap,
-        summaries = carriedSummaries(carriedDeletes),
-        addedSnapshotIds = carriedDeletes.map(i => i.path -> i.addedSnapshotId).toMap,
-        addedCounts = carriedDeletes.map(i => i.path -> i.addedDataFilesCount).toMap,
-        seqNums = carriedDeletes.map(i => i.path -> i.sequenceNumber).toMap,
-        minSeqNums = carriedDeletes.map(i => i.path -> i.minSequenceNumber).toMap
-          + (manifest -> minSeq))
-      val snap = Snapshot(snapId, head.map(_.snapshotId), base.lastUpdatedMs + 1000,
-        Some("overwrite"),
+      // v3 lineage: COW-rewritten files assign FRESH ids (Spark's
+      // group-based replace plan carries no metadata attributes for a
+      // connector to thread original ids through — the MOR delta route
+      // preserves identity; COW documents the identity change). Files
+      // that DO materialize lineage (engine-side rewrites) skip.
+      SnapshotProducer.Commit("overwrite",
         Map("added-data-files" -> files.size.toString,
-          "deleted-data-files" -> replacedPaths.size.toString) ++
-          wap.summary,
-        Some(list), base.currentSchemaId)
-      branch match {
-        case None if wap.staged =>
-          MetadataWriter.stageSnapshot(base2, snap, Some(basePath))
-        case None => MetadataWriter.commitSnapshot(base2, snap, Some(basePath))
-        case Some(b) => MetadataWriter.commitToBranch(base2, snap, b, Some(basePath))
-      }
-    })
+          "deleted-data-files" -> replacedPaths.size.toString) ++ wap.summary,
+        // delete manifests carry forward: they still scope to untouched
+        // files; rewritten groups were materialized post-MOR at a new seq
+        carried = a.headRows.filter(_.content == 1),
+        manifests = Seq(SnapshotProducer.NewManifest("m-rowlevel",
+          untouched ++ files.map(_.entry(snapId)) ++ tombstones)),
+        stage = wap.staged,
+        lineageFiles = files.filter(_.carriesLineage).map(_.path).toSet)
+    }
 
   /** Hidden-partition pruned read WITH merge-on-read: `sourceFieldId =
     * value` converts into the spec's transform space (ScanPlanning
@@ -1522,9 +1392,9 @@ object GraftTable {
     // the delete files the scan applied — a delete committed AFTER this
     // set was read conflicts with the rewrite (validateNoNewDeletes)
     val scannedDeletes = currentEntries(meta0, 1).map(e => PathId(e.filePath)).toSet
-    OptimisticCommit.commit(tableDir, (base, basePath) => {
-      val snapId = (base.snapshots.map(_.snapshotId) :+ 0L).max + 1
-      val attempt = java.util.UUID.randomUUID()
+    SnapshotProducer.commit(tableDir) { a =>
+      val base = a.base
+      val snapId = a.snapshotId
       val curData = currentEntries(base, 0).filter(_.content == 0)
       val missing = affected.filterNot(curData.map(e => PathId(e.filePath)).toSet)
       if (missing.nonEmpty) throw OptimisticCommit.CommitConflictException(
@@ -1535,46 +1405,24 @@ object GraftTable {
         .map(_.copy(status = 0, snapshotId = snapId))
       // v3 lineage: COW-merged files assign fresh ids (same documented
       // identity rule as commitReplaceFiles — MOR preserves, COW renews)
-      val (newEntries, base2) = assignRowIds(base,
-        Par.inParallel(newFiles) { f =>
-          val (n, lower, upper) = deriveStats(spark, f, base)
-          ManifestWriter.EntryData(1, snapId, f, n, HadoopConfs.length(f),
-            lower, upper, content = 0, sequenceNumber = Some(snapId))
-        } ++ insertMsgs.map(m => // task-derived inline stats, no re-read
-          ManifestWriter.EntryData(1, snapId, m.path, m.rows, m.bytes,
-            m.lower, m.upper, content = 0, sequenceNumber = Some(snapId))))
-      val manifest = s"$tableDir/m-merge-$snapId-$attempt.avro"
-      ManifestWriter.write(manifest, untouched ++ newEntries)
-      // field 516 must be the true minimum over the carried EXISTING
-      // entries' original sequences — a 516 defaulted to snapId would let
-      // delete-side sequence pruning wrongly skip deletes that still
-      // apply to the untouched files
-      val minSeq = (untouched ++ newEntries).flatMap(_.sequenceNumber)
-        .foldLeft(snapId)(math.min)
-      // delete manifests carry forward: they still apply to untouched files
-      val carriedDeletes = carryForward(base).filter(_.content == 1)
-      val list = s"$tableDir/snap-$snapId-$attempt-list.avro"
-      ManifestListWriter.write(list, carriedDeletes.map(_.path) :+ manifest, snapId,
-        addedDataFilesCount = newFiles.size + insertMsgs.size,
-        contents = carriedDeletes.map(i => i.path -> 1).toMap,
-        specIds = carriedDeletes.map(i => i.path -> i.specId).toMap,
-        addedSnapshotIds = carriedDeletes.map(i => i.path -> i.addedSnapshotId).toMap,
-        addedCounts = carriedDeletes.map(i => i.path -> i.addedDataFilesCount).toMap,
-        summaries = carriedSummaries(carriedDeletes),
-        seqNums = carriedDeletes.map(i => i.path -> i.sequenceNumber).toMap,
-        minSeqNums = carriedDeletes.map(i => i.path -> i.minSequenceNumber).toMap
-          + (manifest -> minSeq))
+      val added = Par.inParallel(newFiles) { f =>
+        val (n, lower, upper) = deriveStats(spark, f, base)
+        ManifestWriter.EntryData(1, snapId, f, n, HadoopConfs.length(f),
+          lower, upper, content = 0, sequenceNumber = Some(snapId))
+      } ++ insertMsgs.map(m => // task-derived inline stats, no re-read
+        ManifestWriter.EntryData(1, snapId, m.path, m.rows, m.bytes,
+          m.lower, m.upper, content = 0, sequenceNumber = Some(snapId)))
       // the same stage-or-audit contract every row-level tail honors:
       // a wap-opted table under a staging session stages the MERGE
       val wap = wapEditDecision(None, base.properties, Some(spark))
-      val snap = Snapshot(snapId, base.currentSnapshotId, base.lastUpdatedMs + 1000,
-        Some("overwrite"),
+      SnapshotProducer.Commit("overwrite",
         Map("added-data-files" -> (newFiles.size + insertMsgs.size).toString,
           "deleted-data-files" -> affected.size.toString) ++ wap.summary,
-        Some(list), base.currentSchemaId)
-      if (wap.staged) MetadataWriter.stageSnapshot(base2, snap, Some(basePath))
-      else MetadataWriter.commitSnapshot(base2, snap, Some(basePath))
-    })
+        // delete manifests carry forward: they still apply to untouched files
+        carried = a.headRows.filter(_.content == 1),
+        manifests = Seq(SnapshotProducer.NewManifest("m-merge", untouched ++ added)),
+        stage = wap.staged)
+    }
   }
 
   /** One parsed `where` constraint for a partial rewrite: a top-level
@@ -1786,17 +1634,16 @@ object GraftTable {
     // spec id and its field-507 summary, carried to the output
     // manifests) — a second serial metadata sweep at 10^4+ manifests
     // would cost more than the rewrite's planning itself
-    type TupleTag = (String, Int, Seq[ManifestListWriter.FieldSummary])
-    val infos0 = carryForward(meta0)
+    type TupleTag = (String, Int, Seq[ManifestListReader.FieldSummary])
+    val infos0 = meta0.currentSnapshot.toSeq
+      .flatMap(s => ManifestListReader.read(s.manifestList.get))
     val plannedDeleteManifests = infos0.filter(_.content == 1).map(_.path).toSet
     val perManifest0: Seq[(Option[TupleTag], Seq[ManifestWriter.EntryData])] =
       Par.inParallel(infos0.filter(_.content == 0)) { i =>
         val tag = for {
           t <- MetadataTables.partitionTuple(meta0, i)
           ss <- i.summaries
-        } yield (t, i.specId, ss.map(s => ManifestListWriter.FieldSummary(
-          s.containsNull, s.lower.getOrElse(Array.empty),
-          s.upper.getOrElse(Array.empty))))
+        } yield (t, i.specId, ss)
         (tag, ManifestWriter.read(i.path)
           .map(e => e.copy(sequenceNumber =
             Some(e.sequenceNumber.getOrElse(i.sequenceNumber))))
@@ -1861,9 +1708,9 @@ object GraftTable {
     val tupleTagOf: Map[String, TupleTag] = perManifest0.collect {
       case (Some(tag), es) => es.map(e => PathId(e.filePath) -> tag)
     }.flatten.toMap
-    def keyOf(tag: TupleTag): (Int, Seq[(Seq[Byte], Seq[Byte])]) =
-      (tag._2, tag._3.map(s => (s.lower.toSeq, s.upper.toSeq)))
-    val tagByKey: Map[(Int, Seq[(Seq[Byte], Seq[Byte])]), TupleTag] =
+    def keyOf(tag: TupleTag): (Int, Seq[(Option[Seq[Byte]], Option[Seq[Byte]])]) =
+      (tag._2, tag._3.map(s => (s.lower.map(_.toSeq), s.upper.map(_.toSeq))))
+    val tagByKey: Map[(Int, Seq[(Option[Seq[Byte]], Option[Seq[Byte]])]), TupleTag] =
       tupleTagOf.values.map(v => keyOf(v) -> v).toMap
     def tupleGroupsOf(es: Seq[ManifestWriter.EntryData])
         : Seq[(Option[TupleTag], Seq[ManifestWriter.EntryData])] =
@@ -1950,13 +1797,13 @@ object GraftTable {
     }
     val selectedSet = selected.map(e => PathId(e.filePath)).toSet
     val scannedDeletes = (posEntries ++ eqEntries).map(_._1.filePath).toSet
-    OptimisticCommit.commit(tableDir, (base, basePath) => {
-      val snapId = (base.snapshots.map(_.snapshotId) :+ 0L).max + 1
-      val attempt = java.util.UUID.randomUUID()
+    SnapshotProducer.commit(tableDir) { a =>
+      val base = a.base
+      val snapId = a.snapshotId
       // ONE read of the base's data manifests per attempt serves the
       // conflict check AND the carry partition —
       // sequence numbers materialized exactly as entriesAt does
-      val infos = carryForward(base)
+      val infos = a.headRows
       val perManifest = Par.inParallel(infos.filter(_.content == 0))(i =>
         (i, ManifestWriter.read(i.path)
           .filter(e => e.status != 2 && e.content == 0)
@@ -1986,27 +1833,19 @@ object GraftTable {
           ManifestWriter.EntryData(1, snapId, f, n, HadoopConfs.length(f),
             lower, upper, content = 0, sequenceNumber = Some(snapId))
         }
-      val manifest = s"$tableDir/m-compact-$snapId-$attempt.avro"
-      val list = s"$tableDir/snap-$snapId-$attempt-list.avro"
-      // the per-tuple OUTPUT manifests, shared by BOTH branches: ONE
-      // manifest per tuple (never per output file — a sort of a
-      // 100-partition table into 50 files each must commit 100
-      // manifests, not 5000), written concurrently; each list row
-      // carries the tuple's summary and its true added count
+      // the per-tuple OUTPUT manifests: ONE manifest per tuple (never per
+      // output file — a sort of a 100-partition table into 50 files each
+      // must commit 100 manifests, not 5000), each carrying the tuple's
+      // summary under its spec id
       val outputTags: Seq[Option[TupleTag]] =
         if (sortedMsgs.nonEmpty) sortedTagged.map(_._2)
         else binGroups.map(_._1)
       val taggedOutputs = entries.zip(outputTags)
-      val perTuple: Seq[(String, Int, Seq[ManifestListWriter.FieldSummary], Int)] =
-        Par.inParallel(
-          taggedOutputs.collect { case (e, Some(tag)) => (keyOf(tag), (e, tag)) }
-            .groupBy(_._1).toSeq.sortBy(_._1.toString).zipWithIndex) {
-          case ((_, xs), i) =>
-            val es = xs.map(_._2._1)
-            val (_, specId, fs) = xs.head._2._2
-            val m = f"$tableDir/m-compact-$snapId-$attempt-${i}%05d.avro"
-            ManifestWriter.write(m, es)
-            (m, specId, fs, es.size)
+      val perTuple = taggedOutputs.collect { case (e, Some(tag)) => (keyOf(tag), (e, tag)) }
+        .groupBy(_._1).toSeq.sortBy(_._1.toString).zipWithIndex.map { case ((_, xs), i) =>
+          val (_, specId, fs) = xs.head._2._2
+          SnapshotProducer.NewManifest("m-compact", xs.map(_._2._1), 0, specId,
+            Some(fs), f"-${i}%05d")
         }
       val plainOutputs = taggedOutputs.collect { case (e, None) => e }
       // Manifests owning NO selected file carry VERBATIM (their
@@ -2019,18 +1858,12 @@ object GraftTable {
       // tombstone as DELETED entries (Iceberg's replace shape) —
       // invisible to scans, visible to the `entries` table. Untupled
       // outputs share that plain manifest; tupled ones got their own
-      // above. Field 516 must be the true minimum over the carried
-      // EXISTING entries, or delete-side sequence pruning would wrongly
-      // skip deletes that still apply to them.
+      // above.
       val (affected, untouched) = perManifest.partition { case (_, es) =>
         es.exists(e => selectedSet.contains(PathId(e.filePath))) }
       val (tombstoned, moved) = affected.flatMap(_._2)
         .partition(e => selectedSet.contains(PathId(e.filePath)))
-      ManifestWriter.write(manifest, plainOutputs ++
-        moved.map(_.copy(status = 0, snapshotId = snapId)) ++
-        tombstoned.map(_.copy(status = 2, snapshotId = snapId)))
-      val minSeq = (plainOutputs ++ moved).flatMap(_.sequenceNumber)
-        .foldLeft(snapId)(math.min)
+      val union = ScanPlanning.unionSummaries(base, affected.map(_._1))
       // Delete manifests: a partial rewrite carries them all — they still
       // scope to the carried files, while the outputs escape them by path
       // (position) and sequence (equality), their rows having been
@@ -2039,19 +1872,18 @@ object GraftTable {
       // validateNoNewDeletes proved they address no rewritten file.
       val carriedDeletes = infos.filter(i => i.content == 1 &&
         (where.isDefined || !plannedDeleteManifests(i.path)))
-      writeList(list, untouched.map(_._1) ++ carriedDeletes,
-        manifest, plainOutputs.size, 0, snapId,
-        ScanPlanning.unionSummaries(base, affected.map(_._1)),
-        Some(minSeq), perTuple)
-      MetadataWriter.commitSnapshot(base,
-        Snapshot(snapId, base.currentSnapshotId, base.lastUpdatedMs + 1000,
-          Some("replace"),
-          Map("added-data-files" ->
-              (if (sortedMsgs.nonEmpty) sortedMsgs.size else outFiles.size).toString,
-            "deleted-data-files" -> selected.size.toString),
-          Some(list), base.currentSchemaId),
-        Some(basePath))
-    })
+      SnapshotProducer.Commit("replace",
+        Map("added-data-files" ->
+            (if (sortedMsgs.nonEmpty) sortedMsgs.size else outFiles.size).toString,
+          "deleted-data-files" -> selected.size.toString),
+        carried = untouched.map(_._1) ++ carriedDeletes,
+        manifests = perTuple :+ SnapshotProducer.NewManifest("m-compact",
+          plainOutputs ++ moved.map(_.copy(status = 0, snapshotId = snapId)) ++
+            tombstoned.map(_.copy(status = 2, snapshotId = snapId)),
+          0, union.fold(0)(_._1), union.map(_._2)),
+        // the outputs carry the moved rows' lineage as columns
+        lineageFiles = entries.map(_.filePath).toSet)
+    }
   }
 
   /** `rewrite_position_delete_files`: resolve every pending EQUALITY
@@ -2134,6 +1966,9 @@ object GraftTable {
           org.apache.spark.sql.types.LongType))))
     val merged = parts.reduceOption(_ unionByName _)
       .map(_.distinct()).getOrElse(emptyDels)
+    // the manifests' spelling of each addressed data file: what both
+    // output forms write, so foreign readers match them verbatim
+    val manifestForm = dataE.map(x => PathId(x._1.filePath) -> x._1.filePath).toMap
     // v3 tables REWRITE INTO DELETION VECTORS — this procedure is the
     // upgrade path that converts a v2 table's accreted position-delete
     // parquet (and resolves its equality deletes) into one DV per data
@@ -2141,14 +1976,20 @@ object GraftTable {
     val v3 = meta0.formatVersion >= 3
     val dvRefRows: Seq[(String, String, Long, Long, Long, Long)] =
       if (!v3) Nil
-      else writeDvsDistributed(spark, tableDir, attempt, merged,
-        dataE.map(x => PathId(x._1.filePath) -> x._1.filePath).toMap,
-        (meta0.snapshots.map(_.snapshotId) :+ 0L).max + 1)
+      else writeDvsDistributed(spark, tableDir, attempt, merged, manifestForm,
+        SnapshotProducer.nextSnapshotId(meta0))
     val (nRows, delLower, delUpper) =
       if (v3) (dvRefRows.map(_._5).sum,
         Map.empty[Int, Array[Byte]], Map.empty[Int, Array[Byte]])
       else {
-        ParquetFiles.writeOne(merged.orderBy(col("file_path"), col("pos")), delFile)
+        // every address names a live data file (both sides above are
+        // scoped to them), so the spelling join keeps every row; the sort
+        // follows it, keeping the file ordered by the written file_path
+        import spark.implicits._
+        val spelled = merged.join(broadcast(manifestForm.toSeq.toDF("file_path", "spelling")),
+            Seq("file_path"))
+          .select(col("spelling").as("file_path"), col("pos"))
+        ParquetFiles.writeOne(spelled.orderBy(col("file_path"), col("pos")), delFile)
         val statRow = spark.read.schema(PosDeleteReadSchema).parquet(delFile).agg(
           count(lit(1)), min(col("file_path")), max(col("file_path")),
           min(col("pos")), max(col("pos"))).head()
@@ -2167,7 +2008,9 @@ object GraftTable {
       }
     val preDel = delE.map(e => PathId(e.filePath)).toSet
     val preData = dataE.map(x => PathId(x._1.filePath)).toSet
-    OptimisticCommit.commit(tableDir, (base, basePath) => {
+    SnapshotProducer.commit(tableDir) { a =>
+      val base = a.base
+      val snapId = a.snapshotId
       // the resolution above ran against meta0 — a concurrent commit that
       // changed either side of the MOR equation invalidates it
       val nowDel = currentEntries(base, 1).map(e => PathId(e.filePath)).toSet
@@ -2176,30 +2019,24 @@ object GraftTable {
       if (nowDel != preDel || nowData != preData)
         throw OptimisticCommit.CommitConflictException(
           "table delete/data file set changed while rewriting — rerun")
-      val snapId = (base.snapshots.map(_.snapshotId) :+ 0L).max + 1
-      val manifest = s"$tableDir/m-posrw-$snapId-$attempt.avro"
-      ManifestWriter.write(manifest,
-        if (v3) dvRefRows.map { case (ref, path, off, len, card, size) =>
-          DeletionVectors.entryFor(
-            DeletionVectors.DvRef(ref, path, off, len, card), snapId, snapId, size)
-        }
-        else Seq(ManifestWriter.EntryData(
-          1, snapId, delFile, nRows, HadoopConfs.length(delFile),
-          delLower, delUpper, content = 1, sequenceNumber = Some(snapId))))
-      val carried = carryForward(base).filter(_.content == 0)
-      val list = s"$tableDir/snap-$snapId-$attempt-list.avro"
-      writeList(list, carried, manifest, 0, 1, snapId,
-        ScanPlanning.unionSummaries(base, carried))
-      MetadataWriter.commitSnapshot(base,
-        Snapshot(snapId, base.currentSnapshotId, base.lastUpdatedMs + 1000,
-          Some("replace"),
-          Map("added-delete-files" -> (if (v3) dvRefRows.size else 1).toString,
-            "removed-delete-files" -> delE.size.toString,
-            "rewritten-equality-delete-files" -> eqE.size.toString) ++
-            (if (v3) Map("added-dvs" -> dvRefRows.size.toString) else Map.empty),
-          Some(list), base.currentSchemaId),
-        Some(basePath))
-    })
+      val carried = a.headRows.filter(_.content == 0)
+      val union = ScanPlanning.unionSummaries(base, carried)
+      SnapshotProducer.Commit("replace",
+        Map("added-delete-files" -> (if (v3) dvRefRows.size else 1).toString,
+          "removed-delete-files" -> delE.size.toString,
+          "rewritten-equality-delete-files" -> eqE.size.toString) ++
+          (if (v3) Map("added-dvs" -> dvRefRows.size.toString) else Map.empty),
+        carried = carried,
+        manifests = Seq(SnapshotProducer.NewManifest("m-posrw",
+          if (v3) dvRefRows.map { case (ref, path, off, len, card, size) =>
+            DeletionVectors.entryFor(
+              DeletionVectors.DvRef(ref, path, off, len, card), snapId, snapId, size)
+          }
+          else Seq(ManifestWriter.EntryData(
+            1, snapId, delFile, nRows, HadoopConfs.length(delFile),
+            delLower, delUpper, content = 1, sequenceNumber = Some(snapId))),
+          1, union.fold(0)(_._1), union.map(_._2))))
+    }
   }
 
   /** Snapshot expiry with physical cleanup: retain the newest `keepLast`
@@ -3360,66 +3197,54 @@ object GraftTable {
     * (DV entries, row-lineage fields) are not expressible in v2. */
   def upgradeFormatVersion(tableDir: String, v: Int): OptimisticCommit.CommitResult = {
     require(v == 2 || v == 3, s"unsupported format-version $v (2 or 3)")
-    OptimisticCommit.commit(tableDir, (base, basePath) => {
+    def upgraded(base: TableMetadata, nextRowId: Option[Long]): TableMetadata = {
       require(v >= base.formatVersion,
         s"cannot downgrade format-version ${base.formatVersion} -> $v")
-      val upgradedCore = base.copy(formatVersion = v,
-        nextRowId = if (v >= 3) base.nextRowId.orElse(Some(0L)) else base.nextRowId)
-      val upgraded = upgradedCore.copy(
-        lastUpdatedMs = base.lastUpdatedMs + 1000,
-        metadataLog = base.metadataLog :+ MetadataLogEntry(base.lastUpdatedMs, basePath))
-      // ROW LINEAGE backfill: v3 requires every live data file to carry
-      // a first_row_id (field 142). The upgrade assigns ids to all
-      // pre-existing files in ONE metadata-only replace commit (new
-      // manifests re-listing the same files with id blocks claimed in
-      // path order — zero data bytes, invisible to scans and changelog
-      // consumers like any replace). New commits then assign from the
-      // advanced counter.
-      val needBackfill = v >= 3 && base.formatVersion < 3 &&
-        base.currentSnapshotId.nonEmpty
-      if (!needBackfill) upgraded
-      else {
-        val snapId = (base.snapshots.map(_.snapshotId) :+ 0L).max + 1
-        val attempt = java.util.UUID.randomUUID()
-        val carried0 = carryForward(base)
-        var rid = upgraded.nextRowId.getOrElse(0L)
-        val carried = carried0.map { info =>
-          if (info.content != 0) info
-          else {
-            val es = ManifestWriter.read(info.path)
-            val assigned = es.map { e =>
-              if (e.content == 0 && e.status != 2 && e.firstRowId.isEmpty) {
-                val a = e.copy(firstRowId = Some(rid)); rid += e.recordCount; a
-              } else e
-            }
-            if (assigned == es) info
-            else {
-              val p = s"$tableDir/m-lineage-$snapId-$attempt-${info.path.hashCode.abs}.avro"
-              ManifestWriter.write(p, assigned)
-              info.copy(path = p)
-            }
+      base.copy(formatVersion = v, nextRowId = nextRowId)
+    }
+    def nextRowId(base: TableMetadata): Option[Long] =
+      if (v >= 3) base.nextRowId.orElse(Some(0L)) else base.nextRowId
+    // ROW LINEAGE backfill: v3 requires every live data file to carry a
+    // first_row_id (field 142). The upgrade assigns ids to all
+    // pre-existing files in ONE metadata-only replace commit (new
+    // manifests re-listing the same files with id blocks claimed in path
+    // order — zero data bytes, invisible to scans and changelog consumers
+    // like any replace). New commits then assign from the advanced
+    // counter. Any other upgrade changes the document alone.
+    def needsBackfill(base: TableMetadata): Boolean =
+      v >= 3 && base.formatVersion < 3 && base.currentSnapshotId.nonEmpty
+    // the path is chosen on the head as read; an attempt whose refreshed
+    // base needs the other one conflicts instead of landing a wrong shape
+    def raced(base: TableMetadata, backfill: Boolean): Unit =
+      if (needsBackfill(base) != backfill) throw OptimisticCommit.CommitConflictException(
+        s"$tableDir changed while upgrading to format-version $v — rerun")
+    if (!needsBackfill(TableMetadata.parseFile(latestMetadataPath(tableDir))))
+      OptimisticCommit.commit(tableDir, (base, basePath) => {
+        raced(base, backfill = false)
+        upgraded(base, nextRowId(base)).copy(
+          lastUpdatedMs = base.lastUpdatedMs + 1000,
+          metadataLog = base.metadataLog :+ MetadataLogEntry(base.lastUpdatedMs, basePath))
+      })
+    else SnapshotProducer.commit(tableDir) { a =>
+      raced(a.base, backfill = true)
+      var rid = nextRowId(a.base).getOrElse(0L)
+      val carried = a.headRows.map { info =>
+        if (info.content != 0) info
+        else {
+          val es = ManifestWriter.read(info.path)
+          val assigned = es.map { e =>
+            if (e.content == 0 && e.status != 2 && e.firstRowId.isEmpty) {
+              val withId = e.copy(firstRowId = Some(rid)); rid += e.recordCount; withId
+            } else e
           }
+          if (assigned == es) info
+          else a.rewrite(info, "m-lineage", s"-${info.path.hashCode.abs}", assigned)
         }
-        val list = s"$tableDir/snap-$snapId-$attempt-list.avro"
-        ManifestListWriter.write(list, carried.map(_.path), snapId,
-          addedDataFilesCount = 0,
-          contents = carried.map(i => i.path -> i.content).toMap,
-          specIds = carried.map(i => i.path -> i.specId).toMap,
-          addedSnapshotIds = carried.map(i => i.path -> i.addedSnapshotId).toMap,
-          addedCounts = carried.map(i => i.path -> i.addedDataFilesCount).toMap,
-          summaries = carriedSummaries(carried),
-          seqNums = carried.map(i => i.path -> i.sequenceNumber).toMap,
-          minSeqNums = carried.map(i => i.path -> i.minSequenceNumber).toMap)
-        MetadataWriter.commitSnapshot(
-          upgradedCore.copy(nextRowId = Some(rid)),
-          Snapshot(snapId, base.currentSnapshotId, base.lastUpdatedMs + 1000,
-            Some("replace"),
-            Map("row-lineage-backfill" -> "true",
-              "assigned-row-ids" -> rid.toString),
-            Some(list), base.currentSchemaId),
-          Some(basePath))
       }
-    })
+      SnapshotProducer.Commit("replace",
+        Map("row-lineage-backfill" -> "true", "assigned-row-ids" -> rid.toString),
+        carried, evolve = base => upgraded(base, Some(rid)))
+    }
   }
 
   def removeProperties(tableDir: String, keys: Seq[String]): OptimisticCommit.CommitResult =
@@ -3699,7 +3524,8 @@ object GraftTable {
   }
 
   def cherrypick(tableDir: String, snapshotId: Long): OptimisticCommit.CommitResult =
-    OptimisticCommit.commit(tableDir, (base, basePath) => {
+    SnapshotProducer.commit(tableDir) { a =>
+      val base = a.base
       val src = base.snapshot(snapshotId).getOrElse(
         throw new IllegalArgumentException(s"no such snapshot $snapshotId"))
       require(src.operation.forall(_ == "append"),
@@ -3729,38 +3555,16 @@ object GraftTable {
           throw new IllegalArgumentException(s"snapshot $snapshotId has no manifest-list")))
         .filter(_.addedSnapshotId == snapshotId)
       require(srcAdded.nonEmpty, s"snapshot $snapshotId added no manifests")
-      val snapId = (base.snapshots.map(_.snapshotId) :+ 0L).max + 1
-      val attempt = java.util.UUID.randomUUID()
       // fresh manifests at the NEW sequence: the staged entries become
       // ADDED rows of this commit (file paths are reused, bytes are not
       // copied — manifests are KB-scale)
       val rewritten = srcAdded.zipWithIndex.map { case (i, ix) =>
-        val entries = ManifestWriter.read(i.path).filter(_.status != 2)
-          .map(e => e.copy(status = 1, snapshotId = snapId,
-            sequenceNumber = Some(snapId)))
-        val m = f"$tableDir/m-cherry-$snapId-$attempt-${ix}%05d.avro"
-        ManifestWriter.write(m, entries)
-        (m, i)
+        SnapshotProducer.NewManifest("m-cherry", ManifestWriter.read(i.path)
+          .filter(_.status != 2).map(e => e.copy(status = 1,
+            snapshotId = a.snapshotId, sequenceNumber = Some(a.snapshotId))),
+          i.content, i.specId, i.summaries, f"-${ix}%05d")
       }
-      val carried = carryForward(base)
       val nAdded = srcAdded.map(_.addedDataFilesCount).sum
-      val list = s"$tableDir/snap-$snapId-$attempt-list.avro"
-      ManifestListWriter.write(list,
-        carried.map(_.path) ++ rewritten.map(_._1), snapId,
-        addedDataFilesCount = nAdded,
-        contents = carried.map(i => i.path -> i.content).toMap ++
-          rewritten.map { case (m, i) => m -> i.content },
-        specIds = carried.map(i => i.path -> i.specId).toMap ++
-          rewritten.map { case (m, i) => m -> i.specId },
-        addedSnapshotIds = carried.map(i => i.path -> i.addedSnapshotId).toMap,
-        addedCounts = carried.map(i => i.path -> i.addedDataFilesCount).toMap ++
-          rewritten.map { case (m, i) => m -> i.addedDataFilesCount },
-        summaries = carriedSummaries(carried) ++
-          rewritten.flatMap { case (m, i) => i.summaries.map(ss => m -> ss.map(s =>
-            ManifestListWriter.FieldSummary(s.containsNull,
-              s.lower.getOrElse(Array.empty), s.upper.getOrElse(Array.empty)))) },
-        seqNums = carried.map(i => i.path -> i.sequenceNumber).toMap,
-        minSeqNums = carried.map(i => i.path -> i.minSequenceNumber).toMap)
       // a cherry-picked STAGE gets a DURABLE publication stamp on the
       // stage itself: the lineage-membership and marker checks both rot
       // once the marker snapshot expires or main rolls past it — without
@@ -3768,17 +3572,14 @@ object GraftTable {
       // pinned forever by keepLast expiry and re-publishable (row
       // duplication). Mutating the staged snapshot's summary is safe:
       // nothing references an off-lineage stage.
-      val stamped = base.copy(snapshots = base.snapshots.map(s =>
-        if (s.snapshotId == snapshotId && s.summary.contains("wap.staged"))
-          s.copy(summary = s.summary + ("wap.published" -> "true")) else s))
-      MetadataWriter.commitSnapshot(stamped,
-        Snapshot(snapId, base.currentSnapshotId, base.lastUpdatedMs + 1000,
-          Some("append"),
-          Map("added-data-files" -> nAdded.toString,
-            "cherry-picked-snapshot-id" -> snapshotId.toString),
-          Some(list), base.currentSchemaId),
-        Some(basePath))
-    })
+      SnapshotProducer.Commit("append",
+        Map("added-data-files" -> nAdded.toString,
+          "cherry-picked-snapshot-id" -> snapshotId.toString),
+        carried = a.headRows, manifests = rewritten,
+        evolve = b => b.copy(snapshots = b.snapshots.map(s =>
+          if (s.snapshotId == snapshotId && s.summary.contains("wap.staged"))
+            s.copy(summary = s.summary + ("wap.published" -> "true")) else s)))
+    }
 
   /** Consolidate the current snapshot's DATA manifests through the CAS
     * loop — one manifest per partition TUPLE for tuple-pure manifests
@@ -3829,11 +3630,9 @@ object GraftTable {
           PathId(e.filePath) -> deriveStatsFor(spark, e.filePath, fields)._4
         }.toOption
       }.flatten.toMap
-    OptimisticCommit.commit(tableDir, (base, basePath) => {
-      val snapId = (base.snapshots.map(_.snapshotId) :+ 0L).max + 1
-      val attempt = java.util.UUID.randomUUID()
-      val carried = carryForward(base)
-      val (dataInfos, delInfos) = carried.partition(_.content == 0)
+    SnapshotProducer.commit(tableDir) { a =>
+      val base = a.base
+      val (dataInfos, delInfos) = a.headRows.partition(_.content == 0)
       require(dataInfos.nonEmpty, "rewrite_manifests on a table with no data manifests")
       // ONE concurrent sweep: entries with materialized provenance
       // (inherited sequences resolve against the OWNING list row,
@@ -3861,91 +3660,48 @@ object GraftTable {
             (s.lower.map(_.toSeq), s.upper.map(_.toSeq)))))
         .toSeq.sortBy(_._1.toString)
         .filter(_._2.exists(_._3.nonEmpty))
-      val rewrittenTuple = Par.inParallel(tupleGroups.zipWithIndex) {
-        case ((_, g), j) =>
-          val entries = g.flatMap(_._3)
-          val m = f"$tableDir/m-rewrite-$snapId-$attempt-t${j}%05d.avro"
-          ManifestWriter.write(m, entries)
-          val minSeq = (entries.flatMap(_.sequenceNumber) :+ snapId).min
-          val i0 = g.head._1
-          (m, i0.specId, minSeq, i0.summaries.map(_.map(s =>
-            ManifestListWriter.FieldSummary(s.containsNull,
-              s.lower.getOrElse(Array.empty), s.upper.getOrElse(Array.empty)))))
+      val rewrittenTuple = tupleGroups.zipWithIndex.map { case ((_, g), j) =>
+        val i0 = g.head._1
+        SnapshotProducer.NewManifest("m-rewrite", g.flatMap(_._3), 0, i0.specId,
+          i0.summaries, f"-t${j}%05d")
       }
-      val bySpec = untagged.groupBy(_._1.specId).toSeq.sortBy(_._1)
-        .filter(_._2.exists(_._3.nonEmpty))
-      val rewrittenSpec = bySpec.map { case (specId, g) =>
-        val entries = g.flatMap(_._3)
-        val m = s"$tableDir/m-rewrite-$snapId-$attempt-spec$specId.avro"
-        ManifestWriter.write(m, entries)
-        val minSeq = (entries.flatMap(_.sequenceNumber) :+ snapId).min
-        (m, specId, minSeq,
-          ScanPlanning.unionSummaries(base, g.map(_._1)).map(_._2))
-      }
-      val rewritten = rewrittenTuple ++ rewrittenSpec
+      val rewrittenSpec = untagged.groupBy(_._1.specId).toSeq.sortBy(_._1)
+        .filter(_._2.exists(_._3.nonEmpty)).map { case (specId, g) =>
+          SnapshotProducer.NewManifest("m-rewrite", g.flatMap(_._3), 0, specId,
+            ScanPlanning.unionSummaries(base, g.map(_._1)).map(_._2), s"-spec$specId")
+        }
       // delete manifests: ONE concurrent sweep serves both the
       // needs-backfill test and the rewrite (the same single-read rule
       // the data side follows) — verbatim unless a pre-110 equality
-      // entry needs its null counts backfilled
+      // entry needs its null counts backfilled; a backfilled delete
+      // manifest keeps its ORIGINAL provenance: the deletes were added
+      // by their own commit, not this rewrite
       val perDelManifest = Par.inParallel(delInfos)(i =>
         (i, ManifestWriter.read(i.path)))
-      val (delFix, delCarry) = perDelManifest.partition { case (_, es) =>
-        es.exists(e => e.status != 2 && e.content == 2 &&
+      def needsFix(es: Seq[ManifestWriter.EntryData]) = es.exists(e =>
+        e.status != 2 && e.content == 2 &&
           e.nullValueCounts.isEmpty && backfill.contains(PathId(e.filePath)))
-      }
-      val delRewritten = delFix.zipWithIndex.map { case ((i, es), j) =>
-        val entries = es.filter(_.status != 2).map { e =>
-          val filled =
-            if (e.content == 2 && e.nullValueCounts.isEmpty)
-              backfill.getOrElse(PathId(e.filePath), e.nullValueCounts)
-            else e.nullValueCounts
-          e.copy(status = 0,
-            snapshotId = if (e.snapshotId == 0L) i.addedSnapshotId else e.snapshotId,
-            sequenceNumber = Some(e.sequenceNumber.getOrElse(i.sequenceNumber)),
-            nullValueCounts = filled)
+      val fixed = perDelManifest.filter(x => needsFix(x._2)).map(_._1.path).zipWithIndex.toMap
+      val delRows = perDelManifest.map { case (i, es) =>
+        fixed.get(i.path).fold(i) { j =>
+          a.rewrite(i, "m-rewrite-del", f"-${j}%03d", es.filter(_.status != 2).map { e =>
+            val filled =
+              if (e.content == 2 && e.nullValueCounts.isEmpty)
+                backfill.getOrElse(PathId(e.filePath), e.nullValueCounts)
+              else e.nullValueCounts
+            e.copy(status = 0,
+              snapshotId = if (e.snapshotId == 0L) i.addedSnapshotId else e.snapshotId,
+              sequenceNumber = Some(e.sequenceNumber.getOrElse(i.sequenceNumber)),
+              nullValueCounts = filled)
+          })
         }
-        val m = f"$tableDir/m-rewrite-del-$snapId-$attempt-${j}%03d.avro"
-        ManifestWriter.write(m, entries)
-        (m, i)
       }
-      val delCarryInfos = delCarry.map(_._1)
-      val list = s"$tableDir/snap-$snapId-$attempt-list.avro"
-      ManifestListWriter.write(list,
-        rewritten.map(_._1) ++ delRewritten.map(_._1) ++ delCarryInfos.map(_.path),
-        snapId,
-        addedDataFilesCount = 0,
-        contents = (rewritten.map(r => r._1 -> 0) ++
-          delRewritten.map(d => d._1 -> 1) ++
-          delCarryInfos.map(i => i.path -> 1)).toMap,
-        specIds = rewritten.map(r => r._1 -> r._2).toMap ++
-          delRewritten.map(d => d._1 -> d._2.specId) ++
-          delCarryInfos.map(i => i.path -> i.specId),
-        addedSnapshotIds = (rewritten.map(r => r._1 -> snapId) ++
-          // a backfilled delete manifest keeps its ORIGINAL provenance:
-          // the deletes were added by their own commit, not this rewrite
-          delRewritten.map(d => d._1 -> d._2.addedSnapshotId) ++
-          delCarryInfos.map(i => i.path -> i.addedSnapshotId)).toMap,
-        addedCounts = (rewritten.map(r => r._1 -> 0) ++
-          delRewritten.map(d => d._1 -> d._2.addedDataFilesCount) ++
-          delCarryInfos.map(i => i.path -> i.addedDataFilesCount)).toMap,
-        summaries = rewritten.flatMap(r => r._4.map(s => r._1 -> s)).toMap ++
-          delRewritten.flatMap(d => carriedSummaries(Seq(d._2)).values
-            .headOption.map(d._1 -> _)) ++
-          carriedSummaries(delCarryInfos),
-        seqNums = (rewritten.map(r => r._1 -> snapId) ++
-          delRewritten.map(d => d._1 -> d._2.sequenceNumber) ++
-          delCarryInfos.map(i => i.path -> i.sequenceNumber)).toMap,
-        minSeqNums = (rewritten.map(r => r._1 -> r._3) ++
-          delRewritten.map(d => d._1 -> d._2.minSequenceNumber) ++
-          delCarryInfos.map(i => i.path -> i.minSequenceNumber)).toMap)
-      MetadataWriter.commitSnapshot(base,
-        Snapshot(snapId, base.currentSnapshotId, base.lastUpdatedMs + 1000,
-          Some("replace"),
-          Map("manifests-replaced" -> (dataInfos.size + delFix.size).toString,
-            "manifests-added" -> (rewritten.size + delRewritten.size).toString),
-          Some(list), base.currentSchemaId),
-        Some(basePath))
-    })
+      val rewritten = rewrittenTuple ++ rewrittenSpec
+      SnapshotProducer.Commit("replace",
+        Map("manifests-replaced" -> (dataInfos.size + fixed.size).toString,
+          "manifests-added" -> (rewritten.size + fixed.size).toString),
+        carried = delRows, manifests = rewritten)
+    }
   }
 
   /** The orphan set as a DATAFRAME — columns `path` (exact filesystem
@@ -4276,67 +4032,27 @@ object GraftTable {
           .map(e => PathId(e.filePath) -> e.filePath).toMap
         val refs = writeDvsDistributed(spark, tableDir, dvAttempt,
           newDels.unionByName(oldPositions), manifestForm,
-          (meta0.snapshots.map(_.snapshotId) :+ 0L).max + 1)
+          SnapshotProducer.nextSnapshotId(meta0))
         val delE = entriesAt(refHead(meta0, branch), 1).filter(_.content == 1)
         (refs,
           oldDvEntries.map(e => (PathId(e.filePath), e.contentOffset.getOrElse(0L))).toSet,
           delE.map(e => (PathId(e.filePath), e.contentOffset.getOrElse(0L))).toSet)
       }
-    val result = OptimisticCommit.commit(tableDir, (base, basePath) => {
-      val snapId = (base.snapshots.map(_.snapshotId) :+ 0L).max + 1
+    val result = SnapshotProducer.commit(tableDir, branch) { a =>
+      val base = a.base
+      val snapId = a.snapshotId
       // with `branch`, the delta lands BRANCH-SCOPED: validation, carried
       // manifests and the parent come from the branch head; only the
       // branch ref moves. A main-targeting delta under a staging session
       // STAGES instead (wapEditDecision — fast-forward-only publication)
       val wap = wapEditDecision(branch, base.properties)
       val head = refHead(base, branch)
-      val owned = Par.inParallel(head.toSeq
-          .flatMap(s => ManifestListReader.read(s.manifestList.get))
-          .filter(_.content == 0))(i => i -> ManifestWriter.read(i.path)
+      val owned = Par.inParallel(a.headRows.filter(_.content == 0))(i =>
+        i -> ManifestWriter.read(i.path)
           .filter(e => e.status != 2 && e.content == 0).map(e => PathId(e.filePath)))
       val missing = targets -- owned.flatMap(_._2)
       if (missing.nonEmpty) throw OptimisticCommit.CommitConflictException(
         s"row-level delete targets removed by a concurrent commit: ${missing.mkString(", ")}")
-      val delSummary = ScanPlanning.unionSummaries(base,
-        owned.collect { case (i, ids) if ids.exists(targets) => i })
-      val attempt = java.util.UUID.randomUUID()
-      def entry(f: PendingFile, content: Int) = ManifestWriter.EntryData(
-        1, snapId, f.path, f.rows, f.bytes, f.lower, f.upper,
-        content = content, sequenceNumber = Some(snapId))
-      val (plain, summarized) = dataFiles.partition(_.partitionSummary.isEmpty)
-      // v3 lineage: delta data files claim fresh id blocks EXCEPT those
-      // that materialize lineage columns (update-written files carrying
-      // the original rows' ids through)
-      val (dataAssigned, base2) = assignRowIds(base,
-        (plain ++ summarized).map(entry(_, 0)),
-        skip = e => dataFiles.exists(f => f.path == e.filePath && f.carriesLineage))
-      val (plainAssigned, sumAssigned) = dataAssigned.splitAt(plain.length)
-      val plainData =
-        if (plain.isEmpty) Nil
-        else {
-          val m = s"$tableDir/m-delta-data-$snapId-$attempt.avro"
-          ManifestWriter.write(m, plainAssigned)
-          Seq((m, None: Option[Seq[ManifestListWriter.FieldSummary]], 0, 0))
-        }
-      val perFile = summarized.zip(sumAssigned).zipWithIndex.map { case ((f, e), i) =>
-        val m = f"$tableDir/m-delta-data-$snapId-$attempt-${i}%05d.avro"
-        ManifestWriter.write(m, Seq(e))
-        (m, f.partitionSummary, f.specId, 0)
-      }
-      val delManifests =
-        if (deleteFiles.isEmpty) Nil
-        else {
-          val m = s"$tableDir/m-delta-del-$snapId-$attempt.avro"
-          // v3: the DVs written before the commit land instead of the
-          // task parquet (which stays an uncommitted intermediate)
-          ManifestWriter.write(m,
-            if (v3Dv) dvRefRows.map { case (ref, path, off, len, card, size) =>
-              DeletionVectors.entryFor(
-                DeletionVectors.DvRef(ref, path, off, len, card), snapId, snapId, size)
-            }
-            else deleteFiles.map(entry(_, 1)))
-          Seq((m, delSummary.map(_._2), delSummary.fold(0)(_._1), 1))
-        }
       if (v3Dv) {
         // merge-on-write staleness guard: the DVs absorbed the delete
         // state AS OF meta0 and this commit drops the absorbed entries —
@@ -4347,17 +4063,24 @@ object GraftTable {
         if (nowDel != dvPreDel) throw OptimisticCommit.CommitConflictException(
           "table delete state changed while writing deletion vectors — rerun")
       }
-      val manifests = plainData ++ perFile ++ delManifests
-      val carried0 = branch match {
-        case None => carryForward(base)
-        case Some(_) =>
-          head.toSeq.flatMap(s => ManifestListReader.read(s.manifestList.get))
-      }
+      val delSummary = ScanPlanning.unionSummaries(base,
+        owned.collect { case (i, ids) if ids.exists(targets) => i })
+      val delManifest =
+        if (deleteFiles.isEmpty) Nil
+        else Seq(SnapshotProducer.NewManifest("m-delta-del",
+          // v3: the DVs written before the commit land instead of the
+          // task parquet (which stays an uncommitted intermediate)
+          if (v3Dv) dvRefRows.map { case (ref, path, off, len, card, size) =>
+            DeletionVectors.entryFor(
+              DeletionVectors.DvRef(ref, path, off, len, card), snapId, snapId, size)
+          }
+          else deleteFiles.map(_.entry(snapId, content = 1)),
+          1, delSummary.fold(0)(_._1), delSummary.map(_._2)))
       // v3 supersede: carried delete manifests drop the old DV entries
       // for re-covered files (the new DVs carry their every position)
       val carried =
-        if (dvSuperseded.isEmpty) carried0
-        else carried0.flatMap { info =>
+        if (dvSuperseded.isEmpty) a.headRows
+        else a.headRows.flatMap { info =>
           if (info.content != 1) Some(info)
           else {
             val es = ManifestWriter.read(info.path)
@@ -4365,28 +4088,10 @@ object GraftTable {
               dvSuperseded((PathId(e.filePath), e.contentOffset.getOrElse(0L))))
             if (keep.size == es.size) Some(info)
             else if (keep.isEmpty) None
-            else {
-              val p = s"$tableDir/m-dvrw-$snapId-$attempt-${info.path.hashCode.abs}.avro"
-              ManifestWriter.write(p, keep)
-              Some(info.copy(path = p))
-            }
+            else Some(a.rewrite(info, "m-dvrw", s"-${info.path.hashCode.abs}", keep))
           }
         }
-      val list = s"$tableDir/snap-$snapId-$attempt-list.avro"
-      ManifestListWriter.write(list, carried.map(_.path) ++ manifests.map(_._1), snapId,
-        addedDataFilesCount = dataFiles.size,
-        contents = carried.map(i => i.path -> i.content).toMap ++
-          manifests.map(m => m._1 -> m._4),
-        specIds = carried.map(i => i.path -> i.specId).toMap ++
-          manifests.map(m => m._1 -> m._3),
-        summaries = carriedSummaries(carried) ++
-          manifests.collect { case (m, Some(s), _, _) => m -> s },
-        addedSnapshotIds = carried.map(i => i.path -> i.addedSnapshotId).toMap,
-        addedCounts = carried.map(i => i.path -> i.addedDataFilesCount).toMap,
-        seqNums = carried.map(i => i.path -> i.sequenceNumber).toMap,
-        minSeqNums = carried.map(i => i.path -> i.minSequenceNumber).toMap)
-      val snap = Snapshot(snapId, head.map(_.snapshotId), base.lastUpdatedMs + 1000,
-        Some(if (dataFiles.isEmpty) "delete" else "overwrite"),
+      SnapshotProducer.Commit(if (dataFiles.isEmpty) "delete" else "overwrite",
         Map("added-data-files" -> dataFiles.size.toString,
           "added-records" -> dataFiles.map(_.rows).sum.toString,
           "added-delete-files" ->
@@ -4395,14 +4100,14 @@ object GraftTable {
           (if (v3Dv) Map("added-dvs" -> dvRefRows.size.toString,
             "removed-dvs" -> dvSuperseded.size.toString) else Map.empty) ++
           wap.summary,
-        Some(list), base.currentSchemaId)
-      branch match {
-        case None if wap.staged =>
-          MetadataWriter.stageSnapshot(base2, snap, Some(basePath))
-        case None => MetadataWriter.commitSnapshot(base2, snap, Some(basePath))
-        case Some(b) => MetadataWriter.commitToBranch(base2, snap, b, Some(basePath))
-      }
-    })
+        carried,
+        // v3 lineage: delta data files claim fresh id blocks EXCEPT those
+        // that materialize lineage columns (update-written files carrying
+        // the original rows' ids through)
+        dataManifests("m-delta-data", dataFiles, snapId) ++ delManifest,
+        stage = wap.staged,
+        lineageFiles = dataFiles.filter(_.carriesLineage).map(_.path).toSet)
+    }
     // the task parquet never entered the table on v3 — reclaim it now
     // that the commit won (best-effort; a crash here leaves orphans for
     // remove_orphan_files, never a corrupt table)
@@ -4437,24 +4142,20 @@ object GraftTable {
     val meta0 = TableMetadata.parseFile(metaPath0)
     val delPrefix = s"$tableDir/data/delete-${java.util.UUID.randomUUID()}"
     val taskConf = new SerializableHadoopConf(HadoopConfs.active())
-    // one task writes the file and reports the data files it addresses
-    // (the commit's conflict targets) — `_file` is the manifest spelling
+    // one task writes the file; its message names the data files it
+    // addresses (the commit's conflict targets) — `_file` is the
+    // manifest spelling
     val written = refHead(meta0, branch).toSeq.flatMap { head =>
       readInfos(spark, meta0, ManifestListReader.read(head.manifestList.get))
         .filter(predicate)
         .select(col("_file"), col("_pos")).as[(String, Long)]
         .repartition(1).sortWithinPartitions(col("_file"), col("_pos"))
         .mapPartitions { rows =>
-          val targets = scala.collection.mutable.ArrayBuffer.empty[String]
-          val tracked = rows.map { r =>
-            if (targets.isEmpty || targets.last != r._1) targets += r._1
-            r
-          }
           // attempt-unique, so a retried task never collides with debris
           val delPath =
             s"$delPrefix-${org.apache.spark.TaskContext.get().taskAttemptId()}.parquet"
-          graft.sources.GraftTableWrites.writePositionDeletes(delPath, tracked, taskConf.value)
-            .map(m => (m.path, m.rows, m.bytes, m.lower, m.upper, targets.toSeq)).iterator
+          graft.sources.GraftTableWrites.writePositionDeletes(delPath, rows, taskConf.value)
+            .map(m => (m.path, m.rows, m.bytes, m.lower, m.upper, m.targets)).iterator
         }.collect().toSeq
     }
     written match {
@@ -4576,65 +4277,27 @@ object GraftTable {
     val (nKeys, eqLower, eqUpper, eqNulls) =
       deriveStatsFor(spark, eqFile, keyFields)
     val totalRows = dataMsgs.map(_.rows).sum
-    OptimisticCommit.commit(tableDir, (base, basePath) => {
-      val snapId = (base.snapshots.map(_.snapshotId) :+ 0L).max + 1
-      val attempt = java.util.UUID.randomUUID()
-      // v3 lineage: the upserted rows are NEW rows (an equality upsert is
-      // delete + insert — identity changes by the spec's own model)
-      val (upsertEntries, base2) = assignRowIds(base,
-        dataMsgs.map(m => ManifestWriter.EntryData(
-          1, snapId, m.path, m.rows, m.bytes, m.lower, m.upper,
-          content = 0, sequenceNumber = Some(snapId))))
-      // un-summarized data shares one manifest; each tuple-pure file gets
-      // its own with the tuple's field-507 summary (the append shape)
-      val tagged = dataMsgs.zip(upsertEntries)
-      val plainData = tagged.collect { case (m, e) if m.summary.isEmpty => e }
-      val plainManifest =
-        if (plainData.isEmpty) Nil
-        else {
-          val mData = s"$tableDir/m-upsert-data-$snapId-$attempt.avro"
-          ManifestWriter.write(mData, plainData)
-          Seq((mData, None: Option[Seq[ManifestListWriter.FieldSummary]], 0, plainData.size))
-        }
-      val perTuple = tagged.zipWithIndex.collect {
-        case ((m, e), i) if m.summary.nonEmpty =>
-          val mp = f"$tableDir/m-upsert-data-$snapId-$attempt-${i}%05d.avro"
-          ManifestWriter.write(mp, Seq(e))
-          (mp, m.summary, m.specId, 1)
-      }
-      val dataManifests = plainManifest ++ perTuple
-      val mEq = s"$tableDir/m-upsert-del-$snapId-$attempt.avro"
-      ManifestWriter.write(mEq, Seq(ManifestWriter.EntryData(
-        1, snapId, eqFile, nKeys, HadoopConfs.length(eqFile),
-        eqLower, eqUpper, content = 2, sequenceNumber = Some(snapId),
-        nullValueCounts = eqNulls)))
-      val carried = carryForward(base)
-      val list = s"$tableDir/snap-$snapId-$attempt-list.avro"
-      ManifestListWriter.write(list,
-        carried.map(_.path) ++ dataManifests.map(_._1) ++ Seq(mEq), snapId,
-        addedDataFilesCount = 0,
-        contents = carried.map(i => i.path -> i.content).toMap + (mEq -> 1),
-        specIds = carried.map(i => i.path -> i.specId).toMap ++
-          dataManifests.map(m => m._1 -> m._3),
-        summaries = carriedSummaries(carried) ++
-          dataManifests.collect { case (m, Some(s), _, _) => m -> s },
-        addedSnapshotIds = carried.map(i => i.path -> i.addedSnapshotId).toMap,
-        addedCounts = carried.map(i => i.path -> i.addedDataFilesCount).toMap ++
-          dataManifests.map(m => m._1 -> m._4),
-        seqNums = carried.map(i => i.path -> i.sequenceNumber).toMap,
-        minSeqNums = carried.map(i => i.path -> i.minSequenceNumber).toMap)
+    SnapshotProducer.commit(tableDir) { a =>
       // stage-or-audit, like every row-level tail: an equality upsert is
       // delete + insert, the definition of an audited edit
-      val wap = wapEditDecision(None, base.properties, Some(spark))
-      val snap = Snapshot(snapId, base.currentSnapshotId, base.lastUpdatedMs + 1000,
-        Some("overwrite"),
+      val wap = wapEditDecision(None, a.base.properties, Some(spark))
+      // v3 lineage: the upserted rows are NEW rows (an equality upsert is
+      // delete + insert — identity changes by the spec's own model).
+      // Un-summarized data shares one manifest; each tuple-pure file gets
+      // its own with the tuple's field-507 summary (the append shape).
+      SnapshotProducer.Commit("overwrite",
         Map("added-data-files" -> dataMsgs.size.toString,
           "added-records" -> totalRows.toString,
           "added-delete-files" -> "1",
           "added-equality-deletes" -> nKeys.toString) ++ wap.summary,
-        Some(list), base.currentSchemaId)
-      if (wap.staged) MetadataWriter.stageSnapshot(base2, snap, Some(basePath))
-      else MetadataWriter.commitSnapshot(base2, snap, Some(basePath))
-    })
+        a.headRows,
+        dataManifests("m-upsert-data", dataMsgs.map(graft.sources.GraftTableWrites.pending),
+          a.snapshotId) :+
+          SnapshotProducer.NewManifest("m-upsert-del", Seq(ManifestWriter.EntryData(
+            1, a.snapshotId, eqFile, nKeys, HadoopConfs.length(eqFile),
+            eqLower, eqUpper, content = 2, sequenceNumber = Some(a.snapshotId),
+            nullValueCounts = eqNulls)), content = 1),
+        stage = wap.staged)
+    }
   }
 }

@@ -22,7 +22,10 @@ object ManifestListWriter {
     * ENTIRE manifest — and every file it lists — without opening it. This
     * is the top level of Iceberg's two-level pruning: at 100 TB a scan
     * touches thousands of manifests, and list-level summaries keep the
-    * metadata read proportional to the matching manifests, not the table. */
+    * metadata read proportional to the matching manifests, not the table.
+    * This is the hand-built lists' shape, both bounds present; a commit
+    * lists [[ManifestListReader.FieldSummary]] rows, whose bounds may be
+    * absent. */
   final case class FieldSummary(
       containsNull: Boolean, lower: Array[Byte], upper: Array[Byte])
 
@@ -75,23 +78,21 @@ object ManifestListWriter {
         Schema.createArray(fieldSummarySchema))).withDefault(null)
       .endRecord()
 
-  /** `contents` marks delete manifests (path → 1); `specIds` records each
-    * manifest's partition-spec id (spec evolution leaves manifests written
-    * under older specs in place — readers must know which spec shaped each
-    * manifest's partition data). `addedSnapshotIds`/`addedCounts` preserve
-    * per-manifest provenance: a carried-forward manifest keeps the snapshot
-    * that originally added it (spec field 503), so list-level incremental
-    * planning (filter manifests by added_snapshot_id) stays sound across
-    * commits that re-list older manifests. Unlisted paths fall back to the
-    * committing snapshot / uniform count, so append-only call sites are
-    * unchanged. */
-  /** `seqNums`/`minSeqNums` carry each manifest's v2 sequence numbers
-    * (fields 515/516): a carried-forward manifest keeps its ORIGINAL
-    * commit's number so entry-level inheritance stays correct across
-    * re-listing commits. Unlisted paths default to `snapshotId` — this
-    * library assigns sequence numbers equal to snapshot ids (a strictly
-    * increasing linear history), so the committing snapshot's id IS the
-    * new manifest's sequence number. */
+  /** The manifest-list encoder: one `manifest_file` record per row, in
+    * order, every field as the row holds it — the row type
+    * [[ManifestListReader]] returns, so a commit carries the rows it read
+    * unchanged (length, provenance, sequence numbers and summaries,
+    * absent bounds included). */
+  def write(path: String, rows: Seq[ManifestListReader.ManifestFileInfo]): Unit =
+    encode(path, rows, "deflate")
+
+  /** Hand-built lists (fixtures): one row per `manifestPaths` entry,
+    * its length read from the file. `contents` marks delete manifests
+    * (path → 1); `specIds` records each manifest's partition-spec id;
+    * `addedSnapshotIds`/`addedCounts` its provenance (fields 503/504) and
+    * `seqNums`/`minSeqNums` its sequence numbers (fields 515/516). Unlisted
+    * paths fall back to `snapshotId` — this library assigns sequence
+    * numbers equal to snapshot ids — and to `addedDataFilesCount`. */
   def write(path: String, manifestPaths: Seq[String], snapshotId: Long,
       addedDataFilesCount: Int = 2, codec: String = "deflate",
       contents: Map[String, Int] = Map.empty,
@@ -100,33 +101,43 @@ object ManifestListWriter {
       addedSnapshotIds: Map[String, Long] = Map.empty,
       addedCounts: Map[String, Int] = Map.empty,
       seqNums: Map[String, Long] = Map.empty,
-      minSeqNums: Map[String, Long] = Map.empty): Unit = {
+      minSeqNums: Map[String, Long] = Map.empty): Unit =
+    encode(path, manifestPaths.map { p =>
+      val seq = seqNums.getOrElse(p, snapshotId)
+      ManifestListReader.ManifestFileInfo(p, HadoopConfs.length(p),
+        specIds.getOrElse(p, 0), addedSnapshotIds.getOrElse(p, snapshotId),
+        addedCounts.getOrElse(p, addedDataFilesCount), contents.getOrElse(p, 0),
+        summaries.get(p).map(_.map(s => ManifestListReader.FieldSummary(
+          s.containsNull, Some(s.lower), Some(s.upper)))),
+        seq, minSeqNums.getOrElse(p, seq))
+    }, codec)
+
+  private def encode(path: String, rows: Seq[ManifestListReader.ManifestFileInfo],
+      codec: String): Unit = {
     val w = new DataFileWriter[GenericRecord](
       new GenericDatumWriter[GenericRecord](manifestFileSchema))
     w.setCodec(org.apache.avro.file.CodecFactory.fromString(codec))
     w.create(manifestFileSchema, HadoopConfs.fileSystemFor(path)
       .create(new org.apache.hadoop.fs.Path(path), true))
-    try manifestPaths.foreach { p =>
+    val arrSchema = manifestFileSchema.getField("partitions").schema().getTypes.get(1)
+    try rows.foreach { i =>
       val r = new GenericData.Record(manifestFileSchema)
-      r.put("manifest_path", p)
-      r.put("manifest_length", HadoopConfs.length(p))
-      r.put("partition_spec_id", specIds.getOrElse(p, 0))
-      r.put("added_snapshot_id", addedSnapshotIds.getOrElse(p, snapshotId))
-      r.put("added_data_files_count", addedCounts.getOrElse(p, addedDataFilesCount))
-      r.put("content", contents.getOrElse(p, 0))
-      r.put("sequence_number", seqNums.getOrElse(p, snapshotId))
-      r.put("min_sequence_number",
-        minSeqNums.getOrElse(p, seqNums.getOrElse(p, snapshotId)))
-      summaries.get(p).foreach { fs =>
-        val arrSchema = manifestFileSchema.getField("partitions")
-          .schema().getTypes.get(1)
+      r.put("manifest_path", i.path)
+      r.put("manifest_length", i.length)
+      r.put("partition_spec_id", i.specId)
+      r.put("added_snapshot_id", i.addedSnapshotId)
+      r.put("added_data_files_count", i.addedDataFilesCount)
+      r.put("content", i.content)
+      r.put("sequence_number", i.sequenceNumber)
+      r.put("min_sequence_number", i.minSequenceNumber)
+      i.summaries.foreach { fs =>
         val arr = new GenericData.Array[GenericRecord](
           arrSchema, java.util.Collections.emptyList[GenericRecord]())
         fs.foreach { s =>
           val rec = new GenericData.Record(fieldSummarySchema)
           rec.put("contains_null", s.containsNull)
-          rec.put("lower_bound", ByteBuffer.wrap(s.lower))
-          rec.put("upper_bound", ByteBuffer.wrap(s.upper))
+          rec.put("lower_bound", s.lower.map(ByteBuffer.wrap).orNull)
+          rec.put("upper_bound", s.upper.map(ByteBuffer.wrap).orNull)
           arr.add(rec)
         }
         r.put("partitions", arr)

@@ -235,16 +235,17 @@ object ManifestWriter {
     * default), "snappy", "zstandard" — the reference wires the same codec
     * set (pom.xml:52-67); readers are codec-transparent (the container
     * header names the codec). Output goes through the session's Hadoop
-    * FileSystem so hdfs:// / s3a:// manifest locations resolve. */
-  def write(path: String, entries: Seq[EntryData], codec: String = "deflate"): Unit = {
+    * FileSystem so hdfs:// / s3a:// manifest locations resolve. Returns
+    * the written file's length in bytes (what its list row records). */
+  def write(path: String, entries: Seq[EntryData], codec: String = "deflate"): Long = {
     val dfSchema = entrySchema.getField("data_file").schema()
     val lower = dfSchema.getField("lower_bounds").schema().getTypes.get(1)
     val upper = dfSchema.getField("upper_bounds").schema().getTypes.get(1)
     val counts = dfSchema.getField("null_value_counts").schema().getTypes.get(1)
     val w = new DataFileWriter[GenericRecord](new GenericDatumWriter[GenericRecord](entrySchema))
     w.setCodec(org.apache.avro.file.CodecFactory.fromString(codec))
-    w.create(entrySchema, HadoopConfs.fileSystemFor(path)
-      .create(new org.apache.hadoop.fs.Path(path), true))
+    val out = HadoopConfs.fileSystemFor(path).create(new org.apache.hadoop.fs.Path(path), true)
+    w.create(entrySchema, out)
     try entries.foreach { e =>
       val df = new GenericData.Record(dfSchema)
       df.put("content", e.content)
@@ -266,5 +267,6 @@ object ManifestWriter {
       rec.put("data_file", df)
       w.append(rec)
     } finally w.close()
+    out.getPos // the bytes written through the stream, counted as they pass
   }
 }

@@ -100,12 +100,14 @@ object OptimisticCommit {
 
   /** Commit `update` with refresh-and-retry CAS semantics. The update
     * receives the freshly-parsed latest metadata and its path (for the
-    * metadata-log lineage) and returns the successor document — typically
-    * `MetadataWriter.commitSnapshot(base, snapshotFor(base), Some(path))`
-    * where `snapshotFor` derives parent/ids from the refreshed base. An
-    * update that cannot apply on the refreshed base (e.g. a file it
-    * planned to rewrite is gone) should throw — that aborts the commit
-    * rather than publishing a wrong table state. */
+    * metadata-log lineage) and returns the successor document. A commit
+    * that adds a snapshot goes through [[SnapshotProducer.commit]], which
+    * derives the snapshot, its manifests and its manifest list from the
+    * refreshed base inside this loop; metadata-only changes (properties,
+    * refs, schema, expiry) update the document directly. An update that
+    * cannot apply on the refreshed base (e.g. a file it planned to
+    * rewrite is gone) should throw — that aborts the commit rather than
+    * publishing a wrong table state. */
   def commit(tableDir: String, update: (TableMetadata, String) => TableMetadata,
       maxAttempts: Int = 5): CommitResult = {
     val fs = HadoopConfs.fileSystemFor(tableDir)

@@ -174,7 +174,7 @@ object ScanPlanning {
     * no summary always beats a wrong summary. */
   def unionSummaries(meta: TableMetadata,
       owners: Seq[ManifestListReader.ManifestFileInfo])
-      : Option[(Int, Seq[ManifestListWriter.FieldSummary])] = {
+      : Option[(Int, Seq[ManifestListReader.FieldSummary])] = {
     def minMax(vs: Seq[Any]): Option[(Any, Any)] =
       vs.foldLeft(Option(vs.head, vs.head)) { case (acc, v) =>
         for {
@@ -195,7 +195,7 @@ object ScanPlanning {
       sums = owners.flatMap(_.summaries)
       if sums.size == owners.size && sums.forall(_.size == spec.fields.length)
       fields <- spec.fields.zipWithIndex.foldLeft(
-          Option(Vector.empty[ManifestListWriter.FieldSummary])) {
+          Option(Vector.empty[ManifestListReader.FieldSummary])) {
         case (accOpt, (pf, i)) =>
           for {
             acc <- accOpt
@@ -208,9 +208,9 @@ object ScanPlanning {
               .filter(_.forall(_.isDefined)).map(_.flatten)
             (lo, _) <- minMax(lows)
             (_, hi) <- minMax(highs)
-          } yield acc :+ ManifestListWriter.FieldSummary(
+          } yield acc :+ ManifestListReader.FieldSummary(
             sums.exists(_(i).containsNull),
-            SingleValueCodec.encode(tt, lo), SingleValueCodec.encode(tt, hi))
+            Some(SingleValueCodec.encode(tt, lo)), Some(SingleValueCodec.encode(tt, hi)))
       }
     } yield (specId, fields)
   }

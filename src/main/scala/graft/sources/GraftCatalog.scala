@@ -826,27 +826,21 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
         else id -> bytes
       }
     // manifests (data-file paths + delete-entry path bounds), then lists
-    // (manifest paths), then the documents (list + log paths)
-    manifests.foreach { case (m, entries) =>
-      ManifestWriter.write(m, entries.map { e =>
+    // (manifest paths: each row keeps its fields and takes the rewritten
+    // manifest's length), then the documents (list + log paths)
+    val lengths = manifests.map { case (m, entries) =>
+      m -> ManifestWriter.write(m, entries.map { e =>
         val mapped = e.copy(filePath = map(e.filePath))
         if (e.content == 1) mapped.copy(lowerBounds = mapBound(e.lowerBounds),
           upperBounds = mapBound(e.upperBounds))
         else mapped
       })
-    }
+    }.toMap
     byList.foreach { case (l, infos) =>
-      ManifestListWriter.write(l, infos.map(i => map(i.path)),
-        infos.headOption.map(_.addedSnapshotId).getOrElse(0L),
-        contents = infos.map(i => map(i.path) -> i.content).toMap,
-        specIds = infos.map(i => map(i.path) -> i.specId).toMap,
-        summaries = infos.flatMap(i => i.summaries.map(ss => map(i.path) -> ss.map(s =>
-          ManifestListWriter.FieldSummary(s.containsNull,
-            s.lower.getOrElse(Array.empty), s.upper.getOrElse(Array.empty))))).toMap,
-        addedSnapshotIds = infos.map(i => map(i.path) -> i.addedSnapshotId).toMap,
-        addedCounts = infos.map(i => map(i.path) -> i.addedDataFilesCount).toMap,
-        seqNums = infos.map(i => map(i.path) -> i.sequenceNumber).toMap,
-        minSeqNums = infos.map(i => map(i.path) -> i.minSequenceNumber).toMap)
+      ManifestListWriter.write(l, infos.map { i =>
+        val m = map(i.path)
+        i.copy(path = m, length = lengths(m))
+      })
     }
     metas.foreach { case (v, meta) =>
       MetadataWriter.write(OptimisticCommit.metadataPath(dir, v), meta.copy(

@@ -1260,13 +1260,9 @@ class GraftTableDeltaBatchWrite(tableDir: String, schema: StructType,
     val dataLive = datas.filter(_.rows > 0)
     GraftTableWrites.drop(datas.filter(_.rows == 0))
     if (dels.isEmpty && dataLive.isEmpty) return // the operation matched nothing
-    // conflict-validation targets: the exact file set the deletes address
-    // (KB-scale — one distinct() over the per-task delete files)
-    val targets =
-      if (dels.isEmpty) Set.empty[String]
-      else org.apache.spark.sql.SparkSession.active.read
-        .parquet(dels.map(_.path): _*).select("file_path").distinct()
-        .collect().map(_.getString(0)).toSet
+    // conflict-validation targets: the exact file set the deletes
+    // address, as each delete writer reported it
+    val targets = dels.flatMap(_.targets).toSet
     def pending(m: GraftFileMessage) = GraftTable.PendingFile(
       m.path, m.rows, m.bytes, m.lower, m.upper, m.summary, m.specId,
       carriesLineage = m.carriesLineage)

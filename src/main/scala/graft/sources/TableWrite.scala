@@ -18,7 +18,7 @@ import org.apache.spark.sql.connector.expressions.{Expressions => VExpr,
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types._
 
-import graft.iceberg.{GraftTable, IcebergType, IcebergTypes, ManifestListWriter,
+import graft.iceberg.{GraftTable, IcebergType, IcebergTypes, ManifestListReader,
   PartitionTransforms, SingleValueCodec, TableMetadata}
 
 /** The write half of the DSv2 `graft-table` route:
@@ -175,7 +175,7 @@ class GraftTableWriteBuilder(metadataPath: String, info: LogicalWriteInfo,
   * position deletes — the delta route's delete files). */
 case class GraftFileMessage(path: String, rows: Long, bytes: Long,
     lower: Map[Int, Array[Byte]], upper: Map[Int, Array[Byte]],
-    summary: Option[Seq[ManifestListWriter.FieldSummary]], specId: Int,
+    summary: Option[Seq[ManifestListReader.FieldSummary]], specId: Int,
     content: Int = 0,
     // v3 row lineage: this data file MATERIALIZES _row_id (an
     // update-written delta file carrying the original rows' ids) — the
@@ -183,7 +183,10 @@ case class GraftFileMessage(path: String, rows: Long, bytes: Long,
     carriesLineage: Boolean = false,
     // manifest field 101 — PARQUET unless write.format.default says
     // avro/orc (append-in-kind for imported foreign tables)
-    fileFormat: String = "PARQUET")
+    fileFormat: String = "PARQUET",
+    // a position-delete file's addressed data files, as its rows spell
+    // them — the commit's conflict targets
+    targets: Seq[String] = Nil)
 
 case class GraftWriteMessage(files: Seq[GraftFileMessage]) extends WriterCommitMessage
 
@@ -252,7 +255,7 @@ object GraftTableWrites {
   /** The ONE GraftFileMessage → PendingFile mapping — shared by direct
     * commits and the staging catalog, so a field added to either shape
     * cannot silently drop on one path. */
-  private[sources] def pending(m: GraftFileMessage): GraftTable.PendingFile =
+  private[graft] def pending(m: GraftFileMessage): GraftTable.PendingFile =
     GraftTable.PendingFile(
       m.path, m.rows, m.bytes, m.lower, m.upper, m.summary, m.specId,
       fileFormat = m.fileFormat)
@@ -260,8 +263,9 @@ object GraftTableWrites {
   /** The one position-delete file writer: (file_path, pos) rows, already
     * in the (file_path, pos) order the spec requires, land as ONE parquet
     * with bound stats under Iceberg's reserved position-delete field ids
-    * (what lets readers scope the delete load per data file). None when
-    * there is no row — no file is created. */
+    * (what lets readers scope the delete load per data file). Its message
+    * names the distinct data files the rows address. None when there is
+    * no row — no file is created. */
   private[graft] def writePositionDeletes(path: String, sorted: Iterator[(String, Long)],
       conf: Configuration): Option[GraftFileMessage] =
     if (!sorted.hasNext) None
@@ -271,11 +275,15 @@ object GraftTableWrites {
         Seq((graft.iceberg.ManifestWriter.PosDeleteFilePathId, "file_path", IcebergTypes.TString),
           (graft.iceberg.ManifestWriter.PosDeletePosId, "pos", IcebergTypes.TLong)),
         None, 0, conf)
+      // the rows arrive grouped by file_path: each new path is a target
+      val targets = Seq.newBuilder[String]
+      var last: String = null
       sorted.foreach { case (f, p) =>
+        if (f != last) { targets += f; last = f }
         fw.write(new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
           Array[Any](org.apache.spark.unsafe.types.UTF8String.fromString(f), p)))
       }
-      Some(fw.finish().copy(content = 1))
+      Some(fw.finish().copy(content = 1, targets = targets.result()))
     }
 
   private[sources] def commit(tableDir: String, files: Seq[GraftFileMessage],
@@ -438,7 +446,7 @@ object GraftTableDataWriter {
     * path for imported foreign tables. */
   private[sources] def fileWriter(format: String, path: String,
       schema: StructType, fields: Seq[(Int, String, IcebergType)],
-      summary: Option[Seq[ManifestListWriter.FieldSummary]], specId: Int,
+      summary: Option[Seq[ManifestListReader.FieldSummary]], specId: Int,
       conf: Configuration): TaskFileWriter = format match {
     case "PARQUET" => new GraftFileWriter(path, schema, fields, summary, specId, conf)
     case "AVRO" => new AvroTaskFileWriter(path, schema, fields, summary, specId, conf)
@@ -545,11 +553,11 @@ class GraftTablePartitionedWriter(pathFor: Int => String, schema: StructType,
         s"transform $t over $st")
     }
 
-  private def summaryOf(tuple: Vector[Any]): Seq[ManifestListWriter.FieldSummary] =
+  private def summaryOf(tuple: Vector[Any]): Seq[ManifestListReader.FieldSummary] =
     specFields.zip(tuple).map { case ((idx, _, transform, outType), v) =>
       v match {
-        case null => ManifestListWriter.FieldSummary(containsNull = true,
-          Array.empty[Byte], Array.empty[Byte])
+        case null => ManifestListReader.FieldSummary(containsNull = true,
+          Some(Array.empty[Byte]), Some(Array.empty[Byte]))
         case value =>
           // identity tuples stay in Spark's raw domain (days/micros) —
           // encode through the same conversion the bound stats use;
@@ -558,7 +566,7 @@ class GraftTablePartitionedWriter(pathFor: Int => String, schema: StructType,
           val dt = if (transform == "identity") schema.fields(idx).dataType
             else outType.sparkType
           val b = GraftTableDataWriter.encode(outType, dt, value)
-          ManifestListWriter.FieldSummary(containsNull = false, b, b)
+          ManifestListReader.FieldSummary(containsNull = false, Some(b), Some(b))
       }
     }
 
@@ -680,7 +688,7 @@ private[sources] final class BoundTracker(schema: StructType,
 
 class GraftFileWriter(path: String, schema: StructType,
     fields: Seq[(Int, String, IcebergType)],
-    summary: Option[Seq[ManifestListWriter.FieldSummary]], specId: Int,
+    summary: Option[Seq[ManifestListReader.FieldSummary]], specId: Int,
     conf: Configuration) extends TaskFileWriter {
 
   import org.apache.parquet.schema.Type.Repetition
@@ -898,7 +906,7 @@ class GraftFileWriter(path: String, schema: StructType,
   * other writer — manifests don't care about the data format. */
 private[sources] final class AvroTaskFileWriter(path: String,
     schema: StructType, fields: Seq[(Int, String, IcebergType)],
-    summary: Option[Seq[ManifestListWriter.FieldSummary]], specId: Int,
+    summary: Option[Seq[ManifestListReader.FieldSummary]], specId: Int,
     conf: Configuration) extends TaskFileWriter {
   import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
 
@@ -952,7 +960,7 @@ private[sources] final class AvroTaskFileWriter(path: String,
   * decodes. Rows buffer through one VectorizedRowBatch. */
 private[sources] final class OrcTaskFileWriter(path: String,
     schema: StructType, fields: Seq[(Int, String, IcebergType)],
-    summary: Option[Seq[ManifestListWriter.FieldSummary]], specId: Int,
+    summary: Option[Seq[ManifestListReader.FieldSummary]], specId: Int,
     conf: Configuration) extends TaskFileWriter {
   import org.apache.hadoop.hive.ql.exec.vector.{BytesColumnVector,
     DoubleColumnVector, LongColumnVector, TimestampColumnVector}
