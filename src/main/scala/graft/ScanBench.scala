@@ -5,14 +5,15 @@ import org.apache.spark.sql.functions._
 
 import graft.iceberg._
 
-/** Whole-table scan benchmark (VERDICT r8 item 5): the same full-decode
-  * aggregate over the same physical parquet files through three routes —
-  * Spark's native parquet reader, the `graft-table` DSv2 columnar route
-  * (round 9's vectorized path), and the DSv2 row route (the round-8
-  * record-at-a-time Group-API decoder, kept behind `columnar=false`).
-  * Prints one JSON line: seconds per route (min of `passes`), plus the
-  * row/native and columnar/native ratios. Run with
-  * SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1. */
+/** Whole-table scan benchmark: the same full-decode aggregate over the
+  * same physical parquet files through Spark's native parquet reader and
+  * the `graft-table` DSv2 scan — clean, under position deletes, under an
+  * equality delete and under v3 deletion vectors — plus the row-level
+  * DML scan shape (`_file`, `_pos` and one column under position
+  * deletes) against native parquet's `_metadata.file_path` /
+  * `_metadata.row_index`. Prints one JSON line: seconds per route (min
+  * of `passes`) and each graft route's ratio to its native leg. Run with
+  * SPARK_GRAFT_SF_DIR pointing at a TPC-H parquet directory (sf0.1). */
 object ScanBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -57,11 +58,17 @@ object ScanBench {
         min(col("l_returnflag")), max(col("l_linestatus")),
         min(col("l_shipdate"))).head()
     }
-    def route(name: String)(mk: () => DataFrame): (String, Double) = {
-      fullDecode(mk()) // warm (footers, code paths, JIT)
+    // the row-level DML scan shape: the row coordinate plus one column
+    def coordinates(df: DataFrame): Unit = {
+      df.agg(count(lit(1)), max(col("_file")), sum(col("_pos")),
+        sum(col("l_orderkey"))).head()
+    }
+    def route(name: String, measure: DataFrame => Unit = fullDecode)(
+        mk: () => DataFrame): (String, Double) = {
+      measure(mk()) // warm (footers, code paths, JIT)
       val secs = (1 to passes).map { _ =>
         val t0 = System.nanoTime()
-        fullDecode(mk())
+        measure(mk())
         (System.nanoTime() - t0) / 1e9
       }
       name -> secs.min
@@ -71,17 +78,21 @@ object ScanBench {
       route("native_parquet")(() => spark.read.parquet(files: _*)),
       route("graft_columnar")(() =>
         spark.read.format("graft-table").option("metadata", metaPath).load()),
-      route("graft_row")(() =>
-        spark.read.format("graft-table").option("metadata", metaPath)
-          .option("columnar", "false").load()))
+      route("native_coordinates", coordinates)(() => spark.read.parquet(files: _*)
+        .select(col("_metadata.file_path").as("_file"),
+          col("_metadata.row_index").as("_pos"), col("l_orderkey"))))
 
     // vectorized MOR: ~0.1% of rows position-deleted — the scan must load
     // the delete index and select every batch, the delete-heavy-CDC shape;
-    // staying near native here is the round-12 contract (< 1.5×)
+    // staying near native here is the contract (< 1.5×)
     GraftTable.deleteWhere(spark, dir, pmod(col("l_orderkey"), lit(1000)) === 0)
     val morMetaPath = GraftTable.latestMetadataPath(dir)
-    val withPos = clean :+ route("graft_columnar_mor")(() =>
-      spark.read.format("graft-table").option("metadata", morMetaPath).load())
+    val withPos = clean ++ Seq(
+      route("graft_columnar_mor")(() =>
+        spark.read.format("graft-table").option("metadata", morMetaPath).load()),
+      route("graft_mor_coordinates", coordinates)(() =>
+        spark.read.format("graft-table").option("metadata", morMetaPath).load()
+          .select(col("_file"), col("_pos"), col("l_orderkey"))))
     // vectorized EQUALITY MOR on top: a streaming-upsert lands an
     // equality-delete file on l_orderkey — the scan widens its batch
     // projection over the equality column and tests set membership per
@@ -111,13 +122,14 @@ object ScanBench {
     val line = results.map { case (k, v) => s""""$k":${f"$v%.3f"}""" }
       .mkString("{", ",", ",") +
       s""""columnar_over_native":${f"${m("graft_columnar") / m("native_parquet")}%.2f"},""" +
-      s""""row_over_native":${f"${m("graft_row") / m("native_parquet")}%.2f"},""" +
       s""""columnar_mor_over_native":${
         f"${m("graft_columnar_mor") / m("native_parquet")}%.2f"},""" +
       s""""columnar_eqmor_over_native":${
         f"${m("graft_columnar_eqmor") / m("native_parquet")}%.2f"},""" +
       s""""columnar_dvmor_over_native":${
         f"${m("graft_columnar_dvmor") / m("native_parquet")}%.2f"},""" +
+      s""""mor_coordinates_over_native":${
+        f"${m("graft_mor_coordinates") / m("native_coordinates")}%.2f"},""" +
       s""""sf":"$sfDir"}"""
     // scalastyle:off println
     println(line)

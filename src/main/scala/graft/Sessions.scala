@@ -25,7 +25,7 @@ object Sessions {
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // VARIANT columns stay in the UNSHREDDED parquet layout: the
-      // engine's row-route reader and its compaction/COW rewrites speak
+      // engine's parquet reader and its compaction/COW rewrites speak
       // the (metadata, value) group; shredding is a Spark-reader-side
       // pushdown optimization the engine's bound-stat model doesn't use
       .config("spark.sql.variant.writeShredding.enabled", "false")

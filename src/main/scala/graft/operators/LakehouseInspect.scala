@@ -801,9 +801,9 @@ object LakehouseInspect {
     * the DSv2 task writer lands Spark's UNSHREDDED parquet variant group
     * (VARIANT-annotated `(metadata, value)` binary halves — Spark's own
     * reader reconstructs VariantType from it, so the native route reads
-    * the same files), the row-route reader reassembles VariantVal
-    * (variant sits outside the vectorized palette by design — no bound
-    * stats either; the spec defines no variant ordering), and
+    * the same files, and so does the graft-table scan, whose decoder is
+    * that reader — no bound stats; the spec defines no variant
+    * ordering), and
     * `parse_json`/`variant_get` run over the scan like any built-in.
     * The fixture routes nation through JSON documents and extracts
     * typed values back out; the oracle recomputes from the plain

@@ -17,8 +17,8 @@ import graft.operators.LakehouseExec.entryDir
   *   table. CREATE TABLE serializes the nested types as the Iceberg
   *   canonical JSON object forms (spec-style shared id sequence), the
   *   task writers encode the standard parquet group/MAP layouts, and the
-  *   row-route reader decodes them back. (Reference type-lattice parity:
-  *   RECORD and MAP at IcebergDatumWriter.java:124-180.)
+  *   vectorized parquet reader decodes them back. (Reference type-lattice
+  *   parity: RECORD and MAP at IcebergDatumWriter.java:124-180.)
   * - i64: SQL `PARTITIONED BY (years(date))` — the most common real
   *   table layout, declared from SQL and proven to prune: the manifests
   *   whose year-summaries exclude the queried year are CORRUPTED on

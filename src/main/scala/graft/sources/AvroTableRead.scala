@@ -9,7 +9,7 @@ import org.apache.spark.sql.types._
   * itself decodes (`ManifestFileReadTool.java:140`): a foreign Iceberg
   * table may mark entries `file_format = AVRO`, and the scan streams
   * them through Avro's object-container reader with the same semantics
-  * the parquet row route provides:
+  * the parquet decoder provides:
   *
   *  - record order IS the position coordinate (`pos` / `_pos`), so
   *    position deletes apply by file-absolute index (shared

@@ -74,7 +74,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       throw new IllegalArgumentException(
         s"catalog $name requires option spark.sql.catalog.$name.warehouse"))
     // VARIANT tables need Spark-native rewrites (compaction, COW merge)
-    // to stay in the UNSHREDDED layout the engine's row reader speaks —
+    // to stay in the UNSHREDDED layout the engine's writers speak —
     // pin it for any session that mounts this catalog (harmless
     // otherwise; shredding only serves Spark-reader-side pushdown)
     scala.util.Try(org.apache.spark.sql.SparkSession.active.conf
@@ -223,7 +223,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       writeBranch = if (kind == "branch") Some(refName) else None,
       refuseWriteReason = if (kind == "tag")
         Some(s"'$refName' is a TAG — tags pin immutable snapshots; " +
-          "write to the table or a branch instead") else None))
+          "write to the table or a branch instead") else None,
+      parsed = Some(meta)))
   }
 
   /** A registered identifier whose TARGET vanished (dropped through its
@@ -256,8 +257,9 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       }
     }
     val metaPath = GraftTable.latestMetadataPath(dir)
-    new GraftSparkTable(GraftTable.sparkSchema(TableMetadata.parseFile(metaPath)),
-      metaPath, None, None, None, 128L * 1024 * 1024)
+    val meta = TableMetadata.parseFile(metaPath)
+    new GraftSparkTable(GraftTable.sparkSchema(meta), metaPath, None, None, None,
+      128L * 1024 * 1024, parsed = Some(meta))
   }
 
   /** SQL `VERSION AS OF <v>` — a numeric version is a snapshot id, any
@@ -285,7 +287,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     val snapId = version.toLongOption
     val ref = if (snapId.isEmpty) Some(version) else None
     new GraftSparkTable(travelSchema(meta, snapId, ref, None),
-      metaPath, snapId, ref, None, 128L * 1024 * 1024)
+      metaPath, snapId, ref, None, 128L * 1024 * 1024, parsed = Some(meta))
   }
 
   /** SQL `TIMESTAMP AS OF <ts>` — Spark hands MICROseconds since epoch;
@@ -295,7 +297,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     val metaPath = GraftTable.latestMetadataPath(tableDir(ident))
     val meta = TableMetadata.parseFile(metaPath)
     new GraftSparkTable(travelSchema(meta, None, None, Some(timestampMicros / 1000L)),
-      metaPath, None, None, Some(timestampMicros / 1000L), 128L * 1024 * 1024)
+      metaPath, None, None, Some(timestampMicros / 1000L), 128L * 1024 * 1024,
+      parsed = Some(meta))
   }
 
   /** Spark column type → Iceberg type string — shared with the
@@ -1087,7 +1090,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   * `rewrite_position_delete_files`. Unlike the per-FILE metadata tables
   * this is per-ROW (a delete-heavy CDC table holds millions), so it is a
   * REAL distributed scan: one input partition per delete file, the
-  * shared parquet row reader decoding (file_path, pos) and serving the
+  * shared parquet decoder reading (file_path, pos) and serving the
   * provenance column — never a driver materialization. */
 class GraftPosDeletesTable(tableName: String, delFiles: Seq[String],
     dvRefs: Seq[(String, String, Long, Long)] = Nil)
@@ -1122,14 +1125,16 @@ class GraftPosDeletesTable(tableName: String, delFiles: Seq[String],
               : org.apache.spark.sql.connector.read.InputPartition }).toArray
       override def createReaderFactory()
           : org.apache.spark.sql.connector.read.PartitionReaderFactory =
-        new GraftTableReaderFactory(served, conf, columnar = false)
+        // parquet delete files decode columnar; deletion-vector blobs
+        // expand to rows
+        new GraftTableReaderFactory(served, conf, columnar = dvRefs.isEmpty)
     }
 }
 
 /** Expands one deletion-vector blob into position_deletes rows:
   * (file_path = the referenced data file, pos = each set bit,
   * delete_file_path = the Puffin file) — the DV analog of reading a
-  * position-delete parquet file through the shared row reader. */
+  * position-delete parquet file through the shared parquet decoder. */
 class GraftDvPosDeletesReader(part: GraftTableInputPartition,
     required: StructType, conf: org.apache.hadoop.conf.Configuration)
     extends org.apache.spark.sql.connector.read.PartitionReader[

@@ -53,12 +53,14 @@ import graft.iceberg.{GraftTable, IcebergType, ManifestListReader, ManifestWrite
   *   - `snapshot-id` / `ref` / `as-of-timestamp-ms` options time-travel
   *     with GraftTable.read's resolution rules.
   *
-  * Decoding: parquet scans without metadata columns take Spark's
-  * vectorized reader (position and equality deletes as a per-batch row
-  * selection); metadata-column scans and Avro/ORC data files take the
-  * record readers, which resolve renamed columns, widened types and v3
-  * initial defaults per file. Statistics report the exact byte size
-  * from manifest entries so Catalyst can broadcast small tables. */
+  * Decoding: every parquet data file decodes through Spark's vectorized
+  * reader ([[GraftTableColumnarReader]]): position and equality deletes
+  * apply as a per-batch row selection, and the metadata columns, v3
+  * initial defaults and renamed columns are vectors in the batch. A scan
+  * holding an Avro or ORC file emits rows; its parquet files flatten
+  * through [[GraftTableParquetRowReader]]. Statistics report the exact
+  * byte size from manifest entries so Catalyst can broadcast small
+  * tables. */
 object TableDataSource {
   /** v3 initial-defaults (external row domain) by column name — what a
     * reader fills for a column the file predates, instead of null. */
@@ -72,8 +74,8 @@ object TableDataSource {
     * entries (with theirs) that may apply to them. The plan is pinned
     * into the scan in place of its own manifest planning; everything
     * after planning — per-file delete scoping, row-group splits and
-    * pruning of pushed filters, the columnar/record reader choice — is
-    * the ordinary graft-table scan. The frame's columns are the table
+    * pruning of pushed filters, the decode — is the ordinary graft-table
+    * scan. The frame's columns are the table
     * schema of `meta` plus the scan's metadata columns (`_file` — the
     * path exactly as the entry records it —, `_pos`, `_row_id`,
     * `_last_updated_sequence_number`) as ordinary columns — their
@@ -136,10 +138,6 @@ class TableDataSource extends TableProvider with DataSourceRegister {
       Option(opts.get("ref")),
       Option(opts.get("as-of-timestamp-ms")).map(_.toLong),
       Option(opts.get("split-size")).map(_.toLong).getOrElse(128L * 1024 * 1024),
-      // escape hatch (and the bench's row-vs-columnar control): "false"
-      // forces the row route; it can never force columnar ON — the
-      // scan-level eligibility rules still apply
-      Option(opts.get("columnar")).forall(_.toBoolean),
       // write-side: option("branch", "audit") stages appends on that ref
       Option(opts.get("branch")).filter(_.nonEmpty))
   }
@@ -147,19 +145,27 @@ class TableDataSource extends TableProvider with DataSourceRegister {
   override def supportsExternalMetadata(): Boolean = false
 }
 
-class GraftSparkTable(tableSchema: StructType, metadataPath: String,
+class GraftSparkTable private[graft] (tableSchema: StructType, metadataPath: String,
     snapshotId: Option[Long], ref: Option[String], asOfTimestampMs: Option[Long],
-    splitSize: Long, allowColumnar: Boolean = true,
+    splitSize: Long,
     writeBranch: Option[String] = None,
     // set for identifiers that must stay read-only (tag_<name>): any
     // write surface refuses with this message instead of silently
     // landing the commit on main
-    refuseWriteReason: Option[String] = None)
+    refuseWriteReason: Option[String] = None,
+    // the document at `metadataPath` when the caller already parsed it
+    parsed: Option[TableMetadata] = None)
     extends Table with SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsWrite
     with org.apache.spark.sql.connector.catalog.SupportsDelete
     with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns
     with org.apache.spark.sql.connector.catalog.SupportsRowLevelOperations {
+
+  /** The table's document, parsed once: `metadataPath` names one
+    * immutable version, so its scans, partitioning and row-level mode
+    * all read this parse. */
+  private lazy val meta: TableMetadata =
+    parsed.getOrElse(TableMetadata.parseFile(metadataPath))
 
   /** SQL UPDATE / DELETE / MERGE INTO, two modes per the Iceberg table
     * properties `write.update.mode` / `write.delete.mode` /
@@ -193,8 +199,7 @@ class GraftSparkTable(tableSchema: StructType, metadataPath: String,
         case DELETE => "write.delete.mode"
         case _ => "write.merge.mode"
       }
-      val mor = TableMetadata.parseFile(metadataPath).properties
-        .get(modeKey).contains("merge-on-read")
+      val mor = meta.properties.get(modeKey).contains("merge-on-read")
       if (mor)
         new GraftDeltaRowLevelOperation(info.command(), tableSchema,
           metadataPath, splitSize, branch = writeBranch)
@@ -209,8 +214,7 @@ class GraftSparkTable(tableSchema: StructType, metadataPath: String,
     * `DESCRIBE TABLE` prints and catalog tooling introspects. Unknown
     * transform strings (a foreign writer's) surface as identity on the
     * source column rather than failing the table load. */
-  override def partitioning(): Array[Transform] =
-    SpecTransforms.of(TableMetadata.parseFile(metadataPath))
+  override def partitioning(): Array[Transform] = SpecTransforms.of(meta)
 
   override def metadataColumns()
       : Array[org.apache.spark.sql.connector.catalog.MetadataColumn] =
@@ -221,7 +225,7 @@ class GraftSparkTable(tableSchema: StructType, metadataPath: String,
       TableCapability.STREAMING_WRITE, TableCapability.TRUNCATE)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new GraftTableScanBuilder(tableSchema, metadataPath, snapshotId, ref,
-      asOfTimestampMs, splitSize, allowColumnar = allowColumnar,
+      asOfTimestampMs, splitSize, head = Some(meta),
       streamOpts = StreamReadOptions(
         skipOverwrites = Option(options.get("streaming-skip-overwrite-snapshots"))
           .exists(_.toBoolean),
@@ -345,9 +349,10 @@ private[sources] object SpecTransforms {
 class GraftTableScanBuilder(tableSchema: StructType, metadataPath: String,
     snapshotId: Option[Long], ref: Option[String], asOfTimestampMs: Option[Long],
     splitSize: Long, onPlanned: Option[(Seq[String], Seq[String]) => Unit] = None,
-    allowColumnar: Boolean = true,
     streamOpts: StreamReadOptions = StreamReadOptions(),
-    pinned: Option[PinnedPlan] = None)
+    pinned: Option[PinnedPlan] = None,
+    // the document at `metadataPath`, when the table already parsed it
+    head: Option[TableMetadata] = None)
     extends ScanBuilder with SupportsPushDownRequiredColumns with SupportsPushDownFilters
     with org.apache.spark.sql.connector.read.SupportsPushDownAggregates {
   private var required: StructType = tableSchema
@@ -424,7 +429,8 @@ class GraftTableScanBuilder(tableSchema: StructType, metadataPath: String,
     if (pushed.nonEmpty || onPlanned.isDefined || pinned.isDefined ||
         agg.groupByExpressions().nonEmpty)
       return None
-    val meta = scala.util.Try(TableMetadata.parseFile(metadataPath)).getOrElse(return None)
+    val meta = head.orElse(scala.util.Try(TableMetadata.parseFile(metadataPath)).toOption)
+      .getOrElse(return None)
     val empty = meta.currentSnapshotId.isEmpty && snapshotId.isEmpty &&
       ref.isEmpty && asOfTimestampMs.isEmpty
     val entries: Seq[ManifestWriter.EntryData] =
@@ -511,7 +517,7 @@ class GraftTableScanBuilder(tableSchema: StructType, metadataPath: String,
       }
     case None =>
       new GraftTableScan(required, pushed, metadataPath, snapshotId, ref,
-        asOfTimestampMs, splitSize, onPlanned, allowColumnar, streamOpts, pinned)
+        asOfTimestampMs, splitSize, onPlanned, streamOpts, pinned, head)
   }
 }
 
@@ -519,11 +525,12 @@ class GraftTableScan(required: StructType, filters: Array[sources.Filter],
     metadataPath: String, snapshotId: Option[Long], ref: Option[String],
     asOfTimestampMs: Option[Long], splitSize: Long = 128L * 1024 * 1024,
     onPlanned: Option[(Seq[String], Seq[String]) => Unit] = None,
-    allowColumnar: Boolean = true,
     streamOpts: StreamReadOptions = StreamReadOptions(),
     // an explicit plan (TableDataSource.scanPlan) replacing manifest
     // planning; its metadata replaces the document at `metadataPath`
-    pinned: Option[PinnedPlan] = None)
+    pinned: Option[PinnedPlan] = None,
+    // the document at `metadataPath`, when the table already parsed it
+    head: Option[TableMetadata] = None)
     extends Scan with Batch with SupportsReportStatistics
     with SupportsReportPartitioning
     with org.apache.spark.sql.connector.read.SupportsRuntimeFiltering {
@@ -531,8 +538,7 @@ class GraftTableScan(required: StructType, filters: Array[sources.Filter],
   override def toBatch: Batch = this
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new GraftTableMicroBatchStream(metadataPath, required, streamOpts, hadoopConf,
-      allowColumnar)
+    new GraftTableMicroBatchStream(metadataPath, required, streamOpts, hadoopConf)
   override def description(): String =
     s"graft-table scan $metadataPath, ReadSchema: ${required.catalogString}" +
       (if (filters.nonEmpty) s", PushedFilters: ${filters.mkString("[", ", ", "]")}" else "")
@@ -548,7 +554,7 @@ class GraftTableScan(required: StructType, filters: Array[sources.Filter],
     * files from a snapshot newer than its intent). Iceberg pins at scan
     * creation; so do we. */
   private lazy val pinnedMeta: TableMetadata =
-    pinned.map(_.meta).getOrElse(TableMetadata.parseFile(metadataPath))
+    pinned.map(_.meta).orElse(head).getOrElse(TableMetadata.parseFile(metadataPath))
 
   /** (surviving data entries — each with sequence and OWNING manifest
     * info (the list row: spec id + field-507 summaries, which is what
@@ -772,7 +778,7 @@ class GraftTableScan(required: StructType, filters: Array[sources.Filter],
     // manifest's fileSizeInBytes decides, so small files cost nothing);
     // each split carries its absolute first-row index so position deletes
     // keep addressing file-absolute row numbers, plus the group's byte
-    // range so the columnar route can select exactly it by midpoint.
+    // range so the parquet decoder can select exactly it by midpoint.
     //
     // Level 3 pruning: the SAME footer the split pass already paid for
     // carries per-row-group column statistics — a group the pushed (or
@@ -821,59 +827,11 @@ class GraftTableScan(required: StructType, filters: Array[sources.Filter],
   }
 
   /** Columnar is a SCAN-level decision (Spark forbids mixing row and
-    * columnar partitions in one scan): every required type must be in the
-    * vectorized palette and metadata columns stay row-served. Pending
-    * deletes of BOTH kinds keep the columnar route — the reader applies
-    * position deletes as a row-index selection over each ColumnarBatch
-    * and equality deletes as a vectorized value-set membership test over
-    * the (schema-widened) batch columns (production Iceberg's
-    * vectorized-MOR shape), so a delete-heavy CDC or streaming-upsert
-    * table never pays the record-at-a-time decode penalty. Equality
-    * deletes fall back to the row route only when an equality column's
-    * type is outside the columnar comparison palette (binary/decimal/
-    * nested — no cheap canonical batch-side value). */
-  private lazy val columnarOk: Boolean = allowColumnar && {
-    // struct/map columns vectorize only on DELETE-FREE scans: batches
-    // then pass through raw, and the selection/shield views (whose
-    // final getStruct walks children by the view's row-id) never wrap
-    // them. Spark's vectorized reader decodes the nested vectors.
-    val noDeletes = planned._2.isEmpty && planned._3.isEmpty
-    // a RENAMED schema keeps the columnar route on delete-free scans
-    // (the reader substitutes each file's own name generation into the
-    // requested schema); renames + pending deletes take the row route —
-    // the equality canonicalization there is name-history-aware
-    val renames = GraftTable.nameAlternates(pinnedMeta)
-    GraftTableColumnarReader.supportedSchema(required, allowNested = noDeletes) &&
-      !required.fieldNames.exists(n => n == "_file" || n == "_pos" ||
-        n == "_row_id" || n == "_last_updated_sequence_number") &&
-      (planned._3.isEmpty || eqColumnsColumnar) &&
-      (renames.isEmpty || noDeletes) &&
-      // a required column with a v3 initial-default needs per-file
-      // presence probing (fill the default, not null, where the file
-      // predates it) — the row route does that; defaulted-column scans
-      // are rare enough that the fallback is the honest trade
-      !required.fieldNames.exists(
-        TableDataSource.initialDefaultsOf(pinnedMeta).contains) &&
-      // non-parquet data files (imported Avro) take the row route
-      planned._1.forall(_._1.fileFormat == "PARQUET")
-  }
-
-  /** Every pending equality-delete file's column set must compare cleanly
-    * in the columnar domain. One footer read per delete file (KB-scale,
-    * concurrent) — the same planning boundary the manifest opens sit at. */
-  private lazy val eqColumnsColumnar: Boolean = {
-    val tableSchema = GraftTable.sparkSchema(pinnedMeta)
-    Par.inParallel(planned._3.map(_._1.filePath).distinct) { del =>
-      scala.util.Try {
-        val r = ParquetFileReader.open(HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(del), hadoopConf.value))
-        try r.getFileMetaData.getSchema.getFields.asScala.map(_.getName).toSeq
-        finally r.close()
-      }.toOption.exists(_.forall(c =>
-        tableSchema.fields.find(_.name == c).map(_.dataType).exists(
-          GraftTableColumnarReader.eqComparable)))
-    }.forall(identity)
-  }
+    * columnar partitions in one scan): a scan whose data files are all
+    * parquet emits [[GraftTableColumnarReader]]'s batches; one holding an
+    * Avro or ORC file emits rows, its parquet files flattened by
+    * [[GraftTableParquetRowReader]]. */
+  private lazy val columnar: Boolean = planned._1.forall(_._1.fileFormat == "PARQUET")
 
   /** Storage-partitioned joins: a partitioned table reports its layout
     * as a V2 `KeyGroupedPartitioning(transform(col), ...)`, and when BOTH
@@ -1077,7 +1035,7 @@ class GraftTableScan(required: StructType, filters: Array[sources.Filter],
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new GraftTableReaderFactory(required, hadoopConf, columnarOk)
+    new GraftTableReaderFactory(required, hadoopConf, columnar)
 }
 
 /** One SQL UPDATE / MERGE INTO execution: the scan and the write share
@@ -1292,8 +1250,8 @@ class GraftTableDeltaWriterFactory(tableDir: String, writeUuid: String,
 /** `rowGroup` == -1 reads the whole file (the un-split case); otherwise
   * exactly that row group, with `rowStart` its absolute first-row index
   * (what keeps file-absolute position deletes correct on a split).
-  * `splitStart`/`splitBytes` are the split's BYTE range for the columnar
-  * route (parquet selects row groups by midpoint): (0, Long.MaxValue)
+  * `splitStart`/`splitBytes` are the split's BYTE range for the parquet
+  * decoder (parquet selects row groups by midpoint): (0, Long.MaxValue)
   * covers the whole file; a row-group split carries the group's exact
   * footer-declared offset and compressed size. */
 case class GraftTableInputPartition(filePath: String, sequenceNumber: Long,
@@ -1311,7 +1269,7 @@ case class GraftTableInputPartition(filePath: String, sequenceNumber: Long,
     // carried in earlier schemas; empty on never-renamed tables
     nameAlternates: Map[String, Seq[String]] = Map.empty,
     // manifest field 101: PARQUET (the engine's own writes) or AVRO
-    // (foreign/imported data files — row route, no row-group splits)
+    // (foreign/imported data files — read as rows, no row-group splits)
     fileFormat: String = "PARQUET",
     // storage-partitioned joins: this file's partition tuple in catalyst
     // form (summary-derived), or null when the scan reported no
@@ -1335,12 +1293,13 @@ case class GraftTableInputPartition(filePath: String, sequenceNumber: Long,
 
 class GraftTableReaderFactory(required: StructType,
     hadoopConf: graft.iceberg.SerializableHadoopConf,
-    columnar: Boolean = false) extends PartitionReaderFactory {
+    columnar: Boolean) extends PartitionReaderFactory {
   override def supportColumnarReads(partition: InputPartition): Boolean = columnar
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[GraftTableInputPartition]
     p.fileFormat match {
-      case "PARQUET" => new GraftTablePartitionReader(p, required, hadoopConf.value)
+      case "PARQUET" => new GraftTableParquetRowReader(
+        new GraftTableColumnarReader(p, required, hadoopConf.value))
       case "AVRO" => new GraftTableAvroPartitionReader(p, required, hadoopConf.value)
       case "ORC" => new GraftTableOrcPartitionReader(p, required, hadoopConf.value)
       // position_deletes inspection partitions over v3 deletion vectors
@@ -1355,74 +1314,142 @@ class GraftTableReaderFactory(required: StructType,
       partition.asInstanceOf[GraftTableInputPartition], required, hadoopConf.value)
 }
 
-/** The vectorized scan route: Spark's own VectorizedParquetRecordReader
-  * decodes whole column batches (the engine's production parquet path —
-  * dictionary-aware, null-vector schema evolution, no per-row object
-  * materialization) and the scan exec consumes ColumnarBatches directly.
-  * Selected whenever the scan carries NO pending deletes, no metadata
-  * columns, and every required type is vectorizable — the overwhelmingly
-  * common analytic case; anything else takes the row-route MOR reader.
-  * This removes the 5-10× per-row Group-API decode penalty the round-8
-  * reader paid on every SQL query through the catalog (ScanBench: 0.97×
-  * native parquet vs 2.31× for the row route on full-width decode).
+/** A parquet data file's rows, for a scan that must emit rows (one that
+  * holds an Avro or ORC file, or `position_deletes` over deletion
+  * vectors): [[GraftTableColumnarReader]]'s batches, flattened. */
+class GraftTableParquetRowReader(batches: GraftTableColumnarReader)
+    extends PartitionReader[InternalRow] {
+  private var rows: java.util.Iterator[InternalRow] = java.util.Collections.emptyIterator()
+  private var current: InternalRow = _
+  override def next(): Boolean = {
+    while (!rows.hasNext) {
+      if (!batches.next()) return false
+      rows = batches.get().rowIterator()
+    }
+    current = rows.next()
+    true
+  }
+  override def get(): InternalRow = current
+  override def close(): Unit = batches.close()
+}
+
+/** The one decoder of parquet data files: Spark's own
+  * VectorizedParquetRecordReader decodes whole column batches
+  * (dictionary-aware, type-widening, no per-row object materialization)
+  * and the reader adds what the table format defines on top, as vectors
+  * of the batch it emits:
+  *   - position deletes and v3 deletion vectors drop rows by their
+  *     file-absolute index, equality deletes by value-set membership —
+  *     both as a selection view over the batch's own vectors;
+  *   - `_file` (and the `position_deletes` table's `delete_file_path`)
+  *     is a per-split constant, `_pos` the row's file-absolute index;
+  *   - v3 lineage: `_row_id` is the file's materialized column, else the
+  *     file's first_row_id + `_pos`, else null;
+  *     `_last_updated_sequence_number` the materialized column, else the
+  *     file's data sequence when the file has lineage, else null;
+  *   - a column the file predates under every name generation is a
+  *     constant: its v3 initial default, or null; a RENAMED column reads
+  *     under the name the file carries.
+  * A clean scan that asks for none of these gets Spark's batch untouched.
   *
-  * The reader conf pins this library's OWN file conventions (micros
-  * timestamps, CORRECTED datetime rebase) — every graft write route
-  * produces exactly that. A FOREIGN file with INT64-nanos timestamps
-  * would need the session's nanos handling instead; if such a table is
-  * ever mounted, read it with `columnar=false` (the Group-API route
-  * follows the file's declared logical types). */
+  * The reader conf pins this library's own file conventions (micros
+  * timestamps, CORRECTED datetime rebase; v3 nanosecond timestamps read
+  * as their long nanos). A column whose parquet type Spark cannot decode
+  * as the table type fails the read, naming the column and the file. */
 class GraftTableColumnarReader(part: GraftTableInputPartition,
     required: StructType, confBase: Configuration)
     extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
+  import org.apache.spark.sql.execution.datasources.SchemaColumnConvertNotSupportedException
   import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport,
     VectorizedParquetRecordReader}
+  import org.apache.spark.sql.execution.vectorized.{ColumnVectorUtils, ConstantColumnVector}
   import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
-
-  /** Pending equality deletes, vectorized: each delete file's schema IS
-    * its equality-column list; the parquet projection WIDENS to cover
-    * columns the query never selects (the row route's rule, now batch-
-    * side), the delete values load once per task into canonical-domain
-    * sets, and the per-batch selection tests membership against the
-    * batch's own vectors. Output batches expose only `required`. */
-  private val eqColLists: Seq[Seq[String]] =
-    part.eqDeleteFiles.map { del =>
-      val r = ParquetFileReader.open(HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(del), confBase))
-      try r.getFileMetaData.getSchema.getFields.asScala.map(_.getName).toSeq
-      finally r.close()
-    }.distinct
+  import GraftTableColumnarReader._
 
   private def tableType(name: String): DataType =
     part.tableSchema.fields.find(_.name == name).map(_.dataType).getOrElse(
       throw new IllegalArgumentException(s"equality column '$name' not in table schema"))
 
-  private val extraFields: Seq[StructField] =
-    eqColLists.flatten.distinct.filterNot(required.fieldNames.contains)
-      .map(c => StructField(c, tableType(c)))
-  private val widened = StructType(required.fields.toSeq ++ extraFields)
+  /** Pending equality deletes: one value set per distinct column list (a
+    * delete file's schema IS its equality columns, old names mapped to
+    * the current generation), loaded once per task. */
+  private val eqSets: Seq[(Seq[String], java.util.HashSet[Vector[Any]])] =
+    EqDeleteIndex.load(part.eqDeleteFiles, tableType,
+      part.nameAlternates.flatMap { case (cur, olds) => olds.map(_ -> cur) }, confBase)
 
-  /** RENAME COLUMN resolution on the columnar route: when the schema
-    * history carries renames, a pre-rename file holds the OLD physical
-    * name — requesting the current name would null-fill it. Spark's
-    * reader clips the projection BY NAME, but the output ColumnarBatch
-    * is purely positional, so substituting the file's own name for the
-    * renamed field (same position, same type) reads the right vectors
-    * with no downstream change. One extra KB-scale footer open, paid
-    * ONLY by tables that have actually renamed a column. */
-  private val requested: StructType =
-    if (part.nameAlternates.isEmpty) widened
+  /** The columns the reader works on: `required`, then the equality
+    * columns the query never selects (read to evaluate the deletes, never
+    * emitted). */
+  private val extraFields: Seq[StructField] =
+    eqSets.flatMap(_._1).distinct.filterNot(required.fieldNames.contains)
+      .map(c => StructField(c, tableType(c)))
+  private val working = StructType(required.fields.toSeq ++ extraFields)
+
+  private def lineage(name: String): Boolean =
+    (name == GraftTable.RowIdCol || name == GraftTable.LastUpdatedCol) &&
+      !part.tableSchema.fieldNames.contains(name)
+
+  /** The file's top-level column names, from one KB-scale footer open
+    * paid only when a column's source depends on them: a table that
+    * renamed a column, a lineage column, or a column with a v3 initial
+    * default. None: every column is requested by its current name and
+    * Spark null-fills the ones the file lacks. */
+  private val fileColumns: Option[Set[String]] =
+    if (part.nameAlternates.isEmpty && !working.fieldNames.exists(n =>
+        lineage(n) || part.initialDefaults.contains(n))) None
     else {
       val r = ParquetFileReader.open(HadoopInputFile.fromPath(
         new org.apache.hadoop.fs.Path(part.filePath), confBase))
-      val present = try r.getFileMetaData.getSchema.getFields.asScala
-        .map(_.getName).toSet finally r.close()
-      StructType(widened.fields.map { f =>
-        if (present(f.name)) f
-        else part.nameAlternates.getOrElse(f.name, Nil).find(present)
-          .map(old => f.copy(name = old)).getOrElse(f)
-      })
+      Some(try r.getFileMetaData.getSchema.getFields.asScala.map(_.getName).toSet
+        finally r.close())
     }
+  private def fileHas(name: String): Boolean = fileColumns.exists(_(name))
+
+  private val requestedFields = scala.collection.mutable.ArrayBuffer.empty[StructField]
+
+  private def decoded(f: StructField): Source = {
+    requestedFields += f
+    Decoded(requestedFields.size - 1)
+  }
+  private def constant(dt: DataType, value: Any): Source = {
+    val v = new ConstantColumnVector(BatchSize, dt)
+    ColumnVectorUtils.populate(v, new org.apache.spark.sql.catalyst.expressions
+      .GenericInternalRow(Array[Any](value)), 0)
+    Constant(new ShieldedColumnVector(v))
+  }
+
+  /** Where each working column comes from, in working order. */
+  private val sources: Array[Source] = working.fields.map { f =>
+    f.name match {
+      case "_file" => constant(StringType,
+        org.apache.spark.unsafe.types.UTF8String.fromString(part.filePath))
+      case "_pos" => Position(0L)
+      // the position_deletes table's provenance column: the delete file
+      // each (file_path, pos) row came from
+      case "delete_file_path" if !part.tableSchema.fieldNames.contains(f.name) =>
+        constant(StringType, org.apache.spark.unsafe.types.UTF8String.fromString(part.filePath))
+      case GraftTable.RowIdCol if lineage(f.name) =>
+        if (fileHas(f.name)) decoded(f)
+        else part.firstRowId.map(Position).getOrElse(constant(LongType, null))
+      case GraftTable.LastUpdatedCol if lineage(f.name) =>
+        if (fileHas(f.name)) decoded(f)
+        // a file carrying _row_id but not _lus (a delta UPDATE's carry
+        // file) was last touched by the commit that wrote it
+        else if (part.firstRowId.isDefined || fileHas(GraftTable.RowIdCol))
+          constant(LongType, part.sequenceNumber)
+        else constant(LongType, null)
+      // v3 `unknown`: never stored
+      case _ if f.dataType == NullType => constant(NullType, null)
+      case name =>
+        fileColumns.map(cols => (name +: part.nameAlternates.getOrElse(name, Nil)).find(cols))
+          .getOrElse(Some(name)) match {
+          case Some(physical) => decoded(f.copy(name = physical))
+          case None => constant(f.dataType, part.initialDefaults.get(name)
+            .map(CatalystTypeConverters.createToCatalystConverter(f.dataType)).orNull)
+        }
+    }
+  }.toArray
+  private val requested = StructType(requestedFields.toSeq)
 
   private val conf = new Configuration(confBase)
   // the keys Spark's reader stack expects its planner to have set
@@ -1433,11 +1460,11 @@ class GraftTableColumnarReader(part: GraftTableInputPartition,
   conf.setBoolean("spark.sql.parquet.int96AsTimestamp", true)
   conf.setBoolean("spark.sql.caseSensitive", false)
   conf.setBoolean("spark.sql.parquet.inferTimestampNTZ.enabled", true)
-  conf.setBoolean("spark.sql.legacy.parquet.nanosAsLong", false)
+  conf.setBoolean("spark.sql.legacy.parquet.nanosAsLong", true)
   conf.setBoolean("spark.sql.parquet.fieldId.read.enabled", false)
 
   private val reader = new VectorizedParquetRecordReader(
-    null, "CORRECTED", "UTC", "CORRECTED", "UTC", false, 4096)
+    null, "CORRECTED", "UTC", "CORRECTED", "UTC", false, BatchSize)
   reader.initialize(
     new org.apache.hadoop.mapred.FileSplit(
       new org.apache.hadoop.fs.Path(part.filePath),
@@ -1447,90 +1474,147 @@ class GraftTableColumnarReader(part: GraftTableInputPartition,
   reader.initBatch(new StructType(), InternalRow.empty)
   reader.enableReturningBatches()
 
-  /** Deleted FILE-ABSOLUTE row indexes addressing this file — empty on
-    * the overwhelmingly common clean scan, which then pays nothing per
-    * batch. The vectorized reader serves the split's rows strictly in
-    * order with no predicate skipping, so the absolute index of a
-    * batch's first row is `rowStart` plus the rows already served. */
+  /** Deleted FILE-ABSOLUTE row indexes addressing this file. The
+    * vectorized reader serves the split's rows strictly in order with no
+    * predicate skipping, so the absolute index of a batch's first row is
+    * `rowStart` plus the rows already served. */
   private val deleted =
     PosDeleteIndex.loadAll(part.posDeleteFiles, part.dvRefs, part.filePath, confBase)
 
-  /** Equality-delete probes in the CANONICAL COLUMNAR domain — one per
-    * distinct column list, specialized by shape so the per-row test
-    * allocates NOTHING on the hot paths:
+  /** Equality-delete probes over the working columns, specialized by
+    * shape so the per-row test allocates nothing on the hot paths:
     *   - single long-coercible column (the CDC-upsert key shape):
     *     sorted `long[]` + binary search, fully unboxed;
     *   - single string column: a set of UTF8String keys probed with the
     *     vector's own transient UTF8String (no String materialization);
     *   - anything else: a tuple set probed through ONE reusable buffer
-    *     (only the unavoidable value boxing remains).
-    * This is what closed the eq-MOR ScanBench gap vs native parquet —
-    * the previous per-row Array+Vector allocation was the entire cost. */
-  private val eqProbes: Array[EqProbe] =
-    EqDeleteIndex.load(part.eqDeleteFiles, tableType, confBase).map {
-      case (cols, set) => EqProbe.build(
-        cols.map(widened.fieldIndex).toArray, cols.map(tableType).toArray, set)
-    }.toArray
-  private val eqSetsEmpty: Boolean = eqProbes.isEmpty
+    *     (only the unavoidable value boxing remains). */
+  private val eqProbes: Array[EqProbe] = eqSets.map { case (cols, set) =>
+    EqProbe.build(cols.map(working.fieldIndex).toArray, cols.map(tableType).toArray, set)
+  }.toArray
+
+  /** The emitted columns are the decoder's own, in order. */
+  private val plain = extraFields.isEmpty && sources.forall(_.isInstanceOf[Decoded])
+  private val noDeletes = deleted.isEmpty && eqProbes.isEmpty
 
   private var served: Long = 0L
 
   private var batch: ColumnarBatch = _
   override def next(): Boolean = {
-    val has = reader.nextKeyValue()
+    val has =
+      try reader.nextKeyValue()
+      catch {
+        case e: SchemaColumnConvertNotSupportedException =>
+          throw new UnsupportedOperationException(s"graft-table reader cannot decode " +
+            s"column ${e.getColumn} (parquet ${e.getPhysicalType}) of ${part.filePath} " +
+            s"as ${e.getLogicalType}", e)
+      }
     if (has) {
       val raw = reader.getCurrentValue.asInstanceOf[ColumnarBatch]
       val first = part.rowStart + served
       served += raw.numRows()
-      batch =
-        if (deleted.isEmpty && eqSetsEmpty && extraFields.isEmpty) raw
-        else select(raw, first)
+      batch = if (plain && noDeletes) raw else assemble(raw, first)
     }
     has
   }
   override def get(): ColumnarBatch = batch
   override def close(): Unit = reader.close()
 
-  private def eqDeleted(raw: ColumnarBatch, row: Int): Boolean = {
+  /** Working column `c` over `raw`, its rows re-indexed through `keep`
+    * (null: every row). Decoded vectors belong to the reader, which reuses
+    * them for every batch: the emitted views shield them from a
+    * consumer's close(). */
+  private def vector(c: Int, raw: ColumnarBatch, first: Long, keep: Array[Int]): ColumnVector =
+    sources(c) match {
+      case Decoded(i) =>
+        if (keep == null) new ShieldedColumnVector(raw.column(i))
+        else new SelectedColumnVector(raw.column(i), keep)
+      case Constant(v) => v
+      case Position(offset) => new PositionColumnVector(first + offset, keep)
+    }
+
+  /** Surviving row ordinals of `raw` — null when every row survives. */
+  private def selection(raw: ColumnarBatch, first: Long): Array[Int] = {
+    val n = raw.numRows()
+    val probed =
+      if (eqProbes.isEmpty) null
+      else new ColumnarBatch(Array.tabulate[ColumnVector](working.length)(c =>
+        sources(c) match {
+          case Decoded(i) => raw.column(i)
+          case _ => vector(c, raw, first, null)
+        }), n)
+    val sel = new Array[Int](n)
+    var k = 0
+    var i = 0
+    while (i < n) {
+      if (!deleted.contains(first + i) && (probed == null || !eqDeleted(probed, i))) {
+        sel(k) = i; k += 1
+      }
+      i += 1
+    }
+    if (k == n) null else java.util.Arrays.copyOf(sel, k)
+  }
+
+  private def eqDeleted(probed: ColumnarBatch, row: Int): Boolean = {
     var i = 0
     while (i < eqProbes.length) {
-      if (eqProbes(i).deleted(raw, row)) return true
+      if (eqProbes(i).deleted(probed, row)) return true
       i += 1
     }
     false
   }
 
-  /** Vectorized MOR: surviving ordinals map through a selection view over
-    * the batch's own vectors — no column data is copied, deleted rows
-    * simply vanish from the batch's row space (production Iceberg's
-    * delete-aware vectorized read shape). A batch with no deleted rows
-    * passes through untouched (modulo slicing off widened-only columns). */
-  private def select(raw: ColumnarBatch, first: Long): ColumnarBatch = {
-    val nReq = required.fields.length
-    val n = raw.numRows()
-    val sel = new Array[Int](n)
-    var k = 0
-    var i = 0
-    while (i < n) {
-      if (!deleted.contains(first + i) && (eqSetsEmpty || !eqDeleted(raw, i))) {
-        sel(k) = i; k += 1
-      }
-      i += 1
-    }
-    if (k == n) {
-      if (extraFields.isEmpty) raw
-      // slice off the widened-only columns; vectors wrap in close-shields
-      // (the bases belong to the reader — see SelectedColumnVector.close)
-      else new ColumnarBatch(
-        Array.tabulate[ColumnVector](nReq)(c =>
-          new ShieldedColumnVector(raw.column(c))), n)
-    } else {
-      val keep = java.util.Arrays.copyOf(sel, k)
-      val cols = Array.tabulate[ColumnVector](nReq)(c =>
-        new SelectedColumnVector(raw.column(c), keep))
-      new ColumnarBatch(cols, k)
-    }
+  /** Deleted rows vanish from the batch's row space through a selection
+    * view over the batch's own vectors — no column data is copied
+    * (production Iceberg's delete-aware vectorized read shape). */
+  private def assemble(raw: ColumnarBatch, first: Long): ColumnarBatch = {
+    val keep = if (noDeletes) null else selection(raw, first)
+    if (keep == null && plain) raw
+    else new ColumnarBatch(
+      Array.tabulate[ColumnVector](required.length)(c => vector(c, raw, first, keep)),
+      if (keep == null) raw.numRows() else keep.length)
   }
+}
+
+object GraftTableColumnarReader {
+  private val BatchSize = 4096
+
+  /** Where a working column's vector comes from. */
+  private sealed trait Source
+  /** Column `idx` of the decoded batch. */
+  private final case class Decoded(idx: Int) extends Source
+  /** A per-split constant (on-heap, left to the GC; shielded from a
+    * consumer's close()). */
+  private final case class Constant(
+      v: org.apache.spark.sql.vectorized.ColumnVector) extends Source
+  /** `offset` + the row's file-absolute index. */
+  private final case class Position(offset: Long) extends Source
+}
+
+/** `base` + each row's index (re-indexed through `sel` when non-null) —
+  * `_pos` and a first_row_id-derived `_row_id`, computed on read. */
+private[sources] final class PositionColumnVector(base: Long, sel: Array[Int])
+    extends org.apache.spark.sql.vectorized.ColumnVector(LongType) {
+  override def close(): Unit = ()
+  override def hasNull: Boolean = false
+  override def numNulls(): Int = 0
+  override def isNullAt(rowId: Int): Boolean = false
+  override def getLong(rowId: Int): Long = base + (if (sel == null) rowId else sel(rowId))
+  private def unsupported = throw new UnsupportedOperationException("a position is a long")
+  override def getBoolean(rowId: Int): Boolean = unsupported
+  override def getByte(rowId: Int): Byte = unsupported
+  override def getShort(rowId: Int): Short = unsupported
+  override def getInt(rowId: Int): Int = unsupported
+  override def getFloat(rowId: Int): Float = unsupported
+  override def getDouble(rowId: Int): Double = unsupported
+  override def getArray(rowId: Int): org.apache.spark.sql.vectorized.ColumnarArray = unsupported
+  override def getMap(ordinal: Int): org.apache.spark.sql.vectorized.ColumnarMap = unsupported
+  override def getDecimal(rowId: Int, precision: Int, scale: Int): Decimal = unsupported
+  override def getUTF8String(rowId: Int): org.apache.spark.unsafe.types.UTF8String =
+    unsupported
+  override def getBinary(rowId: Int): Array[Byte] = unsupported
+  override def getChild(ordinal: Int): org.apache.spark.sql.vectorized.ColumnVector =
+    unsupported
 }
 
 /** A per-row equality-delete membership test over a ColumnarBatch,
@@ -1593,8 +1677,10 @@ private[sources] object EqProbe {
         case FloatType => Float.box(v.getFloat(row))
         case BooleanType => Boolean.box(v.getBoolean(row))
         case StringType => v.getUTF8String(row).toString
+        case BinaryType => scala.collection.immutable.ArraySeq.unsafeWrapArray(v.getBinary(row))
+        case d: DecimalType => v.getDecimal(row, d.precision, d.scale).toJavaBigDecimal
         case other => throw new UnsupportedOperationException(
-          s"equality comparison over $other on the columnar route")
+          s"equality comparison over $other")
       }
     override def deleted(raw: ColumnarBatch, row: Int): Boolean = {
       var j = 0
@@ -1607,7 +1693,7 @@ private[sources] object EqProbe {
   }
 
   /** Build the best probe for a loaded value set (canonical columnar
-    * domain — Int/Long/String as [[EqDeleteIndex.canonical]] decodes). */
+    * domain, as [[EqDeleteIndex]] decodes it). */
   def build(idxs: Array[Int], dts: Array[DataType],
       set: java.util.HashSet[Vector[Any]]): EqProbe = {
     import scala.jdk.CollectionConverters._
@@ -1638,13 +1724,16 @@ private[sources] object EqProbe {
 }
 
 /** Task-local equality-delete value sets in the canonical COLUMNAR
-  * domain (Int epoch days, Long micros, String — exactly what
-  * ColumnVector getters hand back), one per distinct equality-column
-  * list. Null equality values match null data values (the spec rule) —
-  * `null` participates in the tuple. */
+  * domain (Int epoch days, Long micros, String, content-compared bytes,
+  * BigDecimal at the column's scale — what the probes read from the
+  * ColumnVectors), one per distinct equality-column list, keyed by the
+  * columns' CURRENT names (`altToCurrent` maps a pre-rename delete
+  * file's names). Null equality values match null data values (the spec
+  * rule) — `null` participates in the tuple. */
 private[sources] object EqDeleteIndex {
   def load(eqDeleteFiles: Seq[String], tableType: String => DataType,
-      conf: Configuration): Seq[(Seq[String], java.util.HashSet[Vector[Any]])] = {
+      altToCurrent: Map[String, String], conf: Configuration)
+      : Seq[(Seq[String], java.util.HashSet[Vector[Any]])] = {
     val acc = scala.collection.mutable.LinkedHashMap
       .empty[Seq[String], java.util.HashSet[Vector[Any]]]
     eqDeleteFiles.foreach { del =>
@@ -1652,7 +1741,8 @@ private[sources] object EqDeleteIndex {
         new org.apache.hadoop.fs.Path(del), conf))
       try {
         val full = r.getFileMetaData.getSchema
-        val cols = full.getFields.asScala.map(_.getName).toSeq
+        val raw = full.getFields.asScala.map(_.getName).toSeq
+        val cols = raw.map(c => altToCurrent.getOrElse(c, c))
         val set = acc.getOrElseUpdate(cols, new java.util.HashSet[Vector[Any]]())
         val io = new ColumnIOFactory().getColumnIO(full, full, false)
         var pages = r.readNextRowGroup()
@@ -1661,7 +1751,8 @@ private[sources] object EqDeleteIndex {
           var i = 0L
           while (i < pages.getRowCount) {
             val g = rr.read()
-            set.add(cols.map(c => canonical(g, c, tableType(c))).toVector)
+            set.add(raw.zip(cols).map { case (rc, cc) =>
+              canonical(g, rc, tableType(cc)) }.toVector)
             i += 1
           }
           pages = r.readNextRowGroup()
@@ -1672,9 +1763,9 @@ private[sources] object EqDeleteIndex {
   }
 
   /** Group-API decode into the canonical columnar domain — MUST mirror
-    * [[GraftTableColumnarReader.eqValue]] exactly, or tuples never match. */
+    * the probes' `EqProbe.Generic.value` exactly, or tuples never match. */
   private def canonical(g: Group, name: String, dt: DataType): Any = {
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{FLOAT => PFLOAT, INT32}
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{FLOAT => PFLOAT, INT32, INT64}
     val t = g.getType
     if (!t.containsField(name)) return null
     val i = t.getFieldIndex(name)
@@ -1695,8 +1786,19 @@ private[sources] object EqDeleteIndex {
       case FloatType => g.getFloat(i, 0)
       case BooleanType => g.getBoolean(i, 0)
       case StringType => g.getBinary(i, 0).toStringUsingUTF8
+      case BinaryType => scala.collection.immutable.ArraySeq.unsafeWrapArray(
+        g.getBinary(i, 0).getBytes)
+      case dec: DecimalType =>
+        // our task writers land FIXED_LEN_BYTE_ARRAY (the Iceberg
+        // mapping); Spark-written files use INT32/INT64 for small precision
+        t.getType(i).asPrimitiveType().getPrimitiveTypeName match {
+          case INT32 => java.math.BigDecimal.valueOf(g.getInteger(i, 0).toLong, dec.scale)
+          case INT64 => java.math.BigDecimal.valueOf(g.getLong(i, 0), dec.scale)
+          case _ => new java.math.BigDecimal(
+            new java.math.BigInteger(g.getBinary(i, 0).getBytes), dec.scale)
+        }
       case other => throw new UnsupportedOperationException(
-        s"equality comparison over $other on the columnar route")
+        s"equality comparison over $other")
     }
   }
 }
@@ -1734,11 +1836,11 @@ private[sources] final class ShieldedColumnVector(
 
 /** A ColumnVector view that re-indexes rows through a selection array:
   * row `i` of the view is row `sel(i)` of the base vector. This is how
-  * the columnar MOR route drops position-deleted rows without copying
-  * column data. Children ([[getChild]]) are NOT remapped — safe for the
-  * palette's array type (getArray returns base-space element slices) but
-  * not for structs, whose final `getStruct` walks children by row-id;
-  * structs are outside [[GraftTableColumnarReader.supportedSchema]]. */
+  * the reader drops deleted rows without copying column data. Children
+  * of row-indexed types (struct, variant — whose final getters walk
+  * children by the view's row id) are views under the same selection;
+  * array and map children are indexed by element, and their getters
+  * slice the base's children, so those pass through. */
 private[sources] final class SelectedColumnVector(
     base: org.apache.spark.sql.vectorized.ColumnVector, sel: Array[Int])
     extends org.apache.spark.sql.vectorized.ColumnVector(base.dataType()) {
@@ -1773,8 +1875,21 @@ private[sources] final class SelectedColumnVector(
   override def getUTF8String(rowId: Int): org.apache.spark.unsafe.types.UTF8String =
     base.getUTF8String(sel(rowId))
   override def getBinary(rowId: Int): Array[Byte] = base.getBinary(sel(rowId))
+  // the row-indexed children, each view built once (ColumnarRow asks
+  // for a child per field read); null for types without them
+  private val children: Array[org.apache.spark.sql.vectorized.ColumnVector] =
+    base.dataType() match {
+      case st: StructType => new Array(st.length)
+      case VariantType => new Array(2) // value and metadata
+      case _ => null
+    }
   override def getChild(ordinal: Int): org.apache.spark.sql.vectorized.ColumnVector =
-    base.getChild(ordinal)
+    if (children == null) base.getChild(ordinal)
+    else {
+      if (children(ordinal) == null)
+        children(ordinal) = new SelectedColumnVector(base.getChild(ordinal), sel)
+      children(ordinal)
+    }
 }
 
 /** The combined position-delete state addressing one data file: v2
@@ -1793,9 +1908,9 @@ private[sources] final class PosDeletes(
 
 /** Task-local position-delete index: the FILE-ABSOLUTE deleted row
   * indexes addressing ONE data file, loaded once per task from its
-  * sequence-scoped, path-bound-scoped delete files. Shared by the row
-  * and columnar MOR routes — both address the same coordinate system
-  * (record order == row index, Iceberg's `pos`). */
+  * sequence-scoped, path-bound-scoped delete files. Shared by the
+  * parquet, Avro and ORC readers — all address the same coordinate
+  * system (record order == row index, Iceberg's `pos`). */
 private[sources] object PosDeleteIndex {
 
   /** Parquet position deletes + v3 deletion vectors as one probe. */
@@ -1846,9 +1961,8 @@ private[sources] object PosDeleteIndex {
 
 /** Task-local equality-delete value sets in the EXTERNAL ROW domain
   * (String / boxed primitives / LocalDate / Instant / LocalDateTime /
-  * content-comparable byte sequences) — shared by the parquet ROW route
-  * and the Avro/ORC partition readers, whose data decodes land in the
-  * same domain. Delete files are always parquet (this engine writes
+  * content-comparable byte sequences) — shared by the Avro and ORC
+  * partition readers, whose data decodes land in that domain. Delete files are always parquet (this engine writes
   * them); their columns canonicalize to the CURRENT name generation.
   * Byte arrays wrap content-comparable via [[RowEqDeletes.canon]] —
   * a raw Array[Byte] inside the tuple would compare by REFERENCE and
@@ -1892,9 +2006,8 @@ private[sources] object RowEqDeletes {
   }
 
   /** Parquet Group decode of one delete-file value into the external row
-    * domain — MUST mirror the data-side decodes (the parquet row
-    * reader's valueOf, the Avro converter, the ORC vector decode) or
-    * tuples never match. Delete files carry primitive key columns only. */
+    * domain — MUST mirror the data-side decodes (the Avro converter,
+    * the ORC vector decode) or tuples never match. Delete files carry primitive key columns only. */
   private def decode(g: Group, name: String, dt: DataType): Any = {
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{FLOAT => PFLOAT, INT32, INT64}
     val t = g.getType
@@ -1936,39 +2049,6 @@ private[sources] object RowEqDeletes {
       case other => throw new UnsupportedOperationException(
         s"equality-delete column type $other is not supported")
     }
-  }
-}
-
-object GraftTableColumnarReader {
-  private def vectorizable(dt: DataType, nested: Boolean): Boolean = dt match {
-    case IntegerType | LongType | FloatType | DoubleType | BooleanType |
-         StringType | BinaryType | DateType | TimestampType |
-         TimestampNTZType => true
-    case _: DecimalType => true
-    // Spark's vectorized parquet reader decodes standard 3-level lists
-    // natively (nested column vectors) — array<float> embedding scans
-    // stay on the columnar route
-    case ArrayType(elem, _) => vectorizable(elem, nested)
-    // struct/map only when the caller says batches pass through RAW
-    // (delete-free scans): ColumnVector.getStruct is final and walks
-    // children by row-id, which the selection views cannot remap
-    case st: StructType if nested =>
-      st.fields.forall(f => vectorizable(f.dataType, nested))
-    case MapType(kt, vt, _) if nested =>
-      vectorizable(kt, nested) && vectorizable(vt, nested)
-    case _ => false
-  }
-  def supportedSchema(s: StructType, allowNested: Boolean = false): Boolean =
-    s.fields.forall(f => vectorizable(f.dataType, allowNested))
-
-  /** Types whose values compare cleanly between a ColumnVector getter and
-    * the Group-API decode of an equality-delete file — the gate for
-    * keeping equality-delete scans on the columnar route. Binary (array
-    * equality), decimal (two physicals) and nested types stay row-route. */
-  def eqComparable(dt: DataType): Boolean = dt match {
-    case IntegerType | LongType | FloatType | DoubleType | BooleanType |
-         StringType | DateType | TimestampType | TimestampNTZType => true
-    case _ => false
   }
 }
 
@@ -2018,243 +2098,4 @@ object FileBoundsEval {
       case _ => false
     }
   }
-}
-
-/** Streams one data file through parquet's Group API with column
-  * projection, applying its position AND equality deletes task-locally.
-  * Row index == record order: the reader decodes every row group in file
-  * order with no predicate skipping, the same coordinate system
-  * `_metadata.row_index` (and Iceberg's `pos`) addresses. Equality
-  * deletes load once per task into value sets keyed by the delete file's
-  * own column list (its schema IS the equality ids), and rows whose
-  * tuple is in a set are skipped — null matches null, the spec's rule.
-  * The parquet projection widens to cover the equality columns even when
-  * the query never selects them; output rows stay on `required`. */
-class GraftTablePartitionReader(part: GraftTableInputPartition,
-    required: StructType, conf: Configuration) extends PartitionReader[InternalRow] {
-
-  private def open(path: String): ParquetFileReader =
-    ParquetFileReader.open(HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(path), conf))
-
-  /** Old-name → current-name map after RENAME COLUMN (empty otherwise). */
-  private val altToCurrent: Map[String, String] =
-    part.nameAlternates.flatMap { case (cur, as) => as.map(_ -> cur) }
-
-  /** Projection = the file's own fields restricted to the required
-    * columns (requested schemas must structurally match the file); a
-    * required column the file predates null-fills in [[rowOf]]. A
-    * RENAMED column selects under the name generation the file carries.
-    * An empty projection (count(*), or all-columns-evolved) still needs
-    * one field to drive row iteration. */
-  private def projected(full: MessageType, names: Seq[String]): MessageType = {
-    val wanted = names.flatMap(n => n +: part.nameAlternates.getOrElse(n, Nil)).toSet
-    val sel = full.getFields.asScala.filter(f => wanted.contains(f.getName))
-    new MessageType(full.getName, (if (sel.nonEmpty) sel else full.getFields.asScala.take(1)).asJava)
-  }
-
-  /** Deleted row indexes addressing THIS file, loaded once per task from
-    * the sequence-scoped, path-bound-scoped delete files (Iceberg's
-    * task-local delete apply; [[PosDeleteIndex]] — shared with the
-    * columnar route). */
-  private val deleted: PosDeletes =
-    PosDeleteIndex.loadAll(part.posDeleteFiles, part.dvRefs, part.filePath, conf)
-
-  private def tableType(name: String): DataType =
-    part.tableSchema.fields.find(_.name == name).map(_.dataType).getOrElse(
-      throw new IllegalArgumentException(s"equality column '$name' not in table schema"))
-
-  /** Equality-delete value sets, one per distinct column list — loaded
-    * once per task via the shared [[RowEqDeletes]] loader (Iceberg's
-    * task-local eq-delete apply): values in the external row domain,
-    * byte arrays content-comparable, names canonicalized to the current
-    * generation; a null equality value matches a null data value. */
-  private val eqSets: Seq[(Seq[String], java.util.HashSet[Vector[Any]])] =
-    RowEqDeletes.load(part.eqDeleteFiles, tableType, altToCurrent, conf)
-
-  // ------------------------------------------------------- the data file
-  // Low-level row-group iteration: a split partition (rowGroup >= 0)
-  // skips straight to its group and reads ONLY it; the un-split case
-  // streams every group. `rowIndex` stays FILE-absolute (rowStart is the
-  // split's first-row index), which is what position deletes address.
-  private val dataReader = open(part.filePath)
-  private val dataFull = dataReader.getFileMetaData.getSchema
-  private val dataReq = projected(dataFull,
-    (required.fieldNames.toSeq ++ eqSets.flatMap(_._1)).distinct)
-  dataReader.setRequestedSchema(dataReq)
-  private val dataIO = new ColumnIOFactory().getColumnIO(dataReq, dataFull, false)
-  if (part.rowGroup > 0) (0 until part.rowGroup).foreach(_ => dataReader.skipNextRowGroup())
-  private var pages = dataReader.readNextRowGroup()
-  private var recordReader =
-    if (pages == null) null else dataIO.getRecordReader(pages, new GroupRecordConverter(dataReq))
-  private var remaining: Long = if (pages == null) 0L else pages.getRowCount
-  private val toCatalyst = CatalystTypeConverters.createToCatalystConverter(required)
-  private var rowIndex: Long = part.rowStart - 1
-  private var current: InternalRow = _
-
-  /** Next raw record, crossing row-group boundaries in the un-split case;
-    * null at end of the split/file. */
-  private def advance(): Group = {
-    if (remaining == 0) {
-      if (part.rowGroup >= 0) return null // a split reads exactly one group
-      pages = dataReader.readNextRowGroup()
-      if (pages == null) return null
-      recordReader = dataIO.getRecordReader(pages, new GroupRecordConverter(dataReq))
-      remaining = pages.getRowCount
-      return advance()
-    }
-    remaining -= 1
-    recordReader.read()
-  }
-
-  private def valueOf(g: Group, name: String, dt: DataType): Any = {
-    val t = g.getType
-    // resolve the file's own name generation (RENAME COLUMN); a column
-    // absent under every historical name predates the field: fill the
-    // v3 initial-default if the schema declares one, else null
-    val actual =
-      if (t.containsField(name)) name
-      else part.nameAlternates.getOrElse(name, Nil).find(t.containsField) match {
-        case Some(old) => old
-        case None => return part.initialDefaults.get(name).orNull
-      }
-    val i = t.getFieldIndex(actual)
-    if (g.getFieldRepetitionCount(i) == 0) return null
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{FLOAT => PFLOAT, INT32}
-    dt match {
-      case IntegerType => g.getInteger(i, 0)
-      case LongType =>
-        // type-widening evolution: pre-widening files keep INT32 — the
-        // declared long schema promotes the narrower physical losslessly
-        t.getType(i).asPrimitiveType().getPrimitiveTypeName match {
-          case INT32 => g.getInteger(i, 0).toLong
-          case _ => g.getLong(i, 0)
-        }
-      case DoubleType =>
-        t.getType(i).asPrimitiveType().getPrimitiveTypeName match {
-          case PFLOAT => g.getFloat(i, 0).toDouble
-          case _ => g.getDouble(i, 0)
-        }
-      case FloatType => g.getFloat(i, 0)
-      case BooleanType => g.getBoolean(i, 0)
-      case StringType => g.getBinary(i, 0).toStringUsingUTF8
-      case BinaryType => g.getBinary(i, 0).getBytes
-      case DateType => java.time.LocalDate.ofEpochDay(g.getInteger(i, 0).toLong)
-      case TimestampType =>
-        val us = g.getLong(i, 0)
-        java.time.Instant.ofEpochSecond(Math.floorDiv(us, 1000000L),
-          Math.floorMod(us, 1000000L) * 1000L)
-      case TimestampNTZType =>
-        val us = g.getLong(i, 0)
-        java.time.LocalDateTime.ofEpochSecond(Math.floorDiv(us, 1000000L),
-          (Math.floorMod(us, 1000000L) * 1000L).toInt, java.time.ZoneOffset.UTC)
-      case dec: DecimalType =>
-        // physical encoding varies by writer: our task writers land
-        // FIXED_LEN_BYTE_ARRAY (the Iceberg mapping); Spark-written
-        // rewrite files use INT32/INT64 for small precision
-        import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-        t.getType(i).asPrimitiveType().getPrimitiveTypeName match {
-          case INT32 => java.math.BigDecimal.valueOf(g.getInteger(i, 0).toLong, dec.scale)
-          case INT64 => java.math.BigDecimal.valueOf(g.getLong(i, 0), dec.scale)
-          case _ => new java.math.BigDecimal(
-            new java.math.BigInteger(g.getBinary(i, 0).getBytes), dec.scale)
-        }
-      case ArrayType(elem, _) =>
-        // 3-level list decode (LIST > repeated "list"/"array"/... >
-        // single child) — both our task writers and Spark's native
-        // writer produce this layout; embedding columns read here when
-        // the scan needs the row route (MOR, metadata columns). Element
-        // decode recurses through valueOf, so nested elements
-        // (array<struct>, array<array<...>>) come free.
-        val outer = g.getGroup(i, 0)
-        val n = outer.getFieldRepetitionCount(0)
-        (0 until n).map { j =>
-          val lg = outer.getGroup(0, j)
-          valueOf(lg, lg.getType.getFieldName(0), elem)
-        }
-      case st: StructType =>
-        // plain parquet group — external Row, CatalystTypeConverters
-        // handles the rest (same contract as every other branch)
-        val sub = g.getGroup(i, 0)
-        org.apache.spark.sql.Row.fromSeq(
-          st.fields.toSeq.map(f => valueOf(sub, f.name, f.dataType)))
-      case MapType(kt, vt, _) =>
-        // standard parquet MAP (MAP > repeated key_value > key, value)
-        val outer = g.getGroup(i, 0)
-        val n = outer.getFieldRepetitionCount(0)
-        (0 until n).map { j =>
-          val kv = outer.getGroup(0, j)
-          valueOf(kv, "key", kt) -> valueOf(kv, "value", vt)
-        }.toMap
-      case org.apache.spark.sql.types.VariantType =>
-        // the unshredded variant group: (metadata, value) binary halves
-        // reassemble into the runtime VariantVal
-        val sub = g.getGroup(i, 0)
-        new org.apache.spark.unsafe.types.VariantVal(
-          sub.getBinary("value", 0).getBytes,
-          sub.getBinary("metadata", 0).getBytes)
-      case other => throw new UnsupportedOperationException(
-        s"graft-table reader does not decode $other (column $name)")
-    }
-  }
-
-  /** Does the PHYSICAL file carry a materialized lineage column of this
-    * name? (Rewrites materialize moved rows' ids — see GraftTable
-    * lineage docs.) */
-  private lazy val fileHasLineage: Set[String] =
-    Seq(GraftTable.RowIdCol, GraftTable.LastUpdatedCol)
-      .filter(dataFull.containsField).toSet
-
-  private def rowOf(g: Group): org.apache.spark.sql.Row =
-    org.apache.spark.sql.Row.fromSeq(required.fields.toSeq.map { f =>
-      f.name match {
-        // metadata columns (SupportsMetadataColumns): served by the
-        // reader, never decoded from the file
-        case "_file" => part.filePath
-        case "_pos" => rowIndex
-        // v3 row lineage: the file's materialized column when a rewrite
-        // carried ids, else first_row_id + pos; null on pre-v3 tables
-        case GraftTable.RowIdCol
-            if !part.tableSchema.fieldNames.contains(GraftTable.RowIdCol) =>
-          if (fileHasLineage(GraftTable.RowIdCol))
-            valueOf(g, GraftTable.RowIdCol, LongType)
-          else part.firstRowId.map(_ + rowIndex).orNull
-        case GraftTable.LastUpdatedCol
-            if !part.tableSchema.fieldNames.contains(GraftTable.LastUpdatedCol) =>
-          if (fileHasLineage(GraftTable.LastUpdatedCol))
-            valueOf(g, GraftTable.LastUpdatedCol, LongType)
-          // a file that carries _row_id but not _lus (delta UPDATE carry
-          // files) still has lineage: its rows were last touched by the
-          // commit that wrote it — the file's data sequence
-          else if (part.firstRowId.isDefined ||
-              fileHasLineage(GraftTable.RowIdCol)) part.sequenceNumber
-          else null
-        // the position_deletes metadata table's provenance column — the
-        // PHYSICAL file each (file_path, pos) row came from; only when
-        // the served schema doesn't carry a real column of that name
-        case "delete_file_path"
-            if !part.tableSchema.fieldNames.contains("delete_file_path") =>
-          part.filePath
-        case _ => valueOf(g, f.name, f.dataType)
-      }
-    })
-
-  private def equalityDeleted(g: Group): Boolean =
-    eqSets.exists { case (cols, set) =>
-      set.contains(cols.map(c =>
-        RowEqDeletes.canon(valueOf(g, c, tableType(c)))).toVector) }
-
-  override def next(): Boolean = {
-    var g = advance()
-    rowIndex += 1
-    while (g != null && (deleted.contains(rowIndex) || equalityDeleted(g))) {
-      g = advance(); rowIndex += 1
-    }
-    if (g == null) false
-    else { current = toCatalyst(rowOf(g)).asInstanceOf[InternalRow]; true }
-  }
-
-  override def get(): InternalRow = current
-
-  override def close(): Unit = dataReader.close()
 }

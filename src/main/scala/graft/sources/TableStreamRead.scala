@@ -56,17 +56,15 @@ object GraftSnapshotOffset {
   *     overwrite/replace snapshots (compaction, COW rewrites) would
   *     re-emit rewritten rows, so they FAIL the stream unless
   *     `streaming-skip-overwrite-snapshots=true` (Iceberg's contract);
-  *   - appends carry no pending deletes by construction, so batches
-  *     decode through the vectorized columnar route when the projection
-  *     allows (same scan-level rules as the batch path);
+  *   - appends carry no pending deletes by construction; batches decode
+  *     through the vectorized parquet reader;
   *   - `starting-snapshot-id` starts the stream AFTER a known snapshot
   *     (exclusive) — "only new data" = pass the current head's id.
   *
   * Trigger.AvailableNow pins the head at query start and drains up to it
   * in bounded batches. */
 class GraftTableMicroBatchStream(metadataPath: String, required: StructType,
-    opts: StreamReadOptions, hadoopConf: graft.iceberg.SerializableHadoopConf,
-    allowColumnar: Boolean = true)
+    opts: StreamReadOptions, hadoopConf: graft.iceberg.SerializableHadoopConf)
     extends MicroBatchStream with SupportsTriggerAvailableNow {
 
   private val tableDir = new Path(metadataPath).getParent.toString
@@ -174,14 +172,9 @@ class GraftTableMicroBatchStream(metadataPath: String, required: StructType,
       }.map(p => p: InputPartition).toArray
   }
 
-  /** Append batches carry no deletes, so the columnar route applies under
-    * the same eligibility rules as the batch scan — including the
-    * `columnar=false` escape hatch (the documented fallback for foreign
-    * files with non-native timestamp encodings). */
+  /** Stream partitions are parquet appends: they decode columnar. */
   override def createReaderFactory(): PartitionReaderFactory =
-    new GraftTableReaderFactory(required, hadoopConf,
-      allowColumnar && GraftTableColumnarReader.supportedSchema(required) &&
-        !required.fieldNames.exists(n => n == "_file" || n == "_pos"))
+    new GraftTableReaderFactory(required, hadoopConf, columnar = true)
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()

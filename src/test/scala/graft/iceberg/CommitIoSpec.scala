@@ -6,11 +6,14 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** The local filesystem, recording the paths it is asked to stat (outside
-  * of an `open`, which stats the file it opens) and the paths it opens. */
+  * of an `open`, which stats the file it opens) and the paths it opens,
+  * with how often. */
 class CommitIoCountingFs extends org.apache.hadoop.fs.LocalFileSystem {
   override def open(f: org.apache.hadoop.fs.Path, bufferSize: Int)
       : org.apache.hadoop.fs.FSDataInputStream = {
     CommitIoCountingFs.opened.add(PathId(f.toString))
+    CommitIoCountingFs.opens.computeIfAbsent(PathId(f.toString),
+      _ => new java.util.concurrent.atomic.AtomicInteger).incrementAndGet()
     CommitIoCountingFs.inOpen.set(true)
     try super.open(f, bufferSize) finally CommitIoCountingFs.inOpen.set(false)
   }
@@ -23,8 +26,10 @@ class CommitIoCountingFs extends org.apache.hadoop.fs.LocalFileSystem {
 object CommitIoCountingFs {
   val statted = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
   val opened = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  val opens = new java.util.concurrent.ConcurrentHashMap[String,
+    java.util.concurrent.atomic.AtomicInteger]()
   private[iceberg] val inOpen = ThreadLocal.withInitial[java.lang.Boolean](() => false)
-  def reset(): Unit = { statted.clear(); opened.clear() }
+  def reset(): Unit = { statted.clear(); opened.clear(); opens.clear() }
 }
 
 /** What a commit reads and writes besides its answer: the manifest-list
@@ -153,5 +158,16 @@ class CommitIoSpec extends SparkSpec {
     assert(written.size == 2)
     assert(written.forall(dataPaths), s"${written.mkString(", ")} vs ${dataPaths.mkString(", ")}")
     assert(GraftTable.read(spark, GraftTable.latestMetadataPath(dir)).count() == 18L)
+  }
+
+  test("a catalog point read opens the head document once") {
+    val t = catalog("cio5")
+    spark.sql("CREATE TABLE cio5.db.t (k BIGINT, v STRING)")
+    spark.sql("INSERT INTO cio5.db.t SELECT id, concat('v', id) FROM range(0, 100)")
+    val head = PathId(GraftTable.latestMetadataPath(t))
+    val got = counted(spark.sql("SELECT v FROM cio5.db.t WHERE k = 42").collect())
+    assert(got.map(_.getString(0)).toSeq == Seq("v42"))
+    val opens = Option(CommitIoCountingFs.opens.get(head)).map(_.get).getOrElse(0)
+    assert(opens == 1, s"$opens opens of $head")
   }
 }

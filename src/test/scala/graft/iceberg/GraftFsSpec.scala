@@ -66,10 +66,11 @@ object GraftFs {
 }
 
 /** The table format on a filesystem with an authority: the same DML,
-  * DV-merge, expiry and orphan-sweep sequence on `graftfs://a/t` gives
-  * the answers it gives on a local directory, and a twin table at
-  * `graftfs://b/t` (the same path component on another authority) is
-  * neither read nor touched. */
+  * DV-merge, expiry and orphan-sweep sequence on `graftfs://a/t` — and
+  * the SQL UPDATE, MERGE, DELETE and rewrite procedures through a catalog
+  * whose warehouse is `graftfs://a/wh` — give the answers they give on a
+  * local directory, and a twin table at `graftfs://b` (the same path
+  * component on another authority) is neither read nor touched. */
 class GraftFsSpec extends SparkSpec {
 
   private val schema = IcebergSchema(0, Seq(
@@ -157,6 +158,58 @@ class GraftFsSpec extends SparkSpec {
 
       assert(tree(s"$tmp/b") == twinBefore, "a graftfs://a operation touched graftfs://b")
       assert(keys("graftfs://b/t") == (0L until 80L))
+    } finally hc.unset("fs.graftfs.impl")
+  }
+
+  /** Merge-on-read UPDATE, MERGE and DELETE, then both rewrite
+    * procedures, through catalog `cat`; the table's rows after each. */
+  private def sqlSequence(cat: String): Seq[Seq[(Long, String)]] = {
+    def rowsNow() = spark.sql(s"SELECT k, v FROM $cat.db.t").collect()
+      .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq
+    spark.sql(s"CREATE TABLE $cat.db.t (k BIGINT, v STRING) TBLPROPERTIES (" +
+      "'write.update.mode'='merge-on-read', 'write.delete.mode'='merge-on-read', " +
+      "'write.merge.mode'='merge-on-read')")
+    spark.sql(s"INSERT INTO $cat.db.t SELECT id, concat('v', id) FROM range(0, 40)")
+    spark.sql(s"INSERT INTO $cat.db.t SELECT id, concat('v', id) FROM range(40, 80)")
+    spark.sql(s"UPDATE $cat.db.t SET v = 'u' WHERE k % 7 = 0")
+    val afterUpdate = rowsNow()
+    spark.sql(s"""MERGE INTO $cat.db.t t
+      USING (SELECT id AS k, 'm' AS v FROM range(75, 85)) s ON t.k = s.k
+      WHEN MATCHED THEN UPDATE SET v = s.v WHEN NOT MATCHED THEN INSERT *""")
+    val afterMerge = rowsNow()
+    spark.sql(s"DELETE FROM $cat.db.t WHERE k < 5")
+    spark.sql(s"CALL $cat.system.rewrite_position_delete_files(table => 'db.t')")
+    val afterDeletes = rowsNow()
+    spark.sql(s"CALL $cat.system.rewrite_data_files(table => 'db.t')")
+    Seq(afterUpdate, afterMerge, afterDeletes, rowsNow())
+  }
+
+  test("SQL UPDATE, MERGE, DELETE and the rewrite procedures on a graftfs://a " +
+      "warehouse match a local one and leave graftfs://b alone") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-graftfs-sql").toString
+    GraftFs.mount("a", s"$tmp/a")
+    GraftFs.mount("b", s"$tmp/b")
+    val hc = spark.sparkContext.hadoopConfiguration
+    hc.set("fs.graftfs.impl", classOf[GraftFs].getName)
+    def catalog(name: String, warehouse: String): Unit = {
+      spark.conf.set(s"spark.sql.catalog.$name", classOf[graft.sources.GraftCatalog].getName)
+      spark.conf.set(s"spark.sql.catalog.$name.warehouse", warehouse)
+    }
+    try {
+      seed("graftfs://b/wh/db/t", "b6b9a6a1-0000-4000-8000-0000000af503")
+      val twinBefore = tree(s"$tmp/b")
+      catalog("gfs_a", "graftfs://a/wh")
+      catalog("gfs_local", s"$tmp/local/wh")
+      val onA = sqlSequence("gfs_a")
+      val onLocal = sqlSequence("gfs_local")
+      val want = (0L until 85L).map(k =>
+        (k, if (k >= 75L) "m" else if (k % 7 == 0) "u" else s"v$k")).filter(_._1 >= 5L)
+      assert(onLocal.last == want, onLocal.last)
+      assert(onA == onLocal)
+      assert(HadoopConfs.fileSystemFor("graftfs://a/wh/db/t")
+        .exists(new Path("graftfs://a/wh/db/t/data")))
+      assert(tree(s"$tmp/b") == twinBefore, "a graftfs://a operation touched graftfs://b")
+      assert(keys("graftfs://b/wh/db/t") == (0L until 80L))
     } finally hc.unset("fs.graftfs.impl")
   }
 }

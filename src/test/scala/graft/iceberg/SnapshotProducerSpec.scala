@@ -277,4 +277,53 @@ class SnapshotProducerSpec extends SparkSpec {
     assert(bf.written.isEmpty && bf.prefixes == Set("m-lineage"))
     assert(bf.rewritten.size == 2 && bf.carried.map(_.content) == Seq(1))
   }
+
+  /** Table-directory files whose name carries `uuid`. */
+  private def filesOf(dir: String, uuid: String): Seq[String] =
+    HadoopConfs.fileSystemFor(dir).listStatus(new org.apache.hadoop.fs.Path(dir))
+      .map(_.getPath.getName).filter(_.contains(uuid)).toSeq
+
+  /** The attempt id in a path `Attempt.rewrite` returned. */
+  private def uuidOf(path: String, snapshotId: Long): String =
+    path.split('/').last.split(s"-$snapshotId-").last.take(36)
+
+  test("a losing attempt's manifests and list are deleted; the winner's stay") {
+    val dir = table()
+    GraftTable.append(spark, dir, rows(0, 10))
+    val extra = s"$dir/data/extra.parquet"
+    ParquetFiles.writeOne(rows(100, 105), extra)
+    var attempts = Seq.empty[String]
+    val result = SnapshotProducer.commit(dir) { a =>
+      // the first attempt loses its race to an append committed meanwhile
+      if (attempts.isEmpty) GraftTable.append(spark, dir, rows(10, 20))
+      val carried = a.headRows.zipWithIndex.map { case (r, i) =>
+        a.rewrite(r, "m-probe", s"-$i", ManifestWriter.read(r.path)) }
+      attempts :+= uuidOf(carried.head.path, a.snapshotId)
+      SnapshotProducer.Commit("append", Map("added-data-files" -> "1"), carried,
+        Seq(SnapshotProducer.NewManifest("m-extra", Seq(ManifestWriter.EntryData(
+          1, a.snapshotId, extra, 5L, HadoopConfs.length(extra), Map.empty, Map.empty)))))
+    }
+    assert(result.attempts == 2 && attempts.size == 2)
+    assert(filesOf(dir, attempts(0)).isEmpty && attempts(0) != attempts(1),
+      s"the losing attempt left ${filesOf(dir, attempts(0))}")
+    // the winner: a rewritten manifest per carried row, the new manifest and the list
+    assert(filesOf(dir, attempts(1)).size == 4, filesOf(dir, attempts(1)))
+    assert(GraftTable.read(spark, GraftTable.latestMetadataPath(dir)).select("k")
+      .collect().map(_.getLong(0)).sorted.toSeq == (0L until 20L) ++ (100L until 105L))
+  }
+
+  test("an attempt whose closure throws deletes what it wrote") {
+    val dir = table()
+    GraftTable.append(spark, dir, rows(0, 10))
+    var uuid = ""
+    val e = intercept[IllegalStateException](SnapshotProducer.commit(dir) { a =>
+      val r = a.headRows.head
+      uuid = uuidOf(a.rewrite(r, "m-probe", "", ManifestWriter.read(r.path)).path,
+        a.snapshotId)
+      throw new IllegalStateException("validation failed")
+    })
+    assert(e.getMessage == "validation failed" && uuid.nonEmpty)
+    assert(filesOf(dir, uuid).isEmpty, filesOf(dir, uuid))
+    assert(meta(dir).snapshots.size == 1)
+  }
 }

@@ -626,11 +626,8 @@ class TableSourceSpec extends SparkSpec {
     val clean = spark.sql("SELECT k, payload FROM graft_binp.db.t")
     assert(clean.queryExecution.executedPlan.toString.contains("ColumnarToRow"))
     check(clean)
-    // row route (the MOR fallback's Group-API decode)
-    val meta = GraftTable.latestMetadataPath(s"$wh/db/t")
-    check(spark.read.format("graft-table").option("metadata", meta)
-      .option("columnar", "false").load().select("k", "payload"))
     // and the native GraftTable.read path
+    val meta = GraftTable.latestMetadataPath(s"$wh/db/t")
     check(GraftTable.read(spark, meta).select("k", "payload"))
   }
 

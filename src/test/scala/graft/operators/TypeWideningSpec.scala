@@ -33,13 +33,6 @@ class TypeWideningSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getDouble(1), r.getString(2)))
       .sortBy(_._1).toSeq
     assert(dsv2 == want, s"DSv2 route: $dsv2")
-    // row route (columnar=false: the Group-API physical-type dispatch)
-    val rowRoute = spark.read.format("graft-table")
-      .option("metadata", GraftTable.latestMetadataPath(s"$wh/db/t"))
-      .option("columnar", "false").load()
-      .collect().map(r => (r.getLong(0), r.getDouble(1), r.getString(2)))
-      .sortBy(_._1).toSeq
-    assert(rowRoute == want, s"row route: $rowRoute")
     // native route (spark.read.schema(declared) promotion)
     val native = GraftTable.read(spark,
       GraftTable.latestMetadataPath(s"$wh/db/t"))
