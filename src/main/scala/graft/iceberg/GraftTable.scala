@@ -688,9 +688,14 @@ object GraftTable {
       : (Long, Map[Int, Array[Byte]], Map[Int, Array[Byte]], Map[Int, Long]) = {
     val typed = fields.flatMap(f =>
       IcebergTypes.fromStringOpt(f.fieldType).map(t => (f, t)))
-      // variant defines no ordering — no bounds, and min()/max() over a
-      // VariantType column would fail analysis
-      .filterNot(_._2 == IcebergTypes.TVariant)
+      // bounds are Iceberg single values, which only primitives have:
+      // variant, list, map and struct get none, and min()/max() over a
+      // variant or map column would fail analysis
+      .filter(_._2 match {
+        case IcebergTypes.TVariant | _: IcebergTypes.TList | _: IcebergTypes.TMap
+            | _: IcebergTypes.TStruct => false
+        case _ => true
+      })
     val aggs = count(lit(1)) +: typed.flatMap { case (f, _) =>
       // count(col) = non-null count → spec field 110 null counts, the
       // null-free proof the eq-delete partition scoping needs

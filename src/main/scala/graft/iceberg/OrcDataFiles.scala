@@ -43,8 +43,10 @@ object OrcDataFiles {
     val orc = orcSchema(schema)
     val conf = new org.apache.hadoop.conf.Configuration(HadoopConfs.active())
     stripeRowLimit.foreach(n => conf.setInt("orc.stripe.row.count", n))
+    val p = new org.apache.hadoop.fs.Path(path)
     val opts = OrcFile.writerOptions(conf).setSchema(orc).overwrite(true)
-    val writer = OrcFile.createWriter(new org.apache.hadoop.fs.Path(path), opts)
+      .fileSystem(HadoopConfs.fileSystemFor(p, conf))
+    val writer = OrcFile.createWriter(p, opts)
     val batch = orc.createRowBatch()
     try {
       rows.foreach { row =>

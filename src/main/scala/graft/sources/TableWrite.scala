@@ -7,7 +7,6 @@ import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
@@ -794,7 +793,7 @@ class GraftFileWriter(path: String, schema: StructType,
   }
 
   private val writer = ExampleParquetWriter.builder(
-      HadoopOutputFile.fromPath(new org.apache.hadoop.fs.Path(path), conf))
+      graft.iceberg.HadoopConfs.parquetOutput(new org.apache.hadoop.fs.Path(path), conf))
     .withConf(conf).withType(msgType)
     .withCompressionCodec(CompressionCodecName.SNAPPY)
     .build()
@@ -966,9 +965,11 @@ private[sources] final class OrcTaskFileWriter(path: String,
     DoubleColumnVector, LongColumnVector, TimestampColumnVector}
 
   private val orc = graft.iceberg.OrcDataFiles.orcSchema(schema)
-  private val writer = org.apache.orc.OrcFile.createWriter(
-    new org.apache.hadoop.fs.Path(path),
-    org.apache.orc.OrcFile.writerOptions(conf).setSchema(orc))
+  private val writer = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    org.apache.orc.OrcFile.createWriter(p, org.apache.orc.OrcFile.writerOptions(conf)
+      .fileSystem(graft.iceberg.HadoopConfs.fileSystemFor(p, conf)).setSchema(orc))
+  }
   private val batch = orc.createRowBatch()
   private val tracker = new BoundTracker(schema, fields)
   private var rows = 0L

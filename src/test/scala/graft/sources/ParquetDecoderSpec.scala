@@ -104,6 +104,35 @@ class ParquetDecoderSpec extends SparkSpec {
     assert(isColumnar(df), df.queryExecution.executedPlan.toString)
   }
 
+  test("upsert into an unpartitioned struct/map table bounds only its primitive columns") {
+    val wh = freshCatalog("pdec2u")
+    spark.sql("CREATE TABLE pdec2u.db.t (k INT, s STRUCT<a: INT, b: STRING>, " +
+      "m MAP<STRING, INT>)")
+    spark.sql("INSERT INTO pdec2u.db.t SELECT CAST(id AS INT), " +
+      "named_struct('a', CAST(id * 10 AS INT), 'b', concat('b', id)), " +
+      "map(concat('m', id), CAST(id AS INT)) FROM range(0, 6)")
+    val dir = s"$wh/db/t"
+    GraftTable.upsert(spark, dir, spark.sql("SELECT 2 AS k, " +
+      "named_struct('a', 200, 'b', 'up') AS s, map('up', 2) AS m UNION ALL SELECT 9, " +
+      "named_struct('a', 900, 'b', 'new'), map('new', 9)"), Seq("k"))
+    val got = spark.sql("SELECT k, s, m FROM pdec2u.db.t").collect()
+      .map(r => (r.getInt(0), r.getStruct(1).getInt(0), r.getStruct(1).getString(1),
+        r.getMap[String, Int](2).toMap)).sortBy(_._1).toSeq
+    val want = ((0 until 6) :+ 9).map {
+      case 2 => (2, 200, "up", Map("up" -> 2))
+      case 9 => (9, 900, "new", Map("new" -> 9))
+      case k => (k, k * 10, s"b$k", Map(s"m$k" -> k))
+    }
+    assert(got == want, got.mkString("\n"))
+    val meta = TableMetadata.parseFile(GraftTable.latestMetadataPath(dir))
+    val k = meta.currentSchema.fields.find(_.name == "k").get.id
+    val upserted = liveData(dir).filter(_.filePath.contains("/upsert-"))
+    assert(upserted.size == 1, upserted.map(_.filePath))
+    // no bound for the struct, the map or their children
+    assert(upserted.head.lowerBounds.keySet == Set(k), upserted.head.lowerBounds.keySet)
+    assert(upserted.head.upperBounds.keySet == Set(k), upserted.head.upperBounds.keySet)
+  }
+
   test("initial-default column reads its default beside a pending delete") {
     freshCatalog("pdec3")
     spark.sql("CREATE TABLE pdec3.db.t (k BIGINT) TBLPROPERTIES " +
