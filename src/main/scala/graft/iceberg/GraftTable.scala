@@ -2,7 +2,8 @@ package graft.iceberg
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{MetadataBuilder, StructField, StructType}
+import org.apache.spark.sql.types.{IntegerType, LongType, MetadataBuilder, StringType,
+  StructField, StructType}
 
 import graft.sources.TableDataSource
 
@@ -453,9 +454,9 @@ object GraftTable {
   /** Create an empty v2 table: writes v1.metadata.json. `spec` declares
     * the hidden-partitioning layout appends will write under.
     *
-    * Every graft write route derives bound stats from the written file
-    * itself (`deriveStats` / the task writers' inline stats) — FULL,
-    * untruncated values — so created tables are stamped
+    * Every parquet file graft writes goes through the task writer
+    * ([[graft.sources.GraftFileWriter]]), which tracks bound stats inline
+    * as FULL, untruncated values — so created tables are stamped
     * `graft.metrics=full`. Readers use the stamp as an exactness proof:
     * stats-served MIN/MAX on string/binary-ordered columns is only legal
     * when bounds are known whole values (foreign Iceberg writers default
@@ -489,14 +490,6 @@ object GraftTable {
       // v3 row lineage: fresh tables start the id counter at 0
       nextRowId = if (formatVersion >= 3) Some(0L) else None))
     path
-  }
-
-  /** Min/max bound stats for every primitive schema field, derived from
-    * the written file in ONE distributed aggregate — never fabricated. */
-  private def deriveStats(spark: SparkSession, file: String, meta: TableMetadata)
-      : (Long, Map[Int, Array[Byte]], Map[Int, Array[Byte]]) = {
-    val (n, lo, hi, _) = deriveStatsFor(spark, file, meta.currentSchema.fields)
-    (n, lo, hi)
   }
 
   /** Row count + bound stats from a parquet FOOTER alone — zero data
@@ -681,57 +674,6 @@ object GraftTable {
         carriesLineage = src.formatVersion >= 3 && e.firstRowId.isEmpty,
         firstRowId = e.firstRowId)),
       extraSummary = Map("snapshot-source" -> sourceDir))
-  }
-
-  private def deriveStatsFor(spark: SparkSession, file: String,
-      fields: Seq[IcebergField])
-      : (Long, Map[Int, Array[Byte]], Map[Int, Array[Byte]], Map[Int, Long]) = {
-    val typed = fields.flatMap(f =>
-      IcebergTypes.fromStringOpt(f.fieldType).map(t => (f, t)))
-      // bounds are Iceberg single values, which only primitives have:
-      // variant, list, map and struct get none, and min()/max() over a
-      // variant or map column would fail analysis
-      .filter(_._2 match {
-        case IcebergTypes.TVariant | _: IcebergTypes.TList | _: IcebergTypes.TMap
-            | _: IcebergTypes.TStruct => false
-        case _ => true
-      })
-    val aggs = count(lit(1)) +: typed.flatMap { case (f, _) =>
-      // count(col) = non-null count → spec field 110 null counts, the
-      // null-free proof the eq-delete partition scoping needs
-      Seq(min(col(f.name)), max(col(f.name)), count(col(f.name))) }
-    // the file's own footer schema, read driver-side: skips the
-    // schema-inference job every stats derivation used to launch
-    val row = spark.read.schema(footerSparkSchema(spark, file)).parquet(file)
-      .agg(aggs.head, aggs.tail: _*).head()
-    def enc(t: IcebergType, v: Any): Option[Array[Byte]] = v match {
-      case null => None
-      case d: java.sql.Date => Some(SingleValueCodec.encode(t, d.toLocalDate))
-      // TIMESTAMPTZ values encode as instants, NTZ as local datetimes —
-      // dispatch on the ICEBERG type, not the JVM class the session's
-      // datetime API happened to produce
-      case ts: java.sql.Timestamp => t match {
-        case IcebergTypes.TTimestamptz => Some(SingleValueCodec.encode(t, ts.toInstant))
-        case _ => Some(SingleValueCodec.encode(t, ts.toLocalDateTime))
-      }
-      case ts: java.time.Instant => t match {
-        case IcebergTypes.TTimestamp => Some(SingleValueCodec.encode(t,
-          java.time.LocalDateTime.ofInstant(ts, java.time.ZoneOffset.UTC)))
-        case _ => Some(SingleValueCodec.encode(t, ts))
-      }
-      case other => Some(SingleValueCodec.encode(t, other))
-    }
-    val bounds = typed.zipWithIndex.flatMap { case ((f, t), i) =>
-      for (lo <- enc(t, row.get(1 + 3 * i)); hi <- enc(t, row.get(2 + 3 * i)))
-        yield (f.id, lo, hi)
-    }
-    val total = row.getLong(0)
-    val nulls = typed.zipWithIndex.map { case ((f, _), i) =>
-      f.id -> (total - row.getLong(3 + 3 * i)) }.toMap
-    (total,
-      bounds.map(b => b._1 -> b._2).toMap,
-      bounds.map(b => b._1 -> b._3).toMap,
-      nulls)
   }
 
   /** Append `df` as one CAS-committed append snapshot, routed through
@@ -1350,50 +1292,31 @@ object GraftTable {
     val affected = candLive.join(src, keyCols, "left_semi")
       .select(col("_file")).distinct().collect().map(r => PathId(r.getString(0))).toSet
     val mergeUuid = java.util.UUID.randomUUID()
+    val writerFields = graft.sources.GraftTableWrites.fieldsOf(meta0.currentSchema)
     // per-file COW rewrites are independent Spark jobs — submitted
     // concurrently, and each reads ONLY its target file plus the delete
     // files that can address it (the scan scopes them by sequence and
     // file_path bounds): K affected files cost O(affected bytes) total,
-    // not K full-table scans
+    // not K full-table scans. Each lands as one task-written file with
+    // inline bound stats.
     val rewritten = Par.inParallel(affected.toSeq.sorted.zipWithIndex) { case (f, i) =>
-      val out = f"$tableDir/data/merged-$mergeUuid-${i}%05d.parquet"
       val fileLive = TableDataSource.scanPlan(spark, meta0, Seq(candByPath(f)),
         posEntries, eqEntries)
-      ParquetFiles.writeOne(
+      graft.sources.GraftTableWrites.writeDataFiles(
         fileLive
           .join(src.select(keyCols.map(col) :+ struct(cols.map(col): _*).as("_src"): _*),
             keyCols, "left_outer")
           .select(cols.map(c =>
             when(col("_src").isNotNull, col(s"_src.$c")).otherwise(col(c)).as(c)): _*)
-          .orderBy(keyCols.map(col): _*), out)
-      out
-    }
-    // inserts land through the task-writer machinery at the anti-join's
-    // OWN parallelism: each task streams its rows into its own file,
-    // tracking bound stats INLINE — no single-task funnel, no extra
-    // count() job, no second derive pass over the written files
-    val inserts = src.join(candLive, keyCols, "left_anti")
-    val writerFields = meta0.currentSchema.fields.flatMap(f =>
-      IcebergTypes.fromStringOpt(f.fieldType).map(t => (f.id, f.name, t)))
-    val wconf = new SerializableHadoopConf(HadoopConfs.active())
-    val insertPrefix = s"$tableDir/data/merge-insert-$mergeUuid"
-    val insertMsgs = inserts.sortWithinPartitions(keyCols.map(col): _*)
-      .queryExecution.toRdd.mapPartitionsWithIndex { (pid, it) =>
-        if (it.isEmpty) Iterator.empty
-        else {
-          // attempt-unique name (see the sorted-rewrite writer): retries
-          // write fresh files; losers stay uncommitted orphans
-          val att = org.apache.spark.TaskContext.get().taskAttemptId()
-          val fw = new graft.sources.GraftFileWriter(
-            f"$insertPrefix-p${pid}%05d-t$att.parquet",
-            schema, writerFields, None, 0, wconf.value)
-          try {
-            it.foreach(fw.write)
-            Iterator.single(fw.finish())
-          } catch { case t: Throwable => fw.abort(); throw t }
-        }
-      }.collect().toSeq.filter(_.rows > 0)
-    val newFiles = rewritten
+          .repartition(1).sortWithinPartitions(keyCols.map(col): _*),
+        f"$tableDir/data/merged-$mergeUuid-${i}%05d", writerFields)
+    }.flatten
+    // inserts land through the same task writers at the anti-join's OWN
+    // parallelism: each task streams its rows into its own file — no
+    // single-task funnel, no extra count() job
+    val insertMsgs = graft.sources.GraftTableWrites.writeDataFiles(
+      src.join(candLive, keyCols, "left_anti").sortWithinPartitions(keyCols.map(col): _*),
+      s"$tableDir/data/merge-insert-$mergeUuid", writerFields)
     // the delete files the scan applied — a delete committed AFTER this
     // set was read conflicts with the rewrite (validateNoNewDeletes)
     val scannedDeletes = currentEntries(meta0, 1).map(e => PathId(e.filePath)).toSet
@@ -1410,18 +1333,14 @@ object GraftTable {
         .map(_.copy(status = 0, snapshotId = snapId))
       // v3 lineage: COW-merged files assign fresh ids (same documented
       // identity rule as commitReplaceFiles — MOR preserves, COW renews)
-      val added = Par.inParallel(newFiles) { f =>
-        val (n, lower, upper) = deriveStats(spark, f, base)
-        ManifestWriter.EntryData(1, snapId, f, n, HadoopConfs.length(f),
-          lower, upper, content = 0, sequenceNumber = Some(snapId))
-      } ++ insertMsgs.map(m => // task-derived inline stats, no re-read
+      val added = (rewritten ++ insertMsgs).map(m =>
         ManifestWriter.EntryData(1, snapId, m.path, m.rows, m.bytes,
           m.lower, m.upper, content = 0, sequenceNumber = Some(snapId)))
       // the same stage-or-audit contract every row-level tail honors:
       // a wap-opted table under a staging session stages the MERGE
       val wap = wapEditDecision(None, base.properties, Some(spark))
       SnapshotProducer.Commit("overwrite",
-        Map("added-data-files" -> (newFiles.size + insertMsgs.size).toString,
+        Map("added-data-files" -> added.size.toString,
           "deleted-data-files" -> affected.size.toString) ++ wap.summary,
         // delete manifests carry forward: they still apply to untouched files
         carried = a.headRows.filter(_.content == 1),
@@ -1607,9 +1526,12 @@ object GraftTable {
     *     curve ([[graft.functions.ZOrderKey]]) — every file covers a
     *     small HYPER-RECTANGLE of the clustered columns, so min/max
     *     pruning works for predicates on ANY clustered subset, not just
-    *     a sort prefix. The write is the DSv2 task-writer
-    *     ([[graft.sources.GraftFileWriter]]): one file per range
-    *     partition, bound stats tracked inline while writing.
+    *     a sort prefix.
+    *
+    * Every strategy writes through the task writer
+    * ([[graft.sources.GraftTableWrites.writeDataFiles]]): one file per
+    * bin or range partition, bound stats tracked inline while writing; a
+    * bin or range whose rows were all deleted writes no file.
     *
     * `where` (upstream RewriteDataFiles' filter) makes the rewrite
     * PARTIAL: only files whose bound stats may contain matching rows are
@@ -1722,84 +1644,57 @@ object GraftTable {
       es.groupBy(e => tupleTagOf.get(PathId(e.filePath)).map(keyOf))
         .toSeq.sortBy(_._1.map(_.toString))
         .map { case (kOpt, g) => (kOpt.map(tagByKey), g) }
-    val sortedTagged: Seq[(graft.sources.GraftFileMessage, Option[TupleTag])] =
-      if (sortOrder.isEmpty && zorderCols.isEmpty) Nil
-      else {
+    val writeSchemaCols = (schema.fieldNames.toSeq ++ lineageCols).map(col)
+    val fields = graft.sources.GraftTableWrites.fieldsOf(meta0.currentSchema)
+    def liveOf(es: Seq[ManifestWriter.EntryData]): DataFrame =
+      TableDataSource.scanPlan(spark, meta0,
+        es.map(e => (e, e.sequenceNumber.get)), posEntries, eqEntries)
+        .select(writeSchemaCols: _*)
+    // every output is task-written with inline bound stats, tagged with
+    // its tuple group; a group whose rows were all deleted writes nothing
+    val outputs: Seq[(graft.sources.GraftFileMessage, Option[TupleTag])] =
+      if (sortOrder.nonEmpty || zorderCols.nonEmpty) {
         val keys: Seq[org.apache.spark.sql.Column] =
           if (zorderCols.nonEmpty)
             Seq(graft.functions.GraftFunctions.zorderKey(spark, zorderCols.map(col)))
           else sortOrder.map { case (n, desc) => if (desc) col(n).desc else col(n).asc }
-        val writeSchema = StructType(schema.fields.toSeq ++ lineageCols.map(
-          StructField(_, org.apache.spark.sql.types.LongType)))
-        val fields = meta0.currentSchema.fields.flatMap(f =>
-          IcebergTypes.fromStringOpt(f.fieldType).map(t => (f.id, f.name, t)))
-        val taskConf = new SerializableHadoopConf(HadoopConfs.active())
         // one clustered-rewrite job per tuple group, submitted
         // concurrently — total I/O is still one pass over the selection
         Par.inParallel(tupleGroupsOf(selected).zipWithIndex) {
           case ((tag, es), gi) =>
-            val df = TableDataSource.scanPlan(spark, meta0,
-                es.map(e => (e, e.sequenceNumber.get)), posEntries, eqEntries)
-              .select((schema.fieldNames.toSeq ++ lineageCols).map(col): _*)
             val nFiles = math.max(1, math.ceil(
               es.map(_.fileSizeInBytes).sum.toDouble / targetBytes).toInt)
             // the key expressions drive the range exchange and the
             // in-file sort but never materialize as output columns
-            val sorted = df.repartitionByRange(nFiles, keys: _*)
-              .sortWithinPartitions(keys: _*)
-            sorted.queryExecution.toRdd.mapPartitionsWithIndex { (pid, rows) =>
-              if (!rows.hasNext) Iterator.empty
-              else {
-                // attempt-unique filename: a retried/zombie task attempt
-                // can never collide with (or overwrite) the first
-                // attempt's file — only the WINNING attempt's message
-                // reaches collect() and gets committed; a loser's
-                // leftover is an uncommitted orphan for the sweep.
-                // taskAttemptId is globally unique per attempt.
-                val att = org.apache.spark.TaskContext.get().taskAttemptId()
-                val w = new graft.sources.GraftFileWriter(
-                  f"$tableDir/data/sorted-$compactUuid-g${gi}%03d-p${pid}%05d-t$att.parquet",
-                  writeSchema, fields, None, 0, taskConf.value)
-                try {
-                  rows.foreach(w.write)
-                  Iterator.single(w.finish())
-                } catch { case t: Throwable => w.abort(); throw t }
+            graft.sources.GraftTableWrites.writeDataFiles(
+              liveOf(es).repartitionByRange(nFiles, keys: _*).sortWithinPartitions(keys: _*),
+              f"$tableDir/data/sorted-$compactUuid-g${gi}%03d", fields).map(m => (m, tag))
+        }.flatten
+      } else {
+        // bin-pack by cumulative REAL file size within each tuple group;
+        // each bin is one rewrite job, submitted concurrently — at
+        // thousands of bins this is the difference between a compaction
+        // bounded by the biggest bin and one bounded by the bin count.
+        // Each bin reads ONLY its own files (plus the delete files that
+        // can address them) via the entry-granular MOR read — total
+        // rewrite I/O is one pass over the table, not bins × table
+        def binsOf(es: Seq[ManifestWriter.EntryData]): Seq[Seq[ManifestWriter.EntryData]] =
+          es.sortBy(_.filePath)
+            .foldLeft(Seq.empty[(Long, Seq[ManifestWriter.EntryData])]) { case (acc, e) =>
+              acc.lastOption match {
+                case Some((sz, b)) if sz + e.fileSizeInBytes <= targetBytes =>
+                  acc.init :+ (sz + e.fileSizeInBytes, b :+ e)
+                case _ => acc :+ (e.fileSizeInBytes, Seq(e))
               }
-            }.collect().toSeq.map(m => (m, tag))
+            }.map(_._2)
+        val bins = tupleGroupsOf(selected)
+          .flatMap { case (tag, es) => binsOf(es).map(b => (tag, b)) }
+        Par.inParallel(bins.zipWithIndex) { case ((tag, es), i) =>
+          graft.sources.GraftTableWrites.writeDataFiles(
+            liveOf(es).repartition(1).sortWithinPartitions(col(schema.fieldNames.head)),
+            f"$tableDir/data/compacted-$compactUuid-${i}%05d", fields).map(m => (m, tag))
         }.flatten
       }
-    val sortedMsgs: Seq[graft.sources.GraftFileMessage] = sortedTagged.map(_._1)
-    // bin-pack by cumulative REAL file size within each tuple group;
-    // each bin is one rewrite task
-    def binsOf(es: Seq[ManifestWriter.EntryData]): Seq[Seq[ManifestWriter.EntryData]] =
-      es.sortBy(_.filePath)
-        .foldLeft(Seq.empty[(Long, Seq[ManifestWriter.EntryData])]) { case (acc, e) =>
-          acc.lastOption match {
-            case Some((sz, b)) if sz + e.fileSizeInBytes <= targetBytes =>
-              acc.init :+ (sz + e.fileSizeInBytes, b :+ e)
-            case _ => acc :+ (e.fileSizeInBytes, Seq(e))
-          }
-        }.map(_._2)
-    val binGroups: Seq[(Option[TupleTag], Seq[ManifestWriter.EntryData])] =
-      if (sortedMsgs.nonEmpty) Nil
-      else tupleGroupsOf(selected)
-        .flatMap { case (tag, es) => binsOf(es).map(b => (tag, b)) }
-    val bins = binGroups.map(_._2)
-    // one rewrite job per bin, submitted concurrently — at thousands of
-    // bins this is the difference between a compaction bounded by the
-    // biggest bin and one bounded by the bin count. Each bin reads ONLY
-    // its own files (plus the delete files that can address them) via the
-    // entry-granular MOR read — total rewrite I/O is one pass over the
-    // table, not bins × table
-    val outFiles = Par.inParallel(bins.zipWithIndex) { case (es, i) =>
-      val out = f"$tableDir/data/compacted-$compactUuid-${i}%05d.parquet"
-      ParquetFiles.writeOne(
-        TableDataSource.scanPlan(spark, meta0,
-          es.map(e => (e, e.sequenceNumber.get)), posEntries, eqEntries)
-          .select((schema.fieldNames.toSeq ++ lineageCols).map(col): _*)
-          .orderBy(col(schema.fieldNames.head)), out)
-      out
-    }
     val selectedSet = selected.map(e => PathId(e.filePath)).toSet
     val scannedDeletes = (posEntries ++ eqEntries).map(_._1.filePath).toSet
     SnapshotProducer.commit(tableDir) { a =>
@@ -1826,26 +1721,13 @@ object GraftTable {
       // or sequence (equality) — rows would resurrect. Same conflict rule
       // as the COW row-level path.
       validateNoNewDeletes(base, scannedDeletes, selectedSet)
-      val entries =
-        if (sortedMsgs.nonEmpty)
-          // the sorted rewrite's task writers tracked bounds INLINE —
-          // no second derive pass over the written bytes
-          sortedMsgs.map(m => ManifestWriter.EntryData(1, snapId, m.path,
-            m.rows, m.bytes, m.lower, m.upper,
-            content = 0, sequenceNumber = Some(snapId)))
-        else Par.inParallel(outFiles) { f =>
-          val (n, lower, upper) = deriveStats(spark, f, base)
-          ManifestWriter.EntryData(1, snapId, f, n, HadoopConfs.length(f),
-            lower, upper, content = 0, sequenceNumber = Some(snapId))
-        }
       // the per-tuple OUTPUT manifests: ONE manifest per tuple (never per
       // output file — a sort of a 100-partition table into 50 files each
       // must commit 100 manifests, not 5000), each carrying the tuple's
       // summary under its spec id
-      val outputTags: Seq[Option[TupleTag]] =
-        if (sortedMsgs.nonEmpty) sortedTagged.map(_._2)
-        else binGroups.map(_._1)
-      val taggedOutputs = entries.zip(outputTags)
+      val taggedOutputs = outputs.map { case (m, tag) =>
+        (ManifestWriter.EntryData(1, snapId, m.path, m.rows, m.bytes, m.lower, m.upper,
+          content = 0, sequenceNumber = Some(snapId)), tag) }
       val perTuple = taggedOutputs.collect { case (e, Some(tag)) => (keyOf(tag), (e, tag)) }
         .groupBy(_._1).toSeq.sortBy(_._1.toString).zipWithIndex.map { case ((_, xs), i) =>
           val (_, specId, fs) = xs.head._2._2
@@ -1878,8 +1760,7 @@ object GraftTable {
       val carriedDeletes = infos.filter(i => i.content == 1 &&
         (where.isDefined || !plannedDeleteManifests(i.path)))
       SnapshotProducer.Commit("replace",
-        Map("added-data-files" ->
-            (if (sortedMsgs.nonEmpty) sortedMsgs.size else outFiles.size).toString,
+        Map("added-data-files" -> outputs.size.toString,
           "deleted-data-files" -> selected.size.toString),
         carried = untouched.map(_._1) ++ carriedDeletes,
         manifests = perTuple :+ SnapshotProducer.NewManifest("m-compact",
@@ -1887,7 +1768,7 @@ object GraftTable {
             tombstoned.map(_.copy(status = 2, snapshotId = snapId)),
           0, union.fold(0)(_._1), union.map(_._2)),
         // the outputs carry the moved rows' lineage as columns
-        lineageFiles = entries.map(_.filePath).toSet)
+        lineageFiles = outputs.map(_._1.path).toSet)
     }
   }
 
@@ -1909,7 +1790,7 @@ object GraftTable {
     * [[PathId]]s, as every reader compares them. */
   def rewritePositionDeleteFiles(spark: SparkSession, tableDir: String)
       : OptimisticCommit.CommitResult = {
-    import org.apache.spark.sql.functions.{broadcast, col, count, lit, max, min}
+    import org.apache.spark.sql.functions.{broadcast, col}
     val meta0 = TableMetadata.parseFile(latestMetadataPath(tableDir))
     val dataE = currentEntries(meta0, 0).filter(_.content == 0)
       .map(e => (e, e.sequenceNumber.get))
@@ -1955,22 +1836,12 @@ object GraftTable {
     }
     val parts = resolvedEq ++ oldPos
     val attempt = java.util.UUID.randomUUID()
-    val delFile = s"$tableDir/data/posrw-$attempt.parquet"
     // every pending delete can resolve to ZERO addresses (e.g. the
     // table's only commit is an upsert: its equality delete has no
-    // lower-sequence data file to address) — the rewrite then commits
-    // an EMPTY position-delete side, which still correctly drops the
-    // vacuous delete manifests. The empty frame needs the real
-    // (file_path, pos) schema: a schemaless emptyDataFrame can't sort
-    val emptyDels = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("file_path",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("pos",
-          org.apache.spark.sql.types.LongType))))
-    val merged = parts.reduceOption(_ unionByName _)
-      .map(_.distinct()).getOrElse(emptyDels)
+    // lower-sequence data file to address) — the rewrite then writes no
+    // delete file and commits no delete entry, which still correctly
+    // drops the vacuous delete manifests
+    val merged = parts.reduceOption(_ unionByName _).map(_.distinct())
     // the manifests' spelling of each addressed data file: what both
     // output forms write, so foreign readers match them verbatim
     val manifestForm = dataE.map(x => PathId(x._1.filePath) -> x._1.filePath).toMap
@@ -1981,35 +1852,19 @@ object GraftTable {
     val v3 = meta0.formatVersion >= 3
     val dvRefRows: Seq[(String, String, Long, Long, Long, Long)] =
       if (!v3) Nil
-      else writeDvsDistributed(spark, tableDir, attempt, merged, manifestForm,
-        SnapshotProducer.nextSnapshotId(meta0))
-    val (nRows, delLower, delUpper) =
-      if (v3) (dvRefRows.map(_._5).sum,
-        Map.empty[Int, Array[Byte]], Map.empty[Int, Array[Byte]])
-      else {
+      else merged.toSeq.flatMap(writeDvsDistributed(spark, tableDir, attempt, _,
+        manifestForm, SnapshotProducer.nextSnapshotId(meta0)))
+    val posFile: Option[graft.sources.GraftFileMessage] =
+      if (v3) None
+      else merged.flatMap { m =>
         // every address names a live data file (both sides above are
-        // scoped to them), so the spelling join keeps every row; the sort
-        // follows it, keeping the file ordered by the written file_path
+        // scoped to them), so the spelling join keeps every row
         import spark.implicits._
-        val spelled = merged.join(broadcast(manifestForm.toSeq.toDF("file_path", "spelling")),
-            Seq("file_path"))
-          .select(col("spelling").as("file_path"), col("pos"))
-        ParquetFiles.writeOne(spelled.orderBy(col("file_path"), col("pos")), delFile)
-        val statRow = spark.read.schema(PosDeleteReadSchema).parquet(delFile).agg(
-          count(lit(1)), min(col("file_path")), max(col("file_path")),
-          min(col("pos")), max(col("pos"))).head()
-        val n = statRow.getLong(0)
-        if (n == 0)
-          (n, Map.empty[Int, Array[Byte]], Map.empty[Int, Array[Byte]])
-        else (n,
-          Map(ManifestWriter.PosDeleteFilePathId ->
-                SingleValueCodec.encode(IcebergTypes.TString, statRow.getString(1)),
-              ManifestWriter.PosDeletePosId ->
-                SingleValueCodec.encode(IcebergTypes.TLong, statRow.getLong(3))),
-          Map(ManifestWriter.PosDeleteFilePathId ->
-                SingleValueCodec.encode(IcebergTypes.TString, statRow.getString(2)),
-              ManifestWriter.PosDeletePosId ->
-                SingleValueCodec.encode(IcebergTypes.TLong, statRow.getLong(4))))
+        graft.sources.GraftTableWrites.writePositionDeleteFile(
+          m.join(broadcast(manifestForm.toSeq.toDF("file_path", "spelling")),
+              Seq("file_path"))
+            .select(col("spelling").as("file_path"), col("pos")),
+          s"$tableDir/data/posrw-$attempt")
       }
     val preDel = delE.map(e => PathId(e.filePath)).toSet
     val preData = dataE.map(x => PathId(x._1.filePath)).toSet
@@ -2026,21 +1881,22 @@ object GraftTable {
           "table delete/data file set changed while rewriting — rerun")
       val carried = a.headRows.filter(_.content == 0)
       val union = ScanPlanning.unionSummaries(base, carried)
+      val added =
+        if (v3) dvRefRows.map { case (ref, path, off, len, card, size) =>
+          DeletionVectors.entryFor(
+            DeletionVectors.DvRef(ref, path, off, len, card), snapId, snapId, size)
+        }
+        else posFile.toSeq.map(m => ManifestWriter.EntryData(
+          1, snapId, m.path, m.rows, m.bytes, m.lower, m.upper,
+          content = 1, sequenceNumber = Some(snapId)))
       SnapshotProducer.Commit("replace",
-        Map("added-delete-files" -> (if (v3) dvRefRows.size else 1).toString,
+        Map("added-delete-files" -> added.size.toString,
           "removed-delete-files" -> delE.size.toString,
           "rewritten-equality-delete-files" -> eqE.size.toString) ++
           (if (v3) Map("added-dvs" -> dvRefRows.size.toString) else Map.empty),
         carried = carried,
-        manifests = Seq(SnapshotProducer.NewManifest("m-posrw",
-          if (v3) dvRefRows.map { case (ref, path, off, len, card, size) =>
-            DeletionVectors.entryFor(
-              DeletionVectors.DvRef(ref, path, off, len, card), snapId, snapId, size)
-          }
-          else Seq(ManifestWriter.EntryData(
-            1, snapId, delFile, nRows, HadoopConfs.length(delFile),
-            delLower, delUpper, content = 1, sequenceNumber = Some(snapId))),
-          1, union.fold(0)(_._1), union.map(_._2))))
+        manifests = Seq(SnapshotProducer.NewManifest("m-posrw", added,
+          1, union.fold(0)(_._1), union.map(_._2))).filter(_.entries.nonEmpty))
     }
   }
 
@@ -3141,7 +2997,6 @@ object GraftTable {
     * null partition — counts stay complete, attribution is honest. */
   def computePartitionStats(spark: SparkSession, tableDir: String)
       : (OptimisticCommit.CommitResult, Long) = {
-    import spark.implicits._
     val metaPath = latestMetadataPath(tableDir)
     val meta = TableMetadata.parseFile(metaPath)
     val snapId = meta.currentSnapshotId.getOrElse(
@@ -3163,12 +3018,20 @@ object GraftTable {
           rs.map(_._6).sum, rs.map(_._7).sum, rs.map(_._8).sum, rs.map(_._9).sum) }
       .sortBy(_._1)
     val path = s"$tableDir/partition-stats-$snapId-${java.util.UUID.randomUUID()}.parquet"
-    ParquetFiles.writeOne(rows.toDF("partition", "spec_id",
-      "data_record_count", "data_file_count", "total_data_file_size_in_bytes",
-      "position_delete_record_count", "position_delete_file_count",
-      "equality_delete_record_count", "equality_delete_file_count")
-      .orderBy(col("partition")), path)
-    val size = HadoopConfs.length(path)
+    // the rows are already here: one task writer on the driver, no job
+    val w = new graft.sources.GraftFileWriter(path, StructType(
+      StructField("partition", StringType) +: StructField("spec_id", IntegerType) +:
+        Seq("data_record_count" -> LongType, "data_file_count" -> IntegerType,
+          "total_data_file_size_in_bytes" -> LongType,
+          "position_delete_record_count" -> LongType, "position_delete_file_count" -> IntegerType,
+          "equality_delete_record_count" -> LongType, "equality_delete_file_count" -> IntegerType)
+          .map { case (n, t) => StructField(n, t) }), Nil, None, 0, HadoopConfs.active())
+    try rows.foreach { r =>
+      w.write(org.apache.spark.sql.catalyst.InternalRow(
+        r._1.map(org.apache.spark.unsafe.types.UTF8String.fromString).orNull,
+        r._2, r._3, r._4, r._5, r._6, r._7, r._8, r._9))
+    } catch { case t: Throwable => w.abort(); throw t }
+    val size = w.finish().bytes
     var replaced: Seq[String] = Nil
     val result = OptimisticCommit.commit(tableDir, (base, basePath) => {
       replaced = base.partitionStatistics.filter(_.snapshotId == snapId).map(_.path)
@@ -3607,8 +3470,8 @@ object GraftTable {
     * pre-field-110 EQUALITY delete entries (bounds without
     * null_value_counts, the pre-r18 engine shape and some foreign CDC
     * writers'): those re-list with the counts BACKFILLED from each
-    * delete file's own column stats (one KB-scale agg per legacy file,
-    * computed once outside the CAS loop). Without the null-free proof
+    * delete file's own footer statistics (read once per legacy file,
+    * outside the CAS loop; no Spark job). Without the null-free proof
     * the sketch bank must conservatively dirty every partition on each
     * refresh; after the backfill, eq-scoped refresh works on pre-110
     * tables. Data files are never read — the commit stays
@@ -3625,14 +3488,18 @@ object GraftTable {
     val backfill: Map[String, Map[Int, Long]] =
       Par.inParallel(legacyEq) { e =>
         // an eq-delete file's schema IS its equality-id list — count the
-        // key columns' nulls from the file itself. A file the agg cannot
-        // read (foreign non-parquet eq deletes) just stays un-backfilled:
-        // its entry carries verbatim and the bank keeps treating it
-        // conservatively — the rewrite must not fail over a diagnostic.
+        // key columns' nulls from the file's own footer. A file whose
+        // footer cannot be read (foreign non-parquet eq deletes) just
+        // stays un-backfilled: its entry carries verbatim and the bank
+        // keeps treating it conservatively — the rewrite must not fail
+        // over a diagnostic.
         scala.util.Try {
-          val names = footerSparkSchema(spark, e.filePath).fieldNames.toSet
-          val fields = meta0.currentSchema.fields.filter(f => names.contains(f.name))
-          PathId(e.filePath) -> deriveStatsFor(spark, e.filePath, fields)._4
+          val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+              new org.apache.hadoop.fs.Path(e.filePath), HadoopConfs.active()))
+          try PathId(e.filePath) ->
+            ParquetFooterStats.nullCounts(r.getFooter, meta0.currentSchema.fields)
+          finally r.close()
         }.toOption
       }.flatten.toMap
     SnapshotProducer.commit(tableDir) { a =>
@@ -4142,32 +4009,23 @@ object GraftTable {
   def deleteWhere(spark: SparkSession, tableDir: String,
       predicate: org.apache.spark.sql.Column,
       branch: Option[String] = None): OptimisticCommit.CommitResult = {
-    import spark.implicits._
     val metaPath0 = latestMetadataPath(tableDir)
     val meta0 = TableMetadata.parseFile(metaPath0)
-    val delPrefix = s"$tableDir/data/delete-${java.util.UUID.randomUUID()}"
-    val taskConf = new SerializableHadoopConf(HadoopConfs.active())
     // one task writes the file; its message names the data files it
     // addresses (the commit's conflict targets) — `_file` is the
     // manifest spelling
-    val written = refHead(meta0, branch).toSeq.flatMap { head =>
-      readInfos(spark, meta0, ManifestListReader.read(head.manifestList.get))
-        .filter(predicate)
-        .select(col("_file"), col("_pos")).as[(String, Long)]
-        .repartition(1).sortWithinPartitions(col("_file"), col("_pos"))
-        .mapPartitions { rows =>
-          // attempt-unique, so a retried task never collides with debris
-          val delPath =
-            s"$delPrefix-${org.apache.spark.TaskContext.get().taskAttemptId()}.parquet"
-          graft.sources.GraftTableWrites.writePositionDeletes(delPath, rows, taskConf.value)
-            .map(m => (m.path, m.rows, m.bytes, m.lower, m.upper, m.targets)).iterator
-        }.collect().toSeq
+    val written = refHead(meta0, branch).flatMap { head =>
+      graft.sources.GraftTableWrites.writePositionDeleteFile(
+        readInfos(spark, meta0, ManifestListReader.read(head.manifestList.get))
+          .filter(predicate)
+          .select(col("_file").as("file_path"), col("_pos").as("pos")),
+        s"$tableDir/data/delete-${java.util.UUID.randomUUID()}")
     }
     written match {
-      case Seq((path, rows, bytes, lower, upper, targets)) =>
-        commitDeltaFiles(tableDir, Nil, Seq(PendingFile(path, rows, bytes, lower, upper)),
-          targets.toSet, branch)
-      case Seq() => OptimisticCommit.CommitResult(
+      case Some(m) =>
+        commitDeltaFiles(tableDir, Nil, Seq(PendingFile(m.path, m.rows, m.bytes, m.lower, m.upper)),
+          m.targets.toSet, branch)
+      case None => OptimisticCommit.CommitResult(
         OptimisticCommit.currentVersion(tableDir), metaPath0, meta0, 0)
     }
   }
@@ -4196,15 +4054,26 @@ object GraftTable {
   def upsert(spark: SparkSession, tableDir: String, df: DataFrame,
       keyCols: Seq[String]): OptimisticCommit.CommitResult = {
     require(keyCols.nonEmpty, "upsert needs at least one key column")
-    val meta0 = TableMetadata.parseFile(latestMetadataPath(tableDir))
+    val metaPath0 = latestMetadataPath(tableDir)
+    val meta0 = TableMetadata.parseFile(metaPath0)
     val schema = sparkSchema(meta0)
-    val keyFields = keyCols.map(k => meta0.currentSchema.fields.find(_.name == k)
-      .getOrElse(throw new IllegalArgumentException(s"key column $k not in schema")))
+    keyCols.foreach(k => require(schema.fieldNames.contains(k), s"key column $k not in schema"))
     val projected = df.select(schema.fieldNames.map(col).toIndexedSeq: _*)
+    val keys = keyCols.map(col)
     val upsertUuid = java.util.UUID.randomUUID()
-    val eqFile = s"$tableDir/data/eqdel-$upsertUuid.parquet"
-    ParquetFiles.writeOne(projected.select(keyCols.map(col): _*).distinct()
-      .orderBy(keyCols.map(col): _*), eqFile)
+    val writes = graft.sources.GraftTableWrites
+    val fields = writes.fieldsOf(meta0.currentSchema)
+    // one row per upserted key, written by one task: its key bounds let
+    // a delete-side pruner skip this eq-delete for key ranges it can't
+    // touch, and its null counts are the partition sketch bank's
+    // null-free proof. An empty input writes nothing and commits nothing.
+    val eqDel = writes.writeDataFiles(
+      projected.select(keys: _*).distinct().repartition(1).sortWithinPartitions(keys: _*),
+      s"$tableDir/data/eqdel-$upsertUuid", fields.filter(f => keyCols.contains(f._2))) match {
+      case Seq(m) => m
+      case _ => return OptimisticCommit.CommitResult(
+        OptimisticCommit.versionOf(metaPath0), metaPath0, meta0, 0)
+    }
     // a spec the write kernels can't split by (a foreign 'void'
     // transform, exotic source types, transform×type combos only the
     // task-time kernel would reject) must NOT fail the upsert — it
@@ -4240,47 +4109,22 @@ object GraftTable {
         }
         sparkOk && comboOk
       })
+    val dataPrefix = s"$tableDir/data/upsert-$upsertUuid"
     val dataMsgs: Seq[graft.sources.GraftFileMessage] =
       partInfo match {
         case None =>
-          val dataFile = s"$tableDir/data/upsert-$upsertUuid.parquet"
-          ParquetFiles.writeOne(projected.orderBy(keyCols.map(col): _*), dataFile)
-          val (nRows, dLower, dUpper) = deriveStats(spark, dataFile, meta0)
-          Seq(graft.sources.GraftFileMessage(dataFile, nRows,
-            HadoopConfs.length(dataFile), dLower, dUpper, None, 0))
-        case Some((specId, sf)) =>
+          writes.writeDataFiles(projected.repartition(1).sortWithinPartitions(keys: _*),
+            dataPrefix, fields)
+        case Some((_, sf)) =>
           // cluster by the partition SOURCE columns (same tuple → same
           // task → one file per tuple), key-sorted within each task for
           // tight key bounds; the task writers stamp each file's exact
-          // tuple summary and track bound stats inline — no second
-          // derive pass over the written bytes
-          val srcCols = sf.map(f => schema.fieldNames(f._1))
-          val fields = meta0.currentSchema.fields.flatMap(f =>
-            IcebergTypes.fromStringOpt(f.fieldType).map(t => (f.id, f.name, t)))
-          val taskConf = new SerializableHadoopConf(HadoopConfs.active())
-          projected.repartition(srcCols.map(col): _*)
-            .sortWithinPartitions(keyCols.map(col): _*)
-            .queryExecution.toRdd.mapPartitionsWithIndex { (pid, rows) =>
-              if (!rows.hasNext) Iterator.empty
-              else {
-                // attempt-unique filename: a retried/zombie attempt can
-                // never collide with the winner's file (rewrite rule)
-                val att = org.apache.spark.TaskContext.get().taskAttemptId()
-                val w = new graft.sources.GraftTablePartitionedWriter(
-                  ord => f"$tableDir/data/upsert-$upsertUuid-p${pid}%05d-t$att-f${ord}%03d.parquet",
-                  schema, fields, specId, sf, taskConf.value)
-                try {
-                  rows.foreach(w.write)
-                  w.commit().asInstanceOf[graft.sources.GraftWriteMessage]
-                    .files.iterator
-                } catch { case t: Throwable => w.abort(); throw t }
-              }
-            }.collect().toSeq.sortBy(_.path)
+          // tuple summary
+          writes.writeDataFiles(
+            projected.repartition(sf.map(f => col(schema.fieldNames(f._1))): _*)
+              .sortWithinPartitions(keys: _*), dataPrefix, fields, partInfo)
+            .sortBy(_.path)
       }
-    // key-column bounds on the delete file: what lets a future delete-side
-    // pruner skip this eq-delete for key ranges it can't touch
-    val (nKeys, eqLower, eqUpper, eqNulls) =
-      deriveStatsFor(spark, eqFile, keyFields)
     val totalRows = dataMsgs.map(_.rows).sum
     SnapshotProducer.commit(tableDir) { a =>
       // stage-or-audit, like every row-level tail: an equality upsert is
@@ -4294,14 +4138,13 @@ object GraftTable {
         Map("added-data-files" -> dataMsgs.size.toString,
           "added-records" -> totalRows.toString,
           "added-delete-files" -> "1",
-          "added-equality-deletes" -> nKeys.toString) ++ wap.summary,
+          "added-equality-deletes" -> eqDel.rows.toString) ++ wap.summary,
         a.headRows,
-        dataManifests("m-upsert-data", dataMsgs.map(graft.sources.GraftTableWrites.pending),
-          a.snapshotId) :+
+        dataManifests("m-upsert-data", dataMsgs.map(writes.pending), a.snapshotId) :+
           SnapshotProducer.NewManifest("m-upsert-del", Seq(ManifestWriter.EntryData(
-            1, a.snapshotId, eqFile, nKeys, HadoopConfs.length(eqFile),
-            eqLower, eqUpper, content = 2, sequenceNumber = Some(a.snapshotId),
-            nullValueCounts = eqNulls)), content = 1),
+            1, a.snapshotId, eqDel.path, eqDel.rows, eqDel.bytes,
+            eqDel.lower, eqDel.upper, content = 2, sequenceNumber = Some(a.snapshotId),
+            nullValueCounts = eqDel.nullCounts)), content = 1),
         stage = wap.staged)
     }
   }

@@ -4,10 +4,13 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types.StructType
 
-/** Single-parquet-file sink: a data/delete FILE is the unit Iceberg
-  * manifests track, so maintenance/DML/ingest writes land as exactly one
-  * file with a stable name (Spark's directory output renamed into place,
-  * through the session's Hadoop FileSystem). */
+/** Spark-written parquet by exact file name (`writeOne`: Spark's
+  * directory output renamed into place) and footer-schema reads. The
+  * engine's own table files never land here — they go through the task
+  * writer ([[graft.sources.GraftFileWriter]]). `writeOne` serves what is
+  * meant to be foreign, Spark-written parquet (the lakehouse entries'
+  * fixture files) and the event streams' files, whose replay re-lands a
+  * file under the same name. */
 object ParquetFiles {
 
   def writeOne(df: DataFrame, outFile: String): Unit = {

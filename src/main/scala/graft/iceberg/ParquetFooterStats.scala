@@ -2,7 +2,7 @@ package graft.iceberg
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.parquet.hadoop.metadata.BlockMetaData
+import org.apache.parquet.hadoop.metadata.{BlockMetaData, ParquetMetadata}
 
 /** Decoding parquet FOOTER column statistics into the Iceberg value
   * domain — shared by the `add_files` import (whole-file merge) and the
@@ -40,6 +40,24 @@ object ParquetFooterStats {
     val b = blockBounds(block, fields)
     (b.map { case (id, (lo, _, t)) => id -> SingleValueCodec.encode(t, lo) },
       b.map { case (id, (_, hi, t)) => id -> SingleValueCodec.encode(t, hi) })
+  }
+
+  /** Spec field 110 (null value counts) by field id for a parquet
+    * file's top-level primitive columns, summed over its row groups'
+    * footer statistics. A field counts only when every row group records
+    * its nulls — a partial sum would claim a null-free proof it lacks. */
+  def nullCounts(footer: ParquetMetadata, fields: Seq[IcebergField]): Map[Int, Long] = {
+    val schema = footer.getFileMetaData.getSchema
+    val blocks = footer.getBlocks.asScala.toSeq
+    fields.filter(f => schema.containsField(f.name) &&
+        schema.getType(schema.getFieldIndex(f.name)).isPrimitive)
+      .flatMap { f =>
+        val perBlock = blocks.map(_.getColumns.asScala
+          .find(c => c.getPath.size == 1 && c.getPath.iterator().next() == f.name)
+          .flatMap(c => Option(c.getStatistics)).filter(_.isNumNullsSet))
+        if (perBlock.forall(_.isDefined)) Some(f.id -> perBlock.flatten.map(_.getNumNulls).sum)
+        else None
+      }.toMap
   }
 
   private def decode(t: IcebergType, v: Any): Option[Any] = (t, v) match {

@@ -808,19 +808,21 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     val byList = listPaths.map(l => l -> ManifestListReader.read(l))
     val manifests = byList.flatMap(_._2.map(i => map(i.path))).distinct
       .map(m => m -> ManifestWriter.read(m))
-    // position-delete FILE contents first (read original, swap in place)
+    // position-delete FILE contents first (read original, swap in place);
+    // an empty file has no path to rewrite and stays as it is
     val spark = org.apache.spark.sql.SparkSession.active
     val fs = HadoopConfs.fileSystemFor(dir)
-    manifests.flatMap(_._2).filter(_.content == 1)
-      .map(e => map(e.filePath)).distinct.foreach { f =>
+    val rewrittenLength = manifests.flatMap(_._2).filter(_.content == 1)
+      .map(e => map(e.filePath)).distinct.flatMap { f =>
         import org.apache.spark.sql.functions.{col, lit, replace}
-        val tmp = s"$f.rename-tmp"
-        ParquetFiles.writeOne(ParquetFiles.read(spark, Seq(f))
-          .withColumn("file_path", replace(col("file_path"),
-            lit(oldPrefix), lit(newPrefix))), tmp)
-        fs.delete(new Path(f), false)
-        require(fs.rename(new Path(tmp), new Path(f)), s"swap failed for $f")
-      }
+        GraftTableWrites.writePositionDeleteFile(ParquetFiles.read(spark, Seq(f))
+          .select(replace(col("file_path"), lit(oldPrefix), lit(newPrefix)).as("file_path"),
+            col("pos")), s"$f.rename-tmp").map { m =>
+          fs.delete(new Path(f), false)
+          require(fs.rename(new Path(m.path), new Path(f)), s"swap failed for $f")
+          f -> m.bytes
+        }
+      }.toMap
     def mapBound(b: Map[Int, Array[Byte]]): Map[Int, Array[Byte]] =
       b.map { case (id, bytes) =>
         if (id == ManifestWriter.PosDeleteFilePathId && bytes.nonEmpty)
@@ -835,7 +837,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       m -> ManifestWriter.write(m, entries.map { e =>
         val mapped = e.copy(filePath = map(e.filePath))
         if (e.content == 1) mapped.copy(lowerBounds = mapBound(e.lowerBounds),
-          upperBounds = mapBound(e.upperBounds))
+          upperBounds = mapBound(e.upperBounds),
+          fileSizeInBytes = rewrittenLength.getOrElse(mapped.filePath, e.fileSizeInBytes))
         else mapped
       })
     }.toMap

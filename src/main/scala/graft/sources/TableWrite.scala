@@ -83,9 +83,7 @@ class GraftTableWriteBuilder(metadataPath: String, info: LogicalWriteInfo,
       s"schema mismatch: table has ${tableSchema.fieldNames.mkString(",")}, " +
         s"write has ${given.mkString(",")}")
     val tableDir = new org.apache.hadoop.fs.Path(metadataPath).getParent.toString
-    val fields = meta.currentSchema.fields.flatMap(f =>
-      IcebergTypes.fromStringOpt(f.fieldType).map(t => (f.id, f.name, t)))
-    (tableDir, tableSchema, fields,
+    (tableDir, tableSchema, GraftTableWrites.fieldsOf(meta.currentSchema),
       GraftTableWrites.partInfoOf(meta, tableSchema))
   }
 
@@ -185,7 +183,10 @@ case class GraftFileMessage(path: String, rows: Long, bytes: Long,
     fileFormat: String = "PARQUET",
     // a position-delete file's addressed data files, as its rows spell
     // them — the commit's conflict targets
-    targets: Seq[String] = Nil)
+    targets: Seq[String] = Nil,
+    // spec field 110 per bounded field id (parquet files only); entries
+    // record it only where a reader needs the null-free proof
+    nullCounts: Map[Int, Long] = Map.empty)
 
 case class GraftWriteMessage(files: Seq[GraftFileMessage]) extends WriterCommitMessage
 
@@ -194,6 +195,12 @@ object GraftTableWrites {
 
   private val BucketRe = """bucket\[(\d+)\]""".r
   private val TruncateRe = """truncate\[(\d+)\]""".r
+
+  /** The (field id, name, type) triples the task writers bound, for every
+    * field of `schema` whose type parses. */
+  private[graft] def fieldsOf(schema: graft.iceberg.IcebergSchema)
+      : Seq[(Int, String, IcebergType)] =
+    schema.fields.flatMap(f => IcebergTypes.fromStringOpt(f.fieldType).map(t => (f.id, f.name, t)))
 
   /** Partition info per DEFAULT-spec field: (schema index of the source
     * column, source Iceberg type, transform, transform OUTPUT type — the
@@ -277,13 +284,63 @@ object GraftTableWrites {
       // the rows arrive grouped by file_path: each new path is a target
       val targets = Seq.newBuilder[String]
       var last: String = null
-      sorted.foreach { case (f, p) =>
+      try sorted.foreach { case (f, p) =>
         if (f != last) { targets += f; last = f }
         fw.write(new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
           Array[Any](org.apache.spark.unsafe.types.UTF8String.fromString(f), p)))
-      }
+      } catch { case t: Throwable => fw.abort(); throw t }
       Some(fw.finish().copy(content = 1, targets = targets.result()))
     }
+
+  /** The one task-side write loop of the engine's own rewrites (merge,
+    * compaction, upsert): each non-empty partition of `df` streams
+    * through the task writer — one file per task, or one per
+    * transform-space tuple under `part` — with bounds tracked inline.
+    * Names are `prefix` made attempt-unique, so a retried or speculative
+    * attempt never collides with the winner's file (a loser's file stays
+    * an uncommitted orphan for the sweep); a failing task deletes its own
+    * files. Returns the winning attempts' messages. A single-file output
+    * is `df.repartition(1).sortWithinPartitions(...)`. */
+  private[graft] def writeDataFiles(df: org.apache.spark.sql.DataFrame, prefix: String,
+      fields: Seq[(Int, String, IcebergType)], part: PartInfo = None): Seq[GraftFileMessage] = {
+    val schema = df.schema
+    perTask(df, prefix) { (name, rows, conf) =>
+      val w = GraftTableDataWriter.create(ord => f"$name-f$ord%03d.parquet",
+        schema, fields, part, conf)
+      try {
+        rows.foreach(w.write)
+        w.commit().asInstanceOf[GraftWriteMessage].files
+      } catch { case t: Throwable => w.abort(); throw t }
+    }
+  }
+
+  /** A (file_path, pos) frame as ONE position-delete file: sorted in a
+    * single task and written by [[writePositionDeletes]]. None when the
+    * frame has no row — no file is created. */
+  private[graft] def writePositionDeleteFile(dels: org.apache.spark.sql.DataFrame,
+      prefix: String): Option[GraftFileMessage] = {
+    import org.apache.spark.sql.functions.col
+    perTask(dels.select(col("file_path"), col("pos")).repartition(1)
+        .sortWithinPartitions(col("file_path"), col("pos")), prefix) { (name, rows, conf) =>
+      writePositionDeletes(s"$name.parquet",
+        rows.map(r => (r.getUTF8String(0).toString, r.getLong(1))), conf).toSeq
+    }.headOption
+  }
+
+  /** Runs `write` over each non-empty partition of `df` in one Spark
+    * job, naming its files from `<prefix>-p<partition>-t<attempt>`. */
+  private def perTask(df: org.apache.spark.sql.DataFrame, prefix: String)(
+      write: (String, Iterator[InternalRow], Configuration) => Seq[GraftFileMessage])
+      : Seq[GraftFileMessage] = {
+    val conf = new graft.iceberg.SerializableHadoopConf(graft.iceberg.HadoopConfs.active())
+    df.queryExecution.toRdd.mapPartitionsWithIndex { (pid, rows) =>
+      if (!rows.hasNext) Iterator.empty
+      else {
+        val att = org.apache.spark.TaskContext.get().taskAttemptId()
+        write(f"$prefix-p$pid%05d-t$att", rows, conf.value).iterator
+      }
+    }.collect().toSeq
+  }
 
   private[sources] def commit(tableDir: String, files: Seq[GraftFileMessage],
       extraSummary: Map[String, String] = Map.empty,
@@ -583,9 +640,6 @@ class GraftTablePartitionedWriter(pathFor: Int => String, schema: StructType,
   override def close(): Unit = ()
 }
 
-/** One parquet file: streams rows, tracking min/max per column inline
-  * (the stats Iceberg manifests carry — no second derive pass over the
-  * written file, unlike the driver-side append path). */
 /** The contract every task-side data-file writer speaks, whatever the
   * format: stream InternalRows, return ONE commit message with inline
   * bound stats (bounds live in MANIFESTS, so they are format-independent
@@ -612,6 +666,7 @@ private[sources] final class BoundTracker(schema: StructType,
     fields: Seq[(Int, String, IcebergType)]) {
   private val mins = Array.fill[Any](schema.fields.length)(null)
   private val maxs = Array.fill[Any](schema.fields.length)(null)
+  private val nonNull = new Array[Long](schema.fields.length)
 
   // schema index → per-axis accumulator [minX, minY, maxX, maxY] for
   // geometry/geography columns; NaN-seeded until the first point lands
@@ -654,7 +709,8 @@ private[sources] final class BoundTracker(schema: StructType,
     case _ => 0
   }
 
-  def track(i: Int, v: Any): Unit =
+  def track(i: Int, v: Any): Unit = {
+    nonNull(i) += 1
     geoAcc.get(i) match {
       case Some(acc) => trackGeo(i, acc, v)
       case None if schema.fields(i).dataType != BinaryType =>
@@ -662,6 +718,18 @@ private[sources] final class BoundTracker(schema: StructType,
         if (maxs(i) == null || cmp(v, maxs(i)) > 0) maxs(i) = v
       case None => ()
     }
+  }
+
+  /** Spec field 110 by field id for every primitive field of a file of
+    * `rows` rows — nested columns are never tracked, so they get none. */
+  def nullCounts(rows: Long): Map[Int, Long] =
+    fields.flatMap { case (id, name, _) =>
+      val i = schema.fieldIndex(name)
+      schema.fields(i).dataType match {
+        case _: ArrayType | _: StructType | _: MapType | VariantType => None
+        case _ => Some(id -> (rows - nonNull(i)))
+      }
+    }.toMap
 
   /** Iceberg single-value-encoded (lower, upper) maps by field id. */
   def lowerUpper(): (Map[Int, Array[Byte]], Map[Int, Array[Byte]]) = {
@@ -685,6 +753,10 @@ private[sources] final class BoundTracker(schema: StructType,
   }
 }
 
+/** One parquet file: streams rows, tracking min/max and null counts per
+  * column inline — the stats Iceberg manifests carry, with no second
+  * pass over the written file. Every parquet data and delete file the
+  * table code writes goes through it. */
 class GraftFileWriter(path: String, schema: StructType,
     fields: Seq[(Int, String, IcebergType)],
     summary: Option[Seq[ManifestListReader.FieldSummary]], specId: Int,
@@ -887,7 +959,7 @@ class GraftFileWriter(path: String, schema: StructType,
     val (lower, upper) = tracker.lowerUpper()
     GraftFileMessage(path, rows,
       graft.iceberg.HadoopConfs.length(path, conf),
-      lower, upper, summary, specId)
+      lower, upper, summary, specId, nullCounts = tracker.nullCounts(rows))
   }
 
   def abort(): Unit = {

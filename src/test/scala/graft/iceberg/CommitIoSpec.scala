@@ -49,6 +49,25 @@ class CommitIoSpec extends SparkSpec {
     s"$wh/db/t"
   }
 
+  /** The Spark jobs started while `op` runs. */
+  private def jobsDuring(op: => Any): Int = {
+    val starts = new java.util.concurrent.atomic.AtomicInteger
+    val ends = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = starts.incrementAndGet()
+      override def onJobEnd(je: SparkListenerJobEnd): Unit = ends.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      op
+      // listener events post asynchronously — wait for them to drain
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while ((starts.get() == 0 || starts.get() != ends.get()) &&
+        System.nanoTime() < deadline) Thread.sleep(20)
+      starts.get()
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   private val morProps = "TBLPROPERTIES ('write.update.mode'='merge-on-read', " +
     "'write.delete.mode'='merge-on-read', 'write.merge.mode'='merge-on-read')"
 
@@ -109,22 +128,8 @@ class CommitIoSpec extends SparkSpec {
     spark.sql(s"CREATE TABLE cio3.db.t (k BIGINT, v STRING) $morProps")
     spark.sql("INSERT INTO cio3.db.t SELECT id, concat('v', id) FROM range(0, 1000)")
     spark.sql("INSERT INTO cio3.db.t SELECT id, concat('v', id) FROM range(1000, 2000)")
-    val starts = new java.util.concurrent.atomic.AtomicInteger
-    val ends = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = starts.incrementAndGet()
-      override def onJobEnd(je: SparkListenerJobEnd): Unit = ends.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val jobs =
-      try {
-        counted(spark.sql("UPDATE cio3.db.t SET v = 'u' WHERE k % 100 = 7 AND length(v) > 2"))
-        // listener events post asynchronously — wait for them to drain
-        val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-        while ((starts.get() == 0 || starts.get() != ends.get()) &&
-          System.nanoTime() < deadline) Thread.sleep(20)
-        starts.get()
-      } finally spark.sparkContext.removeSparkListener(listener)
+    val jobs = jobsDuring(
+      counted(spark.sql("UPDATE cio3.db.t SET v = 'u' WHERE k % 100 = 7 AND length(v) > 2")))
     val delReads = CommitIoCountingFs.opened.toArray(Array.empty[String])
       .filter(_.split('/').last.startsWith("del-"))
     // the scan-and-write job alone (4 jobs when the commit re-read the
@@ -158,6 +163,40 @@ class CommitIoSpec extends SparkSpec {
     assert(written.size == 2)
     assert(written.forall(dataPaths), s"${written.mkString(", ")} vs ${dataPaths.mkString(", ")}")
     assert(GraftTable.read(spark, GraftTable.latestMetadataPath(dir)).count() == 18L)
+  }
+
+  test("bin-pack compaction, upsert and v2 rewrite_position_delete_files write without a stats job") {
+    def table(): String = {
+      val dir = java.nio.file.Files.createTempDirectory("graft-cio-jobs").toString
+      GraftTable.create(dir, IcebergSchema(0, Seq(
+        IcebergField(1, "k", required = false, "long"),
+        IcebergField(2, "v", required = false, "string"))),
+        tableUuid = java.util.UUID.randomUUID().toString, timestampMs = 1700000000000L)
+      dir
+    }
+    def rows(lo: Long, hi: Long) =
+      spark.range(lo, hi, 1, 1).select(col("id").as("k"), concat(lit("v"), col("id")).as("v"))
+    def live(dir: String) = GraftTable.read(spark, GraftTable.latestMetadataPath(dir)).count()
+    // one bin: two small files compact into one
+    val c = table()
+    GraftTable.append(spark, c, rows(0, 10))
+    GraftTable.append(spark, c, rows(10, 20))
+    val compactJobs = jobsDuring(GraftTable.compact(spark, c))
+    assert(meta(c).currentSnapshot.get.summary("added-data-files") == "1")
+    // an unpartitioned upsert: one equality-delete file and one data file
+    val u = table()
+    GraftTable.append(spark, u, rows(0, 10))
+    val upsertJobs = jobsDuring(GraftTable.upsert(spark, u, rows(3, 5), Seq("k")))
+    // its equality delete resolves into one position-delete file
+    val rewriteJobs = jobsDuring(GraftTable.rewritePositionDeleteFiles(spark, u))
+    assert(meta(u).currentSnapshot.get.summary("added-delete-files") == "1")
+    // a file written through Spark's DataFrame writer and then re-read
+    // for its stats ran 5, 6 and 8 jobs here: each written file (one,
+    // two, one) now costs at least one job fewer
+    assert(compactJobs <= 4, s"$compactJobs Spark jobs per one-bin compaction")
+    assert(upsertJobs <= 4, s"$upsertJobs Spark jobs per unpartitioned upsert")
+    assert(rewriteJobs <= 7, s"$rewriteJobs Spark jobs per v2 rewrite_position_delete_files")
+    assert(live(c) == 20L && live(u) == 10L)
   }
 
   test("a catalog point read opens the head document once") {

@@ -114,8 +114,13 @@ class LocalFileSystemSpec extends SparkSpec {
       GraftTable.append(spark, dir, spark.range(0, 40).select(col("id").as("k"),
         concat(lit("v"), col("id")).as("v")))
       spark.sql(s"INSERT INTO $name.db.t SELECT id, 'w' FROM range(40, 80)")
+      spark.sql(s"CALL $name.system.rewrite_data_files(table => 'db.t')")
       spark.sql(s"DELETE FROM $name.db.t WHERE k % 7 = 0")
       spark.sql(s"UPDATE $name.db.t SET v = 'u' WHERE k % 5 = 1")
+      // an equality delete, then its resolution into position deletes
+      GraftTable.upsert(spark, dir, spark.range(2, 4).select(col("id").as("k"),
+        lit("x").as("v")), Seq("k"))
+      spark.sql(s"CALL $name.system.rewrite_position_delete_files(table => 'db.t')")
       spark.sql(s"CALL $name.system.expire_snapshots('db.t', 1)")
       spark.sql(s"CALL $name.system.rewrite_manifests(table => 'db.t')")
       // Hadoop's own filesystem, in the same recording: what a fork looks like
@@ -127,6 +132,7 @@ class LocalFileSystemSpec extends SparkSpec {
     val rows = spark.sql(s"SELECT k, v FROM $name.db.t").collect()
     assert(rows.map(_.getLong(0)).sorted.toSeq == (0L until 80L).filter(_ % 7 != 0))
     assert(rows.count(_.getString(1) == "u") == (0L until 80L).count(k => k % 7 != 0 && k % 5 == 1))
+    assert(rows.filter(_.getString(1) == "x").map(_.getLong(0)).sorted.toSeq == Seq(2L, 3L))
   }
 
   test("a v2 table's commits, merge-on-read DML and maintenance start no process") {

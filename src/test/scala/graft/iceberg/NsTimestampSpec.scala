@@ -123,4 +123,50 @@ class NsTimestampSpec extends SparkSpec {
       s"${pruned.rdd.getNumPartitions} vs ${all.rdd.getNumPartitions}")
     assert(pruned.count() == 100L)
   }
+
+  test("v3 rewrites keep TIMESTAMP(NANOS): bin-pack compaction, merge, unpartitioned upsert") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-nsrw").toString
+    GraftTable.create(dir, IcebergSchema(0, Seq(
+      IcebergField(1, "id", required = false, fieldType = "long"),
+      IcebergField(2, "ts", required = false, fieldType = "timestamp_ns"))),
+      tableUuid = "u-4", timestampMs = 1700000000000L, formatVersion = 3)
+    val base = 1704067200000000007L // sub-microsecond digits must survive
+    def rows(ids: Seq[Long], shift: Long) = ids.map(i => (i, base + i * 1000000000L + shift))
+    GraftTable.append(spark, dir, rows(0L until 10L, 0L).toDF("id", "ts"))
+    GraftTable.append(spark, dir, rows(10L until 20L, 0L).toDF("id", "ts"))
+    /** Asserts the live files named `prefix…` annotate `ts` as NANOS and
+      * the table reads back `expected`. */
+    def check(prefix: String, expected: Seq[(Long, Long)]): Unit = {
+      val files = ManifestListReader.read(TableMetadata.parseFile(
+          GraftTable.latestMetadataPath(dir)).currentSnapshot.get.manifestList.get)
+        .filter(_.content == 0).flatMap(i => ManifestWriter.read(i.path))
+        .filter(e => e.status != 2 && e.content == 0).map(_.filePath)
+        .filter(f => new org.apache.hadoop.fs.Path(f).getName.startsWith(prefix))
+      assert(files.nonEmpty, s"no live $prefix file")
+      files.foreach { f =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(f), HadoopConfs.active()))
+        try {
+          val md: org.apache.parquet.schema.GroupType = r.getFooter.getFileMetaData.getSchema
+          val ann = md.getType("ts").asPrimitiveType().getLogicalTypeAnnotation
+          assert(ann != null && ann.toString.contains("NANOS"), s"$f: ts is $ann")
+        } finally r.close()
+      }
+      val got = GraftTable.read(spark, GraftTable.latestMetadataPath(dir))
+        .select("id", "ts").as[(Long, Long)].collect().sortBy(_._1).toSeq
+      assert(got == expected)
+    }
+    GraftTable.compact(spark, dir)
+    check("compacted-", rows(0L until 20L, 0L))
+    GraftTable.merge(spark, dir, rows(Seq(3L), 5L).toDF("id", "ts"), Seq("id"))
+    check("merged-", rows(0L until 20L, 0L).map(r => if (r._1 == 3L) (3L, r._2 + 5L) else r))
+    GraftTable.upsert(spark, dir, rows(Seq(4L, 25L), 9L).toDF("id", "ts"), Seq("id"))
+    check("upsert-", (rows(0L until 20L, 0L) ++ rows(Seq(25L), 9L)).map {
+      case (3L, t) => (3L, t + 5L)
+      case (4L, t) => (4L, t + 9L)
+      case r => r
+    })
+  }
 }

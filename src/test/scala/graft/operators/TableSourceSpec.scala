@@ -571,6 +571,12 @@ class TableSourceSpec extends SparkSpec {
     // the native route agrees on the moved metadata
     assert(GraftTable.read(spark,
       GraftTable.latestMetadataPath(s"$wh/db2/t2")).count() == 2L)
+    // the rewritten position-delete file's entry records its new length
+    val moved = ManifestListReader.read(TableMetadata.parseFile(
+        GraftTable.latestMetadataPath(s"$wh/db2/t2")).currentSnapshot.get.manifestList.get)
+      .flatMap(i => ManifestWriter.read(i.path)).filter(_.status != 2)
+    assert(moved.count(_.content == 1) == 1)
+    moved.foreach(e => assert(e.fileSizeInBytes == HadoopConfs.length(e.filePath), e.filePath))
     // RESTRICT drop refuses a non-empty namespace; cascade removes it
     intercept[Exception] { spark.sql("DROP NAMESPACE graft_ns.db2") }
     spark.sql("DROP NAMESPACE graft_ns.db2 CASCADE")
