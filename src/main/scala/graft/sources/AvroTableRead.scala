@@ -12,17 +12,17 @@ import org.apache.spark.sql.types._
   * the parquet decoder provides:
   *
   *  - record order IS the position coordinate (`pos` / `_pos`), so
-  *    position deletes apply by file-absolute index (shared
-  *    [[PosDeleteIndex]]);
+  *    position deletes apply by file-absolute index;
   *  - required columns resolve by name with RENAME COLUMN history and
   *    null-fill for pre-evolution files;
   *  - type widening promotes int→long / float→double losslessly;
   *  - date / timestamp-micros logical types decode into the external
   *    row domain the Catalyst converter expects;
-  *  - equality deletes load through the shared [[RowEqDeletes]] sets
-  *    (delete files are always parquet) and compare against the SAME
-  *    external-domain values this reader decodes — a streaming upsert
-  *    over an imported Avro table applies exactly like over parquet.
+  *  - deletes apply through the shared [[TaskDeletes]]: equality keys
+  *    compare against this reader's Catalyst row (built over the
+  *    equality columns too), in the same value domain as the parquet
+  *    reader — a streaming upsert over an imported Avro table applies
+  *    exactly like over parquet.
   *
   * Avro containers have no row-group index, so files never split —
   * per-file parallelism, the granularity Avro supports without
@@ -31,23 +31,15 @@ class GraftTableAvroPartitionReader(part: GraftTableInputPartition,
     required: StructType, conf: Configuration) extends PartitionReader[InternalRow] {
   import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
 
-  private val deleted =
-    PosDeleteIndex.loadAll(part.posDeleteFiles, part.dvRefs, part.filePath, conf)
-
-  private def tableType(name: String): DataType =
-    part.tableSchema.fields.find(_.name == name).map(_.dataType).getOrElse(
-      throw new IllegalArgumentException(s"equality column '$name' not in table schema"))
-
-  private val eqSets: Seq[(Seq[String], java.util.HashSet[Vector[Any]])] =
-    RowEqDeletes.load(part.eqDeleteFiles, tableType,
-      part.nameAlternates.flatMap { case (cur, as) => as.map(_ -> cur) }, conf)
+  private val deletes = new TaskDeletes(part, required, conf)
+  private val working = deletes.working
 
   private val in =
     new java.io.BufferedInputStream(graft.iceberg.HadoopConfs.open(part.filePath, conf))
   private val stream = new org.apache.avro.file.DataFileStream[GenericRecord](
     in, new GenericDatumReader[GenericRecord]())
 
-  private val toCatalyst = CatalystTypeConverters.createToCatalystConverter(required)
+  private val toCatalyst = CatalystTypeConverters.createToCatalystConverter(working)
   private var rowIndex: Long = -1L
   private var current: InternalRow = _
 
@@ -100,7 +92,7 @@ class GraftTableAvroPartitionReader(part: GraftTableInputPartition,
   }
 
   private def rowOf(r: GenericRecord): org.apache.spark.sql.Row =
-    org.apache.spark.sql.Row.fromSeq(required.fields.toSeq.map { f =>
+    org.apache.spark.sql.Row.fromSeq(working.fields.toSeq.map { f =>
       f.name match {
         case "_file" => part.filePath
         case "_pos" => rowIndex
@@ -108,18 +100,13 @@ class GraftTableAvroPartitionReader(part: GraftTableInputPartition,
       }
     })
 
-  private def equalityDeleted(r: GenericRecord): Boolean =
-    eqSets.exists { case (cols, set) =>
-      set.contains(cols.map(c =>
-        RowEqDeletes.canon(valueOf(r, c, tableType(c)))).toVector) }
-
   override def next(): Boolean = {
     while (stream.hasNext) {
       val rec = stream.next()
       rowIndex += 1
-      if (!deleted.contains(rowIndex) &&
-          (eqSets.isEmpty || !equalityDeleted(rec))) {
-        current = toCatalyst(rowOf(rec)).asInstanceOf[InternalRow]
+      val row = toCatalyst(rowOf(rec)).asInstanceOf[InternalRow]
+      if (!deletes.deleted(rowIndex, row)) {
+        current = deletes.project(row)
         return true
       }
     }

@@ -791,9 +791,13 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
 
   /** Rewrite every absolute path under `dir`'s metadata closure mapping
     * `oldPrefix` → `newPrefix`. Each shared artifact rewrites once.
-    * Position-delete files embed DATA-FILE paths in their rows (and the
-    * entry's file_path bound stats) — those rewrite too; equality-delete
-    * files carry only column values and move untouched. */
+    * Parquet position-delete files embed DATA-FILE paths in their rows
+    * (and the entry's file_path bound stats) — those rewrite too; a
+    * deletion vector's entry names its data file in `referencedDataFile`,
+    * which maps like every path (the Puffin blob's own
+    * `referenced-data-file` property keeps the old spelling: no reader
+    * reads it); equality-delete files carry only column values and move
+    * untouched. */
   private def rewritePathPrefix(dir: String, oldPrefix: String, newPrefix: String): Unit = {
     // substring replacement: older tables' delete-file rows may still
     // spell data files as `file:` URIs
@@ -812,7 +816,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     // an empty file has no path to rewrite and stays as it is
     val spark = org.apache.spark.sql.SparkSession.active
     val fs = HadoopConfs.fileSystemFor(dir)
-    val rewrittenLength = manifests.flatMap(_._2).filter(_.content == 1)
+    val rewrittenLength = manifests.flatMap(_._2)
+      .filter(e => e.content == 1 && e.fileFormat == "PARQUET")
       .map(e => map(e.filePath)).distinct.flatMap { f =>
         import org.apache.spark.sql.functions.{col, lit, replace}
         GraftTableWrites.writePositionDeleteFile(ParquetFiles.read(spark, Seq(f))
@@ -835,7 +840,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     // manifest's length), then the documents (list + log paths)
     val lengths = manifests.map { case (m, entries) =>
       m -> ManifestWriter.write(m, entries.map { e =>
-        val mapped = e.copy(filePath = map(e.filePath))
+        val mapped = e.copy(filePath = map(e.filePath),
+          referencedDataFile = e.referencedDataFile.map(map))
         if (e.content == 1) mapped.copy(lowerBounds = mapBound(e.lowerBounds),
           upperBounds = mapBound(e.upperBounds),
           fileSizeInBytes = rewrittenLength.getOrElse(mapped.filePath, e.fileSizeInBytes))

@@ -9,28 +9,20 @@ import org.apache.spark.sql.types._
 
 /** Row-route reader for ORC data files (`file_format = ORC` entries in a
   * foreign or imported table). Same contract as the Avro route:
-  * record order is the position coordinate (shared [[PosDeleteIndex]]),
-  * required columns resolve by name with RENAME COLUMN history and
-  * null-fill, int→long / float→double widening promotes losslessly, and
-  * equality deletes load through the shared [[RowEqDeletes]] sets and
-  * compare against the same external-domain values this reader
-  * decodes. The decode is batch-at-a-time through ORC's own vectorized
-  * reader. Files above the split threshold fan out one partition per
-  * STRIPE (the planner prunes stripes against their statistics exactly
-  * like parquet row groups), each reading only its byte range. */
+  * record order is the position coordinate, required columns resolve by
+  * name with RENAME COLUMN history and null-fill, int→long /
+  * float→double widening promotes losslessly, and deletes apply through
+  * the shared [[TaskDeletes]] over this reader's Catalyst row (built over
+  * the equality columns too). The decode is batch-at-a-time through
+  * ORC's own vectorized reader. Files above the split threshold fan out
+  * one partition per STRIPE (the planner prunes stripes against their
+  * statistics exactly like parquet row groups), each reading only its
+  * byte range. */
 class GraftTableOrcPartitionReader(part: GraftTableInputPartition,
     required: StructType, conf: Configuration) extends PartitionReader[InternalRow] {
 
-  private val deleted =
-    PosDeleteIndex.loadAll(part.posDeleteFiles, part.dvRefs, part.filePath, conf)
-
-  private def tableType(name: String): DataType =
-    part.tableSchema.fields.find(_.name == name).map(_.dataType).getOrElse(
-      throw new IllegalArgumentException(s"equality column '$name' not in table schema"))
-
-  private val eqSets: Seq[(Seq[String], java.util.HashSet[Vector[Any]])] =
-    RowEqDeletes.load(part.eqDeleteFiles, tableType,
-      part.nameAlternates.flatMap { case (cur, as) => as.map(_ -> cur) }, conf)
+  private val deletes = new TaskDeletes(part, required, conf)
+  private val working = deletes.working
 
   private val reader = OrcFile.createReader(
     new org.apache.hadoop.fs.Path(part.filePath), OrcFile.readerOptions(conf))
@@ -59,9 +51,9 @@ class GraftTableOrcPartitionReader(part: GraftTableInputPartition,
     else part.nameAlternates.getOrElse(n, Nil).map(indexOf).find(_ >= 0).getOrElse(-1)
   }
 
-  /** Required field name → ORC column ordinal (-2/-3 = metadata columns). */
+  /** Working field name → ORC column ordinal (-2/-3 = metadata columns). */
   private val ordinals: Array[Int] =
-    required.fields.map { f =>
+    working.fields.map { f =>
       f.name match {
         case "_file" => -2
         case "_pos" => -3
@@ -69,15 +61,7 @@ class GraftTableOrcPartitionReader(part: GraftTableInputPartition,
       }
     }
 
-  /** Equality probes: per distinct column list, the ORC ordinals + table
-    * types + value set — tuples compare in the shared external domain. */
-  private val eqProbeSets: Seq[(Array[Int], Array[DataType],
-      java.util.HashSet[Vector[Any]])] =
-    eqSets.map { case (cols, set) =>
-      (cols.map(resolveOrdinal).toArray, cols.map(tableType).toArray, set)
-    }
-
-  private val toCatalyst = CatalystTypeConverters.createToCatalystConverter(required)
+  private val toCatalyst = CatalystTypeConverters.createToCatalystConverter(working)
   private var rowIndex: Long = part.rowStart - 1L
   private var current: InternalRow = _
 
@@ -108,7 +92,7 @@ class GraftTableOrcPartitionReader(part: GraftTableInputPartition,
   }
 
   private def rowOf(row: Int): org.apache.spark.sql.Row =
-    org.apache.spark.sql.Row.fromSeq(required.fields.toSeq.zipWithIndex.map {
+    org.apache.spark.sql.Row.fromSeq(working.fields.toSeq.zipWithIndex.map {
       case (f, i) => ordinals(i) match {
         case -2 => part.filePath
         case -3 => rowIndex
@@ -116,13 +100,6 @@ class GraftTableOrcPartitionReader(part: GraftTableInputPartition,
         case c => value(batch.cols(c), f.dataType, row)
       }
     })
-
-  private def equalityDeleted(row: Int): Boolean =
-    eqProbeSets.exists { case (ords, dts, set) =>
-      set.contains(ords.indices.map(j =>
-        if (ords(j) < 0) null
-        else RowEqDeletes.canon(value(batch.cols(ords(j)), dts(j), row))).toVector)
-    }
 
   override def next(): Boolean = {
     while (true) {
@@ -133,9 +110,9 @@ class GraftTableOrcPartitionReader(part: GraftTableInputPartition,
       val p = batchPos
       batchPos += 1
       rowIndex += 1
-      if (!deleted.contains(rowIndex) &&
-          (eqProbeSets.isEmpty || !equalityDeleted(p))) {
-        current = toCatalyst(rowOf(p)).asInstanceOf[InternalRow]
+      val row = toCatalyst(rowOf(p)).asInstanceOf[InternalRow]
+      if (!deletes.deleted(rowIndex, row)) {
+        current = deletes.project(row)
         return true
       }
     }

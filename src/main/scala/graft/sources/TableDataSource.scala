@@ -5,14 +5,11 @@ import java.util
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.io.ColumnIOFactory
-import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.SpecializedGetters
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -1351,58 +1348,41 @@ class GraftTableParquetRowReader(batches: GraftTableColumnarReader)
   *     constant: its v3 initial default, or null; a RENAMED column reads
   *     under the name the file carries.
   * A clean scan that asks for none of these gets Spark's batch untouched.
-  *
-  * The reader conf pins this library's own file conventions (micros
-  * timestamps, CORRECTED datetime rebase; v3 nanosecond timestamps read
-  * as their long nanos). A column whose parquet type Spark cannot decode
-  * as the table type fails the read, naming the column and the file. */
+  * The data file and its delete files open through [[ParquetDecoder]]
+  * on one task conf. */
 class GraftTableColumnarReader(part: GraftTableInputPartition,
     required: StructType, confBase: Configuration)
     extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
-  import org.apache.spark.sql.execution.datasources.SchemaColumnConvertNotSupportedException
-  import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport,
-    VectorizedParquetRecordReader}
   import org.apache.spark.sql.execution.vectorized.{ColumnVectorUtils, ConstantColumnVector}
   import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
   import GraftTableColumnarReader._
 
-  private def tableType(name: String): DataType =
-    part.tableSchema.fields.find(_.name == name).map(_.dataType).getOrElse(
-      throw new IllegalArgumentException(s"equality column '$name' not in table schema"))
+  /** Deleted FILE-ABSOLUTE row indexes and equality-delete probes. The
+    * vectorized reader serves the split's rows strictly in order with no
+    * predicate skipping, so the absolute index of a batch's first row is
+    * `rowStart` plus the rows already served. */
+  private val deletes = new TaskDeletes(part, required, confBase)
 
-  /** Pending equality deletes: one value set per distinct column list (a
-    * delete file's schema IS its equality columns, old names mapped to
-    * the current generation), loaded once per task. */
-  private val eqSets: Seq[(Seq[String], java.util.HashSet[Vector[Any]])] =
-    EqDeleteIndex.load(part.eqDeleteFiles, tableType,
-      part.nameAlternates.flatMap { case (cur, olds) => olds.map(_ -> cur) }, confBase)
+  /** `required`, then the equality columns the query never selects (read
+    * to evaluate the deletes, never emitted). */
+  private val working = deletes.working
 
-  /** The columns the reader works on: `required`, then the equality
-    * columns the query never selects (read to evaluate the deletes, never
-    * emitted). */
-  private val extraFields: Seq[StructField] =
-    eqSets.flatMap(_._1).distinct.filterNot(required.fieldNames.contains)
-      .map(c => StructField(c, tableType(c)))
-  private val working = StructType(required.fields.toSeq ++ extraFields)
+  private val file = new ParquetDecoder(deletes.decoderConf, part.filePath,
+    part.splitStart, part.splitBytes)
 
   private def lineage(name: String): Boolean =
     (name == GraftTable.RowIdCol || name == GraftTable.LastUpdatedCol) &&
       !part.tableSchema.fieldNames.contains(name)
 
-  /** The file's top-level column names, from one KB-scale footer open
-    * paid only when a column's source depends on them: a table that
-    * renamed a column, a lineage column, or a column with a v3 initial
-    * default. None: every column is requested by its current name and
-    * Spark null-fills the ones the file lacks. */
+  /** The file's top-level column names, consulted only when a column's
+    * source depends on them: a table that renamed a column, a lineage
+    * column, or a column with a v3 initial default. None: every column is
+    * requested by its current name and Spark null-fills the ones the file
+    * lacks. */
   private val fileColumns: Option[Set[String]] =
     if (part.nameAlternates.isEmpty && !working.fieldNames.exists(n =>
         lineage(n) || part.initialDefaults.contains(n))) None
-    else {
-      val r = ParquetFileReader.open(HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(part.filePath), confBase))
-      Some(try r.getFileMetaData.getSchema.getFields.asScala.map(_.getName).toSet
-        finally r.close())
-    }
+    else Some(file.columns.toSet)
   private def fileHas(name: String): Boolean = fileColumns.exists(_(name))
 
   private val requestedFields = scala.collection.mutable.ArrayBuffer.empty[StructField]
@@ -1412,7 +1392,7 @@ class GraftTableColumnarReader(part: GraftTableInputPartition,
     Decoded(requestedFields.size - 1)
   }
   private def constant(dt: DataType, value: Any): Source = {
-    val v = new ConstantColumnVector(BatchSize, dt)
+    val v = new ConstantColumnVector(ParquetDecoder.BatchSize, dt)
     ColumnVectorUtils.populate(v, new org.apache.spark.sql.catalyst.expressions
       .GenericInternalRow(Array[Any](value)), 0)
     Constant(new ShieldedColumnVector(v))
@@ -1449,76 +1429,27 @@ class GraftTableColumnarReader(part: GraftTableInputPartition,
         }
     }
   }.toArray
-  private val requested = StructType(requestedFields.toSeq)
-
-  private val conf = new Configuration(confBase)
-  // the keys Spark's reader stack expects its planner to have set
-  conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, requested.json)
-  conf.set(org.apache.parquet.hadoop.ParquetInputFormat.READ_SUPPORT_CLASS,
-    classOf[ParquetReadSupport].getName)
-  conf.setBoolean("spark.sql.parquet.binaryAsString", false)
-  conf.setBoolean("spark.sql.parquet.int96AsTimestamp", true)
-  conf.setBoolean("spark.sql.caseSensitive", false)
-  conf.setBoolean("spark.sql.parquet.inferTimestampNTZ.enabled", true)
-  conf.setBoolean("spark.sql.legacy.parquet.nanosAsLong", true)
-  conf.setBoolean("spark.sql.parquet.fieldId.read.enabled", false)
-
-  private val reader = new VectorizedParquetRecordReader(
-    null, "CORRECTED", "UTC", "CORRECTED", "UTC", false, BatchSize)
-  reader.initialize(
-    new org.apache.hadoop.mapred.FileSplit(
-      new org.apache.hadoop.fs.Path(part.filePath),
-      part.splitStart, part.splitBytes, Array.empty[String]),
-    new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
-      conf, new org.apache.hadoop.mapreduce.TaskAttemptID()))
-  reader.initBatch(new StructType(), InternalRow.empty)
-  reader.enableReturningBatches()
-
-  /** Deleted FILE-ABSOLUTE row indexes addressing this file. The
-    * vectorized reader serves the split's rows strictly in order with no
-    * predicate skipping, so the absolute index of a batch's first row is
-    * `rowStart` plus the rows already served. */
-  private val deleted =
-    PosDeleteIndex.loadAll(part.posDeleteFiles, part.dvRefs, part.filePath, confBase)
-
-  /** Equality-delete probes over the working columns, specialized by
-    * shape so the per-row test allocates nothing on the hot paths:
-    *   - single long-coercible column (the CDC-upsert key shape):
-    *     sorted `long[]` + binary search, fully unboxed;
-    *   - single string column: a set of UTF8String keys probed with the
-    *     vector's own transient UTF8String (no String materialization);
-    *   - anything else: a tuple set probed through ONE reusable buffer
-    *     (only the unavoidable value boxing remains). */
-  private val eqProbes: Array[EqProbe] = eqSets.map { case (cols, set) =>
-    EqProbe.build(cols.map(working.fieldIndex).toArray, cols.map(tableType).toArray, set)
-  }.toArray
+  file.decode(StructType(requestedFields.toSeq))
 
   /** The emitted columns are the decoder's own, in order. */
-  private val plain = extraFields.isEmpty && sources.forall(_.isInstanceOf[Decoded])
-  private val noDeletes = deleted.isEmpty && eqProbes.isEmpty
+  private val plain = working.length == required.length &&
+    sources.forall(_.isInstanceOf[Decoded])
 
   private var served: Long = 0L
 
   private var batch: ColumnarBatch = _
   override def next(): Boolean = {
-    val has =
-      try reader.nextKeyValue()
-      catch {
-        case e: SchemaColumnConvertNotSupportedException =>
-          throw new UnsupportedOperationException(s"graft-table reader cannot decode " +
-            s"column ${e.getColumn} (parquet ${e.getPhysicalType}) of ${part.filePath} " +
-            s"as ${e.getLogicalType}", e)
-      }
+    val has = file.next()
     if (has) {
-      val raw = reader.getCurrentValue.asInstanceOf[ColumnarBatch]
+      val raw = file.batch
       val first = part.rowStart + served
       served += raw.numRows()
-      batch = if (plain && noDeletes) raw else assemble(raw, first)
+      batch = if (plain && deletes.isEmpty) raw else assemble(raw, first)
     }
     has
   }
   override def get(): ColumnarBatch = batch
-  override def close(): Unit = reader.close()
+  override def close(): Unit = file.close()
 
   /** Working column `c` over `raw`, its rows re-indexed through `keep`
     * (null: every row). Decoded vectors belong to the reader, which reuses
@@ -1533,11 +1464,13 @@ class GraftTableColumnarReader(part: GraftTableInputPartition,
       case Position(offset) => new PositionColumnVector(first + offset, keep)
     }
 
-  /** Surviving row ordinals of `raw` — null when every row survives. */
+  /** Surviving row ordinals of `raw` — null when every row survives. The
+    * equality probes read the working columns through the batch's row
+    * view. */
   private def selection(raw: ColumnarBatch, first: Long): Array[Int] = {
     val n = raw.numRows()
     val probed =
-      if (eqProbes.isEmpty) null
+      if (!deletes.byValue) null
       else new ColumnarBatch(Array.tabulate[ColumnVector](working.length)(c =>
         sources(c) match {
           case Decoded(i) => raw.column(i)
@@ -1547,7 +1480,7 @@ class GraftTableColumnarReader(part: GraftTableInputPartition,
     var k = 0
     var i = 0
     while (i < n) {
-      if (!deleted.contains(first + i) && (probed == null || !eqDeleted(probed, i))) {
+      if (!deletes.deleted(first + i, if (probed == null) null else probed.getRow(i))) {
         sel(k) = i; k += 1
       }
       i += 1
@@ -1555,20 +1488,11 @@ class GraftTableColumnarReader(part: GraftTableInputPartition,
     if (k == n) null else java.util.Arrays.copyOf(sel, k)
   }
 
-  private def eqDeleted(probed: ColumnarBatch, row: Int): Boolean = {
-    var i = 0
-    while (i < eqProbes.length) {
-      if (eqProbes(i).deleted(probed, row)) return true
-      i += 1
-    }
-    false
-  }
-
   /** Deleted rows vanish from the batch's row space through a selection
     * view over the batch's own vectors — no column data is copied
     * (production Iceberg's delete-aware vectorized read shape). */
   private def assemble(raw: ColumnarBatch, first: Long): ColumnarBatch = {
-    val keep = if (noDeletes) null else selection(raw, first)
+    val keep = if (deletes.isEmpty) null else selection(raw, first)
     if (keep == null && plain) raw
     else new ColumnarBatch(
       Array.tabulate[ColumnVector](required.length)(c => vector(c, raw, first, keep)),
@@ -1577,8 +1501,6 @@ class GraftTableColumnarReader(part: GraftTableInputPartition,
 }
 
 object GraftTableColumnarReader {
-  private val BatchSize = 4096
-
   /** Where a working column's vector comes from. */
   private sealed trait Source
   /** Column `idx` of the decoded batch. */
@@ -1617,45 +1539,47 @@ private[sources] final class PositionColumnVector(base: Long, sel: Array[Int])
     unsupported
 }
 
-/** A per-row equality-delete membership test over a ColumnarBatch,
-  * shape-specialized so the hot path allocates nothing (see the
-  * construction notes at the reader's `eqProbes`). */
+/** A per-row equality-delete membership test over the working row —
+  * a ColumnarBatch's row view in the parquet reader, the converted
+  * Catalyst row in the Avro and ORC readers. Delete values and data
+  * values both come from [[EqProbe.value]] over a row in Catalyst's
+  * internal domain (Int days, Long micros, UTF8String, bytes, Decimal),
+  * so the two sides cannot disagree on a value's form. Shape-specialized
+  * so the hot path allocates nothing:
+  *   - single long-coercible column (the CDC-upsert key shape): sorted
+  *     `long[]` + binary search, fully unboxed;
+  *   - single string column: a set of UTF8String keys probed with the
+  *     row's own UTF8String (no String materialization);
+  *   - anything else: a tuple set probed through ONE reusable buffer
+  *     (only the unavoidable value boxing remains). */
 private[sources] sealed trait EqProbe {
-  def deleted(raw: org.apache.spark.sql.vectorized.ColumnarBatch, row: Int): Boolean
+  def deleted(row: SpecializedGetters): Boolean
 }
 
 private[sources] object EqProbe {
-  import org.apache.spark.sql.vectorized.ColumnarBatch
+  import org.apache.spark.unsafe.types.UTF8String
 
-  /** Single long-coercible key (int/long/date/timestamp vectors all
-    * surface as int/long): sorted array + binary search, unboxed. */
+  /** Single long-coercible key (int/long/date/timestamp all read as
+    * int/long): sorted array + binary search, unboxed. */
   private final class LongCol(idx: Int, isInt: Boolean, sorted: Array[Long],
       hasNull: Boolean) extends EqProbe {
-    override def deleted(raw: ColumnarBatch, row: Int): Boolean = {
-      val v = raw.column(idx)
-      if (v.isNullAt(row)) hasNull
+    override def deleted(row: SpecializedGetters): Boolean =
+      if (row.isNullAt(idx)) hasNull
       else {
-        val x = if (isInt) v.getInt(row).toLong else v.getLong(row)
+        val x = if (isInt) row.getInt(idx).toLong else row.getLong(idx)
         java.util.Arrays.binarySearch(sorted, x) >= 0
       }
-    }
   }
 
-  /** Single string key: UTF8String set probed with the vector's own
-    * transient UTF8String — hashing/equality run on the raw bytes, no
-    * java.lang.String ever materializes. */
-  private final class StringCol(idx: Int,
-      set: java.util.HashSet[org.apache.spark.unsafe.types.UTF8String],
+  private final class StringCol(idx: Int, set: java.util.HashSet[UTF8String],
       hasNull: Boolean) extends EqProbe {
-    override def deleted(raw: ColumnarBatch, row: Int): Boolean = {
-      val v = raw.column(idx)
-      if (v.isNullAt(row)) hasNull else set.contains(v.getUTF8String(row))
-    }
+    override def deleted(row: SpecializedGetters): Boolean =
+      if (row.isNullAt(idx)) hasNull else set.contains(row.getUTF8String(idx))
   }
 
   /** Array-backed tuple with value-based hash/equality — stored keys own
     * their arrays; the probe side reuses ONE buffer per probe object. */
-  private[sources] final class TupleKey(val vals: Array[AnyRef]) {
+  final class TupleKey(val vals: Array[AnyRef]) {
     override def hashCode: Int = java.util.Arrays.hashCode(vals)
     override def equals(o: Any): Boolean = o match {
       case t: TupleKey => java.util.Arrays.equals(vals, t.vals)
@@ -1667,139 +1591,96 @@ private[sources] object EqProbe {
       set: java.util.HashSet[TupleKey]) extends EqProbe {
     private val buf = new Array[AnyRef](idxs.length)
     private val probe = new TupleKey(buf)
-    private def value(v: org.apache.spark.sql.vectorized.ColumnVector,
-        dt: DataType, row: Int): AnyRef =
-      if (v.isNullAt(row)) null
-      else dt match {
-        case IntegerType | DateType => Int.box(v.getInt(row))
-        case LongType | TimestampType | TimestampNTZType => Long.box(v.getLong(row))
-        case DoubleType => Double.box(v.getDouble(row))
-        case FloatType => Float.box(v.getFloat(row))
-        case BooleanType => Boolean.box(v.getBoolean(row))
-        case StringType => v.getUTF8String(row).toString
-        case BinaryType => scala.collection.immutable.ArraySeq.unsafeWrapArray(v.getBinary(row))
-        case d: DecimalType => v.getDecimal(row, d.precision, d.scale).toJavaBigDecimal
-        case other => throw new UnsupportedOperationException(
-          s"equality comparison over $other")
-      }
-    override def deleted(raw: ColumnarBatch, row: Int): Boolean = {
+    override def deleted(row: SpecializedGetters): Boolean = {
       var j = 0
       while (j < idxs.length) {
-        buf(j) = value(raw.column(idxs(j)), dts(j), row)
+        buf(j) = value(row, idxs(j), dts(j))
         j += 1
       }
       set.contains(probe)
     }
   }
 
-  /** Build the best probe for a loaded value set (canonical columnar
-    * domain, as [[EqDeleteIndex]] decodes it). */
-  def build(idxs: Array[Int], dts: Array[DataType],
-      set: java.util.HashSet[Vector[Any]]): EqProbe = {
-    import scala.jdk.CollectionConverters._
-    if (idxs.length == 1) dts(0) match {
-      case IntegerType | DateType | LongType | TimestampType | TimestampNTZType =>
-        val vs = set.asScala.map(_.head)
-        val hasNull = vs.exists(_ == null)
-        val sorted = vs.collect {
-          case i: Int => i.toLong
-          case l: Long => l
-        }.toArray.sorted
-        return new LongCol(idxs(0),
-          dts(0) == IntegerType || dts(0) == DateType, sorted, hasNull)
-      case StringType =>
-        val vs = set.asScala.map(_.head)
-        val hs = new java.util.HashSet[org.apache.spark.unsafe.types.UTF8String]()
-        vs.foreach {
-          case s: String => hs.add(org.apache.spark.unsafe.types.UTF8String.fromString(s))
-          case _ => ()
-        }
-        return new StringCol(idxs(0), hs, vs.exists(_ == null))
-      case _ => ()
-    }
-    val hs = new java.util.HashSet[TupleKey]()
-    set.asScala.foreach(v => hs.add(new TupleKey(v.map(_.asInstanceOf[AnyRef]).toArray)))
-    new Generic(idxs, dts, hs)
-  }
-}
-
-/** Task-local equality-delete value sets in the canonical COLUMNAR
-  * domain (Int epoch days, Long micros, String, content-compared bytes,
-  * BigDecimal at the column's scale — what the probes read from the
-  * ColumnVectors), one per distinct equality-column list, keyed by the
-  * columns' CURRENT names (`altToCurrent` maps a pre-rename delete
-  * file's names). Null equality values match null data values (the spec
-  * rule) — `null` participates in the tuple. */
-private[sources] object EqDeleteIndex {
-  def load(eqDeleteFiles: Seq[String], tableType: String => DataType,
-      altToCurrent: Map[String, String], conf: Configuration)
-      : Seq[(Seq[String], java.util.HashSet[Vector[Any]])] = {
-    val acc = scala.collection.mutable.LinkedHashMap
-      .empty[Seq[String], java.util.HashSet[Vector[Any]]]
-    eqDeleteFiles.foreach { del =>
-      val r = ParquetFileReader.open(HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(del), conf))
-      try {
-        val full = r.getFileMetaData.getSchema
-        val raw = full.getFields.asScala.map(_.getName).toSeq
-        val cols = raw.map(c => altToCurrent.getOrElse(c, c))
-        val set = acc.getOrElseUpdate(cols, new java.util.HashSet[Vector[Any]]())
-        val io = new ColumnIOFactory().getColumnIO(full, full, false)
-        var pages = r.readNextRowGroup()
-        while (pages != null) {
-          val rr = io.getRecordReader(pages, new GroupRecordConverter(full))
-          var i = 0L
-          while (i < pages.getRowCount) {
-            val g = rr.read()
-            set.add(raw.zip(cols).map { case (rc, cc) =>
-              canonical(g, rc, tableType(cc)) }.toVector)
-            i += 1
-          }
-          pages = r.readNextRowGroup()
-        }
-      } finally r.close()
-    }
-    acc.toSeq
-  }
-
-  /** Group-API decode into the canonical columnar domain — MUST mirror
-    * the probes' `EqProbe.Generic.value` exactly, or tuples never match. */
-  private def canonical(g: Group, name: String, dt: DataType): Any = {
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{FLOAT => PFLOAT, INT32, INT64}
-    val t = g.getType
-    if (!t.containsField(name)) return null
-    val i = t.getFieldIndex(name)
-    if (g.getFieldRepetitionCount(i) == 0) return null
-    dt match {
-      case IntegerType | DateType => g.getInteger(i, 0)
-      case LongType | TimestampType | TimestampNTZType =>
-        // pre-widening delete files may carry the narrower physical
-        t.getType(i).asPrimitiveType().getPrimitiveTypeName match {
-          case INT32 => g.getInteger(i, 0).toLong
-          case _ => g.getLong(i, 0)
-        }
-      case DoubleType =>
-        t.getType(i).asPrimitiveType().getPrimitiveTypeName match {
-          case PFLOAT => g.getFloat(i, 0).toDouble
-          case _ => g.getDouble(i, 0)
-        }
-      case FloatType => g.getFloat(i, 0)
-      case BooleanType => g.getBoolean(i, 0)
-      case StringType => g.getBinary(i, 0).toStringUsingUTF8
-      case BinaryType => scala.collection.immutable.ArraySeq.unsafeWrapArray(
-        g.getBinary(i, 0).getBytes)
-      case dec: DecimalType =>
-        // our task writers land FIXED_LEN_BYTE_ARRAY (the Iceberg
-        // mapping); Spark-written files use INT32/INT64 for small precision
-        t.getType(i).asPrimitiveType().getPrimitiveTypeName match {
-          case INT32 => java.math.BigDecimal.valueOf(g.getInteger(i, 0).toLong, dec.scale)
-          case INT64 => java.math.BigDecimal.valueOf(g.getLong(i, 0), dec.scale)
-          case _ => new java.math.BigDecimal(
-            new java.math.BigInteger(g.getBinary(i, 0).getBytes), dec.scale)
-        }
+  /** Column `i` of `row` as an equality value of table type `dt`: null
+    * for null (null keys match null values, the spec rule), boxed
+    * primitives, UTF8String, content-compared bytes, Decimal. A string may
+    * point into a reused buffer: [[key]] copies it. */
+  def value(row: SpecializedGetters, i: Int, dt: DataType): AnyRef =
+    if (row.isNullAt(i)) null
+    else dt match {
+      case IntegerType | DateType => Int.box(row.getInt(i))
+      case LongType | TimestampType | TimestampNTZType => Long.box(row.getLong(i))
+      case DoubleType => Double.box(row.getDouble(i))
+      case FloatType => Float.box(row.getFloat(i))
+      case BooleanType => Boolean.box(row.getBoolean(i))
+      case StringType => row.getUTF8String(i)
+      case BinaryType => scala.collection.immutable.ArraySeq.unsafeWrapArray(row.getBinary(i))
+      case d: DecimalType => row.getDecimal(i, d.precision, d.scale)
       case other => throw new UnsupportedOperationException(
         s"equality comparison over $other")
     }
+
+  /** The stored key of columns `0 until dts.length` of a delete-file row. */
+  def key(row: SpecializedGetters, dts: Array[DataType]): TupleKey =
+    new TupleKey(Array.tabulate[AnyRef](dts.length)(j => value(row, j, dts(j)) match {
+      case s: UTF8String => s.clone()
+      case v => v
+    }))
+
+  /** The probe of a loaded key set over the working row's columns `idxs`. */
+  def build(idxs: Array[Int], dts: Array[DataType],
+      set: java.util.HashSet[TupleKey]): EqProbe = {
+    if (idxs.length == 1) {
+      val vs = set.asScala.map(_.vals(0))
+      val hasNull = vs.exists(_ == null)
+      dts(0) match {
+        case IntegerType | DateType | LongType | TimestampType | TimestampNTZType =>
+          val sorted = vs.collect {
+            case i: java.lang.Integer => i.longValue
+            case l: java.lang.Long => l.longValue
+          }.toArray.sorted
+          return new LongCol(idxs(0),
+            dts(0) == IntegerType || dts(0) == DateType, sorted, hasNull)
+        case StringType =>
+          val hs = new java.util.HashSet[UTF8String]()
+          vs.foreach { case s: UTF8String => hs.add(s); case _ => () }
+          return new StringCol(idxs(0), hs, hasNull)
+        case _ => ()
+      }
+    }
+    new Generic(idxs, dts, set)
+  }
+}
+
+/** Task-local equality-delete key sets, one per distinct equality-column
+  * list, keyed by the columns' CURRENT names (`altToCurrent` maps a
+  * pre-rename delete file's names). A delete file's schema IS its
+  * equality columns; each decodes through [[ParquetDecoder]] in the
+  * table types of its columns (a pre-widening INT32 key reads as long). */
+private[sources] object EqDeleteIndex {
+  def load(eqDeleteFiles: Seq[String], tableType: String => DataType,
+      altToCurrent: Map[String, String], conf: => Configuration)
+      : Seq[(Seq[String], java.util.HashSet[EqProbe.TupleKey])] = {
+    val acc = scala.collection.mutable.LinkedHashMap
+      .empty[Seq[String], java.util.HashSet[EqProbe.TupleKey]]
+    eqDeleteFiles.foreach { del =>
+      val file = new ParquetDecoder(conf, del)
+      try {
+        val cols = file.columns.map(c => altToCurrent.getOrElse(c, c))
+        val dts = cols.map(tableType).toArray
+        val set = acc.getOrElseUpdate(cols, new java.util.HashSet[EqProbe.TupleKey]())
+        file.decode(StructType(file.columns.zip(dts).map { case (c, dt) => StructField(c, dt) }))
+        while (file.next()) {
+          val batch = file.batch
+          var i = 0
+          while (i < batch.numRows()) {
+            set.add(EqProbe.key(batch.getRow(i), dts))
+            i += 1
+          }
+        }
+      } finally file.close()
+    }
+    acc.toSeq
   }
 }
 
@@ -1908,15 +1789,18 @@ private[sources] final class PosDeletes(
 
 /** Task-local position-delete index: the FILE-ABSOLUTE deleted row
   * indexes addressing ONE data file, loaded once per task from its
-  * sequence-scoped, path-bound-scoped delete files. Shared by the
-  * parquet, Avro and ORC readers — all address the same coordinate
-  * system (record order == row index, Iceberg's `pos`). */
+  * sequence-scoped, path-bound-scoped delete files. */
 private[sources] object PosDeleteIndex {
+  private val PosDeleteSchema = StructType(Seq(
+    StructField("file_path", StringType), StructField("pos", LongType)))
 
-  /** Parquet position deletes + v3 deletion vectors as one probe. */
+  /** Parquet position deletes + v3 deletion vectors as one probe; the
+    * parquet files decode on `decoderConf`, asked for only when there are
+    * any. */
   def loadAll(posDeleteFiles: Seq[String], dvRefs: Seq[(String, Long, Long)],
-      dataFilePath: String, conf: Configuration): PosDeletes = {
-    val set = load(posDeleteFiles, dataFilePath, conf)
+      dataFilePath: String, conf: Configuration,
+      decoderConf: => Configuration): PosDeletes = {
+    val set = load(posDeleteFiles, dataFilePath, decoderConf)
     val dv = dvRefs match {
       case Nil => null
       case Seq((p, off, len)) => graft.iceberg.DeletionVectors.read(p, off, len, conf)
@@ -1927,128 +1811,170 @@ private[sources] object PosDeleteIndex {
     }
     new PosDeletes(set, dv)
   }
-  def load(posDeleteFiles: Seq[String], dataFilePath: String,
-      conf: Configuration): java.util.HashSet[java.lang.Long] = {
+
+  /** The positions in `posDeleteFiles` that address `dataFilePath`. The
+    * rows come sorted by file_path, so each run of one spelling resolves
+    * its path identity once. */
+  private def load(posDeleteFiles: Seq[String], dataFilePath: String,
+      conf: => Configuration): java.util.HashSet[java.lang.Long] = {
     val set = new java.util.HashSet[java.lang.Long]()
     val me = PathId(dataFilePath)
+    var last: org.apache.spark.unsafe.types.UTF8String = null
+    var mine = false
     posDeleteFiles.foreach { del =>
-      val r = ParquetFileReader.open(HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(del), conf))
+      val file = new ParquetDecoder(conf, del)
       try {
-        val full = r.getFileMetaData.getSchema
-        val sel = full.getFields.asScala
-          .filter(f => f.getName == "file_path" || f.getName == "pos")
-        val req = new MessageType(full.getName, sel.asJava)
-        r.setRequestedSchema(req)
-        val io = new ColumnIOFactory().getColumnIO(req, full, false)
-        var pages = r.readNextRowGroup()
-        while (pages != null) {
-          val rr = io.getRecordReader(pages, new GroupRecordConverter(req))
-          var i = 0L
-          while (i < pages.getRowCount) {
-            val g = rr.read()
-            if (PathId(g.getBinary("file_path", 0).toStringUsingUTF8) == me)
-              set.add(g.getLong("pos", 0))
+        file.decode(PosDeleteSchema)
+        while (file.next()) {
+          val batch = file.batch
+          val paths = batch.column(0)
+          val positions = batch.column(1)
+          var i = 0
+          while (i < batch.numRows()) {
+            val p = paths.getUTF8String(i)
+            if (!p.equals(last)) { last = p.clone(); mine = PathId(p.toString) == me }
+            if (mine) set.add(positions.getLong(i))
             i += 1
           }
-          pages = r.readNextRowGroup()
         }
-      } finally r.close()
+      } finally file.close()
     }
     set
   }
 }
 
-/** Task-local equality-delete value sets in the EXTERNAL ROW domain
-  * (String / boxed primitives / LocalDate / Instant / LocalDateTime /
-  * content-comparable byte sequences) — shared by the Avro and ORC
-  * partition readers, whose data decodes land in that domain. Delete files are always parquet (this engine writes
-  * them); their columns canonicalize to the CURRENT name generation.
-  * Byte arrays wrap content-comparable via [[RowEqDeletes.canon]] —
-  * a raw Array[Byte] inside the tuple would compare by REFERENCE and
-  * silently never match (the probe side must canonicalize too). */
-private[sources] object RowEqDeletes {
+/** What one task deletes from one data file, for the parquet, Avro and
+  * ORC readers alike: position deletes and deletion vectors by the row's
+  * file-absolute index (record order == row index, Iceberg's `pos`), and
+  * equality deletes by value through [[EqProbe]]s over the working row —
+  * `required`, then the equality columns the query never selects. Every
+  * delete file decodes through [[ParquetDecoder]] on [[decoderConf]]. */
+private[sources] final class TaskDeletes(part: GraftTableInputPartition,
+    required: StructType, conf: Configuration) {
 
-  def canon(v: Any): Any = v match {
-    case b: Array[Byte] => scala.collection.immutable.ArraySeq.unsafeWrapArray(b)
-    case x => x
+  /** The task's one decoder conf, made on first use (the parquet reader
+    * opens its data file on it too). */
+  lazy val decoderConf: Configuration = ParquetDecoder.conf(conf)
+
+  private def tableType(name: String): DataType =
+    part.tableSchema.fields.find(_.name == name).map(_.dataType).getOrElse(
+      throw new IllegalArgumentException(s"equality column '$name' not in table schema"))
+
+  private val eqSets = EqDeleteIndex.load(part.eqDeleteFiles, tableType,
+    part.nameAlternates.flatMap { case (cur, olds) => olds.map(_ -> cur) }, decoderConf)
+
+  val working: StructType = StructType(required.fields.toSeq ++
+    eqSets.flatMap(_._1).distinct.filterNot(required.fieldNames.contains)
+      .map(c => StructField(c, tableType(c))))
+
+  private val positions = PosDeleteIndex.loadAll(part.posDeleteFiles, part.dvRefs,
+    part.filePath, conf, decoderConf)
+
+  private val probes: Array[EqProbe] = eqSets.map { case (cols, set) =>
+    EqProbe.build(cols.map(working.fieldIndex).toArray, cols.map(tableType).toArray, set)
+  }.toArray
+
+  val isEmpty: Boolean = positions.isEmpty && probes.isEmpty
+  /** Whether [[deleted]] reads the row; when false it may be null. */
+  val byValue: Boolean = probes.nonEmpty
+
+  /** Is the row at file-absolute index `pos` (`row` over [[working]])
+    * deleted? */
+  def deleted(pos: Long, row: SpecializedGetters): Boolean =
+    positions.contains(pos) || (byValue && eqDeleted(row))
+
+  private def eqDeleted(row: SpecializedGetters): Boolean = {
+    var i = 0
+    while (i < probes.length) {
+      if (probes(i).deleted(row)) return true
+      i += 1
+    }
+    false
   }
 
-  def load(eqDeleteFiles: Seq[String], tableType: String => DataType,
-      altToCurrent: Map[String, String], conf: Configuration)
-      : Seq[(Seq[String], java.util.HashSet[Vector[Any]])] = {
-    val acc = scala.collection.mutable.LinkedHashMap
-      .empty[Seq[String], java.util.HashSet[Vector[Any]]]
-    eqDeleteFiles.foreach { del =>
-      val r = ParquetFileReader.open(HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(del), conf))
-      try {
-        val full = r.getFileMetaData.getSchema
-        val raw = full.getFields.asScala.map(_.getName).toSeq
-        val cols = raw.map(c => altToCurrent.getOrElse(c, c))
-        val set = acc.getOrElseUpdate(cols, new java.util.HashSet[Vector[Any]]())
-        val io = new ColumnIOFactory().getColumnIO(full, full, false)
-        var pages = r.readNextRowGroup()
-        while (pages != null) {
-          val rr = io.getRecordReader(pages, new GroupRecordConverter(full))
-          var i = 0L
-          while (i < pages.getRowCount) {
-            val g = rr.read()
-            set.add(raw.zip(cols).map { case (rc, cc) =>
-              canon(decode(g, rc, tableType(cc))) }.toVector)
-            i += 1
-          }
-          pages = r.readNextRowGroup()
-        }
-      } finally r.close()
-    }
-    acc.toSeq
+  /** A row over [[working]], cut back to the `required` columns. */
+  def project(row: InternalRow): InternalRow =
+    if (working.length == required.length) row
+    else InternalRow.fromSeq(row.toSeq(working).take(required.length))
+}
+
+/** Spark's vectorized parquet decoder over one file, data or delete
+  * file, opened once: the footer read and the decode share one input
+  * stream. `conf` is the task's [[ParquetDecoder.conf]]; [[decode]] sets
+  * the requested columns on it, so a task's decoders open one after
+  * another. A column whose parquet type Spark cannot decode as the
+  * requested type fails the read, naming the column and the file. */
+private[sources] final class ParquetDecoder(conf: Configuration, path: String,
+    start: Long = 0L, bytes: Long = Long.MaxValue) {
+  import org.apache.spark.sql.execution.datasources.SchemaColumnConvertNotSupportedException
+  import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport,
+    VectorizedParquetRecordReader}
+
+  private val file = HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(path), conf)
+  private val stream = file.newStream()
+  private val footer =
+    try ParquetFileReader.readFooter(file, org.apache.parquet.HadoopReadOptions
+      .builder(conf, file.getPath).withRange(start, start + bytes).build(), stream)
+    catch { case t: Throwable => stream.close(); throw t }
+
+  /** The file's top-level column names, in file order. */
+  def columns: Seq[String] =
+    footer.getFileMetaData.getSchema.getFields.asScala.map(_.getName).toSeq
+
+  private var reader: VectorizedParquetRecordReader = _
+
+  /** Starts the decode of `requested`: each column by its name in the
+    * file, as its requested type (Spark widens int→long and
+    * float→double); a column the file lacks reads as null. */
+  def decode(requested: StructType): Unit = {
+    conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, requested.json)
+    reader = new VectorizedParquetRecordReader(
+      null, "CORRECTED", "UTC", "CORRECTED", "UTC", false, ParquetDecoder.BatchSize)
+    try {
+      reader.initialize(
+        new org.apache.hadoop.mapred.FileSplit(file.getPath, start, bytes, Array.empty[String]),
+        new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
+          conf, new org.apache.hadoop.mapreduce.TaskAttemptID()),
+        Some(file), Some(stream), Some(footer))
+      reader.initBatch(new StructType(), InternalRow.empty)
+      reader.enableReturningBatches()
+    } catch { case t: Throwable => scala.util.Try(reader.close()); stream.close(); throw t }
   }
 
-  /** Parquet Group decode of one delete-file value into the external row
-    * domain — MUST mirror the data-side decodes (the Avro converter,
-    * the ORC vector decode) or tuples never match. Delete files carry primitive key columns only. */
-  private def decode(g: Group, name: String, dt: DataType): Any = {
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{FLOAT => PFLOAT, INT32, INT64}
-    val t = g.getType
-    if (!t.containsField(name)) return null
-    val i = t.getFieldIndex(name)
-    if (g.getFieldRepetitionCount(i) == 0) return null
-    dt match {
-      case IntegerType => g.getInteger(i, 0)
-      case LongType =>
-        t.getType(i).asPrimitiveType().getPrimitiveTypeName match {
-          case INT32 => g.getInteger(i, 0).toLong // pre-widening file
-          case _ => g.getLong(i, 0)
-        }
-      case DoubleType =>
-        t.getType(i).asPrimitiveType().getPrimitiveTypeName match {
-          case PFLOAT => g.getFloat(i, 0).toDouble
-          case _ => g.getDouble(i, 0)
-        }
-      case FloatType => g.getFloat(i, 0)
-      case BooleanType => g.getBoolean(i, 0)
-      case StringType => g.getBinary(i, 0).toStringUsingUTF8
-      case BinaryType => g.getBinary(i, 0).getBytes
-      case DateType => java.time.LocalDate.ofEpochDay(g.getInteger(i, 0).toLong)
-      case TimestampType =>
-        val us = g.getLong(i, 0)
-        java.time.Instant.ofEpochSecond(Math.floorDiv(us, 1000000L),
-          Math.floorMod(us, 1000000L) * 1000L)
-      case TimestampNTZType =>
-        val us = g.getLong(i, 0)
-        java.time.LocalDateTime.ofEpochSecond(Math.floorDiv(us, 1000000L),
-          (Math.floorMod(us, 1000000L) * 1000L).toInt, java.time.ZoneOffset.UTC)
-      case dec: DecimalType =>
-        t.getType(i).asPrimitiveType().getPrimitiveTypeName match {
-          case INT32 => java.math.BigDecimal.valueOf(g.getInteger(i, 0).toLong, dec.scale)
-          case INT64 => java.math.BigDecimal.valueOf(g.getLong(i, 0), dec.scale)
-          case _ => new java.math.BigDecimal(
-            new java.math.BigInteger(g.getBinary(i, 0).getBytes), dec.scale)
-        }
-      case other => throw new UnsupportedOperationException(
-        s"equality-delete column type $other is not supported")
+  def next(): Boolean =
+    try reader.nextKeyValue()
+    catch {
+      case e: SchemaColumnConvertNotSupportedException =>
+        throw new UnsupportedOperationException(s"graft-table reader cannot decode " +
+          s"column ${e.getColumn} (parquet ${e.getPhysicalType}) of $path " +
+          s"as ${e.getLogicalType}", e)
     }
+
+  def batch: org.apache.spark.sql.vectorized.ColumnarBatch =
+    reader.getCurrentValue.asInstanceOf[org.apache.spark.sql.vectorized.ColumnarBatch]
+
+  def close(): Unit = if (reader != null) reader.close() else stream.close()
+}
+
+private[sources] object ParquetDecoder {
+  val BatchSize = 4096
+
+  /** A task's decoder conf: `base` plus the keys Spark's reader stack
+    * expects its planner to have set, pinning this library's own file
+    * conventions (micros timestamps, CORRECTED datetime rebase; v3
+    * nanosecond timestamps read as their long nanos). */
+  def conf(base: Configuration): Configuration = {
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
+    val conf = new Configuration(base)
+    conf.set(org.apache.parquet.hadoop.ParquetInputFormat.READ_SUPPORT_CLASS,
+      classOf[ParquetReadSupport].getName)
+    conf.setBoolean("spark.sql.parquet.binaryAsString", false)
+    conf.setBoolean("spark.sql.parquet.int96AsTimestamp", true)
+    conf.setBoolean("spark.sql.caseSensitive", false)
+    conf.setBoolean("spark.sql.parquet.inferTimestampNTZ.enabled", true)
+    conf.setBoolean("spark.sql.legacy.parquet.nanosAsLong", true)
+    conf.setBoolean("spark.sql.parquet.fieldId.read.enabled", false)
+    conf
   }
 }
 

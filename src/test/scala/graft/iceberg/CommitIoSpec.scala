@@ -209,4 +209,31 @@ class CommitIoSpec extends SparkSpec {
     val opens = Option(CommitIoCountingFs.opens.get(head)).map(_.get).getOrElse(0)
     assert(opens == 1, s"$opens opens of $head")
   }
+
+  test("a merge-on-read read opens each delete file once") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-cio-opens").toString
+    GraftTable.create(dir, IcebergSchema(0, Seq(
+      IcebergField(1, "k", required = false, "long"),
+      IcebergField(2, "v", required = false, "string"))),
+      tableUuid = "5a9c0000-0000-4000-8000-00000000000c", timestampMs = 1700000000000L)
+    GraftTable.append(spark, dir,
+      spark.range(0, 100, 1, 1).select(col("id").as("k"), concat(lit("v"), col("id")).as("v")))
+    // one position-delete file and one equality-delete file, both
+    // addressing the one appended data file
+    GraftTable.deleteWhere(spark, dir, col("k") === 3)
+    GraftTable.upsert(spark, dir,
+      spark.range(5, 6, 1, 1).select(col("id").as("k"), lit("new").as("v")), Seq("k"))
+    val deletes = listRows(dir).filter(_.content == 1).flatMap(i => ManifestWriter.read(i.path))
+      .filter(_.status != 2)
+    assert(deletes.map(_.content).sorted == Seq(1, 2), deletes.map(_.filePath))
+    val got = counted(spark.read.format("graft-table")
+      .option("metadata", GraftTable.latestMetadataPath(dir)).load()
+      .agg(count(lit(1)), count(when(col("v") === "new", 1)),
+        count(when(col("k") === 3, 1))).head())
+    assert(got == org.apache.spark.sql.Row(99L, 1L, 0L), got)
+    deletes.foreach { e =>
+      val opens = Option(CommitIoCountingFs.opens.get(PathId(e.filePath))).map(_.get).getOrElse(0)
+      assert(opens == 1, s"$opens opens of ${e.filePath}")
+    }
+  }
 }

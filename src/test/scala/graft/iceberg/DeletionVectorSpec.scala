@@ -253,4 +253,31 @@ class DeletionVectorSpec extends SparkSpec {
     badLen(3) = (badLen(3) + 1).toByte
     intercept[IllegalArgumentException](DeletionVectors.decodeBlob(badLen))
   }
+
+  test("a catalog RENAME across namespaces keeps a v3 table's deletion vectors") {
+    val wh = freshCatalog("dvren")
+    spark.sql("CREATE NAMESPACE dvren.db1")
+    spark.sql("CREATE NAMESPACE dvren.db2")
+    spark.sql("CREATE TABLE dvren.db1.t (k BIGINT, v STRING)")
+    spark.sql("INSERT INTO dvren.db1.t " +
+      "SELECT /*+ REPARTITION(1) */ id, concat('v', id) FROM range(0, 40)")
+    // a v2 parquet position delete, then a v3 deletion vector
+    spark.sql("DELETE FROM dvren.db1.t WHERE k < 5")
+    spark.sql("ALTER TABLE dvren.db1.t SET TBLPROPERTIES ('format-version'='3')")
+    spark.sql("DELETE FROM dvren.db1.t WHERE k >= 35")
+    val before = spark.sql("SELECT k FROM dvren.db1.t").collect().map(_.getLong(0)).sorted
+    assert(before.toSeq == (5L until 35L))
+    spark.sql("ALTER TABLE dvren.db1.t RENAME TO db2.t2")
+    val dir = s"$wh/db2/t2"
+    val after = spark.sql("SELECT k FROM dvren.db2.t2").collect().map(_.getLong(0)).sorted
+    assert(after.toSeq == before.toSeq)
+    // the pre-DV snapshot reads through the rewritten parquet delete
+    assert(spark.sql("SELECT count(*) FROM dvren.db2.t2 VERSION AS OF 2")
+      .head().getLong(0) == 35L)
+    val dvs = liveDeleteEntries(dir).filter(_.fileFormat == "PUFFIN")
+    assert(dvs.nonEmpty)
+    dvs.foreach { e =>
+      assert(e.filePath.startsWith(dir) && e.referencedDataFile.exists(_.startsWith(dir)), e)
+    }
+  }
 }

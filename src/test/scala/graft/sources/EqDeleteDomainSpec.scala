@@ -1,15 +1,21 @@
 package graft.sources
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.{SparkSpec, Tables}
 import graft.iceberg._
 
 /** Equality-delete value-domain correctness across data-file formats:
-  * the shared RowEqDeletes sets must compare equal against values
-  * decoded by the parquet row route, the Avro reader, and the ORC
-  * reader — including BINARY keys, where a raw Array[Byte] inside the
-  * tuple would compare by reference and silently never delete. */
+  * the keys a delete file decodes to must compare equal against the
+  * values the parquet, Avro and ORC readers decode, for every key type
+  * (int, string, binary, date, timestamp; decimal on parquet) and for a
+  * key widened after the delete was written — including BINARY keys,
+  * where a raw Array[Byte] inside the tuple would compare by reference
+  * and silently never delete. */
 class EqDeleteDomainSpec extends SparkSpec {
 
   private def fresh(tag: String): String = {
@@ -99,5 +105,85 @@ class EqDeleteDomainSpec extends SparkSpec {
     val got = spark.sql(s"""SELECT COUNT(*) AS n,
       MAX(CASE WHEN n_nationkey = 7 THEN n_name END) AS name7 FROM $cat.db.n""").head()
     assert(got.getLong(0) == 25L && got.getString(1) == "ORC_NEW", got.toString)
+  }
+
+  private def norm(v: Any): Any = v match {
+    case b: Array[Byte] => b.toSeq
+    case d: java.sql.Date => d.toLocalDate
+    case t: java.sql.Timestamp => t.toInstant
+    case x => x
+  }
+
+  /** Key types of the parity cases: (name, type, the upserted key, a key
+    * that stays). The dates and timestamps straddle the epoch. */
+  private val keyTypes: Seq[(String, DataType, Any, Any)] = Seq(
+    ("int", IntegerType, 7, -8),
+    ("string", StringType, "k7", "k8"),
+    ("binary", BinaryType, Array[Byte](1, 2, 3), Array[Byte](9, 9)),
+    ("date", DateType, java.sql.Date.valueOf("2024-02-29"),
+      java.sql.Date.valueOf("1969-12-31")),
+    ("timestamp", TimestampType,
+      java.sql.Timestamp.from(java.time.Instant.parse("2024-03-01T12:34:56.789012Z")),
+      java.sql.Timestamp.from(java.time.Instant.parse("1969-12-31T23:59:58.250Z"))),
+    ("decimal", DecimalType(10, 2), new java.math.BigDecimal("12.34"),
+      new java.math.BigDecimal("-0.50")))
+
+  /** A two-row catalog table (`k` of type `dt`, `v` string) whose one data
+    * file is `format`, upserted on `k`; returns what it reads back. */
+  private def upsertThenRead(format: String, name: String, dt: DataType,
+      old: Any, keep: Any): Seq[(Any, String)] = {
+    val tag = s"${format}_$name"
+    val wh = fresh(tag)
+    val cat = s"g_eqd_$tag"
+    spark.conf.set(s"spark.sql.catalog.$cat", classOf[GraftCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+    spark.sql(s"CREATE TABLE $cat.db.t (k ${dt.sql}, v STRING)")
+    val dir = s"$wh/db/t"
+    val schema = StructType(Seq(StructField("k", dt), StructField("v", StringType)))
+    val rows = Seq(Row(old, "old"), Row(keep, "keep"))
+    format match {
+      case "parquet" => GraftTable.append(spark, dir, spark.createDataFrame(rows.asJava, schema))
+      case _ =>
+        val src = s"$wh/src/part-00000.$format"
+        if (format == "avro") AvroDataFiles.write(src, schema, rows)
+        else OrcDataFiles.write(src, schema, rows)
+        spark.sql(s"""CALL $cat.system.add_files(
+          table => 'db.t', source_dir => '$wh/src', format => '$format')""")
+    }
+    GraftTable.upsert(spark, dir,
+      spark.createDataFrame(Seq(Row(old, "new")).asJava, schema), Seq("k"))
+    spark.sql(s"SELECT k, v FROM $cat.db.t").collect()
+      .map(r => (norm(r.get(0)), r.getString(1))).sortBy(_._2).toSeq
+  }
+
+  for {
+    format <- Seq("parquet", "avro", "orc")
+    (name, dt, old, keep) <- keyTypes
+    if format == "parquet" || name != "decimal" // Avro/ORC fixtures carry no decimals
+  } test(s"a $name-keyed upsert replaces its row in a $format data file") {
+    val got = upsertThenRead(format, name, dt, old, keep)
+    assert(got == Seq((norm(keep), "keep"), (norm(old), "new")), got)
+  }
+
+  test("an equality delete written while its key was INT applies after widening to BIGINT") {
+    import spark.implicits._
+    val wh = fresh("widen")
+    spark.conf.set("spark.sql.catalog.g_eqd_widen", classOf[GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.g_eqd_widen.warehouse", wh)
+    spark.sql("CREATE TABLE g_eqd_widen.db.t (k INT, v STRING)")
+    val dir = s"$wh/db/t"
+    GraftTable.append(spark, dir, Seq((1, "a"), (2, "b"), (3, "c")).toDF("k", "v"))
+    // the equality-delete file stores k as INT32
+    GraftTable.upsert(spark, dir, Seq((2, "B")).toDF("k", "v"), Seq("k"))
+    spark.sql("ALTER TABLE g_eqd_widen.db.t ALTER COLUMN k TYPE BIGINT")
+    spark.sql("INSERT INTO g_eqd_widen.db.t VALUES (5000000000, 'd')")
+    val got = spark.sql("SELECT k, v FROM g_eqd_widen.db.t").collect()
+      .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq
+    assert(got == Seq((1L, "a"), (2L, "B"), (3L, "c"), (5000000000L, "d")), got)
+    val deletes = ManifestListReader.read(TableMetadata.parseFile(
+        GraftTable.latestMetadataPath(dir)).currentSnapshot.get.manifestList.get)
+      .filter(_.content == 1).flatMap(i => ManifestWriter.read(i.path))
+      .filter(e => e.status != 2 && e.content == 2)
+    assert(deletes.size == 1, deletes.map(_.filePath))
   }
 }

@@ -312,4 +312,40 @@ class ParquetDecoderSpec extends SparkSpec {
     assert(got == Row(19997L, (0L until 20000L).sum - 1L - 7777L - 19999L, 0L), got)
     assert(isColumnar(df), df.queryExecution.executedPlan.toString)
   }
+
+  test("a position-delete file of several row groups removes more than one batch of rows") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-pdec11").toString
+    GraftTable.create(dir, IcebergSchema(0, Seq(
+      IcebergField(1, "id", required = false, fieldType = "long"))),
+      tableUuid = "d8d9a6a1-0000-4000-8000-0000000dec11", timestampMs = 1700000000000L)
+    GraftTable.append(spark, dir, spark.range(0, 20000, 1, 1).toDF("id"))
+    val f = liveData(dir).map(_.filePath) match { case Seq(p) => p }
+    // every even position of the data file (10,000 of them), plus rows
+    // addressing another file that must not apply, in small row groups
+    val tmp = s"$dir/tmpdel"
+    spark.range(0, 20000, 2).select(lit(f).as("file_path"), col("id").as("pos"))
+      .union(spark.range(1, 20000, 2)
+        .select(lit(s"$dir/data/other.parquet").as("file_path"), col("id").as("pos")))
+      .coalesce(1).sortWithinPartitions("file_path", "pos")
+      .write.option("parquet.block.size", "16384").option("parquet.page.size", "4096")
+      .parquet(tmp)
+    val fs = HadoopConfs.fileSystemFor(dir)
+    val part = fs.listStatus(new org.apache.hadoop.fs.Path(tmp)).map(_.getPath)
+      .find(p => p.getName.startsWith("part-") && p.getName.endsWith(".parquet")).get
+    val del = s"$dir/data/del.parquet"
+    fs.rename(part, new org.apache.hadoop.fs.Path(del))
+    val groups = {
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(del), HadoopConfs.active()))
+      try r.getRowGroups.size finally r.close()
+    }
+    assert(groups > 1, s"$groups row groups")
+    GraftTable.commitDeltaFiles(dir, Nil, Seq(GraftTable.PendingFile(
+      del, 20000L, HadoopConfs.length(del), Map.empty, Map.empty)), Set(f))
+    val got = spark.read.format("graft-table")
+      .option("metadata", GraftTable.latestMetadataPath(dir)).load()
+      .agg(count(lit(1)), sum(col("id")), count(when(col("id") % 2 === 0, 1))).head()
+    assert(got == Row(10000L, (1L until 20000L by 2).sum, 0L), got)
+  }
 }
