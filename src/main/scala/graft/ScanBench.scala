@@ -11,9 +11,12 @@ import graft.iceberg._
   * equality delete and under v3 deletion vectors — plus the row-level
   * DML scan shape (`_file`, `_pos` and one column under position
   * deletes) against native parquet's `_metadata.file_path` /
-  * `_metadata.row_index`. Prints one JSON line: seconds per route (min
-  * of `passes`) and each graft route's ratio to its native leg. Run with
-  * SPARK_GRAFT_SF_DIR pointing at a TPC-H parquet directory (sf0.1). */
+  * `_metadata.row_index`. Also times the v3 `rewritePositionDeleteFiles`
+  * that turns the table's deletes into deletion vectors (one run) and a
+  * changelog over the table's history. Prints one JSON line: seconds per
+  * route (min of `passes`) and each graft route's ratio to its native
+  * leg. Run with SPARK_GRAFT_SF_DIR pointing at a TPC-H parquet
+  * directory (sf0.1). */
 object ScanBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -114,10 +117,16 @@ object ScanBench {
     // reads exactly ONE blob per file and probes it unboxed. The claim
     // to hold: at or below the parquet-position route's cost.
     GraftTable.upgradeFormatVersion(dir, 3)
+    val rewriteStart = System.nanoTime()
     GraftTable.rewritePositionDeleteFiles(spark, dir)
+    val rewrite = "rewrite_position_delete_files" -> (System.nanoTime() - rewriteStart) / 1e9
     val dvMetaPath = GraftTable.latestMetadataPath(dir)
+    // the whole history's changelog: the append's inserts, the position
+    // and equality deletes' removed rows, the upsert's inserts
     val results = withEq :+ route("graft_columnar_dvmor")(() =>
-      spark.read.format("graft-table").option("metadata", dvMetaPath).load())
+      spark.read.format("graft-table").option("metadata", dvMetaPath).load()) :+ rewrite :+
+      route("changelog", df => { df.groupBy("_change_type").count().collect(); () })(() =>
+        GraftTable.changelog(spark, dir))
     val m = results.toMap
     val line = results.map { case (k, v) => s""""$k":${f"$v%.3f"}""" }
       .mkString("{", ",", ",") +

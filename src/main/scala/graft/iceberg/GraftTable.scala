@@ -171,14 +171,6 @@ object GraftTable {
       if (hist.isEmpty) None else Some(f.name -> hist)
     }.toMap
 
-  /** The Iceberg v2 position-delete row shape — spec-fixed, so reads of
-    * engine-written pos-delete parquet never need schema inference (each
-    * schemaless `spark.read.parquet` launches a 1-task inference job:
-    * pure fixed cost, 1-6 per i-entry in the r22 action audit). */
-  private val PosDeleteReadSchema = StructType(Seq(
-    StructField("file_path", org.apache.spark.sql.types.StringType),
-    StructField("pos", org.apache.spark.sql.types.LongType)))
-
   /** A parquet file's Spark schema read from its FOOTER on the driver —
     * metadata-only (KB-scale), replacing the schema-inference JOB a
     * schemaless read launches. Prefers the exact StructType Spark
@@ -229,15 +221,17 @@ object GraftTable {
     *     added by s (field 503 — a changelog step opens only the
     *     commit's own manifests, proportional to the commit, never the
     *     table);
-    *   - **deletes from position-delete files** the commit added: the
-    *     addressed (file_path, pos) coordinates join back to the
-    *     PARENT-visible rows of the addressed files (parent MOR applied
-    *     first, so only visible→deleted transitions emit; the parent
-    *     read is restricted by the delete files' file_path bound stats);
-    *   - **deletes from equality-delete files**: the delete values
-    *     null-safe-semi-join the parent-visible rows (the spec's
-    *     null-matches-null rule), column names canonicalized across
-    *     RENAME COLUMN generations;
+    *   - **deletes from the delete files the commit added** (position
+    *     deletes, deletion vectors, equality deletes): ONE scan of the
+    *     PARENT snapshot with the parent's deletes applied and the
+    *     commit's added deletes as its deleted-by set
+    *     ([[TableDataSource.scanPlan]]) — it emits the rows the parent
+    *     shows and the commit's deletes remove, so only visible→deleted
+    *     transitions emit (a merged DV's re-asserted positions do not)
+    *     and no join appears. Each delete file is scoped per data file
+    *     by the scan's own rules (sequence, file_path bounds, DV
+    *     referenced file), and equality values compare as every scan
+    *     compares them (renamed and widened columns included);
     *   - **copy-on-write overwrites** (MERGE/UPDATE): the commit's
     *     DELETED tombstone entries name the removed files — their
     *     parent-visible rows emit as deletes, the rewritten files as
@@ -276,8 +270,6 @@ object GraftTable {
         s"start snapshot ${startSnapshotId.get} is not an ancestor of $endId")
       buf.reverse.toSeq
     }
-    val histToCur: Map[String, String] = nameAlternates(meta)
-      .flatMap { case (cur2, hists) => hists.map(_ -> cur2) }
     // ALL commits' insert rows come from one scan instead of one scan per
     // snapshot. A data file is ADDED by exactly one snapshot of the
     // chain, so a broadcast file → (ordinal, snapshot) lookup joined on
@@ -307,62 +299,25 @@ object GraftTable {
           } yield (e, e.sequenceNumber.getOrElse(i.sequenceNumber)))
             .distinctBy(x => (PathId(x._1.filePath), x._1.contentOffset.getOrElse(-1L)))
         val dataAdded = entriesOf(0, 1, 0)
-        val posAdded = entriesOf(1, 1, 1)
-        val eqAdded = entriesOf(1, 1, 2)
+        val deletesAdded = entriesOf(1, 1, 1) ++ entriesOf(1, 1, 2)
         val removed = entriesOf(0, 2, 0).map(e => PathId(e._1.filePath)).toSet
         insertTags ++= dataAdded.map(e => (e, ordinal, s.snapshotId))
-        // parent-visible rows of the data files `keep` selects,
-        // MOR-resolved (parent's own deletes applied) so only live rows
-        // can emit
-        def parentVisible(keep: ManifestWriter.EntryData => Boolean): Option[DataFrame] =
-          s.parentSnapshotId.flatMap(meta.snapshot).flatMap(_.manifestList).map { pl =>
-            val (data, pos, eq) = livePlan(ManifestListReader.read(pl))
-            TableDataSource.scanPlan(spark, meta, data.filter(e => keep(e._1)), pos, eq)
-          }
+        // the parent's live plan, its own deletes applied so only live
+        // rows can emit
+        lazy val parent = s.parentSnapshotId.flatMap(meta.snapshot).flatMap(_.manifestList)
+          .map(pl => livePlan(ManifestListReader.read(pl)))
         val removedDeletes =
           if (removed.isEmpty) None
-          else parentVisible(e => removed.contains(PathId(e.filePath)))
-            .map(tag(_, "delete"))
-        val posDeletes =
-          if (posAdded.isEmpty) None
-          else {
-            val addrs = posDeleteAddresses(spark, posAdded.map(_._1))
-            parentVisible(e => posAdded.exists(d =>
-                posDeleteMayAddress(d._1, Set(PathId(e.filePath)))))
-              .map { vis =>
-                tag(vis.join(addrs,
-                  PathId.col(vis("_file")) === PathId.col(addrs("file_path")) &&
-                    vis("_pos") === addrs("pos")), "delete")
-              }
-          }
-        val eqDeletes =
-          if (eqAdded.isEmpty) None
-          else parentVisible(_ => true).map { vis =>
-            // delete files group by their PHYSICAL column names (one
-            // written before a RENAME COLUMN carries the old name) and
-            // each group reads under its own footer — driver footer
-            // schema passed through, no inference job; the values then
-            // alias up to the current names, and groups naming the same
-            // current columns share one semi-join
-            val vals = Par.inParallel(eqAdded)(e =>
-                (footerSparkSchema(spark, e._1.filePath), e._1.filePath))
-              .groupBy(_._1.fieldNames.toSeq).toSeq.sortBy(_._1.mkString(","))
-              .map { case (_, g) =>
-                val raw = spark.read.schema(g.head._1).parquet(g.map(_._2).sorted: _*)
-                raw.select(raw.columns.toIndexedSeq
-                  .map(n => col(n).as(histToCur.getOrElse(n, n))): _*)
-              }
-            vals.groupBy(_.columns.toSeq).toSeq.sortBy(_._1.mkString(","))
-              .map { case (cols, vs) =>
-                val v = vs.reduce(_ unionByName _).dropDuplicates(cols)
-                vis.join(v, cols.map(c => vis(c) <=> v(c)).reduce(_ && _), "leftsemi")
-              }.reduce(_ unionByName _)
-          }.map(tag(_, "delete"))
+          else parent.map { case (data, pos, eq) => TableDataSource.scanPlan(spark, meta,
+            data.filter(e => removed.contains(PathId(e._1.filePath))), pos, eq) }
+        val deleted =
+          if (deletesAdded.isEmpty) None
+          else parent.map { case (data, pos, eq) =>
+            TableDataSource.scanPlan(spark, meta, data, pos, eq, deletedBy = Some(deletesAdded)) }
         // one commit's delete sources are disjoint by construction
-        // (tombstoned files leave the table; a pos/eq pair in one commit
-        // addresses different sequences) — plain union, no dedup pass;
-        // inserts ride the chain-wide leg below
-        Seq(removedDeletes, posDeletes, eqDeletes).flatten
+        // (tombstoned files leave the table) — plain union, no dedup
+        // pass; inserts ride the chain-wide leg below
+        Seq(removedDeletes, deleted).flatten.map(tag(_, "delete"))
           .reduceOption(_ unionByName _)
       }
     }
@@ -891,8 +846,9 @@ object GraftTable {
     * driver funnel. Only the KB-scale blob addresses
     * (referenced file, puffin path, offset, length, cardinality, file
     * size) come back for the manifest commit. `manifestForm` maps the
-    * path ids back to the exact path form the manifests carry,
-    * so referenced_data_file matches at planning time. */
+    * path ids back to the exact path form the manifests carry (a frame
+    * already in that form passes it empty), so referenced_data_file
+    * matches at planning time. */
   private def writeDvsDistributed(spark: SparkSession, tableDir: String,
       attempt: java.util.UUID, dels: DataFrame,
       manifestForm: Map[String, String], provisionalSnap: Long)
@@ -927,13 +883,12 @@ object GraftTable {
   /** The pending position-delete state for a COVERED file set (v3
     * merge-on-write input): the live DV entries whose referenced file is
     * covered (these get superseded by the commit), plus ONE DataFrame of
-    * ([[PathId]] file_path, pos) carrying every pending position — DV
-    * blobs expanded executor-side, v2 parquet positions restricted to
-    * the covered files. */
+    * ([[PathId]] file_path, pos) carrying every pending position of the
+    * covered files — the DVs and the v2 parquet files that may address
+    * them, read through the `position_deletes` scan. */
   private def pendingPosState(spark: SparkSession, meta0: TableMetadata,
       covered: Set[String], branch: Option[String] = None)
       : (Seq[ManifestWriter.EntryData], DataFrame) = {
-    import spark.implicits._
     val delE = entriesAt(refHead(meta0, branch), 1).filter(_.content == 1)
     val oldDvEntries = delE.filter(e => e.fileFormat == "PUFFIN" &&
       e.referencedDataFile.exists(r => covered(PathId(r))))
@@ -942,54 +897,16 @@ object GraftTable {
     val sortedCovered = covered.toArray.sorted
     val oldParquet = delE.filter(e => e.fileFormat != "PUFFIN" &&
       posDeleteOverlaps(e, sortedCovered))
-    val taskConf = new SerializableHadoopConf(HadoopConfs.active())
-    val oldDvPositions: DataFrame =
-      if (oldDvEntries.isEmpty) spark.emptyDataset[(String, Long)].toDF("file_path", "pos")
-      else spark.createDataset(oldDvEntries.map(e =>
-          (PathId(e.referencedDataFile.get), e.filePath,
-            e.contentOffset.getOrElse(0L), e.contentSizeInBytes.getOrElse(0L))))
-        .flatMap { case (ref, puffin, off, len) =>
-          DeletionVectors.read(puffin, off, len, taskConf.value)
-            .toArray.map(p => (ref, p)) }
-        .toDF("file_path", "pos")
-    val oldParquetPositions: DataFrame =
-      if (oldParquet.isEmpty) spark.emptyDataset[(String, Long)].toDF("file_path", "pos")
-      else spark.read.schema(PosDeleteReadSchema)
-        .parquet(oldParquet.map(_.filePath): _*)
-        .select(PathId.col(col("file_path")).as("file_path"), col("pos"))
-        .filter(col("file_path").isin(covered.toSeq: _*))
-    (oldDvEntries, oldDvPositions.unionByName(oldParquetPositions))
+    (oldDvEntries, posDeleteRows(spark, oldDvEntries ++ oldParquet)
+      .filter(col("file_path").isin(covered.toSeq: _*)))
   }
 
-  /** The (file_path, pos) addresses of a set of position-delete entries,
-    * across both physical forms: v2 parquet rows read directly, v3
-    * deletion vectors expanded from their Puffin blobs executor-side.
-    * For a MERGED DV the expansion re-asserts previously-deleted
-    * positions — callers join against parent-visible rows (changelog) or
-    * live rows, so re-asserted addresses drop out naturally. */
-  private def posDeleteAddresses(spark: SparkSession,
-      entries: Seq[ManifestWriter.EntryData]): DataFrame = {
-    import spark.implicits._
-    val (dvE, pqE) = entries.partition(_.fileFormat == "PUFFIN")
-    val pq =
-      if (pqE.isEmpty) None
-      else Some(spark.read.schema(PosDeleteReadSchema)
-        .parquet(pqE.map(_.filePath).sorted: _*)
-        .select(col("file_path"), col("pos")))
-    val dv =
-      if (dvE.isEmpty) None
-      else {
-        val taskConf = new SerializableHadoopConf(HadoopConfs.active())
-        Some(spark.createDataset(dvE.map(e =>
-            (e.referencedDataFile.getOrElse(""), e.filePath,
-              e.contentOffset.getOrElse(0L), e.contentSizeInBytes.getOrElse(0L))))
-          .flatMap { case (ref, puffin, off, len) =>
-            DeletionVectors.read(puffin, off, len, taskConf.value)
-              .toArray.map(p => (ref, p)) }
-          .toDF("file_path", "pos"))
-      }
-    Seq(pq, dv).flatten.reduce(_ unionByName _)
-  }
+  /** The ([[PathId]] file_path, pos) rows of position-delete entries,
+    * through the `position_deletes` scan. */
+  private def posDeleteRows(spark: SparkSession,
+      entries: Seq[ManifestWriter.EntryData]): DataFrame =
+    graft.sources.GraftPosDeletesTable.scan(spark, entries)
+      .select(PathId.col(col("file_path")).as("file_path"), col("pos"))
 
   /** Could `del` (a position-delete entry) address any of `paths`
     * (path ids)? Its file_path bound stats — written under the RESERVED
@@ -1772,79 +1689,43 @@ object GraftTable {
     }
   }
 
-  /** `rewrite_position_delete_files`: resolve every pending EQUALITY
-    * delete to physical (file_path, pos) addresses ONCE — the semi-join
-    * cost each scan was re-paying — merge the result with the existing
-    * position-delete rows, and commit ONE replace snapshot whose delete
-    * side is a single position-delete file. Data files are untouched and
-    * carry forward with their original manifests and sequences (i34's
-    * maintenance rule, now a public API + SQL procedure).
+  /** `rewrite_position_delete_files`: resolve every pending delete —
+    * position deletes, deletion vectors and EQUALITY deletes — to the
+    * physical (file_path, pos) addresses of the rows it deletes ONCE (the
+    * equality probe cost each scan was re-paying), and commit ONE replace
+    * snapshot whose delete side is a single position-delete file (v2) or
+    * one deletion vector per addressed data file (v3). Data files are
+    * untouched and carry forward with their original manifests and
+    * sequences (i34's maintenance rule, now a public API + SQL
+    * procedure).
     *
-    * Sequence scoping is preserved EXACTLY: an equality delete resolves
-    * only against data files with STRICTLY lower sequence, and an
-    * existing position-delete row survives only for files with sequence
-    * <= its own — so the rewritten file (at the new commit's sequence,
-    * above every data file) deletes precisely the rows the old delete
-    * set did. Null equality values match null data values (the spec
-    * rule) via null-safe join conditions. All file paths compare as
-    * [[PathId]]s, as every reader compares them. */
+    * The addresses are one scan of the current data files with every
+    * pending delete as its deleted-by set ([[TableDataSource.scanPlan]]),
+    * projected to (`_file`, `_pos`): the scan applies each delete file by
+    * its own sequence scope — an equality delete only to STRICTLY lower
+    * data sequences, a position delete to sequences <= its own — so the
+    * rewritten file (at the new commit's sequence, above every data file)
+    * deletes precisely the rows the old delete set did. Equality values
+    * compare as every scan compares them: null matches null (the spec
+    * rule), renamed and widened key columns resolve per file. `_file` is
+    * the manifests' spelling of each data file — what both output forms
+    * write, so foreign readers match them verbatim. */
   def rewritePositionDeleteFiles(spark: SparkSession, tableDir: String)
       : OptimisticCommit.CommitResult = {
-    import org.apache.spark.sql.functions.{broadcast, col}
     val meta0 = TableMetadata.parseFile(latestMetadataPath(tableDir))
     val dataE = currentEntries(meta0, 0).filter(_.content == 0)
       .map(e => (e, e.sequenceNumber.get))
     val delE = currentEntries(meta0, 1)
     require(delE.nonEmpty, "no pending delete files to rewrite")
-    val posE = delE.filter(_.content == 1).map(e => (e, e.sequenceNumber.get))
-    val eqE = delE.filter(_.content == 2).map(e => (e, e.sequenceNumber.get))
-    // the delete files' columns use the names current at DELETE time —
-    // canonicalize to the current generation before comparing
-    val altToCur = nameAlternates(meta0).flatMap { case (cur, as) => as.map(_ -> cur) }
-    val tableSchema = sparkSchema(meta0)
-    val resolvedEq = eqE.flatMap { case (e, eqSeq) =>
-      val addressed = dataE.filter(_._2 < eqSeq)
-      if (addressed.isEmpty) None
-      else {
-        val eqVals0 = spark.read.schema(footerSparkSchema(spark, e.filePath))
-          .parquet(e.filePath)
-        val eqVals = eqVals0.select(eqVals0.columns.toSeq.map(c =>
-          col(c).as(altToCur.getOrElse(c, c))): _*)
-        // the addressed files' rows with their (_file, _pos) addresses,
-        // read through the scan under the TABLE's declared schema: it
-        // resolves renamed columns, widened physicals (INT32 under a
-        // bigint column) and imported Avro/ORC files per file. Their own
-        // position deletes need no apply — those addresses merge below.
-        val data = TableDataSource.scanPlan(spark, meta0, addressed, Nil, Nil)
-          .select((eqVals.columns.toSeq.map(col) :+
-            col("_file").as("__file") :+ col("_pos").as("__pos")): _*)
-        // the delete file itself may predate a widening — cast its
-        // values up to the table types so the join compares like for like
-        val cond = eqVals.columns.map(c =>
-          data(c) <=> eqVals(c).cast(tableSchema(c).dataType)).reduce(_ && _)
-        Some(data.join(eqVals, cond, "left_semi")
-          .select(PathId.col(col("__file")).as("file_path"), col("__pos").as("pos")))
-      }
-    }
-    val oldPos = posE.map { case (e, posSeq) =>
-      import spark.implicits._
-      val lives = dataE.filter(_._2 <= posSeq).map(x => PathId(x._1.filePath))
-      // both physical forms: v2 parquet rows, v3 DV blobs
-      posDeleteAddresses(spark, Seq(e))
-        .select(PathId.col(col("file_path")).as("file_path"), col("pos"))
-        .join(broadcast(lives.toDF("file_path")), Seq("file_path"), "left_semi")
-    }
-    val parts = resolvedEq ++ oldPos
     val attempt = java.util.UUID.randomUUID()
     // every pending delete can resolve to ZERO addresses (e.g. the
     // table's only commit is an upsert: its equality delete has no
     // lower-sequence data file to address) — the rewrite then writes no
     // delete file and commits no delete entry, which still correctly
     // drops the vacuous delete manifests
-    val merged = parts.reduceOption(_ unionByName _).map(_.distinct())
-    // the manifests' spelling of each addressed data file: what both
-    // output forms write, so foreign readers match them verbatim
-    val manifestForm = dataE.map(x => PathId(x._1.filePath) -> x._1.filePath).toMap
+    val addresses = TableDataSource.scanPlan(spark, meta0, dataE, Nil, Nil,
+        deletedBy = Some(delE.map(e => (e, e.sequenceNumber.get))))
+      .select(col("_file").as("file_path"), col("_pos").as("pos"))
     // v3 tables REWRITE INTO DELETION VECTORS — this procedure is the
     // upgrade path that converts a v2 table's accreted position-delete
     // parquet (and resolves its equality deletes) into one DV per data
@@ -1852,20 +1733,12 @@ object GraftTable {
     val v3 = meta0.formatVersion >= 3
     val dvRefRows: Seq[(String, String, Long, Long, Long, Long)] =
       if (!v3) Nil
-      else merged.toSeq.flatMap(writeDvsDistributed(spark, tableDir, attempt, _,
-        manifestForm, SnapshotProducer.nextSnapshotId(meta0)))
+      else writeDvsDistributed(spark, tableDir, attempt, addresses, Map.empty,
+        SnapshotProducer.nextSnapshotId(meta0))
     val posFile: Option[graft.sources.GraftFileMessage] =
       if (v3) None
-      else merged.flatMap { m =>
-        // every address names a live data file (both sides above are
-        // scoped to them), so the spelling join keeps every row
-        import spark.implicits._
-        graft.sources.GraftTableWrites.writePositionDeleteFile(
-          m.join(broadcast(manifestForm.toSeq.toDF("file_path", "spelling")),
-              Seq("file_path"))
-            .select(col("spelling").as("file_path"), col("pos")),
-          s"$tableDir/data/posrw-$attempt")
-      }
+      else graft.sources.GraftTableWrites.writePositionDeleteFile(
+        addresses, s"$tableDir/data/posrw-$attempt")
     val preDel = delE.map(e => PathId(e.filePath)).toSet
     val preData = dataE.map(x => PathId(x._1.filePath)).toSet
     SnapshotProducer.commit(tableDir) { a =>
@@ -1892,7 +1765,7 @@ object GraftTable {
       SnapshotProducer.Commit("replace",
         Map("added-delete-files" -> added.size.toString,
           "removed-delete-files" -> delE.size.toString,
-          "rewritten-equality-delete-files" -> eqE.size.toString) ++
+          "rewritten-equality-delete-files" -> delE.count(_.content == 2).toString) ++
           (if (v3) Map("added-dvs" -> dvRefRows.size.toString) else Map.empty),
         carried = carried,
         manifests = Seq(SnapshotProducer.NewManifest("m-posrw", added,
@@ -3896,9 +3769,7 @@ object GraftTable {
     val (dvRefRows, dvSuperseded, dvPreDel) =
       if (!v3Dv) (Nil, Set.empty[(String, Long)], Set.empty[(String, Long)])
       else {
-        val newDels = spark.read.schema(PosDeleteReadSchema)
-          .parquet(deleteFiles.map(_.path): _*)
-          .select(PathId.col(col("file_path")).as("file_path"), col("pos"))
+        val newDels = posDeleteRows(spark, deleteFiles.map(_.entry(0L, content = 1)))
         val (oldDvEntries, oldPositions) = pendingPosState(spark, meta0, targets, branch)
         val manifestForm = entriesAt(refHead(meta0, branch), 0).filter(_.content == 0)
           .map(e => PathId(e.filePath) -> e.filePath).toMap

@@ -132,21 +132,12 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     // — unlike the other metadata tables it is served as a REAL
     // distributed scan, one task per delete file, never a driver collect
     if (ident.name() == "position_deletes") {
-      import graft.iceberg.{ManifestListReader, ManifestWriter, Par}
+      import graft.iceberg.{ManifestListReader, ManifestWriter}
       val entries = meta.currentSnapshot.flatMap(_.manifestList).toSeq
         .flatMap(ManifestListReader.read).filter(_.content == 1)
         .flatMap(i => ManifestWriter.read(i.path))
         .filter(e => e.status != 2 && e.content == 1)
-      val delFiles = entries.filter(_.fileFormat != "PUFFIN")
-        .map(_.filePath).distinct.sorted
-      // v3 deletion vectors serve as one partition per BLOB, expanded
-      // from the bitmap executor-side — same per-row shape
-      val dvRefs = entries.filter(_.fileFormat == "PUFFIN").map(e =>
-        (e.referencedDataFile.getOrElse(""), e.filePath,
-          e.contentOffset.getOrElse(0L), e.contentSizeInBytes.getOrElse(0L)))
-        .sorted
-      return Some(new GraftPosDeletesTable(
-        s"$catalogName.${ident.toString}", delFiles, dvRefs))
+      return Some(new GraftPosDeletesTable(s"$catalogName.${ident.toString}", entries))
     }
     val df = ident.name() match {
       case "snapshots" => MetadataTables.snapshots(spark, meta)
@@ -803,7 +794,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     // spell data files as `file:` URIs
     def map(p: String): String = p.replace(oldPrefix, newPrefix)
     import graft.iceberg.{ManifestListReader, ManifestListWriter, ManifestWriter,
-      MetadataWriter, ParquetFiles, SingleValueCodec, IcebergTypes}
+      MetadataWriter, SingleValueCodec, IcebergTypes}
     val versions = 1 to OptimisticCommit.currentVersion(dir)
     val metas = versions.map(v =>
       (v, TableMetadata.parseFile(OptimisticCommit.metadataPath(dir, v))))
@@ -812,15 +803,17 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     val byList = listPaths.map(l => l -> ManifestListReader.read(l))
     val manifests = byList.flatMap(_._2.map(i => map(i.path))).distinct
       .map(m => m -> ManifestWriter.read(m))
-    // position-delete FILE contents first (read original, swap in place);
-    // an empty file has no path to rewrite and stays as it is
+    // position-delete FILE contents first (read original through the
+    // position_deletes scan, swap in place); an empty file has no path to
+    // rewrite and stays as it is
     val spark = org.apache.spark.sql.SparkSession.active
     val fs = HadoopConfs.fileSystemFor(dir)
     val rewrittenLength = manifests.flatMap(_._2)
       .filter(e => e.content == 1 && e.fileFormat == "PARQUET")
-      .map(e => map(e.filePath)).distinct.flatMap { f =>
+      .map(e => e.copy(filePath = map(e.filePath))).distinctBy(_.filePath).flatMap { e =>
         import org.apache.spark.sql.functions.{col, lit, replace}
-        GraftTableWrites.writePositionDeleteFile(ParquetFiles.read(spark, Seq(f))
+        val f = e.filePath
+        GraftTableWrites.writePositionDeleteFile(GraftPosDeletesTable.scan(spark, Seq(e))
           .select(replace(col("file_path"), lit(oldPrefix), lit(newPrefix)).as("file_path"),
             col("pos")), s"$f.rename-tmp").map { m =>
           fs.delete(new Path(f), false)
@@ -1100,10 +1093,18 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   * this is per-ROW (a delete-heavy CDC table holds millions), so it is a
   * REAL distributed scan: one input partition per delete file, the
   * shared parquet decoder reading (file_path, pos) and serving the
-  * provenance column — never a driver materialization. */
-class GraftPosDeletesTable(tableName: String, delFiles: Seq[String],
-    dvRefs: Seq[(String, String, Long, Long)] = Nil)
+  * provenance column — never a driver materialization. Built from the
+  * position-delete manifest entries it serves. */
+class GraftPosDeletesTable(tableName: String,
+    entries: Seq[graft.iceberg.ManifestWriter.EntryData])
     extends Table with SupportsRead {
+  private val delFiles = entries.filter(_.fileFormat != "PUFFIN")
+    .map(_.filePath).distinct.sorted
+  // v3 deletion vectors serve as one partition per BLOB, expanded
+  // from the bitmap executor-side — same per-row shape
+  private val dvRefs = entries.filter(_.fileFormat == "PUFFIN").map(e =>
+    (e.referencedDataFile.getOrElse(""), e.filePath,
+      e.contentOffset.getOrElse(0L), e.contentSizeInBytes.getOrElse(0L))).sorted
   private val posDeleteSchema = StructType(Seq(
     StructField("file_path", StringType, nullable = false),
     StructField("pos", LongType, nullable = false)))
@@ -1124,13 +1125,13 @@ class GraftPosDeletesTable(tableName: String, delFiles: Seq[String],
         graft.iceberg.HadoopConfs.active())
       override def planInputPartitions()
           : Array[org.apache.spark.sql.connector.read.InputPartition] =
-        (delFiles.map(f => GraftTableInputPartition(f, 0L, Nil, Nil,
+        (delFiles.map(f => GraftTableInputPartition(f, 0L, FileDeletes.none,
           posDeleteSchema): org.apache.spark.sql.connector.read.InputPartition) ++
           // one partition per DV blob: filePath = the data file the DV
-          // addresses, the blob coordinates ride in dvRefs
+          // addresses, the blob coordinates ride in its deletes
           dvRefs.map { case (ref, puffin, off, len) =>
-            GraftTableInputPartition(ref, 0L, Nil, Nil, posDeleteSchema,
-              dvRefs = Seq((puffin, off, len)), fileFormat = "PUFFIN")
+            GraftTableInputPartition(ref, 0L, FileDeletes(Nil, Nil, Seq((puffin, off, len))),
+              posDeleteSchema, fileFormat = "PUFFIN")
               : org.apache.spark.sql.connector.read.InputPartition }).toArray
       override def createReaderFactory()
           : org.apache.spark.sql.connector.read.PartitionReaderFactory =
@@ -1138,6 +1139,17 @@ class GraftPosDeletesTable(tableName: String, delFiles: Seq[String],
         // expand to rows
         new GraftTableReaderFactory(served, conf, columnar = dvRefs.isEmpty)
     }
+}
+
+object GraftPosDeletesTable {
+  /** The (file_path, pos, delete_file_path) rows of `entries`, as the
+    * `position_deletes` table serves them. */
+  private[graft] def scan(spark: org.apache.spark.sql.SparkSession,
+      entries: Seq[graft.iceberg.ManifestWriter.EntryData]): org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.GraftSqlShim.ofRows(spark,
+      org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation.create(
+        new GraftPosDeletesTable("position_deletes", entries), None, None,
+        CaseInsensitiveStringMap.empty()))
 }
 
 /** Expands one deletion-vector blob into position_deletes rows:
@@ -1148,7 +1160,7 @@ class GraftDvPosDeletesReader(part: GraftTableInputPartition,
     required: StructType, conf: org.apache.hadoop.conf.Configuration)
     extends org.apache.spark.sql.connector.read.PartitionReader[
       org.apache.spark.sql.catalyst.InternalRow] {
-  private val (puffin, off, len) = part.dvRefs.head
+  private val (puffin, off, len) = part.deletes.dvs.head
   private val positions =
     graft.iceberg.DeletionVectors.read(puffin, off, len, conf).toArray
   private var i = -1

@@ -77,15 +77,23 @@ object TableDataSource {
     * path exactly as the entry records it —, `_pos`, `_row_id`,
     * `_last_updated_sequence_number`) as ordinary columns — their
     * metadata-column marking is dropped, so a rewrite can write them out
-    * as physical lineage columns; unselected ones prune away. */
+    * as physical lineage columns; unselected ones prune away.
+    *
+    * `deletedBy` (position and equality entries with their sequence
+    * numbers) turns the scan around: it emits only the rows the plan's
+    * own deletes keep AND `deletedBy` deletes, each delete entry scoped
+    * per data file by the same rules, and plans no data file the set
+    * cannot reach — the rows a commit's added deletes remove, or the
+    * addresses a delete set resolves to. */
   private[graft] def scanPlan(spark: SparkSession, meta: TableMetadata,
       data: Seq[(ManifestWriter.EntryData, Long)],
       posDeletes: Seq[(ManifestWriter.EntryData, Long)],
-      eqDeletes: Seq[(ManifestWriter.EntryData, Long)]): DataFrame = {
+      eqDeletes: Seq[(ManifestWriter.EntryData, Long)],
+      deletedBy: Option[Seq[(ManifestWriter.EntryData, Long)]] = None): DataFrame = {
     import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
     import org.apache.spark.sql.functions.col
     val relation = DataSourceV2Relation.create(
-      new GraftPinnedTable(PinnedPlan(meta, data, posDeletes, eqDeletes)),
+      new GraftPinnedTable(PinnedPlan(meta, data, posDeletes ++ eqDeletes, deletedBy)),
       None, None, CaseInsensitiveStringMap.empty())
     val df = org.apache.spark.sql.GraftSqlShim.ofRows(spark, relation.withMetadataColumns())
     val metaCols = GraftSparkTable.MetadataColumns.map(_.name).toSet
@@ -94,11 +102,83 @@ object TableDataSource {
   }
 }
 
-/** An explicit scan plan (see [[TableDataSource.scanPlan]]). */
+/** An explicit scan plan (see [[TableDataSource.scanPlan]]): data
+  * entries and delete entries (position and equality) with their
+  * sequence numbers. */
 private[graft] case class PinnedPlan(meta: TableMetadata,
     data: Seq[(ManifestWriter.EntryData, Long)],
-    posDeletes: Seq[(ManifestWriter.EntryData, Long)],
-    eqDeletes: Seq[(ManifestWriter.EntryData, Long)])
+    deletes: Seq[(ManifestWriter.EntryData, Long)],
+    deletedBy: Option[Seq[(ManifestWriter.EntryData, Long)]])
+
+/** A scan's planning pass: the kept data entries with their data
+  * sequence numbers and owning manifests, the delete entries (position
+  * and equality) that may apply to them, and a pinned plan's deleted-by
+  * set. */
+private[sources] final case class Planned(
+    kept: Seq[(ManifestWriter.EntryData, Long, Option[ManifestListReader.ManifestFileInfo])],
+    deletes: Seq[(ManifestWriter.EntryData, Long)],
+    deletedBy: Option[Seq[(ManifestWriter.EntryData, Long)]])
+
+/** The delete files one data file's task applies: v2 position-delete
+  * files, equality-delete files and v3 deletion vectors as (puffin path,
+  * blob offset, blob length) — the manifest's field-143/144/145 triplet,
+  * so the reader seeks to the bitmap with no footer read. At most one DV
+  * per file in a well-formed v3 table; a malformed multi-DV table still
+  * reads correctly (union). */
+private[sources] case class FileDeletes(pos: Seq[String], eq: Seq[String],
+    dvs: Seq[(String, Long, Long)]) {
+  def isEmpty: Boolean = pos.isEmpty && eq.isEmpty && dvs.isEmpty
+}
+
+private[sources] object FileDeletes {
+  val none: FileDeletes = FileDeletes(Nil, Nil, Nil)
+}
+
+/** Which of a scan's delete entries apply to a data file, by the v2
+  * rules: a position delete addresses data files with sequence <= its
+  * own, further scoped by the delete file's file_path bound stats; an
+  * equality delete applies only to STRICTLY lower data sequence numbers;
+  * a v3 deletion vector addresses exactly its referenced file. DVs index
+  * by that file UP FRONT: a v3 table carries one DV per data file, so a
+  * linear scan per data file would be O(files²) planning at 10⁵ files.
+  * v2 position deletes stay a linear filter (their count tracks DELETE
+  * commits, not files, and the path-bound check is the pruning that
+  * matters). */
+private[sources] final class DeleteScope(deletes: Seq[(ManifestWriter.EntryData, Long)]) {
+  private val (dvs, pos) = deletes.filter(_._1.content == 1)
+    .partition(_._1.fileFormat == "PUFFIN")
+  private val eq = deletes.filter(_._1.content == 2)
+  private val dvByFile = dvs.groupBy(d => PathId(d._1.referencedDataFile.getOrElse("")))
+
+  def of(dataFile: String, seq: Long): FileDeletes = {
+    val me = PathId(dataFile)
+    FileDeletes(
+      pos.filter { case (d, dseq) => dseq >= seq && DeleteScope.mayAddress(d, me) }
+        .map(_._1.filePath),
+      eq.filter(_._2 > seq).map(_._1.filePath),
+      dvByFile.getOrElse(me, Nil).filter(_._2 >= seq).map { case (d, _) =>
+        (d.filePath, d.contentOffset.getOrElse(0L), d.contentSizeInBytes.getOrElse(0L)) })
+  }
+}
+
+private[sources] object DeleteScope {
+  /** The entries that can apply to some data file of sequence >= `minSeq`
+    * (a position delete or DV: its sequence >= it; an equality delete:
+    * strictly above it). */
+  def reaching(deletes: Seq[(ManifestWriter.EntryData, Long)],
+      minSeq: Long): Seq[(ManifestWriter.EntryData, Long)] =
+    deletes.filter { case (d, dseq) => if (d.content == 2) dseq > minSeq else dseq >= minSeq }
+
+  /** Does this position-delete file possibly address the data file with
+    * path id `me`? Bound stats under the RESERVED file_path field id
+    * (written by every engine position-delete writer) answer without
+    * opening the delete file — missing bounds keep it. This is what
+    * bounds per-task delete loads at 10⁵ delete files. */
+  private def mayAddress(del: ManifestWriter.EntryData, me: String): Boolean = {
+    val (lo, hi) = ManifestWriter.posDeletePathBounds(del)
+    lo.forall(_ <= me) && hi.forall(_ >= me)
+  }
+}
 
 /** The read-only table behind [[TableDataSource.scanPlan]]. */
 private[graft] class GraftPinnedTable(plan: PinnedPlan) extends Table with SupportsRead
@@ -553,18 +633,15 @@ class GraftTableScan(required: StructType, filters: Array[sources.Filter],
   private lazy val pinnedMeta: TableMetadata =
     pinned.map(_.meta).orElse(head).getOrElse(TableMetadata.parseFile(metadataPath))
 
-  /** (surviving data entries — each with sequence and OWNING manifest
-    * info (the list row: spec id + field-507 summaries, which is what
-    * derives storage-partitioned-join keys; None under a pinned plan,
-    * which therefore reports no key grouping) —, position-delete entries,
-    * equality-delete entries) — the driver-side planning pass, shared by
-    * partitions and statistics. Runs once per scan. */
-  private lazy val planned: (Seq[(ManifestWriter.EntryData, Long,
-        Option[ManifestListReader.ManifestFileInfo])],
-      Seq[(ManifestWriter.EntryData, Long)], Seq[(ManifestWriter.EntryData, Long)]) = {
+  /** The driver-side planning pass, shared by partitions and
+    * statistics; runs once per scan. Each surviving data entry carries
+    * its OWNING manifest info (the list row: spec id + field-507
+    * summaries, which is what derives storage-partitioned-join keys; None
+    * under a pinned plan, which therefore reports no key grouping). */
+  private lazy val planned: Planned = {
     // a freshly created (never-appended) table has no snapshot: it reads
     // as zero rows, not an error — explicit time travel still throws
-    if (emptyTable) (Nil, Nil, Nil)
+    if (emptyTable) Planned(Nil, Nil, None)
     else plannedWith(pinnedMeta, filters)
   }
 
@@ -634,25 +711,26 @@ class GraftTableScan(required: StructType, filters: Array[sources.Filter],
   override def filter(fs: Array[sources.Filter]): Unit =
     runtimeFilters = fs.filter(FileBoundsEval.supported(_, required))
 
-  private def plannedWith(meta: TableMetadata, filters: Array[sources.Filter])
-      : (Seq[(ManifestWriter.EntryData, Long, Option[ManifestListReader.ManifestFileInfo])],
-      Seq[(ManifestWriter.EntryData, Long)], Seq[(ManifestWriter.EntryData, Long)]) =
+  private def plannedWith(meta: TableMetadata, filters: Array[sources.Filter]): Planned =
     pinned match {
       case Some(p) =>
         // a pinned plan skips manifest planning; level 2 still prunes its
-        // data entries, and delete entries wholly below the kept data's
-        // minimum sequence cannot apply to any of them (<= / < rules)
-        val kept = p.data.filterNot { case (e, _) =>
-          filters.exists(f => FileBoundsEval.skippable(f, e, meta)) }
+        // data entries, a deleted-by scan drops the files its set cannot
+        // reach, and delete entries wholly below the kept data's minimum
+        // sequence cannot apply to any of them (<= / < rules)
+        val by = p.deletedBy.map(new DeleteScope(_))
+        val kept = p.data.filterNot { case (e, s) =>
+          filters.exists(f => FileBoundsEval.skippable(f, e, meta)) ||
+            by.exists(_.of(e.filePath, s).isEmpty) }
         val minSeq = kept.map(_._2).minOption.getOrElse(Long.MaxValue)
-        (kept.map { case (e, s) => (e, s, None) },
-          p.posDeletes.filter(_._2 >= minSeq), p.eqDeletes.filter(_._2 > minSeq))
+        Planned(kept.map { case (e, s) => (e, s, None) },
+          DeleteScope.reaching(p.deletes, minSeq),
+          p.deletedBy.map(DeleteScope.reaching(_, minSeq)))
       case None => plannedFromManifests(meta, filters)
     }
 
   private def plannedFromManifests(meta: TableMetadata, filters: Array[sources.Filter])
-      : (Seq[(ManifestWriter.EntryData, Long, Option[ManifestListReader.ManifestFileInfo])],
-      Seq[(ManifestWriter.EntryData, Long)], Seq[(ManifestWriter.EntryData, Long)]) = {
+      : Planned = {
     val snap = GraftTable.resolveForScan(meta, snapshotId, ref, asOfTimestampMs)
     val listPath = snap.manifestList.getOrElse(throw new IllegalArgumentException(
       s"snapshot ${snap.snapshotId} has no manifest-list"))
@@ -706,27 +784,16 @@ class GraftTableScan(required: StructType, filters: Array[sources.Filter],
     val delEntries = Par.inParallel(delInfos)(i => (i, ManifestWriter.read(i.path)))
       .flatMap { case (i, es) => es.filter(_.status != 2)
         .map(e => (e, e.sequenceNumber.getOrElse(i.sequenceNumber))) }
-    (kept, delEntries.filter(_._1.content == 1), delEntries.filter(_._1.content == 2))
-  }
-
-  /** Does this position-delete file possibly address `dataFile`? Bound
-    * stats under the RESERVED file_path field id (written by every
-    * engine position-delete writer)
-    * answer without opening the delete file — missing bounds keep it.
-    * This is what bounds per-task delete loads at 10⁵ delete files. */
-  private def mayAddress(del: ManifestWriter.EntryData, dataFile: String): Boolean = {
-    val (lo, hi) = ManifestWriter.posDeletePathBounds(del)
-    val me = PathId(dataFile)
-    lo.forall(_ <= me) && hi.forall(_ >= me)
+    Planned(kept, delEntries.filter(d => d._1.content == 1 || d._1.content == 2), None)
   }
 
   override def planInputPartitions(): Array[InputPartition] = {
     // runtime join filters (if any arrived) re-plan on top of the static
     // pushed set — against the SAME pinned snapshot the static plan and
     // statistics used; `planned` stays the statistics baseline
-    val (kept, posDeletes, eqDeletes) =
+    val Planned(kept, deletes, deletedBy) =
       if (runtimeFilters.isEmpty) planned
-      else if (emptyTable) (Nil, Nil, Nil)
+      else if (emptyTable) Planned(Nil, Nil, None)
       else plannedWith(pinnedMeta, filters ++ runtimeFilters)
     // row-level (UPDATE/MERGE) scans record the served group set — the
     // files the replace commit must swap — AND the FULL delete-file set
@@ -737,33 +804,12 @@ class GraftTableScan(required: StructType, filters: Array[sources.Filter],
     val alternates = GraftTable.nameAlternates(pinnedMeta)
     val keysByFile = spj.map(_._2).getOrElse(Map.empty)
     val scanDefaults = TableDataSource.initialDefaultsOf(pinnedMeta)
-    // v3 deletion vectors index by their referenced file UP FRONT: a v3
-    // table carries one DV per data file, so a per-partition linear scan
-    // over the delete entries would be O(files²) planning at 10⁵ files —
-    // the hash lookup keeps it O(files). v2 parquet position deletes
-    // stay a linear filter (their count tracks DELETE commits, not
-    // files, and the path-bound check is the pruning that matters).
-    val pqPosDeletes = posDeletes.filter(_._1.fileFormat != "PUFFIN")
-    val dvByFile: Map[String, Seq[(ManifestWriter.EntryData, Long)]] =
-      posDeletes.filter(_._1.fileFormat == "PUFFIN")
-        .groupBy(d => PathId(d._1.referencedDataFile.getOrElse("")))
+    val scope = new DeleteScope(deletes)
+    val byScope = deletedBy.map(new DeleteScope(_))
     def partition(e: ManifestWriter.EntryData, seq: Long,
         rowGroup: Int, rowStart: Long): GraftTableInputPartition = {
-      // v2 applicability: a position delete addresses data files with
-      // sequence <= its own (later-sequence delete files only), further
-      // scoped by the delete file's file_path bound stats; an equality
-      // delete applies only to STRICTLY lower data sequence numbers.
-      // v3 deletion vectors address exactly one file (field 143) and
-      // ride as a (path, offset, length) blob coordinate
-      GraftTableInputPartition(e.filePath, seq,
-        pqPosDeletes.filter { case (d, dseq) =>
-          dseq >= seq && mayAddress(d, e.filePath) }.map(_._1.filePath),
-        eqDeletes.filter(_._2 > seq).map(_._1.filePath),
-        tableSchema,
-        dvRefs = dvByFile.getOrElse(PathId(e.filePath), Nil)
-          .filter(_._2 >= seq)
-          .map(d => (d._1.filePath, d._1.contentOffset.getOrElse(0L),
-            d._1.contentSizeInBytes.getOrElse(0L))),
+      GraftTableInputPartition(e.filePath, seq, scope.of(e.filePath, seq), tableSchema,
+        deletedBy = byScope.map(_.of(e.filePath, seq)),
         rowGroup = rowGroup, rowStart = rowStart, nameAlternates = alternates,
         firstRowId = e.firstRowId,
         fileFormat = e.fileFormat,
@@ -828,7 +874,7 @@ class GraftTableScan(required: StructType, filters: Array[sources.Filter],
     * parquet emits [[GraftTableColumnarReader]]'s batches; one holding an
     * Avro or ORC file emits rows, its parquet files flattened by
     * [[GraftTableParquetRowReader]]. */
-  private lazy val columnar: Boolean = planned._1.forall(_._1.fileFormat == "PARQUET")
+  private lazy val columnar: Boolean = planned.kept.forall(_._1.fileFormat == "PARQUET")
 
   /** Storage-partitioned joins: a partitioned table reports its layout
     * as a V2 `KeyGroupedPartitioning(transform(col), ...)`, and when BOTH
@@ -859,7 +905,7 @@ class GraftTableScan(required: StructType, filters: Array[sources.Filter],
           .flatMap(st => ScanPlanning.transformResultType(pf.transform, st))
       }
       if resultTypes.forall(_.isDefined)
-      keyed = planned._1.map { case (e, _, info) =>
+      keyed = planned.kept.map { case (e, _, info) =>
         val tuple: Option[Seq[Any]] =
           info.filter(_.specId == spec.specId).flatMap(_.summaries)
             .filter(_.size == spec.fields.size).flatMap { sums =>
@@ -928,10 +974,10 @@ class GraftTableScan(required: StructType, filters: Array[sources.Filter],
     * values — the i71 rule applied to CBO). */
   override def estimateStatistics(): Statistics = new Statistics {
     override def sizeInBytes(): util.OptionalLong =
-      util.OptionalLong.of(planned._1.map(_._1.fileSizeInBytes).sum)
+      util.OptionalLong.of(planned.kept.map(_._1.fileSizeInBytes).sum)
     override def numRows(): util.OptionalLong =
-      if (planned._2.isEmpty && planned._3.isEmpty)
-        util.OptionalLong.of(planned._1.map(_._1.recordCount).sum)
+      if (planned.deletes.isEmpty && planned.deletedBy.isEmpty)
+        util.OptionalLong.of(planned.kept.map(_._1.recordCount).sum)
       else util.OptionalLong.empty()
     override def columnStats(): util.Map[
         org.apache.spark.sql.connector.expressions.NamedReference,
@@ -944,8 +990,8 @@ class GraftTableScan(required: StructType, filters: Array[sources.Filter],
     import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
     import org.apache.spark.sql.connector.read.colstats.ColumnStatistics
     val m = new util.HashMap[NamedReference, ColumnStatistics]()
-    if (filters.isEmpty && planned._2.isEmpty && planned._3.isEmpty &&
-        planned._1.nonEmpty && !emptyTable) {
+    if (filters.isEmpty && planned.deletes.isEmpty && planned.deletedBy.isEmpty &&
+        planned.kept.nonEmpty && !emptyTable) {
       val meta = pinnedMeta
       val exactMetrics = meta.properties.get("graft.metrics").contains("full")
       // a pinned plan may be any file subset: the snapshot's document
@@ -970,7 +1016,7 @@ class GraftTableScan(required: StructType, filters: Array[sources.Filter],
         else scala.util.Try(graft.iceberg.TableStats.read(
           statsBySnap(chain(anchorIdx).snapshotId).path)).toOption
       }
-      val entries = planned._1.map(_._1)
+      val entries = planned.kept.map(_._1)
       for (f <- required.fields if f.name != "_file" && f.name != "_pos" &&
           f.name != "_row_id" && f.name != "_last_updated_sequence_number") {
         meta.currentSchema.fields.find(_.name == f.name).foreach { field =>
@@ -1252,14 +1298,10 @@ class GraftTableDeltaWriterFactory(tableDir: String, writeUuid: String,
   * covers the whole file; a row-group split carries the group's exact
   * footer-declared offset and compressed size. */
 case class GraftTableInputPartition(filePath: String, sequenceNumber: Long,
-    posDeleteFiles: Seq[String], eqDeleteFiles: Seq[String],
-    tableSchema: StructType,
-    // v3 deletion vectors addressing THIS file: (puffin path, blob
-    // offset, blob length) straight from the manifest's field-143/144/
-    // 145 triplet — the reader seeks to the bitmap, no footer read.
-    // At most one per file in a well-formed v3 table; kept a Seq so a
-    // malformed multi-DV table still reads correctly (union)
-    dvRefs: Seq[(String, Long, Long)] = Nil,
+    deletes: FileDeletes, tableSchema: StructType,
+    // a deleted-by scan's set (see TableDataSource.scanPlan): the task
+    // keeps only the rows these delete
+    deletedBy: Option[FileDeletes] = None,
     rowGroup: Int = -1, rowStart: Long = 0L,
     splitStart: Long = 0L, splitBytes: Long = Long.MaxValue,
     // RENAME COLUMN support: current name → the names this field's id
@@ -1847,8 +1889,10 @@ private[sources] object PosDeleteIndex {
   * ORC readers alike: position deletes and deletion vectors by the row's
   * file-absolute index (record order == row index, Iceberg's `pos`), and
   * equality deletes by value through [[EqProbe]]s over the working row —
-  * `required`, then the equality columns the query never selects. Every
-  * delete file decodes through [[ParquetDecoder]] on [[decoderConf]]. */
+  * `required`, then the equality columns the query never selects. A
+  * deleted-by scan's task drops, besides what its own deletes delete,
+  * every row its deleted-by set does NOT delete. Every delete file
+  * decodes through [[ParquetDecoder]] on [[decoderConf]]. */
 private[sources] final class TaskDeletes(part: GraftTableInputPartition,
     required: StructType, conf: Configuration) {
 
@@ -1860,37 +1904,46 @@ private[sources] final class TaskDeletes(part: GraftTableInputPartition,
     part.tableSchema.fields.find(_.name == name).map(_.dataType).getOrElse(
       throw new IllegalArgumentException(s"equality column '$name' not in table schema"))
 
-  private val eqSets = EqDeleteIndex.load(part.eqDeleteFiles, tableType,
-    part.nameAlternates.flatMap { case (cur, olds) => olds.map(_ -> cur) }, decoderConf)
+  private val altToCurrent = part.nameAlternates.flatMap { case (cur, olds) => olds.map(_ -> cur) }
+
+  /** One set of delete files, loaded: its positions and its equality key
+    * sets (probed once [[working]] is known). */
+  private final class Loaded(files: FileDeletes) {
+    val eqSets = EqDeleteIndex.load(files.eq, tableType, altToCurrent, decoderConf)
+    val positions = PosDeleteIndex.loadAll(files.pos, files.dvs, part.filePath, conf, decoderConf)
+    lazy val probes: Array[EqProbe] = eqSets.map { case (cols, set) =>
+      EqProbe.build(cols.map(working.fieldIndex).toArray, cols.map(tableType).toArray, set)
+    }.toArray
+    def isEmpty: Boolean = positions.isEmpty && eqSets.isEmpty
+
+    def deletes(pos: Long, row: SpecializedGetters): Boolean =
+      positions.contains(pos) || (probes.length > 0 && eqDeleted(row))
+
+    private def eqDeleted(row: SpecializedGetters): Boolean = {
+      var i = 0
+      while (i < probes.length) {
+        if (probes(i).deleted(row)) return true
+        i += 1
+      }
+      false
+    }
+  }
+
+  private val own = new Loaded(part.deletes)
+  private val by = part.deletedBy.map(new Loaded(_)).orNull
 
   val working: StructType = StructType(required.fields.toSeq ++
-    eqSets.flatMap(_._1).distinct.filterNot(required.fieldNames.contains)
-      .map(c => StructField(c, tableType(c))))
+    (own.eqSets ++ Option(by).toSeq.flatMap(_.eqSets)).flatMap(_._1).distinct
+      .filterNot(required.fieldNames.contains).map(c => StructField(c, tableType(c))))
 
-  private val positions = PosDeleteIndex.loadAll(part.posDeleteFiles, part.dvRefs,
-    part.filePath, conf, decoderConf)
-
-  private val probes: Array[EqProbe] = eqSets.map { case (cols, set) =>
-    EqProbe.build(cols.map(working.fieldIndex).toArray, cols.map(tableType).toArray, set)
-  }.toArray
-
-  val isEmpty: Boolean = positions.isEmpty && probes.isEmpty
+  val isEmpty: Boolean = own.isEmpty && by == null
   /** Whether [[deleted]] reads the row; when false it may be null. */
-  val byValue: Boolean = probes.nonEmpty
+  val byValue: Boolean = own.probes.nonEmpty || (by != null && by.probes.nonEmpty)
 
   /** Is the row at file-absolute index `pos` (`row` over [[working]])
-    * deleted? */
+    * dropped from the scan? */
   def deleted(pos: Long, row: SpecializedGetters): Boolean =
-    positions.contains(pos) || (byValue && eqDeleted(row))
-
-  private def eqDeleted(row: SpecializedGetters): Boolean = {
-    var i = 0
-    while (i < probes.length) {
-      if (probes(i).deleted(row)) return true
-      i += 1
-    }
-    false
-  }
+    own.deletes(pos, row) || (by != null && !by.deletes(pos, row))
 
   /** A row over [[working]], cut back to the `required` columns. */
   def project(row: InternalRow): InternalRow =

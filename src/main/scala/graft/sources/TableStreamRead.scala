@@ -167,7 +167,7 @@ class GraftTableMicroBatchStream(metadataPath: String, required: StructType,
             .filter(en => en.status == 1 && en.content == 0 &&
               en.snapshotId == snap.snapshotId)
             .map(en => GraftTableInputPartition(en.filePath, snap.snapshotId,
-              Nil, Nil, tableSchema))
+              FileDeletes.none, tableSchema))
         }
       }.map(p => p: InputPartition).toArray
   }

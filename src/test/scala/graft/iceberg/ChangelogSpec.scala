@@ -166,4 +166,78 @@ class ChangelogSpec extends SparkSpec {
       .select("id", "v").collect().map(r => (r.getLong(0), r.getString(1))).toSeq
     assert(dels == Seq((3L, "v3"), (5L, "v5")), dels.toString)
   }
+
+  /** A catalog table `db.n` (n_nationkey INT, n_name STRING) whose one
+    * data file is the nation rows written as `format` and imported with
+    * `add_files`; merge-on-read DML. */
+  private def importedTable(format: String): (String, String) = {
+    val wh = java.nio.file.Files.createTempDirectory(s"graft-changelog-$format").toString
+    val cat = s"gcl_$format"
+    spark.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.GraftCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+    spark.sql(s"CREATE TABLE $cat.db.n (n_nationkey INT, n_name STRING) TBLPROPERTIES (" +
+      "'write.delete.mode'='merge-on-read', 'commit-timestamp-ms'='1700000000000')")
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("n_nationkey",
+        org.apache.spark.sql.types.IntegerType),
+      org.apache.spark.sql.types.StructField("n_name",
+        org.apache.spark.sql.types.StringType)))
+    val rows = Tables.load(spark, sfDir, "nation")
+      .select(col("n_nationkey"), col("n_name")).orderBy("n_nationkey").collect().toSeq
+    if (format == "avro") AvroDataFiles.write(s"$wh/src/part-00000.avro", schema, rows)
+    else OrcDataFiles.write(s"$wh/src/part-00000.orc", schema, rows)
+    spark.sql(s"""CALL $cat.system.add_files(
+      table => 'db.n', source_dir => '$wh/src', format => '$format')""")
+    (cat, s"$wh/db/n")
+  }
+
+  for (format <- Seq("avro", "orc"))
+    test(s"a merge-on-read DELETE and an upsert over an add_files $format table emit their deletes") {
+      import spark.implicits._
+      val (cat, dir) = importedTable(format)
+      val names = Tables.load(spark, sfDir, "nation").collect()
+        .map(r => r.getAs[Number]("n_nationkey").intValue -> r.getAs[String]("n_name")).toMap
+      spark.sql(s"DELETE FROM $cat.db.n WHERE n_nationkey IN (2, 12)")
+      val deletes = ManifestListReader.read(TableMetadata.parseFile(
+          GraftTable.latestMetadataPath(dir)).currentSnapshot.get.manifestList.get)
+        .filter(_.content == 1).flatMap(i => ManifestWriter.read(i.path))
+        .filter(e => e.status != 2 && e.content == 1)
+      assert(deletes.nonEmpty, "the DELETE wrote no position delete")
+      // key 2 is already deleted: its equality delete matches no visible row
+      GraftTable.upsert(spark, dir,
+        Seq((7, "NEW7"), (2, "NEW2")).toDF("n_nationkey", "n_name"), Seq("n_nationkey"))
+      val log = GraftTable.changelog(spark, dir)
+        .select("n_nationkey", "n_name", "_change_type", "_change_ordinal").collect()
+        .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getInt(3))).toSet
+      // ordinal 0 is the add_files commit
+      assert(log.filter(_._4 == 0) ==
+        names.map { case (k, n) => (k, n, "insert", 0) }.toSet)
+      assert(log.filter(_._4 > 0) == Set(
+        (2, names(2), "delete", 1), (12, names(12), "delete", 1),
+        (7, names(7), "delete", 2), (7, "NEW7", "insert", 2), (2, "NEW2", "insert", 2)),
+        log.filter(_._4 > 0))
+    }
+
+  test("an equality delete written before ALTER COLUMN k TYPE BIGINT emits its row") {
+    import spark.implicits._
+    val wh = java.nio.file.Files.createTempDirectory("graft-changelog-widen").toString
+    spark.conf.set("spark.sql.catalog.gclw", classOf[graft.sources.GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.gclw.warehouse", wh)
+    spark.sql("CREATE TABLE gclw.db.t (k INT, v STRING) " +
+      "TBLPROPERTIES ('commit-timestamp-ms'='1700000000000')")
+    spark.sql("INSERT INTO gclw.db.t VALUES (1, 'a'), (2, 'b'), (3, 'c')")
+    val dir = s"$wh/db/t"
+    // the first equality-delete file stores k as INT32
+    GraftTable.upsert(spark, dir, Seq((2, "B")).toDF("k", "v"), Seq("k"))
+    spark.sql("ALTER TABLE gclw.db.t ALTER COLUMN k TYPE BIGINT")
+    spark.sql("INSERT INTO gclw.db.t VALUES (5000000000, 'd')")
+    GraftTable.upsert(spark, dir,
+      Seq((3L, "C"), (5000000000L, "D")).toDF("k", "v"), Seq("k"))
+    val log = GraftTable.changelog(spark, dir)
+      .select("k", "v", "_change_type", "_change_ordinal").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getInt(3))).toSet
+    assert(log.filter(_._3 == "delete") ==
+      Set((2L, "b", "delete", 1), (3L, "c", "delete", 3), (5000000000L, "d", "delete", 3)),
+      log)
+  }
 }

@@ -236,4 +236,68 @@ class CommitIoSpec extends SparkSpec {
       assert(opens == 1, s"$opens opens of ${e.filePath}")
     }
   }
+
+  test("a changelog and rewrite_position_delete_files over one delete file of each kind") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-cio-dels").toString
+    GraftTable.create(dir, IcebergSchema(0, Seq(
+      IcebergField(1, "k", required = false, "long"),
+      IcebergField(2, "v", required = false, "string"))),
+      tableUuid = "5a9c0000-0000-4000-8000-00000000000d", timestampMs = 1700000000000L)
+    GraftTable.append(spark, dir,
+      spark.range(0, 100, 1, 1).select(col("id").as("k"), concat(lit("v"), col("id")).as("v")))
+    // one position-delete commit, then one equality-delete commit
+    GraftTable.deleteWhere(spark, dir, col("k") === 3)
+    GraftTable.upsert(spark, dir,
+      spark.range(5, 6, 1, 1).select(col("id").as("k"), lit("new").as("v")), Seq("k"))
+    val changelogJobs = jobsDuring(GraftTable.changelog(spark, dir).collect())
+    val deleted = GraftTable.changelog(spark, dir).filter(col("_change_type") === "delete")
+      .select("k", "_change_ordinal").collect().map(r => (r.getLong(0), r.getInt(1))).toSet
+    assert(deleted == Set((3L, 1), (5L, 2)), deleted)
+    val rewriteJobs = jobsDuring(GraftTable.rewritePositionDeleteFiles(spark, dir))
+    assert(meta(dir).currentSnapshot.get.summary("added-delete-files") == "1")
+    assert(GraftTable.read(spark, GraftTable.latestMetadataPath(dir)).count() == 99L)
+    // one scan per commit with the commit's added deletes as its
+    // deleted-by set, no join: the changelog is its insert leg's broadcast
+    // lookup and the collect; the rewrite is its resolving scan and the
+    // delete-file write (5 and 6 jobs when the changelog joined the delete
+    // files' rows back and the rewrite read each delete file as a
+    // DataFrame)
+    assert(changelogJobs <= 2, s"$changelogJobs Spark jobs per changelog")
+    assert(rewriteJobs <= 2, s"$rewriteJobs Spark jobs per rewrite_position_delete_files")
+  }
+
+  test("a v3 deletion-vector merge opens each old delete file once") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-cio-dvmerge").toString
+    GraftTable.create(dir, IcebergSchema(0, Seq(
+      IcebergField(1, "k", required = false, "long"),
+      IcebergField(2, "v", required = false, "string"))),
+      tableUuid = "5a9c0000-0000-4000-8000-00000000000e", timestampMs = 1700000000000L)
+    GraftTable.append(spark, dir,
+      spark.range(0, 100, 1, 1).select(col("id").as("k"), concat(lit("v"), col("id")).as("v")))
+    // a v2 position-delete file, then (after the upgrade) a deletion vector
+    // that absorbs its positions
+    GraftTable.deleteWhere(spark, dir, col("k") === 3)
+    GraftTable.upgradeFormatVersion(dir, 3)
+    GraftTable.deleteWhere(spark, dir, col("k") === 5)
+    def deleteFiles() = listRows(dir).filter(_.content == 1)
+      .flatMap(i => ManifestWriter.read(i.path)).filter(_.status != 2)
+    val old = deleteFiles()
+    assert(old.map(_.fileFormat).sorted == Seq("PARQUET", "PUFFIN"), old.map(_.filePath))
+    val dataFile = listRows(dir).filter(_.content == 0)
+      .flatMap(i => ManifestWriter.read(i.path)).filter(_.status != 2).head.filePath
+    val written = graft.sources.GraftTableWrites.writePositionDeleteFile(
+      spark.range(7, 8, 1, 1).select(lit(dataFile).as("file_path"), col("id").as("pos")),
+      s"$dir/data/delete-merge").get
+    // the merge alone: the DELETE's own scan is not counted
+    counted(GraftTable.commitDeltaFiles(dir, Nil, Seq(GraftTable.PendingFile(
+      written.path, written.rows, written.bytes, written.lower, written.upper)), Set(dataFile)))
+    old.foreach { e =>
+      val opens = Option(CommitIoCountingFs.opens.get(PathId(e.filePath))).map(_.get).getOrElse(0)
+      assert(opens == 1, s"$opens opens of ${e.filePath}")
+    }
+    val now = deleteFiles()
+    assert(now.count(_.fileFormat == "PUFFIN") == 1, now.map(_.filePath))
+    assert(GraftTable.read(spark, GraftTable.latestMetadataPath(dir)).select("k").collect()
+      .map(_.getLong(0)).toSet == (0L until 100L).toSet -- Set(3L, 5L, 7L))
+  }
 }

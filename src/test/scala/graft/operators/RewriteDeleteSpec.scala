@@ -58,4 +58,39 @@ class RewriteDeleteSpec extends SparkSpec {
       .collect().map(r => (r.getInt(0), r.getString(1))).sortBy(_._1).toSeq
     assert(dsv2 == before, "DSv2 route diverged after rewrite")
   }
+
+  for (version <- Seq(2, 3))
+    test(s"a v$version rewrite keeps a widened key's and a pre-RENAME equality delete's rows") {
+      import spark.implicits._
+      val wh = java.nio.file.Files.createTempDirectory(s"graft-rwdel-v$version").toString
+      val cat = s"grw_v$version"
+      spark.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.GraftCatalog].getName)
+      spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+      spark.sql(s"CREATE TABLE $cat.db.t (k INT, v STRING) TBLPROPERTIES (" +
+        s"'format-version'='$version', 'commit-timestamp-ms'='$T0')")
+      val dir = s"$wh/db/t"
+      spark.sql(s"INSERT INTO $cat.db.t VALUES (1, 'a'), (2, 'b'), (3, 'c'), (4, 'd')")
+      GraftTable.deleteWhere(spark, dir, col("k") === 1)
+      // the equality-delete file names the key `k` and stores it as INT32
+      GraftTable.upsert(spark, dir, Seq((2, "B")).toDF("k", "v"), Seq("k"))
+      spark.sql(s"ALTER TABLE $cat.db.t RENAME COLUMN k TO id")
+      spark.sql(s"ALTER TABLE $cat.db.t ALTER COLUMN id TYPE BIGINT")
+      spark.sql(s"INSERT INTO $cat.db.t VALUES (5000000000, 'e'), (3, 'c2')")
+      GraftTable.upsert(spark, dir, Seq((4L, "D")).toDF("id", "v"), Seq("id"))
+      def rows(): Seq[(Long, String)] =
+        spark.sql(s"SELECT id, v FROM $cat.db.t").collect()
+          .map(r => (r.getLong(0), r.getString(1))).sortBy(r => (r._1, r._2)).toSeq
+      val before = rows()
+      assert(before == Seq((2L, "B"), (3L, "c"), (3L, "c2"), (4L, "D"),
+        (5000000000L, "e")), before)
+      GraftTable.rewritePositionDeleteFiles(spark, dir)
+      val meta = TableMetadata.parseFile(GraftTable.latestMetadataPath(dir))
+      val deletes = ManifestListReader.read(meta.currentSnapshot.get.manifestList.get)
+        .filter(_.content == 1).flatMap(i => ManifestWriter.read(i.path))
+        .filter(_.status != 2)
+      assert(deletes.nonEmpty && deletes.forall(_.content == 1), deletes.map(_.filePath))
+      assert(deletes.forall(e => (e.fileFormat == "PUFFIN") == (version == 3)),
+        deletes.map(_.fileFormat))
+      assert(rows() == before)
+    }
 }
