@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, MetadataBuilder, StringType,
   StructField, StructType}
 
-import graft.sources.TableDataSource
+import graft.sources.{GraftTableScan, TableDataSource}
 
 /** The one-call table API — point it at a committed `metadata.json` and
   * read the TABLE as a DataFrame, or commit to it (append, delete,
@@ -15,19 +15,22 @@ import graft.sources.TableDataSource
   *
   *   1. snapshot resolution: current head, explicit snapshot id, or a
   *      named ref (tag/branch) — time travel is just resolution;
-  *   2. two-level planning: manifest-list → manifests, content-routed
-  *      (data vs delete manifests, list field 517), opened concurrently,
-  *      into live (entry, sequence) sets;
-  *   3. the merge-on-read scan: that explicit plan runs through the
-  *      graft-table DSv2 scan ([[graft.sources.TableDataSource.scanPlan]]),
-  *      the engine's one reader — schema-evolution projection (every
-  *      file reads through the document's CURRENT schema, renamed and
-  *      pre-evolution columns resolved per file) and sequence-scoped
-  *      deletes (position deletes on data files with sequence <= theirs,
-  *      equality deletes on strictly lower) happen inside each task.
+  *   2. the one scan planner ([[graft.sources.GraftTableScan.plan]]):
+  *      manifest-list → manifests, content-routed (data vs delete
+  *      manifests, list field 517), pruned by the read's predicate and
+  *      opened concurrently, into live (entry, sequence) sets;
+  *   3. the merge-on-read scan: the graft-table DSv2 scan, the engine's
+  *      one reader — schema-evolution projection (every file reads
+  *      through the read's schema, renamed and pre-evolution columns
+  *      resolved per file) and sequence-scoped deletes (position deletes
+  *      on data files with sequence <= theirs, equality deletes on
+  *      strictly lower) happen inside each task.
   *
-  * Rewrites (MERGE, compaction, the stats passes, the changelog legs)
-  * read the same way, over the entry subsets they need, with the scan's
+  * `read`, `readWhere`, `readWhereRange` and `deleteWhere` are the
+  * catalog's graft-table relation with their predicate as a filter
+  * ([[graft.sources.TableDataSource.read]]). Rewrites (MERGE, compaction,
+  * the stats passes, the changelog legs) hand the scan the entry subsets
+  * they need ([[graft.sources.TableDataSource.scanPlan]]), with its
   * `_file`/`_pos`/`_row_id`/`_last_updated_sequence_number` metadata
   * columns as row addresses.
   */
@@ -95,70 +98,34 @@ object GraftTable {
     * callers wanting "latest" resolve it first (OptimisticCommit
     * .currentVersion); `snapshotId`/`ref` select a non-head snapshot and
     * `asOfTimestampMs` time-travels through the snapshot-log (the latest
-    * snapshot made current at-or-before the instant — i08's rule). */
+    * snapshot made current at-or-before the instant — i08's rule). The
+    * frame is the graft-table relation the catalog loads for `VERSION AS
+    * OF` / `TIMESTAMP AS OF`, under the schema [[readMeta]] resolves; a
+    * filter on it pushes into the scan's planning pass. */
   def read(spark: SparkSession, metadataPath: String,
       snapshotId: Option[Long] = None, ref: Option[String] = None,
-      asOfTimestampMs: Option[Long] = None): DataFrame = {
-    val meta0 = TableMetadata.parseFile(metadataPath)
-    val snap = resolveSnapshot(meta0, snapshotId, ref, asOfTimestampMs)
-    // POINT-IN-TIME travel (snapshot id / timestamp / TAG — archival
-    // points) reads under the SNAPSHOT's schema — the Iceberg rule, same
-    // as the catalog's VERSION/TIMESTAMP AS OF route: a snapshot
-    // predating an evolution (or a whole REPLACE TABLE) projects the
-    // columns that existed then. Head and BRANCH reads keep the table's
-    // CURRENT schema (Iceberg's branch rule — a branch is live state).
-    val traveled = snapshotId.isDefined || asOfTimestampMs.isDefined ||
-      ref.exists(r => !meta0.isBranchRef(r))
-    val meta = if (!traveled) meta0 else metaAtSnapshotSchema(meta0, snap)
-    val listPath = snap.manifestList.getOrElse(
-      throw new IllegalArgumentException(s"snapshot ${snap.snapshotId} has no manifest-list"))
-    readInfos(spark, meta, ManifestListReader.read(listPath))
-      .select(sparkSchema(meta).fieldNames.map(col).toIndexedSeq: _*)
-  }
+      asOfTimestampMs: Option[Long] = None): DataFrame =
+    TableDataSource.read(spark, metadataPath, TableMetadata.parseFile(metadataPath),
+      snapshotId, ref, asOfTimestampMs)
 
-  /** The metadata document re-anchored on `snap`'s own schema — the
-    * point-in-time rule a traveled read and a historical ANALYZE share
-    * (one definition, so the analyzed column set can never desync from
-    * the schema the scan resolves). Falls back to the current schema
-    * when the snapshot's schema id is absent or unknown. */
-  private def metaAtSnapshotSchema(meta0: TableMetadata, snap: Snapshot): TableMetadata =
-    snap.schemaId.filter(id => meta0.schemas.exists(_.schemaId == id))
-      .map(id => meta0.copy(topLevelSchema = None, currentSchemaId = Some(id)))
-      .getOrElse(meta0)
-
-  /** Live (entry, sequence) sets of a manifest set: (data, position
-    * deletes, equality deletes) — the explicit plan every read hands the
-    * scan. Manifests open CONCURRENTLY; an entry-level null sequence
-    * INHERITS the list's field 515 (the v2 inheritance rule); DELETED
-    * entries (status 2) drop out. Manifest-level delete pruning runs
-    * before any open: a delete manifest's list sequence (515) is the
-    * ceiling on every entry inside it and the data manifests' field 516
-    * the floor under every data sequence, so a delete manifest whose
-    * ceiling sits below the floor cannot address a live row and is never
-    * opened. Entry identity is (path, blob offset), not path alone: one
-    * v3 Puffin file holds many files' deletion vectors, one entry each. */
-  private def livePlan(infos: Seq[ManifestListReader.ManifestFileInfo])
-      : (Seq[(ManifestWriter.EntryData, Long)], Seq[(ManifestWriter.EntryData, Long)],
-        Seq[(ManifestWriter.EntryData, Long)]) = {
-    val minDataSeq = infos.filter(_.content == 0)
-      .map(_.minSequenceNumber).minOption.getOrElse(Long.MaxValue)
-    val opened = infos.filter(i => i.content == 0 || i.sequenceNumber >= minDataSeq)
-    val byManifest = Par.inParallel(opened)(i => (i, ManifestWriter.read(i.path)))
-    def live(listContent: Int, entryContent: Int): Seq[(ManifestWriter.EntryData, Long)] =
-      (for {
-        (i, es) <- byManifest if i.content == listContent
-        e <- es if e.status != 2 && e.content == entryContent
-      } yield (e, e.sequenceNumber.getOrElse(i.sequenceNumber)))
-        .distinctBy(x => (PathId(x._1.filePath), x._1.contentOffset.getOrElse(-1L)))
-    (live(0, 0), live(1, 1), live(1, 2))
-  }
-
-  /** The merge-on-read rows of a manifest set (see [[livePlan]]). */
-  private def readInfos(spark: SparkSession, meta: TableMetadata,
-      infos: Seq[ManifestListReader.ManifestFileInfo]): DataFrame = {
-    val (data, pos, eq) = livePlan(infos)
-    TableDataSource.scanPlan(spark, meta, data, pos, eq)
-  }
+  /** The document a read of (`snapshotId` | `ref` | `asOfTimestampMs`)
+    * resolves its columns against — the one time-travel schema rule, for
+    * [[read]], the catalog's `VERSION AS OF` / `TIMESTAMP AS OF` and tag
+    * identifiers, and a historical ANALYZE (so the analyzed column set
+    * can never desync from the schema the scan resolves). POINT-IN-TIME
+    * travel (snapshot id, timestamp, or a TAG — an archival point) reads
+    * under the SNAPSHOT's schema, the Iceberg rule: a snapshot predating
+    * an evolution (or a whole REPLACE TABLE) projects the columns that
+    * existed then. Head and BRANCH reads keep the CURRENT schema
+    * (Iceberg's branch rule — a branch is live state). Falls back to the
+    * current schema when the snapshot's schema id is absent or unknown. */
+  private[graft] def readMeta(meta: TableMetadata, snapshotId: Option[Long],
+      ref: Option[String], asOfTimestampMs: Option[Long]): TableMetadata =
+    if (snapshotId.isEmpty && asOfTimestampMs.isEmpty && ref.forall(meta.isBranchRef)) meta
+    else resolveSnapshot(meta, snapshotId, ref, asOfTimestampMs).schemaId
+      .filter(id => meta.schemas.exists(_.schemaId == id))
+      .map(id => meta.copy(topLevelSchema = None, currentSchemaId = Some(id)))
+      .getOrElse(meta)
 
   /** Historical name alternates after RENAME COLUMN: current field name →
     * the names the SAME field id carried in earlier schemas. Safe to
@@ -249,6 +216,7 @@ object GraftTable {
       startSnapshotId: Option[Long] = None,
       endSnapshotId: Option[Long] = None): DataFrame = {
     val meta = TableMetadata.parseFile(latestMetadataPath(tableDir))
+    val conf = HadoopConfs.active()
     val schema = sparkSchema(meta)
     val outSchema = StructType(schema.fields ++ Seq(
       StructField("_change_type", org.apache.spark.sql.types.StringType, nullable = false),
@@ -302,18 +270,20 @@ object GraftTable {
         val deletesAdded = entriesOf(1, 1, 1) ++ entriesOf(1, 1, 2)
         val removed = entriesOf(0, 2, 0).map(e => PathId(e._1.filePath)).toSet
         insertTags ++= dataAdded.map(e => (e, ordinal, s.snapshotId))
-        // the parent's live plan, its own deletes applied so only live
-        // rows can emit
-        lazy val parent = s.parentSnapshotId.flatMap(meta.snapshot).flatMap(_.manifestList)
-          .map(pl => livePlan(ManifestListReader.read(pl)))
+        // the parent's live plan from the one planner, its own deletes
+        // applied so only live rows can emit
+        lazy val parent = s.parentSnapshotId.flatMap(meta.snapshot).map(p =>
+          GraftTableScan.plan(meta, p, Array.empty, conf))
+        def parentData(keep: String => Boolean) = parent.toSeq.flatMap(_.kept.collect {
+          case (e, seq, _) if keep(e.filePath) => (e, seq) })
         val removedDeletes =
           if (removed.isEmpty) None
-          else parent.map { case (data, pos, eq) => TableDataSource.scanPlan(spark, meta,
-            data.filter(e => removed.contains(PathId(e._1.filePath))), pos, eq) }
+          else parent.map(p => TableDataSource.scanPlan(spark, meta,
+            parentData(f => removed.contains(PathId(f))), p.deletes))
         val deleted =
           if (deletesAdded.isEmpty) None
-          else parent.map { case (data, pos, eq) =>
-            TableDataSource.scanPlan(spark, meta, data, pos, eq, deletedBy = Some(deletesAdded)) }
+          else parent.map(p => TableDataSource.scanPlan(spark, meta, parentData(_ => true),
+            p.deletes, deletedBy = Some(deletesAdded)))
         // one commit's delete sources are disjoint by construction
         // (tombstoned files leave the table) — plain union, no dedup
         // pass; inserts ride the chain-wide leg below
@@ -333,7 +303,7 @@ object GraftTable {
         val lk = broadcast(insertTags.toSeq.map { case ((e, _), ord, snap) =>
           (e.filePath, ord, snap) }.toDF("_lk_file", "_lk_ord", "_lk_snap"))
         Some(TableDataSource.scanPlan(spark, meta,
-            insertTags.toSeq.map(_._1).distinctBy(_._1.filePath), Nil, Nil)
+            insertTags.toSeq.map(_._1).distinctBy(_._1.filePath), Nil)
           .join(lk, col("_file") === col("_lk_file"))
           .select(schema.fieldNames.map(col).toIndexedSeq :+
             lit("insert").as("_change_type") :+
@@ -464,7 +434,6 @@ object GraftTable {
     try {
       val blocks = r.getFooter.getBlocks.asScala.toSeq
       val rows = blocks.map(_.getRowCount).sum
-      val cmp = graft.sources.EntryFilterEval.cmp _
       val acc = scala.collection.mutable.Map.empty[Int, (Any, Any, IcebergType)]
       for {
         b <- blocks
@@ -472,8 +441,8 @@ object GraftTable {
       } acc(id) = acc.get(id) match {
         case None => (lo, hi, t)
         case Some((plo, phi, _)) => (
-          if (cmp(Some(lo), plo).exists(_ < 0)) lo else plo,
-          if (cmp(Some(hi), phi).exists(_ > 0)) hi else phi, t)
+          if (ScanPlanning.cmpValues(lo, plo).exists(_ < 0)) lo else plo,
+          if (ScanPlanning.cmpValues(hi, phi).exists(_ > 0)) hi else phi, t)
       }
       (rows,
         acc.map { case (id, (lo, _, t)) => id -> SingleValueCodec.encode(t, lo) }.toMap,
@@ -492,7 +461,8 @@ object GraftTable {
     * Imported bounds are footer `min`/`max` values, which parquet
     * writers may themselves truncate for long strings — so the commit
     * CLEARS the table's `graft.metrics=full` stamp: stats-served
-    * MIN/MAX on string columns honestly refuses from then on. */
+    * MIN/MAX on string columns honestly refuses from then on. A file the
+    * table already lists refuses the whole import. */
   def addFiles(spark: SparkSession, tableDir: String, sourceDir: String,
       format: String = "parquet"): OptimisticCommit.CommitResult = {
     val meta0 = TableMetadata.parseFile(latestMetadataPath(tableDir))
@@ -512,6 +482,11 @@ object GraftTable {
       .filter(s => s.isFile && s.getPath.getName.endsWith(ext))
       .map(_.getPath.toString).sorted.toSeq
     require(files.nonEmpty, s"no $format files under $sourceDir")
+    // Iceberg's check_duplicate_files: a file the table already lists
+    // would be listed twice and read twice — refuse before any commit
+    val listed = entriesAt(meta0.currentSnapshot, 0).map(e => PathId(e.filePath)).toSet
+    files.find(f => listed(PathId(f))).foreach(f => throw new IllegalArgumentException(
+      s"add_files: $f is already a data file of the table"))
     val pending = Par.inParallel(files) { f =>
       val len = HadoopConfs.length(f)
       if (fmt == "PARQUET") {
@@ -1012,98 +987,87 @@ object GraftTable {
         lineageFiles = files.filter(_.carriesLineage).map(_.path).toSet)
     }
 
-  /** Hidden-partition pruned read WITH merge-on-read: `sourceFieldId =
-    * value` converts into the spec's transform space (ScanPlanning
-    * .transformValue) and prunes manifests against their list summaries
-    * WITHOUT opening them — DATA manifests and, by the same rule applied
-    * symmetrically, DELETE manifests: a partition-scoped delete file
-    * cannot address data in a partition its manifest's summaries provably
-    * exclude (a summary-less delete manifest is always kept — global
-    * deletes stay safe). The sequence-scoped MOR runs over the pruned
-    * sets, and the residual predicate applies in the scan. Returns the
-    * filtered live rows plus how many DATA manifests planning kept vs
-    * listed. */
+  /** Hidden-partition pruned read WITH merge-on-read: the head read
+    * ([[read]]) filtered on `sourceFieldId <=> value`. The scan's planning
+    * pass converts the value into the spec's transform space
+    * (ScanPlanning.transformValue) and prunes manifests against their
+    * list summaries WITHOUT opening them — DATA manifests and, by the
+    * same rule applied symmetrically, DELETE manifests: a
+    * partition-scoped delete file cannot address data in a partition its
+    * manifest's summaries provably exclude (a summary-less delete
+    * manifest is always kept — global deletes stay safe). The
+    * sequence-scoped MOR runs over the pruned sets, and the predicate
+    * stays residual in the scan. Returns the filtered live rows plus how
+    * many DATA manifests that planning pass opened vs listed. */
   def readWhere(spark: SparkSession, metadataPath: String,
       sourceFieldId: Int, value: Any): (DataFrame, Int, Int) = {
     val meta = TableMetadata.parseFile(metadataPath)
-    val snap = resolveSnapshot(meta, None, None)
-    val all = ManifestListReader.read(snap.manifestList.get)
-    val surviving = ScanPlanning.pruneManifestsByTransform(all, meta, sourceFieldId, Seq(value))
-    val survivingData = surviving.filter(_.content == 0)
-    val deletes = surviving.filter(_.content == 1)
-    val fieldName = meta.currentSchema.fields.find(_.id == sourceFieldId).get.name
-    val df = readInfos(spark, meta, survivingData ++ deletes)
-      .filter(col(fieldName) <=> lit(value)) // residual
-      .select(sparkSchema(meta).fieldNames.map(col).toIndexedSeq: _*)
-    (df, survivingData.size, all.count(_.content == 0))
+    val c = col(fieldName(meta, sourceFieldId))
+    withDataManifests(TableDataSource.read(spark, metadataPath, meta).filter(c <=> lit(value)))
   }
 
   /** Range variant of [[readWhere]]: `lower <= sourceField <= upper`
     * (either side optional) prunes data AND delete manifests through the
-    * spec's MONOTONIC transforms (ScanPlanning.pruneManifestsByRange),
-    * composes the sequence-scoped MOR apply, and re-applies the residual
-    * range in the scan. */
+    * spec's MONOTONIC transforms (ScanPlanning.pruneManifestsByRange) in
+    * the same planning pass, composes the sequence-scoped MOR apply, and
+    * keeps the range residual in the scan. */
   def readWhereRange(spark: SparkSession, metadataPath: String,
       sourceFieldId: Int, lower: Option[Any], upper: Option[Any])
       : (DataFrame, Int, Int) = {
     val meta = TableMetadata.parseFile(metadataPath)
-    val snap = resolveSnapshot(meta, None, None)
-    val all = ManifestListReader.read(snap.manifestList.get)
-    val surviving = ScanPlanning.pruneManifestsByRange(all, meta, sourceFieldId, lower, upper)
-    val survivingData = surviving.filter(_.content == 0)
-    val deletes = surviving.filter(_.content == 1)
-    val fieldName = meta.currentSchema.fields.find(_.id == sourceFieldId).get.name
-    val residual = (lower.map(col(fieldName) >= lit(_)) ++
-      upper.map(col(fieldName) <= lit(_))).reduceOption(_ && _).getOrElse(lit(true))
-    val df = readInfos(spark, meta, survivingData ++ deletes)
-      .filter(residual)
-      .select(sparkSchema(meta).fieldNames.map(col).toIndexedSeq: _*)
-    (df, survivingData.size, all.count(_.content == 0))
+    val c = col(fieldName(meta, sourceFieldId))
+    val df = TableDataSource.read(spark, metadataPath, meta)
+    withDataManifests((lower.map(c >= lit(_)) ++ upper.map(c <= lit(_)))
+      .reduceOption(_ && _).fold(df)(df.filter))
+  }
+
+  private def fieldName(meta: TableMetadata, fieldId: Int): String =
+    meta.currentSchema.fields.find(_.id == fieldId)
+      .getOrElse(throw new IllegalArgumentException(s"no field with id $fieldId")).name
+
+  /** `df` with the (opened, listed) data manifests of its scan's planning
+    * pass, which this runs. */
+  private def withDataManifests(df: DataFrame): (DataFrame, Int, Int) = {
+    val (opened, listed) = TableDataSource.dataManifests(df)
+    (df, opened, listed)
   }
 
   /** MOR read restricted to rows whose `fieldId` value can fall in
     * `[lower, upper]` — the per-batch guard read of a CDC upsert sink
-    * (st16): data AND equality-delete entries whose decoded bound stats
-    * provably exclude the range never open (entry-level, driver-side,
-    * from the manifests' field 125/128 blobs — the stats every upsert
-    * commit already writes), so a batch touching a narrow key range reads
-    * O(overlapping files), not the whole table. Conservative: an entry
-    * without bounds for the field — or whose bound blob fails to decode
-    * (foreign metadata; same Try-guard convention as ScanPlanning's
-    * decode sites) — is kept. Position deletes are NOT
-    * key-pruned (they address (file_path, pos), not keys) — the scan
-    * scopes them to each surviving file by their path bounds. A
-    * pruned equality delete can only kill rows outside the range, and the
-    * residual range filter drops any such row from kept files too, so the
-    * result is exactly the full MOR scan filtered to the range.
+    * (st16): the head planned by the one planner with the range pushed,
+    * so data manifests and data files whose summaries or decoded bound
+    * stats provably exclude the range never open (the stats every upsert
+    * commit already writes), and a batch touching a narrow key range
+    * reads O(overlapping files), not the whole table. On top of the
+    * planner's output, equality-delete entries whose key bounds exclude
+    * the range are left out ([[graft.sources.FileBoundsEval.skippable]]):
+    * such a delete can only kill rows outside the range, which the
+    * residual range filter drops from kept files too, so the result is
+    * exactly the full MOR scan filtered to the range. That exclusion stays
+    * here, never in the shared planner: a copy-on-write scan must see
+    * every delete of a file it keeps. Conservative throughout: an entry
+    * without decodable bounds for the field is kept. Position deletes are
+    * NOT key-pruned (they address (file_path, pos), not keys) — the scan
+    * scopes them to each surviving file by their path bounds.
     * KeyRangePruneSpec proves the skip destructively: a corrupted
     * non-overlapping data file never opens. */
   def readKeyRange(spark: SparkSession, metadataPath: String,
       fieldId: Int, lower: Any, upper: Any): DataFrame = {
+    import org.apache.spark.sql.sources.{Filter, GreaterThanOrEqual, LessThanOrEqual}
     val meta = TableMetadata.parseFile(metadataPath)
-    val field = meta.currentSchema.fields.find(_.id == fieldId)
-      .getOrElse(throw new IllegalArgumentException(s"no field with id $fieldId"))
-    val t = IcebergTypes.fromString(field.fieldType)
-    def excludes(e: ManifestWriter.EntryData): Boolean = {
-      def dec(m: Map[Int, Array[Byte]]): Option[Any] = m.get(fieldId)
-        .flatMap(b => scala.util.Try(SingleValueCodec.decode(t, b)).toOption)
-      // provable exclusion only: file's min > upper, or file's max < lower
-      dec(e.lowerBounds).exists(v => ScanPlanning.cmpValues(v, upper).exists(_ > 0)) ||
-        dec(e.upperBounds).exists(v => ScanPlanning.cmpValues(v, lower).exists(_ < 0))
-    }
-    // ONE manifest-list read and one sweep per manifest (livePlan also
-    // applies its manifest-level dead-delete prune); the range exclusion
-    // then drops data and equality-delete entries
-    val (data, pos, eq) = livePlan(refHead(meta, None).toSeq
-      .flatMap(s => ManifestListReader.read(s.manifestList.get)))
-    TableDataSource.scanPlan(spark, meta, data.filterNot(e => excludes(e._1)), pos,
-        eq.filterNot(e => excludes(e._1)))
-      .filter(col(field.name) >= lit(lower) && col(field.name) <= lit(upper))
+    val name = fieldName(meta, fieldId)
+    val range = Array[Filter](GreaterThanOrEqual(name, lower), LessThanOrEqual(name, upper))
+    val planned = refHead(meta, None).map(GraftTableScan.plan(meta, _, range, HadoopConfs.active()))
+    TableDataSource.scanPlan(spark, meta,
+        planned.toSeq.flatMap(_.kept.map { case (e, seq, _) => (e, seq) }),
+        planned.toSeq.flatMap(_.deletes.filterNot { case (e, _) =>
+          e.content == 2 && range.exists(graft.sources.FileBoundsEval.skippable(_, e, meta)) }))
+      .filter(col(name) >= lit(lower) && col(name) <= lit(upper))
       .select(sparkSchema(meta).fieldNames.map(col).toIndexedSeq: _*)
   }
 
   /** Current non-deleted entries of the head snapshot, by list content —
-    * manifests open concurrently (same planning shape as livePlan).
+    * manifests open concurrently.
     * An entry relying on list-level sequence inheritance (null sequence,
     * field 515 carries the number) gets the sequence MATERIALIZED here:
     * the spec restricts inheritance to ADDED entries, so an entry carried
@@ -1192,10 +1156,10 @@ object GraftTable {
         val (srcMin, srcMax) = (rangeRow.get(2 * i), rangeRow.get(2 * i + 1))
         // provably disjoint only when bounds decode AND compare; missing
         // stats keep the file (conservative)
-        val below = graft.sources.EntryFilterEval
-          .cmp(decodeBound(e, f.id, f.fieldType, lower = false), srcMin).exists(_ < 0)
-        val above = graft.sources.EntryFilterEval
-          .cmp(decodeBound(e, f.id, f.fieldType, lower = true), srcMax).exists(_ > 0)
+        val below = decodeBound(e, f.id, f.fieldType, lower = false)
+          .flatMap(ScanPlanning.cmpValues(_, srcMin)).exists(_ < 0)
+        val above = decodeBound(e, f.id, f.fieldType, lower = true)
+          .flatMap(ScanPlanning.cmpValues(_, srcMax)).exists(_ > 0)
         !(below || above)
       }
     val candEntries =
@@ -1205,7 +1169,7 @@ object GraftTable {
     // the MOR frame over CANDIDATE files only — non-candidates can't
     // hold a source key, so match detection and the insert anti-join
     // are both complete over this subset
-    val candLive = TableDataSource.scanPlan(spark, meta0, candEntries, posEntries, eqEntries)
+    val candLive = TableDataSource.scanPlan(spark, meta0, candEntries, posEntries ++ eqEntries)
     val affected = candLive.join(src, keyCols, "left_semi")
       .select(col("_file")).distinct().collect().map(r => PathId(r.getString(0))).toSet
     val mergeUuid = java.util.UUID.randomUUID()
@@ -1218,7 +1182,7 @@ object GraftTable {
     // inline bound stats.
     val rewritten = Par.inParallel(affected.toSeq.sorted.zipWithIndex) { case (f, i) =>
       val fileLive = TableDataSource.scanPlan(spark, meta0, Seq(candByPath(f)),
-        posEntries, eqEntries)
+        posEntries ++ eqEntries)
       graft.sources.GraftTableWrites.writeDataFiles(
         fileLive
           .join(src.select(keyCols.map(col) :+ struct(cols.map(col): _*).as("_src"): _*),
@@ -1565,7 +1529,7 @@ object GraftTable {
     val fields = graft.sources.GraftTableWrites.fieldsOf(meta0.currentSchema)
     def liveOf(es: Seq[ManifestWriter.EntryData]): DataFrame =
       TableDataSource.scanPlan(spark, meta0,
-        es.map(e => (e, e.sequenceNumber.get)), posEntries, eqEntries)
+        es.map(e => (e, e.sequenceNumber.get)), posEntries ++ eqEntries)
         .select(writeSchemaCols: _*)
     // every output is task-written with inline bound stats, tagged with
     // its tuple group; a group whose rows were all deleted writes nothing
@@ -1723,7 +1687,7 @@ object GraftTable {
     // lower-sequence data file to address) — the rewrite then writes no
     // delete file and commits no delete entry, which still correctly
     // drops the vacuous delete manifests
-    val addresses = TableDataSource.scanPlan(spark, meta0, dataE, Nil, Nil,
+    val addresses = TableDataSource.scanPlan(spark, meta0, dataE, Nil,
         deletedBy = Some(delE.map(e => (e, e.sequenceNumber.get))))
       .select(col("_file").as("file_path"), col("_pos").as("pos"))
     // v3 tables REWRITE INTO DELETION VECTORS — this procedure is the
@@ -2097,7 +2061,7 @@ object GraftTable {
       throw new IllegalArgumentException("cannot analyze a table with no snapshot"))
     val snap = meta0.snapshot(snapId).getOrElse(
       throw new IllegalArgumentException(s"no such snapshot $snapId"))
-    val meta = if (snapshotId.isEmpty) meta0 else metaAtSnapshotSchema(meta0, snap)
+    val meta = readMeta(meta0, snapshotId, None, None)
     // sketchable columns only: nested/variant values have no canonical
     // serialization to hash (TableStats.sketchable) and carry no stats
     val sketchableCols = meta.currentSchema.fields
@@ -2418,7 +2382,7 @@ object GraftTable {
       typed: Seq[(IcebergField, IcebergType)]): TableStats.PartStats = {
     val (rc, nulls, saw, sks) = statsPass(spark,
       TableDataSource.scanPlan(spark, meta,
-        entries.map(e => (e, e.sequenceNumber.get)), posE, eqE), typed)
+        entries.map(e => (e, e.sequenceNumber.get)), posE ++ eqE), typed)
     toPartStats(typed, rc, nulls, saw, sks)
   }
 
@@ -2455,7 +2419,7 @@ object GraftTable {
     val idxOfFile: Seq[(String, Int)] = batch.zipWithIndex.flatMap {
       case ((_, es), i) => es.map(e => e.filePath -> i) }
     val df0 = TableDataSource.scanPlan(spark, meta,
-      allEntries.map(e => (e, e.sequenceNumber.get)), posE, eqE)
+      allEntries.map(e => (e, e.sequenceNumber.get)), posE ++ eqE)
     val (fileCol, idxCol) = bkCols(df0.columns)
     val df = df0.join(broadcast(idxOfFile.toDF(fileCol, idxCol)),
       col("_file") === col(fileCol))
@@ -2765,7 +2729,7 @@ object GraftTable {
     // where a non-local return cannot unwind the caller.)
     def passOf(es: Seq[(ManifestWriter.EntryData, Long)])
         : Option[(Long, Array[Long], Array[Boolean], Array[Array[Byte]])] = {
-      def run() = statsPass(spark, TableDataSource.scanPlan(spark, meta, es, Nil, Nil), typed)
+      def run() = statsPass(spark, TableDataSource.scanPlan(spark, meta, es, Nil), typed)
       if (chainHasReplace)
         try Some(run())
         catch { case scala.util.control.NonFatal(_) => None }
@@ -2786,7 +2750,7 @@ object GraftTable {
         tes.map(te => te._2._1.filePath -> i) }
       def run() = {
         val df0 = TableDataSource.scanPlan(spark, meta,
-          batch.flatMap(_._2.map(_._2)), Nil, Nil)
+          batch.flatMap(_._2.map(_._2)), Nil)
         val (fileCol, idxCol) = bkCols(df0.columns)
         val df = df0.join(broadcast(idx.toDF(fileCol, idxCol)),
           col("_file") === col(fileCol))
@@ -3862,14 +3826,16 @@ object GraftTable {
   }
 
   /** Row-level DELETE: the ref head's live rows matching `predicate` —
-    * read through the one merge-on-read reader ([[readInfos]]), so
+    * read as [[read]] reads the head (the graft-table relation), so
     * renamed columns resolve by field id, rows an earlier delete removed
     * are not addressed again and any data file format scans — land as
     * ONE (file_path, pos)-sorted position-delete file, committed by
     * [[commitDeltaFiles]] like every SQL merge-on-read DELETE (v3 tables
     * get deletion vectors there). The predicate is an ordinary Column
-    * over the table's schema, pushed into the scan to prune files and
-    * row groups. A predicate matching no live row commits nothing.
+    * over the table's schema, pushed into the scan's planning pass to
+    * prune manifests, files and row groups (a key on a bucketed table
+    * opens one data manifest). A predicate matching no live row commits
+    * nothing.
     *
     * With `branch`, the DELETE is BRANCH-SCOPED end-to-end: the predicate
     * scans the branch head's live rows (not main's), the delete snapshot
@@ -3885,9 +3851,9 @@ object GraftTable {
     // one task writes the file; its message names the data files it
     // addresses (the commit's conflict targets) — `_file` is the
     // manifest spelling
-    val written = refHead(meta0, branch).flatMap { head =>
+    val written = refHead(meta0, branch).flatMap { _ =>
       graft.sources.GraftTableWrites.writePositionDeleteFile(
-        readInfos(spark, meta0, ManifestListReader.read(head.manifestList.get))
+        TableDataSource.read(spark, metaPath0, meta0, ref = branch)
           .filter(predicate)
           .select(col("_file").as("file_path"), col("_pos").as("pos")),
         s"$tableDir/data/delete-${java.util.UUID.randomUUID()}")

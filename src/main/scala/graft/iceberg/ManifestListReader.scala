@@ -41,8 +41,11 @@ object ManifestListReader {
     val arr = new Array[Byte](bb.remaining()); bb.get(arr); arr
   }
 
-  def read(listPath: String): Seq[ManifestFileInfo] = {
-    val in = new java.io.BufferedInputStream(HadoopConfs.open(listPath))
+  def read(listPath: String): Seq[ManifestFileInfo] = read(listPath, HadoopConfs.active())
+
+  def read(listPath: String, conf: org.apache.hadoop.conf.Configuration)
+      : Seq[ManifestFileInfo] = {
+    val in = new java.io.BufferedInputStream(HadoopConfs.open(listPath, conf))
     val stream =
       try new DataFileStream[GenericRecord](in,
         new GenericDatumReader[GenericRecord](

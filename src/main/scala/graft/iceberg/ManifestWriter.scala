@@ -162,10 +162,13 @@ object ManifestWriter {
     * subset by name). KB-scale metadata: this is the same driver-side
     * boundary Iceberg's planner uses; the distributed path is
     * ManifestReader.entries. */
-  def read(path: String): Seq[EntryData] = {
+  def read(path: String): Seq[EntryData] = read(path, HadoopConfs.active())
+
+  /** The same read on a caller's conf (one per planning pass). */
+  def read(path: String, conf: org.apache.hadoop.conf.Configuration): Seq[EntryData] = {
     import org.apache.avro.file.DataFileStream
     import org.apache.avro.generic.GenericDatumReader
-    val in = new java.io.BufferedInputStream(HadoopConfs.open(path))
+    val in = new java.io.BufferedInputStream(HadoopConfs.open(path, conf))
     val stream =
       try new DataFileStream[GenericRecord](in,
         new GenericDatumReader[GenericRecord](null: Schema, entrySchema))

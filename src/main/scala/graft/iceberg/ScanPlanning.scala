@@ -1,55 +1,19 @@
 package graft.iceberg
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-
-import graft.functions.BoundDecode
 import graft.iceberg.IcebergTypes._
 
-/** Stats-based file pruning — the scan planning the reference's bound
-  * decoding enables but never performs (SURVEY.md §4): filter the `files`
-  * metadata table on predicate-vs-decoded-bounds, then read only surviving
-  * data files.
+/** The pruning rules behind the one scan planner
+  * ([[graft.sources.GraftTableScan.plan]]), the stats-based skipping the
+  * reference's bound decoding enables but never performs (SURVEY.md §4):
+  * predicate values convert into each spec's partition-transform space
+  * and prune manifests against their list summaries unopened, and
+  * [[cmpValues]] orders every decoded bound against a predicate value.
   *
   * At 100 TB this is the difference between scanning everything and
   * scanning the handful of files whose [lower, upper] range intersects the
-  * predicate: planning cost is proportional to metadata (thousands of
-  * manifest rows, distributed one task per manifest), not data.
+  * predicate: planning cost is proportional to metadata, not data.
   */
 object ScanPlanning {
-
-  /** Files whose [lower_bounds(id), upper_bounds(id)] interval may contain
-    * rows satisfying `lower <= value <= upper` (either side optional).
-    * Null bounds (no stats) keep the file — pruning must be conservative.
-    */
-  def pruneFiles(
-      entries: DataFrame,
-      meta: TableMetadata,
-      fieldId: Int,
-      lower: Option[Any] = None,
-      upper: Option[Any] = None): DataFrame = {
-    val types = meta.fieldTypes
-    val t = IcebergTypes.fromString(types(fieldId))
-    val lo = BoundDecode.decodedBound(types, col("data_file.lower_bounds"), fieldId)
-    val hi = BoundDecode.decodedBound(types, col("data_file.upper_bounds"), fieldId)
-    def typed(c: Column): Column = t match {
-      case TInt | TLong | TTime => c.cast("long")
-      case TFloat | TDouble => c.cast("double")
-      case TDecimal(p, s) => c.cast(s"decimal($p,$s)")
-      case TDate => c.cast("date")
-      case TTimestamp | TTimestamptz => c.cast("timestamp")
-      case _ => c
-    }
-    val keepUpper = upper match {
-      case Some(v) => lo.isNull || typed(lo) <= lit(v) // file's min <= predicate upper
-      case None => lit(true)
-    }
-    val keepLower = lower match {
-      case Some(v) => hi.isNull || typed(hi) >= lit(v) // file's max >= predicate lower
-      case None => lit(true)
-    }
-    entries.filter(keepUpper && keepLower)
-  }
 
   private val BucketRe = """bucket\[(\d+)\]""".r
   private val TruncateRe = """truncate\[(\d+)\]""".r
@@ -129,13 +93,19 @@ object ScanPlanning {
     case _ => None
   }
 
-  private[iceberg] def cmpValues(a: Any, b: Any): Option[Int] = (a, b) match {
+  /** The one ordering of decoded bound values against each other and
+    * against predicate values, for every pruning site (manifest
+    * summaries, entry bounds, row-group stats, key-range guards, the
+    * partition envelopes). Numerics widen through BigDecimal; strings,
+    * booleans, dates (a `java.sql.Date` predicate value as its local
+    * date) and instants (a `java.sql.Timestamp` as its instant) compare
+    * within their kind. None means unorderable, and every caller then
+    * keeps its file or manifest: a null, a pair of unrelated kinds, or
+    * NaN/Infinity, which have no BigDecimal rendering — toString would
+    * throw NumberFormatException out of a pruning decision and fail the
+    * whole read. */
+  private[graft] def cmpValues(a: Any, b: Any): Option[Int] = (a, b) match {
     case (x: Number, y: Number) =>
-      // NaN/Infinity have no BigDecimal rendering — toString would throw
-      // NumberFormatException out of a PRUNING decision and fail the
-      // whole read; an unorderable bound is just "unknown", so every
-      // caller keeps its entry (the conservative direction everywhere
-      // cmpValues feeds: key-range guards, list pruning, delete pruning)
       def finite(n: Number): Boolean = n match {
         case d: java.lang.Double => !d.isNaN && !d.isInfinite
         case f: java.lang.Float => !f.isNaN && !f.isInfinite
@@ -145,6 +115,11 @@ object ScanPlanning {
       else Some(new java.math.BigDecimal(x.toString)
         .compareTo(new java.math.BigDecimal(y.toString)))
     case (x: String, y: String) => Some(x.compareTo(y))
+    case (x: Boolean, y: Boolean) => Some(x.compareTo(y))
+    case (x: java.time.LocalDate, y: java.sql.Date) => Some(x.compareTo(y.toLocalDate))
+    case (x: java.time.LocalDate, y: java.time.LocalDate) => Some(x.compareTo(y))
+    case (x: java.time.Instant, y: java.sql.Timestamp) => Some(x.compareTo(y.toInstant))
+    case (x: java.time.Instant, y: java.time.Instant) => Some(x.compareTo(y))
     case _ => None
   }
 
@@ -306,22 +281,5 @@ object ScanPlanning {
       }
       keep.getOrElse(true)
     }
-  }
-
-  /** Surviving data-file paths for an equality/range predicate — feed for
-    * `spark.read.parquet(paths: _*)`. */
-  def planFiles(
-      spark: SparkSession,
-      meta: TableMetadata,
-      manifestPaths: Seq[String],
-      fieldId: Int,
-      lower: Option[Any],
-      upper: Option[Any]): Seq[String] = {
-    val entries = ManifestReader.entries(spark, manifestPaths)
-    pruneFiles(entries, meta, fieldId, lower, upper)
-      .select(col("data_file.file_path"))
-      .collect()
-      .map(_.getString(0))
-      .toSeq
   }
 }

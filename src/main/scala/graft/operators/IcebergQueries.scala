@@ -76,9 +76,9 @@ object IcebergQueries {
     * (`upper_id` here) and the filter pushes into the source
     * (`SupportsPushDownFilters`): rows are skipped at Avro-decode time and
     * all-pruned manifests produce no InputPartition at all — the isNull arm
-    * keeps stats-less files, pruning must be conservative. Same result as
-    * the programmatic `ScanPlanning.pruneFiles` (which remains the
-    * planFiles API surface). */
+    * keeps stats-less files, pruning must be conservative. A graft-table
+    * scan applies the same entry-bound rule in its planning pass
+    * (`GraftTableScan.plan`, level 2). */
   val i03PrunedScan: Q = (spark, _) =>
     spark.read.format("graft-manifest")
       .option("metadata", FixtureMetadata)

@@ -206,16 +206,14 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     require(meta.refs.exists(r => r.name == refName && r.refType == kind),
       s"no $kind '$refName' on table ${baseIdent.name()} — " +
         s"CALL <catalog>.system.create_$kind first")
-    // the one branch/tag schema rule (TableMetadata.isBranchRef), same
-    // as VERSION AS OF: a tag is an archival point and reads under its
+    // the one time-travel schema rule (GraftTable.readMeta), same as
+    // VERSION AS OF: a tag is an archival point and reads under its
     // SNAPSHOT's schema; a branch is live state on the current schema
-    Some(new GraftSparkTable(travelSchema(meta, None, Some(refName), None), metaPath,
-      None, Some(refName), None, 128L * 1024 * 1024,
+    Some(GraftSparkTable.at(metaPath, meta, ref = Some(refName),
       writeBranch = if (kind == "branch") Some(refName) else None,
       refuseWriteReason = if (kind == "tag")
         Some(s"'$refName' is a TAG — tags pin immutable snapshots; " +
-          "write to the table or a branch instead") else None,
-      parsed = Some(meta)))
+          "write to the table or a branch instead") else None))
   }
 
   /** A registered identifier whose TARGET vanished (dropped through its
@@ -249,36 +247,20 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     }
     val metaPath = GraftTable.latestMetadataPath(dir)
     val meta = TableMetadata.parseFile(metaPath)
-    new GraftSparkTable(GraftTable.sparkSchema(meta), metaPath, None, None, None,
-      128L * 1024 * 1024, parsed = Some(meta))
+    GraftSparkTable.at(metaPath, meta)
   }
 
   /** SQL `VERSION AS OF <v>` — a numeric version is a snapshot id, any
     * other string resolves as a ref name (tag or branch), Iceberg's
-    * convention for both. */
-  /** Time travel reads under the SNAPSHOT's schema (the Iceberg rule):
-    * a snapshot-id or timestamp target — or a TAG, an archival point —
-    * resolves its own schema id, so `VERSION AS OF` shows the columns
-    * that existed then. A BRANCH is live state and keeps the table's
-    * CURRENT schema (Iceberg's branch rule). */
-  private def travelSchema(meta: TableMetadata, snapId: Option[Long],
-      ref: Option[String], tsMs: Option[Long]): StructType = {
-    if (ref.exists(meta.isBranchRef)) GraftTable.sparkSchema(meta)
-    else GraftTable.resolveForScan(meta, snapId, ref, tsMs).schemaId
-      .flatMap(id => meta.schemas.find(_.schemaId == id))
-      .map(s => GraftTable.sparkSchema(
-        meta.copy(topLevelSchema = None, currentSchemaId = Some(s.schemaId))))
-      .getOrElse(GraftTable.sparkSchema(meta))
-  }
-
+    * convention for both; the schema is the snapshot's unless the ref is
+    * a branch ([[GraftTable.readMeta]]). */
   override def loadTable(ident: Identifier, version: String): Table = {
     if (!tableExists(ident)) throw new NoSuchTableException(ident)
     val metaPath = GraftTable.latestMetadataPath(tableDir(ident))
     val meta = TableMetadata.parseFile(metaPath)
     val snapId = version.toLongOption
     val ref = if (snapId.isEmpty) Some(version) else None
-    new GraftSparkTable(travelSchema(meta, snapId, ref, None),
-      metaPath, snapId, ref, None, 128L * 1024 * 1024, parsed = Some(meta))
+    GraftSparkTable.at(metaPath, meta, snapId, ref)
   }
 
   /** SQL `TIMESTAMP AS OF <ts>` — Spark hands MICROseconds since epoch;
@@ -287,9 +269,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     if (!tableExists(ident)) throw new NoSuchTableException(ident)
     val metaPath = GraftTable.latestMetadataPath(tableDir(ident))
     val meta = TableMetadata.parseFile(metaPath)
-    new GraftSparkTable(travelSchema(meta, None, None, Some(timestampMicros / 1000L)),
-      metaPath, None, None, Some(timestampMicros / 1000L), 128L * 1024 * 1024,
-      parsed = Some(meta))
+    GraftSparkTable.at(metaPath, meta, asOfTimestampMs = Some(timestampMicros / 1000L))
   }
 
   /** Spark column type → Iceberg type string — shared with the

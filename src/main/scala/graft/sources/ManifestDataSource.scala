@@ -18,7 +18,8 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.iceberg.{AvroConversions, IcebergType, IcebergTypes, SingleValueCodec, TableMetadata}
+import graft.iceberg.{AvroConversions, IcebergType, IcebergTypes, ScanPlanning, SingleValueCodec,
+  TableMetadata}
 
 /** DataSource V2 connector for Iceberg manifest files:
   * `spark.read.format("graft-manifest").load(path, ...)`.
@@ -37,7 +38,7 @@ import graft.iceberg.{AvroConversions, IcebergType, IcebergTypes, SingleValueCod
   * during Avro decode and whole manifests whose entries ALL fail the
   * predicate are dropped at planning time (fewer InputPartitions), which is
   * exactly Iceberg's stats-based scan pruning, now reachable as
-  * `df.filter($"upper_id" >= 2)` with no manual planFiles call.
+  * `df.filter($"upper_id" >= 2)`.
   */
 class ManifestDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-manifest"
@@ -242,9 +243,7 @@ class ManifestScan(required: StructType, paths: Seq[String], writerSchemaJson: S
     * BEING OPENED — at millions of files this keeps planning proportional
     * to matching manifests. Level 2 (entry): survivors are probed by
     * decoding their entries against the filters. The driver-side pass
-    * mirrors Iceberg's own planning (manifests are KB-sized; at larger
-    * manifest counts this pass itself is a Spark job — see
-    * ScanPlanning.planFiles for the distributed form). */
+    * mirrors Iceberg's own planning (manifests are KB-sized). */
   override def planInputPartitions(): Array[InputPartition] = {
     val listSurvivors =
       if (filters.isEmpty || listBounds.isEmpty) paths
@@ -354,49 +353,32 @@ object EntryFilterEval {
   }
 
   /** `get` returns None = unresolvable, Some(null) = SQL NULL. */
-  def eval(f: sources.Filter, get: String => Option[Any]): Option[Boolean] = f match {
-    case sources.EqualTo(a, v) => cmp(get(a), v).map(_ == 0)
-    case sources.GreaterThan(a, v) => cmp(get(a), v).map(_ > 0)
-    case sources.GreaterThanOrEqual(a, v) => cmp(get(a), v).map(_ >= 0)
-    case sources.LessThan(a, v) => cmp(get(a), v).map(_ < 0)
-    case sources.LessThanOrEqual(a, v) => cmp(get(a), v).map(_ <= 0)
-    case sources.IsNull(a) => get(a).map(_ == null)
-    case sources.IsNotNull(a) => get(a).map(_ != null)
-    case sources.In(a, vs) =>
-      val results = vs.map(v => cmp(get(a), v))
-      if (results.exists(_.contains(0))) Some(true)
-      else if (results.forall(r => r.isDefined && !r.contains(0))) Some(false)
-      else None
-    case sources.And(l, r) => (eval(l, get), eval(r, get)) match {
-      case (Some(false), _) | (_, Some(false)) => Some(false)
-      case (Some(true), Some(true)) => Some(true)
-      case _ => None
-    }
-    case sources.Or(l, r) => (eval(l, get), eval(r, get)) match {
-      case (Some(true), _) | (_, Some(true)) => Some(true)
-      case (Some(false), Some(false)) => Some(false)
-      case _ => None
-    }
-    case sources.Not(c) => eval(c, get).map(!_)
-    case _ => None
-  }
-
-  /** Null-safe ordering across the value families a bound can take;
-    * numerics widen through BigDecimal — except NaN/Infinity, which
-    * BigDecimal cannot represent: those yield None (row conservatively
-    * kept), never an exception. */
-  private[graft] def cmp(left: Option[Any], right: Any): Option[Int] = left.flatMap { lv =>
-    if (lv == null || right == null) None
-    else (lv, right) match {
-      case (a: Number, b: Number) =>
-        try Some(new java.math.BigDecimal(a.toString).compareTo(new java.math.BigDecimal(b.toString)))
-        catch { case _: NumberFormatException => None }
-      case (a: String, b: String) => Some(a.compareTo(b))
-      case (a: Boolean, b: Boolean) => Some(a.compareTo(b))
-      case (a: java.time.LocalDate, b: java.sql.Date) => Some(a.compareTo(b.toLocalDate))
-      case (a: java.time.LocalDate, b: java.time.LocalDate) => Some(a.compareTo(b))
-      case (a: java.time.Instant, b: java.sql.Timestamp) => Some(a.compareTo(b.toInstant))
-      case (a: java.time.Instant, b: java.time.Instant) => Some(a.compareTo(b))
+  def eval(f: sources.Filter, get: String => Option[Any]): Option[Boolean] = {
+    def cmp(a: Option[Any], v: Any) = a.flatMap(ScanPlanning.cmpValues(_, v))
+    f match {
+      case sources.EqualTo(a, v) => cmp(get(a), v).map(_ == 0)
+      case sources.GreaterThan(a, v) => cmp(get(a), v).map(_ > 0)
+      case sources.GreaterThanOrEqual(a, v) => cmp(get(a), v).map(_ >= 0)
+      case sources.LessThan(a, v) => cmp(get(a), v).map(_ < 0)
+      case sources.LessThanOrEqual(a, v) => cmp(get(a), v).map(_ <= 0)
+      case sources.IsNull(a) => get(a).map(_ == null)
+      case sources.IsNotNull(a) => get(a).map(_ != null)
+      case sources.In(a, vs) =>
+        val results = vs.map(v => cmp(get(a), v))
+        if (results.exists(_.contains(0))) Some(true)
+        else if (results.forall(r => r.isDefined && !r.contains(0))) Some(false)
+        else None
+      case sources.And(l, r) => (eval(l, get), eval(r, get)) match {
+        case (Some(false), _) | (_, Some(false)) => Some(false)
+        case (Some(true), Some(true)) => Some(true)
+        case _ => None
+      }
+      case sources.Or(l, r) => (eval(l, get), eval(r, get)) match {
+        case (Some(true), _) | (_, Some(true)) => Some(true)
+        case (Some(false), Some(false)) => Some(false)
+        case _ => None
+      }
+      case sources.Not(c) => eval(c, get).map(!_)
       case _ => None
     }
   }
@@ -426,28 +408,28 @@ object ListPruneEval {
       if (a.startsWith("upper_")) bounds.get(a) else None
     f match {
       case sources.LessThan(a, v) =>
-        minLower(a).flatMap(lo => EntryFilterEval.cmp(Some(lo), v).map(_ < 0))
+        minLower(a).flatMap(lo => ScanPlanning.cmpValues(lo, v).map(_ < 0))
           .orElse(maxUpper(a).flatMap(hi =>
-            EntryFilterEval.cmp(Some(hi), v).flatMap(c => if (c < 0) Some(true) else None)))
+            ScanPlanning.cmpValues(hi, v).flatMap(c => if (c < 0) Some(true) else None)))
       case sources.LessThanOrEqual(a, v) =>
-        minLower(a).flatMap(lo => EntryFilterEval.cmp(Some(lo), v).map(_ <= 0))
+        minLower(a).flatMap(lo => ScanPlanning.cmpValues(lo, v).map(_ <= 0))
           .orElse(maxUpper(a).flatMap(hi =>
-            EntryFilterEval.cmp(Some(hi), v).flatMap(c => if (c <= 0) Some(true) else None)))
+            ScanPlanning.cmpValues(hi, v).flatMap(c => if (c <= 0) Some(true) else None)))
       case sources.GreaterThan(a, v) =>
-        maxUpper(a).flatMap(hi => EntryFilterEval.cmp(Some(hi), v).map(_ > 0))
+        maxUpper(a).flatMap(hi => ScanPlanning.cmpValues(hi, v).map(_ > 0))
           .orElse(minLower(a).flatMap(lo =>
-            EntryFilterEval.cmp(Some(lo), v).flatMap(c => if (c > 0) Some(true) else None)))
+            ScanPlanning.cmpValues(lo, v).flatMap(c => if (c > 0) Some(true) else None)))
       case sources.GreaterThanOrEqual(a, v) =>
-        maxUpper(a).flatMap(hi => EntryFilterEval.cmp(Some(hi), v).map(_ >= 0))
+        maxUpper(a).flatMap(hi => ScanPlanning.cmpValues(hi, v).map(_ >= 0))
           .orElse(minLower(a).flatMap(lo =>
-            EntryFilterEval.cmp(Some(lo), v).flatMap(c => if (c >= 0) Some(true) else None)))
+            ScanPlanning.cmpValues(lo, v).flatMap(c => if (c >= 0) Some(true) else None)))
       case sources.EqualTo(a, v) =>
         // lower_c = v needs a file-lower equal to v: impossible when even
         // the minimum exceeds v; upper_c = v: impossible when the maximum
         // is below v. Equality at the aggregate itself proves existence.
-        minLower(a).flatMap(lo => EntryFilterEval.cmp(Some(lo), v).flatMap(c =>
+        minLower(a).flatMap(lo => ScanPlanning.cmpValues(lo, v).flatMap(c =>
           if (c > 0) Some(false) else if (c == 0) Some(true) else None))
-          .orElse(maxUpper(a).flatMap(hi => EntryFilterEval.cmp(Some(hi), v).flatMap(c =>
+          .orElse(maxUpper(a).flatMap(hi => ScanPlanning.cmpValues(hi, v).flatMap(c =>
             if (c < 0) Some(false) else if (c == 0) Some(true) else None)))
       case sources.In(a, vs) =>
         val results = vs.toSeq.map(v => sat(sources.EqualTo(a, v), bounds))

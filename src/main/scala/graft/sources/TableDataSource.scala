@@ -19,21 +19,25 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.iceberg.{GraftTable, IcebergType, ManifestListReader, ManifestWriter, Par,
-  PathId, ScanPlanning, SingleValueCodec, IcebergTypes, TableMetadata}
+  PathId, ScanPlanning, SingleValueCodec, Snapshot, IcebergTypes, TableMetadata}
 
 /** DataSource V2 connector for whole-TABLE reads:
   * `spark.read.format("graft-table").option("metadata", <metadata.json>)`.
   *
-  * This is the engine's ONE merge-on-read reader. SQL, the catalog,
-  * streaming reads and every `GraftTable` read and rewrite (read,
-  * readWhere, readKeyRange, MERGE, compaction, the stats passes, the
-  * changelog legs) scan through it — the latter by handing
-  * [[TableDataSource.scanPlan]] an explicit entry set instead of a
-  * metadata path:
+  * This is the engine's ONE merge-on-read reader behind ONE planner
+  * ([[GraftTableScan.plan]]). SQL, the catalog, streaming reads and
+  * `GraftTable`'s reads and DELETE (read, readWhere, readWhereRange,
+  * deleteWhere) are this relation with their predicate pushed
+  * ([[TableDataSource.read]]); readKeyRange and the changelog's parent
+  * plan call the planner directly. Rewrites (MERGE, compaction, the
+  * stats passes, the changelog legs) hand [[TableDataSource.scanPlan]]
+  * an explicit entry set instead:
   *
-  *   - level 1 (manifest-list): pushed equality predicates convert into
-  *     each spec's partition-transform space and prune DATA manifests
-  *     against their field-507 summaries WITHOUT OPENING THEM;
+  *   - level 1 (manifest-list): pushed equalities, In-sets and ranges
+  *     convert into each spec's partition-transform space and prune data
+  *     and delete manifests against their field-507 summaries WITHOUT
+  *     OPENING THEM; a delete manifest below the kept data's minimum
+  *     sequence is never opened either;
   *   - level 2 (manifest entry): surviving files prune against their
   *     decoded column bounds (fields 125/128);
   *   - level 3 (row group / stripe): files above the split size fan out
@@ -48,7 +52,8 @@ import graft.iceberg.{GraftTable, IcebergType, ManifestListReader, ManifestWrite
   *   - `_file`, `_pos`, `_row_id` and `_last_updated_sequence_number`
   *     are metadata columns the reader serves per row;
   *   - `snapshot-id` / `ref` / `as-of-timestamp-ms` options time-travel
-  *     with GraftTable.read's resolution rules.
+  *     with GraftTable.read's resolution rules (a traveled read's schema:
+  *     [[GraftTable.readMeta]]).
   *
   * Decoding: every parquet data file decodes through Spark's vectorized
   * reader ([[GraftTableColumnarReader]]): position and equality deletes
@@ -65,6 +70,28 @@ object TableDataSource {
     meta.currentSchema.fields.flatMap(f =>
       f.initialDefault.flatMap(d => IcebergTypes.fromStringOpt(f.fieldType)
         .map(t => f.name -> graft.iceberg.DefaultValues.fromJson(t, d)))).toMap
+
+  /** A table read as the catalog reads it: the relation over
+    * [[GraftSparkTable.at]]. A filter on the frame pushes into the scan's
+    * one planning pass. */
+  private[graft] def read(spark: SparkSession, metadataPath: String, meta: TableMetadata,
+      snapshotId: Option[Long] = None, ref: Option[String] = None,
+      asOfTimestampMs: Option[Long] = None): DataFrame = {
+    import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+    org.apache.spark.sql.GraftSqlShim.ofRows(spark, DataSourceV2Relation.create(
+      GraftSparkTable.at(metadataPath, meta, snapshotId, ref, asOfTimestampMs),
+      None, None, CaseInsensitiveStringMap.empty()))
+  }
+
+  /** (opened, listed) data manifests of the graft-table scan in `df`'s
+    * plan, from the scan's own planning pass (which this runs). */
+  private[graft] def dataManifests(df: DataFrame): (Int, Int) = {
+    import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
+    df.queryExecution.optimizedPlan.collectFirst {
+      case r: DataSourceV2ScanRelation if r.scan.isInstanceOf[GraftTableScan] =>
+        r.scan.asInstanceOf[GraftTableScan].dataManifests
+    }.getOrElse(throw new IllegalArgumentException("no graft-table scan in the plan"))
+  }
 
   /** Merge-on-read read of an EXPLICIT plan: `data` entries with their
     * data sequence numbers, and the position- and equality-delete
@@ -87,13 +114,12 @@ object TableDataSource {
     * addresses a delete set resolves to. */
   private[graft] def scanPlan(spark: SparkSession, meta: TableMetadata,
       data: Seq[(ManifestWriter.EntryData, Long)],
-      posDeletes: Seq[(ManifestWriter.EntryData, Long)],
-      eqDeletes: Seq[(ManifestWriter.EntryData, Long)],
+      deletes: Seq[(ManifestWriter.EntryData, Long)],
       deletedBy: Option[Seq[(ManifestWriter.EntryData, Long)]] = None): DataFrame = {
     import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
     import org.apache.spark.sql.functions.col
     val relation = DataSourceV2Relation.create(
-      new GraftPinnedTable(PinnedPlan(meta, data, posDeletes ++ eqDeletes, deletedBy)),
+      new GraftPinnedTable(PinnedPlan(meta, data, deletes, deletedBy)),
       None, None, CaseInsensitiveStringMap.empty())
     val df = org.apache.spark.sql.GraftSqlShim.ofRows(spark, relation.withMetadataColumns())
     val metaCols = GraftSparkTable.MetadataColumns.map(_.name).toSet
@@ -112,12 +138,14 @@ private[graft] case class PinnedPlan(meta: TableMetadata,
 
 /** A scan's planning pass: the kept data entries with their data
   * sequence numbers and owning manifests, the delete entries (position
-  * and equality) that may apply to them, and a pinned plan's deleted-by
-  * set. */
-private[sources] final case class Planned(
+  * and equality) that may apply to them, a pinned plan's deleted-by set,
+  * and how many of the snapshot's data manifests it opened of those
+  * listed (0 of 0 for a pinned plan). */
+private[graft] final case class Planned(
     kept: Seq[(ManifestWriter.EntryData, Long, Option[ManifestListReader.ManifestFileInfo])],
     deletes: Seq[(ManifestWriter.EntryData, Long)],
-    deletedBy: Option[Seq[(ManifestWriter.EntryData, Long)]])
+    deletedBy: Option[Seq[(ManifestWriter.EntryData, Long)]],
+    dataManifests: (Int, Int) = (0, 0))
 
 /** The delete files one data file's task applies: v2 position-delete
   * files, equality-delete files and v3 deletion vectors as (puffin path,
@@ -204,16 +232,24 @@ class TableDataSource extends TableProvider with DataSourceRegister {
     p
   }
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    GraftTable.sparkSchema(TableMetadata.parseFile(metadataPath(options)))
+  /** The read's snapshot selectors: `snapshot-id`, `ref`,
+    * `as-of-timestamp-ms`. */
+  private def travel(o: CaseInsensitiveStringMap): (Option[Long], Option[String], Option[Long]) =
+    (Option(o.get("snapshot-id")).map(_.toLong), Option(o.get("ref")),
+      Option(o.get("as-of-timestamp-ms")).map(_.toLong))
+
+  /** The schema [[GraftTable.readMeta]] resolves, as for `VERSION AS OF`. */
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
+    val (snapshotId, ref, asOf) = travel(options)
+    GraftTable.sparkSchema(GraftTable.readMeta(
+      TableMetadata.parseFile(metadataPath(options)), snapshotId, ref, asOf))
+  }
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table = {
     val opts = new CaseInsensitiveStringMap(properties)
-    new GraftSparkTable(schema, metadataPath(opts),
-      Option(opts.get("snapshot-id")).map(_.toLong),
-      Option(opts.get("ref")),
-      Option(opts.get("as-of-timestamp-ms")).map(_.toLong),
+    val (snapshotId, ref, asOf) = travel(opts)
+    new GraftSparkTable(schema, metadataPath(opts), snapshotId, ref, asOf,
       Option(opts.get("split-size")).map(_.toLong).getOrElse(128L * 1024 * 1024),
       // write-side: option("branch", "audit") stages appends on that ref
       Option(opts.get("branch")).filter(_.nonEmpty))
@@ -362,6 +398,19 @@ class GraftSparkTable private[graft] (tableSchema: StructType, metadataPath: Str
 }
 
 object GraftSparkTable {
+  /** The table over the already-parsed document `meta` at
+    * `metadataPath`, at its head or at the snapshot `snapshotId` / `ref`
+    * / `asOfTimestampMs` selects, under the schema [[GraftTable.readMeta]]
+    * resolves — what the catalog loads and `GraftTable.read` reads. */
+  private[graft] def at(metadataPath: String, meta: TableMetadata,
+      snapshotId: Option[Long] = None, ref: Option[String] = None,
+      asOfTimestampMs: Option[Long] = None, writeBranch: Option[String] = None,
+      refuseWriteReason: Option[String] = None): GraftSparkTable =
+    new GraftSparkTable(
+      GraftTable.sparkSchema(GraftTable.readMeta(meta, snapshotId, ref, asOfTimestampMs)),
+      metadataPath, snapshotId, ref, asOfTimestampMs, 128L * 1024 * 1024, writeBranch,
+      refuseWriteReason, Some(meta))
+
   /** Iceberg's inspection columns: `_file` (the data file serving the
     * row) and `_pos` (its file-absolute row index — the coordinate
     * position deletes address). Selectable like any column; never in
@@ -544,7 +593,7 @@ class GraftTableScanBuilder(tableSchema: StructType, metadataPath: String,
       vs <- Some(entries.map(e => boundValue(e, f.id, t, lower)))
         .filter(_.forall(_.isDefined)).map(_.flatten)
       v <- vs.reduceOption { (a, b) =>
-        EntryFilterEval.cmp(Some(a), b) match {
+        ScanPlanning.cmpValues(a, b) match {
           case Some(c) => if ((c < 0) == lower) a else b
           case None => return None
         }
@@ -645,6 +694,9 @@ class GraftTableScan(required: StructType, filters: Array[sources.Filter],
     else plannedWith(pinnedMeta, filters)
   }
 
+  /** (opened, listed) data manifests of this scan's planning pass. */
+  private[graft] def dataManifests: (Int, Int) = planned.dataManifests
+
   private def emptyTable: Boolean = pinned.isEmpty &&
     pinnedMeta.currentSnapshotId.isEmpty && snapshotId.isEmpty && ref.isEmpty &&
       asOfTimestampMs.isEmpty
@@ -661,9 +713,9 @@ class GraftTableScan(required: StructType, filters: Array[sources.Filter],
     if (emptyTable) Nil
     else {
       val snap = GraftTable.resolveForScan(pinnedMeta, snapshotId, ref, asOfTimestampMs)
-      val infos = snap.manifestList.toSeq.flatMap(ManifestListReader.read)
+      val infos = snap.manifestList.toSeq.flatMap(ManifestListReader.read(_, hadoopConf.value))
         .filter(_.content == 1)
-      Par.inParallel(infos)(i => ManifestWriter.read(i.path))
+      Par.inParallel(infos)(i => ManifestWriter.read(i.path, hadoopConf.value))
         .flatten.filter(_.status != 2).map(_.filePath)
     }
 
@@ -726,72 +778,16 @@ class GraftTableScan(required: StructType, filters: Array[sources.Filter],
         Planned(kept.map { case (e, s) => (e, s, None) },
           DeleteScope.reaching(p.deletes, minSeq),
           p.deletedBy.map(DeleteScope.reaching(_, minSeq)))
-      case None => plannedFromManifests(meta, filters)
+      case None => GraftTableScan.plan(meta,
+        GraftTable.resolveForScan(meta, snapshotId, ref, asOfTimestampMs), filters,
+        hadoopConf.value)
     }
-
-  private def plannedFromManifests(meta: TableMetadata, filters: Array[sources.Filter])
-      : Planned = {
-    val snap = GraftTable.resolveForScan(meta, snapshotId, ref, asOfTimestampMs)
-    val listPath = snap.manifestList.getOrElse(throw new IllegalArgumentException(
-      s"snapshot ${snap.snapshotId} has no manifest-list"))
-    val infos = ManifestListReader.read(listPath)
-    val dataInfos0 = infos.filter(_.content == 0)
-    // level 1: pushed predicates prune manifests in the spec's transform
-    // space (summaries consulted, manifests unopened), each filter a pass
-    // over the list read above. Equality and In-sets (the shape runtime
-    // join filters arrive in) prune through EVERY transform incl. bucket —
-    // a manifest survives a set when ANY of its values survives it;
-    // comparisons fold into a value range per column and prune through
-    // the monotonic transforms.
-    def fieldId(c: String): Option[Int] =
-      meta.currentSchema.fields.find(_.name == c).map(_.id)
-    val valueSets = filters.collect {
-      case sources.EqualTo(c, v) => fieldId(c).map((_, Seq(v)))
-      case sources.In(c, vs) if vs.nonEmpty => fieldId(c).map((_, vs.toSeq))
-    }.flatten
-    val ranges = filters.collect {
-        case sources.GreaterThan(c, v) => (c, Some(v), None)
-        case sources.GreaterThanOrEqual(c, v) => (c, Some(v), None)
-        case sources.LessThan(c, v) => (c, None, Some(v))
-        case sources.LessThanOrEqual(c, v) => (c, None, Some(v))
-      }.groupBy(_._1).toSeq.flatMap { case (c, bs) =>
-        fieldId(c).map(fid =>
-          (fid, bs.flatMap(_._2).lastOption, bs.flatMap(_._3).lastOption))
-      }
-    val afterValues = valueSets.foldLeft(infos) { case (acc, (fid, vs)) =>
-      ScanPlanning.pruneManifestsByTransform(acc, meta, fid, vs) }
-    val surviving = ranges.foldLeft(afterValues) { case (acc, (fid, lo, hi)) =>
-      ScanPlanning.pruneManifestsByRange(acc, meta, fid, lo, hi) }.map(_.path).toSet
-    val dataEntries = Par.inParallel(dataInfos0.filter(i => surviving(i.path)))(
-        i => (i, ManifestWriter.read(i.path))).flatMap { case (i, es) =>
-      es.filter(e => e.status != 2 && e.content == 0)
-        .map(e => (e, e.sequenceNumber.getOrElse(i.sequenceNumber), Some(i)))
-    }
-    // level 2: entry bound stats prune files the filters cannot match
-    val kept = dataEntries.filterNot { case (e, _, _) =>
-      filters.exists(f => FileBoundsEval.skippable(f, e, meta)) }
-    // delete-side manifest pruning, the data-side rules applied
-    // symmetrically and conservatively — a skipped manifest is NEVER
-    // opened: (a) the pushed predicate's transform-space summary prune
-    // (a partition-scoped delete can't address data in a partition its
-    // summaries exclude; summary-less manifests are kept), and (b) the
-    // sequence ceiling: list-level field 515 bounds every entry inside,
-    // so a delete manifest wholly below the kept data files' minimum
-    // sequence can't reach any of them under the <=/< application rules
-    val minKeptSeq = kept.map(_._2).minOption.getOrElse(Long.MaxValue)
-    val delInfos = infos.filter(i => i.content == 1 && surviving(i.path) &&
-      i.sequenceNumber >= minKeptSeq)
-    val delEntries = Par.inParallel(delInfos)(i => (i, ManifestWriter.read(i.path)))
-      .flatMap { case (i, es) => es.filter(_.status != 2)
-        .map(e => (e, e.sequenceNumber.getOrElse(i.sequenceNumber))) }
-    Planned(kept, delEntries.filter(d => d._1.content == 1 || d._1.content == 2), None)
-  }
 
   override def planInputPartitions(): Array[InputPartition] = {
     // runtime join filters (if any arrived) re-plan on top of the static
     // pushed set — against the SAME pinned snapshot the static plan and
     // statistics used; `planned` stays the statistics baseline
-    val Planned(kept, deletes, deletedBy) =
+    val Planned(kept, deletes, deletedBy, _) =
       if (runtimeFilters.isEmpty) planned
       else if (emptyTable) Planned(Nil, Nil, None)
       else plannedWith(pinnedMeta, filters ++ runtimeFilters)
@@ -1079,6 +1075,75 @@ class GraftTableScan(required: StructType, filters: Array[sources.Filter],
 
   override def createReaderFactory(): PartitionReaderFactory =
     new GraftTableReaderFactory(required, hadoopConf, columnar)
+}
+
+private[graft] object GraftTableScan {
+  /** The ONE planning pass over a snapshot's manifests: every graft-table
+    * scan that is not handed a pinned plan runs it, and so do
+    * `GraftTable.readKeyRange` and the changelog's parent plan (Iceberg's
+    * `ManifestGroup.planFiles` behind its scans, incremental scans and
+    * actions). The list and every manifest open on `conf`.
+    *
+    *   - level 1: pushed equalities (a null-safe one with a value too)
+    *     and In-sets prune manifests through EVERY transform incl. bucket
+    *     — a manifest survives a set when ANY of its values survives it;
+    *     comparisons fold into a value range per column and prune
+    *     through the monotonic transforms. Data and delete manifests
+    *     alike: a partition-scoped delete cannot address data in a
+    *     partition its summaries exclude (summary-less manifests are
+    *     kept); nothing pruned here is opened;
+    *   - level 2: entry bound stats prune the data files the filters
+    *     cannot match ([[FileBoundsEval]]);
+    *   - the sequence ceiling: list-level field 515 bounds every entry
+    *     of a delete manifest, so one wholly below the kept data files'
+    *     minimum sequence cannot reach any of them under the <= / <
+    *     application rules and is never opened.
+    *
+    * A file listed twice is planned twice, as Iceberg's planner plans it
+    * (`add_files` refuses a file the table already lists). */
+  def plan(meta: TableMetadata, snap: Snapshot, filters: Array[sources.Filter],
+      conf: Configuration): Planned = {
+    val listPath = snap.manifestList.getOrElse(throw new IllegalArgumentException(
+      s"snapshot ${snap.snapshotId} has no manifest-list"))
+    val infos = ManifestListReader.read(listPath, conf)
+    def fieldId(c: String): Option[Int] =
+      meta.currentSchema.fields.find(_.name == c).map(_.id)
+    val valueSets = filters.collect {
+      case sources.EqualTo(c, v) => fieldId(c).map((_, Seq(v)))
+      case sources.EqualNullSafe(c, v) if v != null => fieldId(c).map((_, Seq(v)))
+      case sources.In(c, vs) if vs.nonEmpty => fieldId(c).map((_, vs.toSeq))
+    }.flatten
+    val ranges = filters.collect {
+        case sources.GreaterThan(c, v) => (c, Some(v), None)
+        case sources.GreaterThanOrEqual(c, v) => (c, Some(v), None)
+        case sources.LessThan(c, v) => (c, None, Some(v))
+        case sources.LessThanOrEqual(c, v) => (c, None, Some(v))
+      }.groupBy(_._1).toSeq.flatMap { case (c, bs) =>
+        fieldId(c).map(fid =>
+          (fid, bs.flatMap(_._2).lastOption, bs.flatMap(_._3).lastOption))
+      }
+    val afterValues = valueSets.foldLeft(infos) { case (acc, (fid, vs)) =>
+      ScanPlanning.pruneManifestsByTransform(acc, meta, fid, vs) }
+    val surviving = ranges.foldLeft(afterValues) { case (acc, (fid, lo, hi)) =>
+      ScanPlanning.pruneManifestsByRange(acc, meta, fid, lo, hi) }.map(_.path).toSet
+    val dataInfos = infos.filter(_.content == 0)
+    val openedData = dataInfos.filter(i => surviving(i.path))
+    val dataEntries = Par.inParallel(openedData)(
+        i => (i, ManifestWriter.read(i.path, conf))).flatMap { case (i, es) =>
+      es.filter(e => e.status != 2 && e.content == 0)
+        .map(e => (e, e.sequenceNumber.getOrElse(i.sequenceNumber), Some(i)))
+    }
+    val kept = dataEntries.filterNot { case (e, _, _) =>
+      filters.exists(f => FileBoundsEval.skippable(f, e, meta)) }
+    val minKeptSeq = kept.map(_._2).minOption.getOrElse(Long.MaxValue)
+    val delInfos = infos.filter(i => i.content == 1 && surviving(i.path) &&
+      i.sequenceNumber >= minKeptSeq)
+    val delEntries = Par.inParallel(delInfos)(i => (i, ManifestWriter.read(i.path, conf)))
+      .flatMap { case (i, es) => es.filter(_.status != 2)
+        .map(e => (e, e.sequenceNumber.getOrElse(i.sequenceNumber))) }
+    Planned(kept, delEntries.filter(d => d._1.content == 1 || d._1.content == 2), None,
+      (openedData.size, dataInfos.size))
+  }
 }
 
 /** One SQL UPDATE / MERGE INTO execution: the scan and the write share
@@ -2036,7 +2101,7 @@ private[sources] object ParquetDecoder {
   * matching row? Missing/undecodable bounds keep the file. */
 object FileBoundsEval {
 
-  private val ops = Set("EqualTo", "GreaterThan", "GreaterThanOrEqual",
+  private val ops = Set("EqualTo", "EqualNullSafe", "GreaterThan", "GreaterThanOrEqual",
     "LessThan", "LessThanOrEqual", "In", "IsNull", "IsNotNull", "And", "Or", "Not")
 
   def supported(f: sources.Filter, schema: StructType): Boolean =
@@ -2055,14 +2120,16 @@ object FileBoundsEval {
       if bytes.nonEmpty
       v <- scala.util.Try(SingleValueCodec.decode(t, bytes)).toOption
     } yield v
+    def cmp(b: Option[Any], v: Any): Option[Int] = b.flatMap(ScanPlanning.cmpValues(_, v))
     def outside(lo: Option[Any], hi: Option[Any], v: Any): Boolean =
-      EntryFilterEval.cmp(lo, v).exists(_ > 0) || EntryFilterEval.cmp(hi, v).exists(_ < 0)
-    def cmpLo(col: String, v: Any): Option[Int] =
-      EntryFilterEval.cmp(bound(col, lower = true), v)
-    def cmpHi(col: String, v: Any): Option[Int] =
-      EntryFilterEval.cmp(bound(col, lower = false), v)
+      cmp(lo, v).exists(_ > 0) || cmp(hi, v).exists(_ < 0)
+    def cmpLo(col: String, v: Any): Option[Int] = cmp(bound(col, lower = true), v)
+    def cmpHi(col: String, v: Any): Option[Int] = cmp(bound(col, lower = false), v)
     f match {
       case sources.EqualTo(c, v) =>
+        outside(bound(c, lower = true), bound(c, lower = false), v)
+      // null-safe equality with a value matches what `=` matches
+      case sources.EqualNullSafe(c, v) if v != null =>
         outside(bound(c, lower = true), bound(c, lower = false), v)
       case sources.GreaterThan(c, v) => cmpHi(c, v).exists(_ <= 0)
       case sources.GreaterThanOrEqual(c, v) => cmpHi(c, v).exists(_ < 0)

@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.iceberg.IcebergTypes._
 import graft.iceberg.ManifestListReader.{FieldSummary, ManifestFileInfo}
-import graft.sources.{EntryFilterEval, FileBoundsEval}
+import graft.sources.FileBoundsEval
 
 /** Set-valued pruning must keep exactly what value-at-a-time pruning
   * keeps. Manifests: `pruneManifestsByTransform(infos, …, values)` against
@@ -151,8 +151,8 @@ class InSetPruneSpec extends AnyFunSuite {
   private def outsideValue(e: ManifestWriter.EntryData, v: Any): Boolean = {
     def bound(m: Map[Int, Array[Byte]]): Option[Any] = m.get(1).filter(_.nonEmpty)
       .flatMap(b => scala.util.Try(SingleValueCodec.decode(TInt, b)).toOption)
-    EntryFilterEval.cmp(bound(e.lowerBounds), v).exists(_ > 0) ||
-      EntryFilterEval.cmp(bound(e.upperBounds), v).exists(_ < 0)
+    bound(e.lowerBounds).flatMap(ScanPlanning.cmpValues(_, v)).exists(_ > 0) ||
+      bound(e.upperBounds).flatMap(ScanPlanning.cmpValues(_, v)).exists(_ < 0)
   }
 
   test("files: skippable(In) == every value skippable as EqualTo, on every bound shape") {

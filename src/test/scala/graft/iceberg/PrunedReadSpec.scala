@@ -12,9 +12,9 @@ import graft.SparkSpec
 import graft.iceberg.IcebergTypes._
 
 /** The full scan-planning loop the reference's bound decoding exists to
-  * enable (SURVEY.md §4): write real data files, describe them in a
-  * manifest with genuine encoded bound statistics, prune on a predicate
-  * against the decoded bounds, and read back ONLY the surviving files.
+  * enable (SURVEY.md §4): data files described in manifests with genuine
+  * encoded bound statistics, a predicate pruned against the decoded
+  * bounds at planning, and ONLY the surviving files read back.
   * This is what "plan proportional to metadata, scan proportional to the
   * predicate" means at 100 TB.
   */
@@ -56,64 +56,40 @@ class PrunedReadSpec extends SparkSpec {
       .endRecord()
   }
 
-  test("predicate on decoded bounds prunes the physical read to matching files") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-pruned").toString
-
+  test("the scan planner keeps the file at a bound and all files unbounded") {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    val dir = java.nio.file.Files.createTempDirectory("graft-planned").toString
+    GraftTable.create(dir, IcebergSchema(0, Seq(IcebergField(1, "v", required = false, "long"))),
+      tableUuid = "5ca90000-0000-4000-8000-0000000000p1", timestampMs = 1700000000000L)
     // three data files, value ranges [0,99], [100,199], [200,299]
     val ranges = Seq((0L, 99L), (100L, 199L), (200L, 299L))
-    val dataPaths = ranges.zipWithIndex.map { case ((lo, hi), i) =>
-      val p = s"$dir/data-$i.parquet"
-      (lo to hi).toDF("v").coalesce(1).write.mode("overwrite").parquet(p)
-      (p, lo, hi)
-    }
+    ranges.foreach { case (lo, hi) =>
+      GraftTable.append(spark, dir, spark.range(lo, hi + 1, 1, 1).toDF("v")) }
+    val path = GraftTable.latestMetadataPath(dir)
+    val meta = TableMetadata.parseFile(path)
+    val files = meta.currentSnapshot.toSeq.flatMap(s => ManifestListReader.read(s.manifestList.get))
+      .flatMap(i => ManifestWriter.read(i.path)).sortBy(_.recordCount)
+      .map(e => SingleValueCodec.decode(TLong, e.lowerBounds(1)) -> e.filePath).toMap
+    val base = spark.read.format("graft-table").option("metadata", path).load()
+    def planned(df: org.apache.spark.sql.DataFrame): Set[String] =
+      df.queryExecution.sparkPlan.collect { case b: BatchScanExec => b }
+        .flatMap(_.scan.toBatch.planInputPartitions().toSeq)
+        .collect { case p: graft.sources.GraftTableInputPartition => p.filePath }.toSet
 
-    // one manifest describing them, bounds in Iceberg single-value encoding
-    val manifestPath = s"$dir/manifest.avro"
-    val writer = new DataFileWriter[GenericRecord](new GenericDatumWriter[GenericRecord](entrySchema))
-    writer.create(entrySchema, new java.io.File(manifestPath))
-    val dfSchema = entrySchema.getField("data_file").schema()
-    val boundsSchema = dfSchema.getField("lower_bounds").schema()
-    def kvArr(id: Int, v: Long) = {
-      val rec = new GenericData.Record(boundsSchema.getElementType)
-      rec.put("key", id)
-      rec.put("value", ByteBuffer.wrap(SingleValueCodec.encode(TLong, v)))
-      new GenericData.Array[GenericRecord](boundsSchema, Seq(rec.asInstanceOf[GenericRecord]).asJava)
-    }
-    dataPaths.foreach { case (p, lo, hi) =>
-      val df = new GenericData.Record(dfSchema)
-      df.put("file_path", p)
-      df.put("record_count", hi - lo + 1)
-      df.put("lower_bounds", kvArr(1, lo))
-      df.put("upper_bounds", kvArr(1, hi))
-      val e = new GenericData.Record(entrySchema)
-      e.put("status", 1)
-      e.put("data_file", df)
-      writer.append(e)
-    }
-    writer.close()
-
-    val meta = TableMetadata.parse(
-      """{"format-version":1,"schema":{"type":"struct","schema-id":0,"fields":[
-        |  {"id":1,"name":"v","required":true,"type":"long"}]}}""".stripMargin)
-
-    // predicate: 120 <= v <= 150 → only the middle file qualifies
-    val survivors = ScanPlanning.planFiles(spark, meta, Seq(manifestPath),
-      fieldId = 1, lower = Some(120L), upper = Some(150L))
-    assert(survivors == Seq(dataPaths(1)._1), s"got $survivors")
-
-    // the pruned read touches one file and returns exactly the predicate rows
-    val result = spark.read.parquet(survivors: _*).filter($"v".between(120, 150))
-    assert(result.count() == 31)
-    assert(result.inputFiles.length == 1)
-
+    // predicate: 120 <= v <= 150 -> only the middle file qualifies
+    val between = base.filter(col("v").between(120L, 150L))
+    assert(planned(between) == Set(files(100L)))
+    assert(between.count() == 31)
     // unbounded predicate keeps everything (conservative pruning)
-    val all = ScanPlanning.planFiles(spark, meta, Seq(manifestPath), 1, None, None)
-    assert(all.toSet == dataPaths.map(_._1).toSet)
-
+    assert(planned(base) == files.values.toSet)
+    assert(planned(base.filter(col("v").isNotNull)) == files.values.toSet)
     // boundary inclusivity: lower == a file's max keeps that file
-    val edge = ScanPlanning.planFiles(spark, meta, Seq(manifestPath), 1, Some(199L), None)
-    assert(edge.toSet == Set(dataPaths(1)._1, dataPaths(2)._1))
+    val edge = base.filter(col("v") >= 199L)
+    assert(planned(edge) == Set(files(100L), files(200L)))
+    assert(edge.count() == 101)
+    val (rows, _, _) = GraftTable.readWhereRange(spark, path, 1, Some(199L), None)
+    assert(rows.count() == 101)
   }
 
   test("DSv2 filter pushdown on virtual stat columns drops all-pruned manifests at planning") {
